@@ -59,7 +59,9 @@ cannot displace a winner.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Sequence
+from collections import OrderedDict
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -302,6 +304,53 @@ def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+class _SnapshotLRU:
+    """Per-term driver cache valid for one snapshot key: cleared when
+    the key changes, bounded by the total ``weight`` of its values, and
+    least-recently-used first out — except the terms of the call being
+    served, which a single call may keep above the bound."""
+
+    def __init__(self, weight: Callable[[Any], int] = lambda v: 1):
+        self._weight = weight
+        self._key: Any = None
+        self._items: OrderedDict[Any, Any] = OrderedDict()
+        self._total = 0
+
+    def __len__(self) -> int:
+        return len(self._items)
+
+    def get(
+        self,
+        key: Any,
+        terms: Sequence[Any],
+        load: Callable[[list], dict],
+        cap: int,
+    ) -> dict:
+        """{term: value} for ``terms``. ``load(missing)`` reads the
+        uncached terms in one go; a term it returns nothing for caches
+        None (a miss marker, so repeated misses do no IO). Read ``key``
+        before anything ``load`` reads, so a racing commit can only
+        cache newer data under an older key."""
+        if key != self._key:
+            self._key, self._total = key, 0
+            self._items.clear()
+        missing = [t for t in dict.fromkeys(terms) if t not in self._items]
+        if missing:
+            got = load(missing)
+            for t in missing:
+                self._items[t] = v = got.get(t)
+                self._total += self._weight(v)
+        for t in terms:
+            self._items.move_to_end(t)
+        live = set(terms)
+        while self._total > cap:
+            t = next(iter(self._items))
+            if t in live:  # only the live terms remain
+                break
+            self._total -= self._weight(self._items.pop(t))
+        return {t: self._items[t] for t in terms}
+
+
 class IndexBuilder:
     """Build and query the physical inverted index (Idx/Prs analog)."""
 
@@ -319,45 +368,22 @@ class IndexBuilder:
         self.catalog = Catalog(spark, root)
         self.ckpt = BuildCheckpoint(root)
         self.timer = PhaseTimer()
-        self._stats_cache: tuple[int, float] | None = None
-        self._dm_schema_cache: T.StructType | None = None
-        # lazy-relation LRU keyed by the pruned file list: re-planning
-        # spark.read.parquet(...) per batch costs driver-side footer
-        # reads that are identical across batches hitting the same
-        # files. BOUNDED (a long-lived query service would otherwise
-        # accumulate one plan per distinct pruned-file set forever).
-        from collections import OrderedDict
-
-        self._scan_cache: OrderedDict[tuple[str, ...], DataFrame] = (
-            OrderedDict()
-        )
-        # per-term metadata caches, keyed by the table snapshot they were
-        # read under (invalidated on compaction/rebuild): df from the
-        # terms table, (front lengths, tf front, dl front) from the
-        # blocks table. These turn the per-batch driver-side pyarrow
-        # metadata reads — the dominant serial constant of query_batch —
-        # into dict lookups after first touch. A miss marker (None) is
-        # cached for absent terms so misses don't re-read files.
-        self._df_cache: tuple[str, dict[str, int | None]] | None = None
-        self._front_cache: (
-            tuple[str, dict[str, tuple | None]] | None
-        ) = None
-        # driver-resident (doc_ord → ids) frame, only when the corpus is
-        # small enough (see DOCMAP_CACHE_MAX_DOCS); snapshot-keyed
-        self._docmap_pdf: tuple[str, pd.DataFrame] | None = None
-        # decoded-postings LRU for the warm tier — the posting-list cache
-        # every interactive search service keeps (the reference likewise
-        # holds decompressed leaves in-process across queries). Values
-        # are RAW (ords, tfs, dls) per term, not scores: idf/avgdl drift
-        # on append, raw postings don't. Keyed by the blocks snapshot so
-        # compaction/appends invalidate wholesale; bounded by total
-        # cached postings (POSTINGS_CACHE_MAX).
-        self._post_cache: OrderedDict[str, tuple] = OrderedDict()
-        self._post_cache_snap: str | None = None
-        self._post_cache_n = 0
-        # tombstone state (packed delete bitmap + sorted dead ordinals),
-        # keyed by the tombstones-table snapshot — see delete_docs
-        self._tomb_cache: tuple[str, np.ndarray, np.ndarray] | None = None
+        # Driver caches. Every entry is keyed by the snapshot id of the
+        # table(s) it was read from and reloads once that id moves, so a
+        # commit by this builder or by another one on the same root
+        # (upsert, compaction, merge, rollback) reaches the next query
+        # with no caller invalidating anything. Whole-table values —
+        # corpus stats, tombstone state, docmap frame and schema — live
+        # in _heads (see _at_head); per-term values in bounded LRUs:
+        # df (terms table), block fronts and pruned scan relations
+        # (blocks table), and decoded warm postings with their tf
+        # weights (blocks table + the avgdl those weights used) — the
+        # reference likewise keeps decompressed leaves in-process.
+        self._heads: dict[tuple[str, Any], tuple[str, Any]] = {}
+        self._dfs = _SnapshotLRU()
+        self._fronts = _SnapshotLRU(lambda v: 0 if v is None else v[1].size)
+        self._postings = _SnapshotLRU(lambda v: v[0].size)
+        self._scans = _SnapshotLRU()
 
     SCAN_CACHE_MAX = 64
     # posting-list cache ceiling: 8M postings ≈ 130 MB of driver arrays
@@ -393,7 +419,6 @@ class IndexBuilder:
             # a from-scratch build renumbers every ordinal: tombstones
             # from a previous generation would delete arbitrary docs
             self.catalog.drop("tombstones")
-            self._tomb_cache = None
             with self.timer.phase("postings"):
                 postings = build_postings(
                     corpus, id_cols=self.id_cols, text_col=self.text_col
@@ -547,62 +572,59 @@ class IndexBuilder:
     def _blocks_scan(self, q_terms: Sequence[str]) -> DataFrame:
         """Manifest-pruned blocks relation, cached by resolved file list
         (repeat batches over the same files skip re-planning the scan)."""
+        snap = self.catalog.manifest("blocks")["snapshot_id"]
         paths = self.catalog.pruned_file_paths("blocks", "term", list(q_terms))
         if paths is None:
             return self.catalog.read("blocks")
         if not paths:
             return self.catalog.read("blocks").limit(0)
         key = tuple(sorted(paths))
-        if key in self._scan_cache:
-            self._scan_cache.move_to_end(key)
-        else:
-            self._scan_cache[key] = self.spark.read.parquet(*paths)
-            while len(self._scan_cache) > self.SCAN_CACHE_MAX:
-                self._scan_cache.popitem(last=False)
-        return self._scan_cache[key]
+        return self._scans.get(
+            snap, [key], lambda _: {key: self.spark.read.parquet(*paths)},
+            self.SCAN_CACHE_MAX,
+        )[key]
 
     def _term_dfs(self, terms: Sequence[str]) -> dict[str, int]:
         """{term: df} for the subset of ``terms`` present in the index,
         served from the per-term cache; only never-seen terms touch the
-        terms table (manifest-pruned pyarrow read)."""
-        snap = self.catalog.manifest("terms")["snapshot_id"]
-        if self._df_cache is None or self._df_cache[0] != snap:
-            self._df_cache = (snap, {})
-        cache = self._df_cache[1]
-        missing = [t for t in terms if t not in cache]
-        if missing:
+        terms table (manifest-pruned pyarrow read). Miss markers for
+        absent terms count toward the cache bound, the committed
+        vocabulary size, so user input cannot grow it past that."""
+        man = self.catalog.manifest("terms")
+
+        def load(missing: list[str]) -> dict:
             tbl = self.catalog.read_pruned_arrow(
                 "terms", "term", missing, columns=["term", "df"]
             )
-            got = dict(
+            return dict(
                 zip(tbl.column("term").to_pylist(),
                     tbl.column("df").to_pylist())
             )
-            for t in missing:
-                cache[t] = got.get(t)  # None = not in index (miss marker)
-        return {t: cache[t] for t in terms if cache[t] is not None}
+
+        got = self._dfs.get(
+            man["snapshot_id"], terms, load,
+            sum(e["rows"] for e in man["files"]),
+        )
+        return {t: d for t, d in got.items() if d is not None}
 
     def _term_fronts(self, terms: Sequence[str]) -> dict[str, tuple]:
         """{term: (lens, ftf, fdl)} — per-block Pareto-front arrays of
         the term's blocks, concatenated (lens = front sizes per block),
         from the per-term cache. The fronts are stats-INDEPENDENT, so
         the cache stays valid within a snapshot regardless of df/avgdl
-        drift; the avgdl-dependent tfw is computed per batch."""
-        snap = self.catalog.manifest("blocks")["snapshot_id"]
-        if self._front_cache is None or self._front_cache[0] != snap:
-            self._front_cache = (snap, {})
-        cache = self._front_cache[1]
-        missing = [t for t in terms if t not in cache]
-        if missing:
+        drift; the avgdl-dependent tfw is computed per batch. Bounded
+        by total front elements (a stopword's fronts at 10^11 docs are
+        ~10^9 points)."""
+
+        def load(missing: list[str]) -> dict:
             meta = self.catalog.read_pruned_arrow(
                 "blocks", "term", missing,
                 columns=["term", "tfs_front", "dls_front"],
             ).to_pandas()
-            for t in missing:
-                cache[t] = None
+            out = {}
             for t, g in meta.groupby("term"):
                 lens = g["tfs_front"].map(len).to_numpy(dtype=np.int64)
-                cache[t] = (
+                out[t] = (
                     lens,
                     np.concatenate(g["tfs_front"].to_numpy()).astype(
                         np.float64
@@ -611,36 +633,34 @@ class IndexBuilder:
                         np.float64
                     ),
                 )
-        # bound the cache by total front elements (a stopword's fronts
-        # at 10^11 docs are ~10^9 points): evict insertion-oldest AFTER
-        # inserting, never the live query's terms — evicting first let a
-        # single call overshoot the ceiling by the size of its own fronts
-        live = set(terms)
-        total = sum(v[1].size for v in cache.values() if v is not None)
-        if total > self.FRONT_CACHE_MAX_ELEMS:
-            for t in [t for t in cache if t not in live]:
-                if total <= self.FRONT_CACHE_MAX_ELEMS:
-                    break
-                v = cache.pop(t)
-                if v is not None:
-                    total -= v[1].size
-        return {t: cache[t] for t in terms if cache[t] is not None}
+            return out
 
-    def invalidate_caches(self) -> None:
-        """Drop every driver-side cache so the next query re-reads the
-        committed tables. Compactions and merges rewrite index tables
-        out from under a live builder; a builder that served queries
-        BEFORE would otherwise score with stale stats (wrong
-        idf/avgdl) afterwards. (Snapshot-keyed caches — warm postings,
-        term fronts — self-invalidate, but clearing them here frees
-        their memory too.)"""
-        self._stats_cache = None
-        self._dm_schema_cache = None
-        self._scan_cache.clear()
-        self._df_cache = None
-        self._front_cache = None
-        self._docmap_pdf = None
-        self._tomb_cache = None
+        got = self._fronts.get(
+            self.catalog.manifest("blocks")["snapshot_id"], terms, load,
+            self.FRONT_CACHE_MAX_ELEMS,
+        )
+        return {t: v for t, v in got.items() if v is not None}
+
+    def _at_head(self, table: str, load: Callable[[], Any]) -> Any:
+        """``load()`` as of the head snapshot of ``table``, cached until
+        the table commits another. The snapshot id is read BEFORE
+        loading, so a commit racing the load caches newer data under
+        the older id — the next call reloads once — never stale data
+        under the newer id. One entry per loader (keyed by its code),
+        so ``load`` must depend on nothing but the table."""
+        snap = self.catalog.manifest(table)["snapshot_id"]
+        key = (table, load.__code__)
+        hit = self._heads.get(key)
+        if hit is None or hit[0] != snap:
+            hit = self._heads[key] = (snap, load())
+        return hit[1]
+
+    def _docmap_schema(self) -> T.StructType:
+        """Spark schema of the docmap (one schema-inference job per
+        docmap snapshot)."""
+        return self._at_head(
+            "docmap", lambda: self.catalog.read("docmap").schema
+        )
 
     #: every table an index may commit, in rollback order
     INDEX_TABLES = ("docmap", "postings", "terms", "terms_rev",
@@ -665,9 +685,9 @@ class IndexBuilder:
 
     def rollback(self, pins: dict[str, str]) -> None:
         """Restore every index table to its pinned snapshot (catalog
-        time travel), drop tables born after the pin (e.g. a delete's
-        first tombstones table), and flush driver caches so the next
-        query serves the restored state. Non-destructive at the catalog
+        time travel) and drop tables born after the pin (e.g. a delete's
+        first tombstones table); the next query of any builder on this
+        root serves the restored state. Non-destructive at the catalog
         level — the abandoned snapshots stay readable until
         ``expire_snapshots``."""
         for t, sid in pins.items():
@@ -677,18 +697,20 @@ class IndexBuilder:
             if t not in pins and self.catalog.exists(t):
                 self.catalog.drop(t)
                 self.ckpt.unmark(t)
-        self.invalidate_caches()
 
     def _corpus_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl) from the committed stats table — driver-side
-        single-row pyarrow read, cached per builder (no Spark job)."""
-        if self._stats_cache is None:
+        single-row pyarrow read, cached per stats snapshot (no Spark
+        job)."""
+
+        def load() -> tuple[int, float]:
             t = self.catalog.read_arrow("stats")
-            self._stats_cache = (
+            return (
                 int(t.column("n_docs")[0].as_py()),
                 float(t.column("avgdl")[0].as_py()),
             )
-        return self._stats_cache
+
+        return self._at_head("stats", load)
 
     # -- deletes (tombstones) ----------------------------------------------
 
@@ -725,16 +747,17 @@ class IndexBuilder:
         payload; with few/low deletes it is proportionally tiny."""
         if not self._n_tombstones():
             return None
-        snap = self.catalog.manifest("tombstones")["snapshot_id"]
-        if self._tomb_cache is None or self._tomb_cache[0] != snap:
+
+        def load() -> tuple[np.ndarray, np.ndarray]:
             t = self.catalog.read_arrow("tombstones", columns=["doc_ord"])
             dead = np.unique(t.column("doc_ord").to_numpy())
             bits = np.zeros((int(dead[-1]) >> 3) + 1, dtype=np.uint8)
             np.bitwise_or.at(
                 bits, dead >> 3, (1 << (dead & 7)).astype(np.uint8)
             )
-            self._tomb_cache = (snap, bits, dead)
-        return self._tomb_cache[1], self._tomb_cache[2]
+            return bits, dead
+
+        return self._at_head("tombstones", load)
 
     def delete_docs(self, docs) -> int:
         """Tombstone documents by id — O(|docs| + tombstones), no index
@@ -765,7 +788,7 @@ class IndexBuilder:
             ]
             if not rows:
                 return 0
-            dm_schema = self.catalog.read("docmap").schema
+            dm_schema = self._docmap_schema()
             docs = self.spark.createDataFrame(
                 rows, T.StructType([dm_schema[c] for c in self.id_cols])
             )
@@ -802,7 +825,6 @@ class IndexBuilder:
             hits, "tombstones", stats_cols=["doc_ord"], mode="append",
             row_group_bytes=LEAF_ROW_GROUP_BYTES,
         )
-        self._tomb_cache = None
         return self._n_tombstones() - before
 
     def upsert_docs(self, docs: DataFrame,
@@ -960,7 +982,6 @@ class IndexBuilder:
                 )
                 out["meta_layer"] = "remapped"
             old_map.unpersist()
-        self.invalidate_caches()
         return out
 
     def optimize(self, n_partitions: int | None = None) -> dict:
@@ -1242,9 +1263,7 @@ class IndexBuilder:
            docmap via manifest-pruned pyarrow (no docmap scan job).
         """
         plan = self._plan_queries(queries)
-        if self._dm_schema_cache is None:
-            self._dm_schema_cache = self.catalog.read("docmap").schema
-        dm_schema = self._dm_schema_cache
+        dm_schema = self._docmap_schema()
         out_schema = T.StructType(
             [T.StructField("query_id", T.IntegerType(), False)]
             + [dm_schema[c] for c in self.id_cols]
@@ -1542,14 +1561,10 @@ class IndexBuilder:
         pyarrow (row-group predicate) read. Zero Spark jobs either way."""
         n_docs, _ = self._corpus_stats()
         if n_docs <= self.DOCMAP_CACHE_MAX_DOCS:
-            snap = self.catalog.manifest("docmap")["snapshot_id"]
-            if self._docmap_pdf is None or self._docmap_pdf[0] != snap:
-                pdf = self.catalog.read_arrow(
-                    "docmap", columns=["doc_ord", *self.id_cols]
-                ).to_pandas().set_index("doc_ord")
-                self._docmap_pdf = (snap, pdf)
-            out = self._docmap_pdf[1].loc[list(ords)].reset_index()
-            return out
+            pdf = self._at_head("docmap", lambda: self.catalog.read_arrow(
+                "docmap", columns=["doc_ord", *self.id_cols]
+            ).to_pandas().set_index("doc_ord"))
+            return pdf.loc[list(ords)].reset_index()
         return (
             self.catalog.read_pruned_arrow(
                 "docmap", "doc_ord", values=[int(o) for o in ords],
@@ -1571,22 +1586,15 @@ class IndexBuilder:
 
         tfw (the BM25 tf/length weight) is precomputed at insert — it
         depends only on (tf, dl, avgdl), so a cached query is one
-        idf-multiply + bincount. The cache key includes the stats
-        snapshot, so avgdl drift (appends) invalidates alongside the
-        blocks snapshot. Per-term precompute is elementwise, hence
-        bit-identical to computing tfw over the concatenated stream."""
-        snap = (
-            self.catalog.manifest("blocks")["snapshot_id"],
-            self.catalog.manifest("stats")["snapshot_id"],
-        )
-        if self._post_cache_snap != snap:
-            self._post_cache.clear()
-            self._post_cache_n = 0
-            self._post_cache_snap = snap
-        missing = [t for t in terms if t not in self._post_cache]
-        if missing:
+        idf-multiply + bincount, and the cache is keyed by the blocks
+        snapshot AND the avgdl the weights were computed with. Per-term
+        precompute is elementwise, hence bit-identical to computing tfw
+        over the concatenated stream."""
+        snap = self.catalog.manifest("blocks")["snapshot_id"]
+
+        def load(missing: list[str]) -> dict:
             batch = self.catalog.read_pruned_arrow(
-                "blocks", "term", list(missing),
+                "blocks", "term", missing,
                 columns=["term", "n_docs", "docs_packed", "tfs_packed",
                          "dls_packed"],
             ).to_pandas()
@@ -1618,22 +1626,11 @@ class IndexBuilder:
                 ends = np.concatenate((bounds, [term_rep.size]))
                 for s, e in zip(starts, ends):
                     found[term_rep[s]] = (ords[s:e], tfw[s:e])
-            for t in missing:
-                val = found.get(t, empty)
-                self._post_cache[t] = val
-                self._post_cache_n += int(val[0].size)
-        out = {}
-        for t in terms:  # refresh LRU position before any eviction
-            self._post_cache.move_to_end(t)
-            out[t] = self._post_cache[t]
-        live = set(terms)
-        while self._post_cache_n > self.POSTINGS_CACHE_MAX:
-            t = next(iter(self._post_cache))
-            if t in live:  # only the current query's terms remain
-                break
-            old = self._post_cache.pop(t)
-            self._post_cache_n -= int(old[0].size)
-        return out
+            return {t: found.get(t, empty) for t in missing}
+
+        return self._postings.get(
+            (snap, avgdl), terms, load, self.POSTINGS_CACHE_MAX
+        )
 
     def _warm_top_ords(
         self, query: str | Sequence[str], k: int
@@ -1645,8 +1642,6 @@ class IndexBuilder:
         exceeds the warm block budget (caller falls back to the
         distributed path); empty arrays when nothing matches."""
         plan = self._plan_queries([query])
-        if self._dm_schema_cache is None:
-            self._dm_schema_cache = self.catalog.read("docmap").schema
         empty = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
         if plan is None:
             return empty
@@ -1713,14 +1708,19 @@ class IndexBuilder:
         regime); stopword-heavy queries fall back to the distributed
         ``query_batch``. Returns pandas (*id_cols, score), rank- and
         value-identical to the batch path (pinned by tests)."""
-        cols = [*self.id_cols, "score"]
+        return self._warm_frame(query, k)
+
+    def _warm_frame(self, query: str | Sequence[str], k: int) -> pd.DataFrame:
+        """(*id_cols, score) top-k for one query (string or expanded
+        term list): the warm core plus id resolve, or ``query_batch``
+        when the query exceeds the warm block budget."""
         r = self._warm_top_ords(query, k)
         if r is None:
             out = self.query_batch([query], k=k).toPandas()
             return out.drop(columns=["query_id"]).reset_index(drop=True)
         top, top_scores = r
         if top.size == 0:
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame(columns=[*self.id_cols, "score"])
         out = self._resolve_ords(
             [int(o) for o in top]
         )[list(self.id_cols)].copy()
@@ -1738,22 +1738,10 @@ class IndexBuilder:
         Stopword-grade prefixes ("t*") exceed the warm block budget and
         fall back to the distributed batch path on the same
         expansion."""
-        cols = [*self.id_cols, "score"]
         exp = self.expand_prefix(prefix, max_terms)
         if not exp:
-            return pd.DataFrame(columns=cols)
-        r = self._warm_top_ords(exp, k)
-        if r is None:
-            out = self.query_batch([exp], k=k).toPandas()
-            return out.drop(columns=["query_id"]).reset_index(drop=True)
-        top, top_scores = r
-        if top.size == 0:
-            return pd.DataFrame(columns=cols)
-        out = self._resolve_ords(
-            [int(o) for o in top]
-        )[list(self.id_cols)].copy()
-        out["score"] = top_scores
-        return out
+            return pd.DataFrame(columns=[*self.id_cols, "score"])
+        return self._warm_frame(exp, k)
 
     # -- antidb-parity point/range reads over the PHYSICAL index ---------
     # (Prs.eq/rng against the .adb archive, prs.py:86-131: file-level
@@ -1867,9 +1855,9 @@ class IndexBuilder:
         )
 
     def _empty_topk(self) -> DataFrame:
-        dm = self.catalog.read("docmap")
+        dm = self._docmap_schema()
         schema = ", ".join(
-            f"{c} {dm.schema[c].dataType.simpleString()}"
+            f"{c} {dm[c].dataType.simpleString()}"
             for c in self.id_cols
         ) + ", score double"
         return self.spark.createDataFrame([], schema)
@@ -2755,7 +2743,7 @@ class IndexBuilder:
                 return self.spark.createDataFrame(
                     [], self._termvec_schema()
                 )
-            dm_schema = self.catalog.read("docmap").schema
+            dm_schema = self._docmap_schema()
             docs = self.spark.createDataFrame(
                 rows, T.StructType([dm_schema[c] for c in self.id_cols])
             )
@@ -2792,7 +2780,7 @@ class IndexBuilder:
         return out.select(*self.id_cols, "term", "tf", "dl", "df")
 
     def _termvec_schema(self) -> T.StructType:
-        dm = self.catalog.read("docmap").schema
+        dm = self._docmap_schema()
         return T.StructType(
             [dm[c] for c in self.id_cols]
             + [
@@ -3396,10 +3384,10 @@ class IndexBuilder:
         id_out = [c for c in self.id_cols if c != group_col]
         if not q_terms:
             gt = gsrc.schema[group_col].dataType.simpleString()
-            dm = self.catalog.read("docmap")
+            dm = self._docmap_schema()
             schema = ", ".join(
                 [f"{group_col} {gt}", "best_score double", "rank int"]
-                + [f"{c} {dm.schema[c].dataType.simpleString()}"
+                + [f"{c} {dm[c].dataType.simpleString()}"
                    for c in id_out]
                 + ["score double"]
             )

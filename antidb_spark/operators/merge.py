@@ -253,7 +253,6 @@ def merge_index(
     if src.ckpt.is_done(UPSERT_MARK) and not dst.ckpt.is_done(UPSERT_MARK):
         dst.ckpt.mark_done(UPSERT_MARK)
 
-    dst.invalidate_caches()
     return {
         "mode": "merge",
         "offset": offset,

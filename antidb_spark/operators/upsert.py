@@ -168,7 +168,6 @@ def append_run(
         props={"n_runs": n_runs + 1},
         row_group_bytes=LEAF_ROW_GROUP_BYTES,
     )
-    b._stats_cache = None  # appended corpus → cached (n_docs, avgdl) stale
 
     # positional layer: append a run when position rows for the delta
     # are available; drop otherwise (phrase queries raise until rebuild)
@@ -239,7 +238,6 @@ def append_run(
         snapshot=man["snapshot_id"],
         **(ckpt_extra or {}),
     )
-    b.invalidate_caches()  # terms/stats/docmap changed under a live builder
     return {
         "run": n_runs, "pos_mode": pos_mode, "meta_mode": meta_mode,
         "snapshot": man["snapshot_id"],

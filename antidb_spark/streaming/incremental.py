@@ -375,11 +375,6 @@ def compact_incremental(
         sink.mark_compacted(todo)
         return {"mode": "full", "reason": "no committed index"}
 
-    def _invalidate(builder: IndexBuilder) -> None:
-        """Every compaction path rewrites index tables out from under a
-        live builder — see ``IndexBuilder.invalidate_caches``."""
-        builder.invalidate_caches()
-
     docmap = b.catalog.read("docmap")
     delta_ids = delta_post.select(*sink.id_cols).distinct()
     n_updates = delta_ids.join(docmap, sink.id_cols).count()
@@ -476,7 +471,6 @@ def compact_incremental(
             snapshot=man["snapshot_id"], seconds=0.0,
         )
         b.build(corpus=None, n_partitions=n_part)
-        _invalidate(b)
         sink.mark_compacted(todo)
         return {"mode": "full", "reason": f"{n_updates} existing docs updated"}
 

@@ -175,6 +175,34 @@ def test_query_warm_matches_batch(spark, built):
     assert len(b.query_warm("...!!!")) == 0
 
 
+def test_first_query_warm_runs_no_spark_job(spark, built):
+    b, _ = built
+    fresh = IndexBuilder(spark, b.root)
+    sc = spark.sparkContext
+    sc.setJobGroup("first_query_warm", "first query_warm, fresh builder")
+    try:
+        got = fresh.query_warm("kemuba0 data", k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("first_query_warm") == []
+    assert got.values.tolist() == \
+        b.query_warm("kemuba0 data", k=5).values.tolist()
+
+
+def test_df_cache_bounded_by_vocabulary(spark, built):
+    """Absent query terms leave miss markers; their number stays within
+    the committed vocabulary size however many distinct misses arrive."""
+    b, _ = built
+    fresh = IndexBuilder(spark, b.root)
+    vocab = sum(e["rows"] for e in b.catalog.manifest("terms")["files"])
+    absent = [f"zzabsent{i}q" for i in range(vocab + 500)]
+    for i in range(0, len(absent), 500):
+        assert len(fresh.query_warm(" ".join(absent[i:i + 500]))) == 0
+    assert len(fresh._dfs) <= vocab
+    assert fresh.query_warm("kemuba0 data", k=5).values.tolist() == \
+        b.query_warm("kemuba0 data", k=5).values.tolist()
+
+
 def test_miss_is_empty(spark, built):
     b, _ = built
     out = b.query_batch(["zzzznotaterm"], k=10)

@@ -51,6 +51,12 @@ def _pick_sentinels(corpus_pdf, n=2):
     return out[:n]
 
 
+def _answers(b, q):
+    """(query_warm rows, query_batch rows) of ``q`` on builder ``b``."""
+    batch = b.query_batch([q], k=10).toPandas().drop(columns=["query_id"])
+    return b.query_warm(q, k=10).values.tolist(), batch.values.tolist()
+
+
 def _new_text(sent, i):
     # two fixed bigrams per doc: (sent, marker) and (marker, filler)
     return f"{sent} {_V[300 + i]} {_V[600]} {_V[601]} {sent}"
@@ -60,7 +66,9 @@ def _new_text(sent, i):
 def upserted(spark, tmp_path_factory):
     """Index (docmeta + positional) over 16 convs; 3 existing docs are
     REPLACED (role flipped to 'tool', text rewritten around a sentinel
-    word) and 2 brand-new docs INSERTED in one upsert call."""
+    word) and 2 brand-new docs INSERTED in one upsert call. A second
+    builder on the same root (``reader``) queries before the upsert, so
+    its driver caches hold the pre-upsert state."""
     corpus = synth_transcripts(spark, n_convs=16, seed=7).cache()
     corpus_pdf = corpus.toPandas()
     b = IndexBuilder(spark, str(tmp_path_factory.mktemp("upsidx")))
@@ -68,6 +76,8 @@ def upserted(spark, tmp_path_factory):
     b.build_doc_meta(corpus, ["role"])
     build_positional_index(b, corpus, n_partitions=4)
     pre_all = b.query_pinned(QUERY, k=1_000_000).toPandas()
+    reader = IndexBuilder(spark, b.root)
+    _answers(reader, QUERY)
     sent, sent2 = _pick_sentinels(corpus_pdf)
     top3 = pre_all.head(3)
     replaced = [
@@ -84,12 +94,13 @@ def upserted(spark, tmp_path_factory):
     ]
     m = b.upsert_docs(spark.createDataFrame(pd.DataFrame(rows)),
                       n_partitions=4)
-    yield b, corpus, corpus_pdf, pre_all, replaced, rows, sent, sent2, m
+    yield (b, corpus, corpus_pdf, pre_all, replaced, rows, sent, sent2, m,
+           reader)
     corpus.unpersist()
 
 
 def test_upsert_replaces_and_inserts(upserted):
-    b, _, corpus_pdf, pre_all, replaced, rows, sent, _, m = upserted
+    b, _, corpus_pdf, pre_all, replaced, rows, sent, _, m, _ = upserted
     assert m["mode"] == "upsert"
     assert m["n_replaced"] == 3
     assert m["pos_mode"] == "append"
@@ -122,8 +133,14 @@ def test_upsert_replaces_and_inserts(upserted):
     assert n_docs == len(corpus_pdf) + 5
 
 
-def test_warm_matches_batch_on_multirun_index(upserted):
-    b, *_, sent, _, _ = upserted
+@pytest.mark.parametrize("scale", ["dense", "sparse"])
+def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale):
+    b, *_, sent, _, _, _ = upserted
+    if scale == "sparse":
+        # the large-corpus branches: sparse warm scorer (with the
+        # tombstone bitmap) and pruned-read id resolve
+        monkeypatch.setattr(b, "DENSE_WARM_MAX_DOCS", 0)
+        monkeypatch.setattr(b, "DOCMAP_CACHE_MAX_DOCS", 0)
     # upserts create a second blocks run — the exact layout where the
     # advisory's per-term segment-overwrite bug dropped postings
     for q in (QUERY, sent, f"the {sent}"):
@@ -141,8 +158,39 @@ def test_warm_matches_batch_on_multirun_index(upserted):
     assert pruned.values.tolist() == batch.values.tolist()
 
 
+def test_live_reader_sees_upsert(upserted):
+    """A builder that queried before another builder's upsert answers
+    like a fresh one afterwards: every driver cache entry is keyed by
+    the snapshot it was read under, so none can pair new df with old
+    (n_docs, avgdl)."""
+    b, *_, sent, _, _, reader = upserted
+    fresh = IndexBuilder(b.spark, b.root)
+    for q in (QUERY, sent):
+        assert _answers(reader, q) == _answers(fresh, q), q
+
+
+def test_live_reader_sees_rollback(spark, tmp_path):
+    """Same contract for a writer-side rollback: a reader that cached
+    the upserted state serves the restored one afterwards."""
+    corpus = synth_transcripts(spark, n_convs=16, seed=7)
+    w = IndexBuilder(spark, str(tmp_path / "rb_idx"))
+    w.build(corpus, n_partitions=4)
+    pins = w.pin()
+    rows = [
+        {"conv_id": "conv_zz_new", "turn_idx": t, "text": f"{QUERY} {t}"}
+        for t in range(3)
+    ]
+    w.upsert_docs(spark.createDataFrame(pd.DataFrame(rows)), n_partitions=4)
+    reader = IndexBuilder(spark, w.root)
+    upserted_answers = _answers(reader, QUERY)
+    w.rollback(pins)
+    got = _answers(reader, QUERY)
+    assert got == _answers(IndexBuilder(spark, w.root), QUERY)
+    assert got != upserted_answers
+
+
 def test_positional_layer_serves_new_generation(upserted):
-    b, _, corpus_pdf, _, replaced, rows, sent, _, _ = upserted
+    b, _, corpus_pdf, _, replaced, rows, sent, _, _, _ = upserted
     # a bigram of the NEW text finds the replaced doc, warm == batch
     new_phrase = " ".join(rows[0]["text"].split()[:2])
     got = phrase_query(b, new_phrase).toPandas()
@@ -164,7 +212,7 @@ def test_positional_layer_serves_new_generation(upserted):
 
 
 def test_docmeta_serves_new_generation(upserted):
-    b, *_, sent, _, _ = upserted
+    b, *_, sent, _, _, _ = upserted
     got = b.facet_counts(sent, "role").toPandas()
     assert list(map(tuple, got.values.tolist())) == [("tool", 5)]
 
