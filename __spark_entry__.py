@@ -1528,17 +1528,22 @@ def _q_packed_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from antidb_spark.operators.datasets import assemble_packs, pack_sequences
 
     ex = assemble_packs(pack_sequences(_docs(spark, sf_dir), budget=256))
-    # parts rendered as strings for the cross-engine compare (structs
-    # stringify differently in Spark vs DuckDB); order is the operator's
+    # parts rendered as one ';'-joined string for the cross-engine
+    # compare (structs stringify differently in Spark vs DuckDB, and the
+    # gate's canonicalizer takes scalar columns only); order is the
+    # operator's
     return ex.select(
         "pack_id", "n_docs", "pack_len",
-        F.transform(
-            "parts",
-            lambda p: F.format_string(
-                "%d:%d:%d:%d",
-                p["pack_offset"], p["doc_id"], p["doc_offset"],
-                p["slice_len"],
+        F.array_join(
+            F.transform(
+                "parts",
+                lambda p: F.format_string(
+                    "%d:%d:%d:%d",
+                    p["pack_offset"], p["doc_id"], p["doc_offset"],
+                    p["slice_len"],
+                ),
             ),
+            ";",
         ).alias("parts"),
     )
 
@@ -3281,8 +3286,9 @@ sl AS (SELECT pack_id, doc_id,
   FROM spans)
 SELECT pack_id, count(*)::BIGINT AS n_docs,
   sum(slice_len)::BIGINT AS pack_len,
-  list(format('{{}}:{{}}:{{}}:{{}}', pack_offset, doc_id, doc_offset,
-              slice_len) ORDER BY pack_offset) AS parts
+  array_to_string(list(format('{{}}:{{}}:{{}}:{{}}', pack_offset, doc_id,
+                             doc_offset, slice_len) ORDER BY pack_offset),
+                  ';') AS parts
 FROM sl GROUP BY pack_id
 """
 

@@ -79,7 +79,7 @@ from antidb_spark.functions.packing import (
 )
 from antidb_spark.operators.stats import build_postings
 from antidb_spark.schema import DOC_ID_COLS
-from antidb_spark.session import INDEX_SCAN_SPLIT_BYTES, scoped_conf
+from antidb_spark.session import index_scan_conf
 from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES, Catalog
 from antidb_spark.sources.checkpoint import BuildCheckpoint, PhaseTimer
 
@@ -669,7 +669,10 @@ class IndexBuilder:
 
     #: delete batches up to this many distinct first-id values resolve
     #: ordinals via a manifest-PRUNED docmap read (values-list prune is
-    #: O(files × ids) driver work); bigger deletes full-scan instead
+    #: O(files × ids) driver work); bigger deletes full-scan instead.
+    #: Also the per-call cap of :meth:`term_vectors`, which counts
+    #: distinct id TUPLES (the ordinals it collects), not first-id
+    #: values: a batch over it raises.
     DELETE_PRUNE_MAX_IDS = 4096
 
     def pin(self) -> dict[str, str]:
@@ -1256,7 +1259,12 @@ class IndexBuilder:
            packed into per-(map-partition, doc-range-bucket) binary
            blob rows → the ONE shuffle moves a few hundred blobs
            instead of 10^7+ posting rows (row-codec cost was larger
-           than the decode+score work itself).
+           than the decode+score work itself). The scan runs under
+           ``session.index_scan_conf``: straggler files split at 4 MB,
+           small run files pack into shared tasks by bytes, because
+           each decode task is a Python task with a ≈ 110-150 ms floor
+           before its first row, so one task per small upsert run
+           would cost more than the run's decode.
         4. tree top-k: per-bucket dense accumulation + top-k (numpy,
            deterministic blob order) → driver merge of
            ≤ k·|queries|·n_partitions rows → id resolution against the
@@ -1434,17 +1442,10 @@ class IndexBuilder:
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-        # Materialize under the fine index-scan split (scoped — see
-        # session.INDEX_SCAN_SPLIT_BYTES): the blocks files backing this
-        # action are term-range partitioned with 512 KB row groups, and
-        # 4 MB scan partitions break the straggler term files into
-        # balanced decode+score tasks. Scoping it here keeps every other
-        # scan in the session (128 MB-row-group tables) at the default.
-        with scoped_conf(
-            self.spark,
-            "spark.sql.files.maxPartitionBytes",
-            str(INDEX_SCAN_SPLIT_BYTES),
-        ):
+        # index-scan geometry (step 3 above) for this action only:
+        # every other scan in the session (128 MB-row-group tables)
+        # keeps the defaults
+        with index_scan_conf(self.spark):
             top_pdf = (
                 bucketed.repartition(n_part, "bucket")
                 .mapInPandas(reduce_topk, schema=topk_schema)
@@ -2726,9 +2727,10 @@ class IndexBuilder:
         as scoring). ``docs``: a DataFrame with ``id_cols`` or an
         iterable of id tuples, like :meth:`delete_docs`; unknown ids
         yield no rows. The request batch is collected driver-side to
-        drive file pruning, so it is bounded by the caller (the
-        interactive per-doc inspection shape, ≤ thousands of ids —
-        corpus-scale re-keying is :meth:`build_term_vectors` itself).
+        drive file pruning, so it is capped at ``DELETE_PRUNE_MAX_IDS``
+        distinct ids (the interactive per-doc inspection shape; a
+        bigger batch raises ``ValueError`` — corpus-scale re-keying is
+        :meth:`build_term_vectors` itself).
 
         Plan: pruned docmap resolve (ids → ordinals) → tombstone
         anti-join → manifest-pruned ``termvecs`` read of ONLY those
@@ -2748,17 +2750,18 @@ class IndexBuilder:
                 rows, T.StructType([dm_schema[c] for c in self.id_cols])
             )
         ids = docs.select(*self.id_cols).distinct()
+        # the capped probe bounds the ordinal collect below
+        probe = ids.limit(self.DELETE_PRUNE_MAX_IDS + 1).collect()
+        if len(probe) > self.DELETE_PRUNE_MAX_IDS:
+            raise ValueError(
+                f"term_vectors takes at most {self.DELETE_PRUNE_MAX_IDS} "
+                "distinct ids per call"
+            )
         c0 = self.id_cols[0]
-        dm = None
-        if c0 in self.catalog.manifest("docmap")["stats_cols"]:
-            probe = ids.select(c0).distinct().limit(
-                self.DELETE_PRUNE_MAX_IDS + 1
-            ).collect()
-            if len(probe) <= self.DELETE_PRUNE_MAX_IDS:
-                vals = sorted({r[0] for r in probe if r[0] is not None})
-                if vals:
-                    dm = self.catalog.read_pruned("docmap", c0, values=vals)
-        if dm is None:
+        vals = sorted({r[c0] for r in probe if r[c0] is not None})
+        if vals and c0 in self.catalog.manifest("docmap")["stats_cols"]:
+            dm = self.catalog.read_pruned("docmap", c0, values=vals)
+        else:
             dm = self.catalog.read("docmap")
         # the probe relation is a bounded request batch — broadcast it
         # into the docmap semi-join (a sort-merge join would shuffle the

@@ -11,8 +11,7 @@ brief's preferred strategy) rather than Pandas-UDF state machines:
   window ordered by (ts, side, id). ONE shuffle on the key — the same
   exchange a groupBy would pay — and per-row O(1) window state, so the
   plan survives any corpus size where single-key event counts fit a
-  partition (the same bound sessionize already carries; salt by
-  coarse time bucket if a key is pathological).
+  partition (the same bound sessionize already carries).
 - ``banded_range_join``: pairs within ±band seconds, as a BUCKETIZED
   equi-join: left explodes to its bucket ±1 (3 rows), the join key is
   (key, bucket), and the exact |Δts| ≤ band filter runs post-join.

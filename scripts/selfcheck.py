@@ -1,6 +1,8 @@
 """Replicates the driver's correctness gate locally: run entry(spark),
 then each queries()[name] vs oracle_sql()[name] through DuckDB at sf0.01,
 comparing row-count, schema width, and an order-insensitive value hash.
+An entry whose output has an array, map or struct column fails before
+its rows are compared (the driver's canonicalizer takes scalars only).
 
 Usage: python scripts/selfcheck.py [sf_dir] [name ...]
 """
@@ -12,6 +14,7 @@ import sys
 import time
 
 import duckdb
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 sys.path.insert(0, ".")
 
@@ -40,6 +43,16 @@ def value_hash(rows, colnames):
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
+def nonscalar_cols(schema) -> list[str]:
+    """Columns a driver-gate entry may not return: the gate's pandas
+    canonicalizer sorts result frames, and array / map / struct cells
+    are unhashable there."""
+    return [
+        f.name for f in schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -64,6 +77,11 @@ def main() -> int:
             continue
         t0 = time.time()
         sdf = fn(spark, sf_dir)
+        bad = nonscalar_cols(sdf.schema)
+        if bad:
+            failures += 1
+            print(f"  {name:28s} FAIL non-scalar output columns {bad}")
+            continue
         srows = [tuple(r) for r in sdf.collect()]
         scols = sdf.columns
         t_spark = time.time() - t0

@@ -158,3 +158,20 @@ def test_term_vectors_pruned_read(built):
         pruned = b.catalog.pruned_file_paths("termvecs", "doc_ord",
                                              values=ords)
         assert pruned is not None and 0 < len(pruned) < n_files
+
+
+def test_term_vectors_caps_request_batch(built, monkeypatch):
+    """The id batch is collected driver-side, so it is capped: at the
+    cap the call answers, one id over it raises instead of falling back
+    to a full docmap read and an unbounded ordinal collect."""
+    b, corpus = built
+    monkeypatch.setattr(b, "DELETE_PRUNE_MAX_IDS", 2)
+    ids = [
+        (r["conv_id"], int(r["turn_idx"]))
+        for r in corpus.select("conv_id", "turn_idx")
+        .orderBy("conv_id", "turn_idx").limit(3).collect()
+    ]
+    got = b.term_vectors(ids[:2]).select("conv_id", "turn_idx").distinct()
+    assert sorted(map(tuple, got.collect())) == sorted(ids[:2])
+    with pytest.raises(ValueError, match="at most 2"):
+        b.term_vectors(ids)

@@ -576,3 +576,48 @@ def test_docmeta_dropped_when_upsert_lacks_meta_cols(spark, tmp_path):
     assert not b.catalog.exists("docmeta")
     assert not b.ckpt.is_done("docmeta")
     corpus.unpersist()
+
+
+def test_query_batch_packs_small_run_files(spark, tmp_path):
+    """Six one-conversation upserts leave a many-file blocks table of
+    small runs; ``query_batch`` reads them in byte-packed scan tasks
+    (about one per core), not one Python task per file, and answers
+    exactly like the warm tier."""
+    corpus = synth_transcripts(spark, n_convs=16, seed=7)
+    b = IndexBuilder(spark, str(tmp_path / "pack_idx"))
+    b.build(corpus, n_partitions=4)
+    # conversation i of another seed, re-keyed onto conversation i:
+    # each upsert replaces that conversation's turns and appends a run
+    fresh = synth_transcripts(spark, n_convs=6, seed=8).toPandas()
+    conv_ids = sorted(corpus.toPandas()["conv_id"].unique())[:6]
+    for cid, (_, turns) in zip(conv_ids, fresh.groupby("conv_id")):
+        b.upsert_docs(spark.createDataFrame(turns.assign(conv_id=cid)))
+    queries = [QUERY, f"{_V[5]} {_V[50]} {_V[500]}", f"{_V[2]} {_V[2000]}"]
+    all_terms = sorted({t for q in queries for t in q.split()})
+    n_scanned = len(b.catalog.pruned_file_paths("blocks", "term", all_terms))
+    n_files = len(b.catalog.manifest("blocks")["files"])
+    # first call caches the scan relation (file listing may run jobs)
+    b.query_batch(queries, k=10).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("packed_scan", "query_batch over a many-run index")
+    try:
+        out = b.query_batch(queries, k=10)  # runs its one action eagerly
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows = out.toPandas()
+    tracker = sc.statusTracker()
+    # stages that ran tasks: AQE runs the scan + decode map stage as its
+    # own job, and the result job lists it again as a skipped stage. A
+    # planning job or a second pass in the group breaks this count
+    stage_ids = sorted(
+        s for j in tracker.getJobIdsForGroup("packed_scan")
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s).numCompletedTasks
+    )
+    assert len(stage_ids) == 2, stage_ids  # decode, then reduce
+    decode_tasks = tracker.getStageInfo(stage_ids[0]).numTasks
+    assert decode_tasks < n_scanned <= n_files
+    assert decode_tasks <= 2 * sc.defaultParallelism
+    for q_id, q in enumerate(queries):
+        got = rows[rows["query_id"] == q_id].drop(columns=["query_id"])
+        assert got.values.tolist() == b.query_warm(q, k=10).values.tolist(), q
