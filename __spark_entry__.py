@@ -1596,6 +1596,9 @@ def _q_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SLIDE_WIDTH_MIN, SLIDE_STEP_MIN = 60, 15
+
+
 def _q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window rollup (60-min windows every 15 min): exact
     4-window fan-out per event via codegen sequence/explode, then one
@@ -1605,7 +1608,7 @@ def _q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sliding_counts(
         spark.read.parquet(f"{sf_dir}/events.parquet"),
-        width_minutes=60, slide_minutes=15,
+        width_minutes=SLIDE_WIDTH_MIN, slide_minutes=SLIDE_STEP_MIN,
     )
 
 
@@ -1656,12 +1659,19 @@ def _q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.parquet(os.path.join(src, "zflush"))
         import glob
         import shutil as sh
+        import time
 
+        # the file source orders files by modification time: stamp them
+        # strictly increasing, flusher last, so that order cannot depend
+        # on how fast the writes above happened to land
+        t0 = time.time()
         n = 0
         for p in sorted(glob.glob(f"{src}/part*/part-*.parquet")) + sorted(
             glob.glob(f"{src}/zflush/part-*.parquet")
         ):
-            sh.move(p, os.path.join(src, f"{n:03d}.parquet"))
+            dst = os.path.join(src, f"{n:03d}.parquet")
+            sh.move(p, dst)
+            os.utime(dst, (t0 + n, t0 + n))
             n += 1
         for d in glob.glob(f"{src}/part*") + [f"{src}/zflush"]:
             sh.rmtree(d, ignore_errors=True)
@@ -2653,13 +2663,18 @@ FROM sess
 GROUP BY user_id, session_idx
 """
 
-_SLIDING_ORACLE = """
+def _sliding_oracle(width_min: int, slide_min: int) -> str:
+    """sliding_counts oracle: each event fans out to the width/slide
+    aligned window starts in (us - width, us], as the entry does."""
+    slide_us = slide_min * 60_000_000
+    return f"""
 WITH e AS (SELECT epoch_us(ts)::BIGINT AS us, event_type,
                   CAST(round(value * 100) AS BIGINT) AS cents
            FROM events),
-x AS (SELECT us - (us % 900000000) - i * 900000000 AS win_start_us,
+x AS (SELECT us - (us % {slide_us}) - i * {slide_us} AS win_start_us,
              event_type, cents
-      FROM e, unnest(generate_series(0, 3)) AS g(i))
+      FROM e, unnest(generate_series(0, {width_min // slide_min - 1}))
+              AS g(i))
 SELECT win_start_us, event_type,
        count(*)::BIGINT AS n_events, sum(cents)::BIGINT AS sum_cents
 FROM x
@@ -4035,7 +4050,7 @@ FROM documents
     # same oracle (flusher row excluded on the Spark side)
     out["stream_sessions"] = _SESSIONIZE_ORACLE
     out["tumbling_counts"] = _TUMBLING_ORACLE
-    out["sliding_counts"] = _SLIDING_ORACLE
+    out["sliding_counts"] = _sliding_oracle(SLIDE_WIDTH_MIN, SLIDE_STEP_MIN)
     out["doc_chunks"] = _doc_chunks_oracle(CHUNK_TOKS, CHUNK_OVERLAP)
     out["term_vectors"] = _term_vectors_oracle(TERMVEC_PROBES)
     out["simhash_dups"] = _simhash_dups_oracle(3)

@@ -11,6 +11,14 @@ not affordable, so this is the segment-style update contract: old
 version invisible instantly, statistics stale until purge (the same
 visibility contract `delete_docs` documents).
 
+Two tiers, chosen by input size against the cap bounded deletes
+already use (``IndexBuilder.DELETE_PRUNE_MAX_IDS``). A batch within it
+is read to the driver in ONE bounded Spark action (ids, JVM-analyzed
+tokens, metadata) and every table delta is numbered, packed and
+committed from there with pyarrow and the same kernels — an upsert's
+cost is otherwise per-job constants, dozens of jobs for a few dozen
+documents. Bigger batches run the distributed plan.
+
 Data-model note (why `alive_postings` exists): the stage-0 ``postings``
 table is keyed by id columns, not ordinals. An upsert appends the new
 generation's rows WITHOUT touching the old generation's — after the
@@ -30,9 +38,15 @@ from __future__ import annotations
 
 from functools import partial
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from antidb_spark.functions.analyze import tokens
 from antidb_spark.operators.stats import build_postings
 from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES
 
@@ -53,12 +67,45 @@ def alive_postings(builder) -> DataFrame:
     ).select("term", *builder.id_cols, "tf")
 
 
+def _with_ords(rel, new_docmap, id_cols: list[str], cols: list[str]):
+    """``rel`` keyed by id_cols → ``cols`` with the fresh ordinals (and
+    doc lengths) of ``new_docmap`` joined in."""
+    if isinstance(rel, pa.Table):
+        return rel.join(
+            new_docmap.select([*id_cols, "doc_ord", "dl"]), id_cols,
+            join_type="inner",
+        ).select(cols)
+    return rel.join(new_docmap, id_cols).select(*cols)
+
+
+def _packed(rel, sort_cols: list[str], kernel, run_base: int, schema,
+            n_part: int):
+    """Run a block-packing kernel over ``rel`` sorted by ``sort_cols``
+    (term, doc_ord first): range-partitioned in Spark, or as ONE
+    partition on the driver for a pyarrow delta."""
+    kernel = partial(kernel, run_base=run_base)
+    if isinstance(rel, pa.Table):
+        frame = rel.sort_by([(c, "ascending") for c in sort_cols]).to_pandas()
+        frame["_pid"] = 0
+        out = list(kernel(iter([frame])))
+        return pa.Table.from_pandas(
+            pd.concat(out) if out else pd.DataFrame(columns=schema.names),
+            schema=to_arrow_schema(schema), preserve_index=False,
+        )
+    return (
+        rel.repartitionByRange(n_part, "term", "doc_ord")
+        .sortWithinPartitions(*sort_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .mapInPandas(kernel, schema=schema)
+    )
+
+
 def append_run(
     builder,
-    delta_post: DataFrame,
+    delta_post: DataFrame | pa.Table,
     *,
-    pos_delta: DataFrame | None = None,
-    meta_delta: DataFrame | None = None,
+    pos_delta: DataFrame | pa.Table | None = None,
+    meta_delta: DataFrame | pa.Table | None = None,
     n_partitions: int | None = None,
     ckpt_extra: dict | None = None,
 ) -> dict:
@@ -74,6 +121,13 @@ def append_run(
     appends docmeta rows — passing None for a COMMITTED layer drops it
     (better absent than silently missing the appended docs).
 
+    Deltas are Spark DataFrames (streaming compaction, big upserts) or
+    driver-resident ``pyarrow.Table``s (the driver tier of
+    ``upsert_docs``). A pyarrow delta is numbered, merged and packed on
+    the driver by the same kernels and commits ONE file per table with
+    no Spark job; ``n_partitions`` is ignored then. Both tiers commit
+    the same rows in the same order.
+
     Factored out of streaming compaction (the sink-fed path) so batch
     upserts share one tested implementation.
     """
@@ -86,41 +140,67 @@ def append_run(
     b = builder
     spark = b.spark
     id_cols = list(b.id_cols)
+    local = isinstance(delta_post, pa.Table)
     n_part = n_partitions or spark.sparkContext.defaultParallelism
 
-    old_max = max(
+    start = 1 + int(max(
         e["max_doc_ord"]
         for e in b.catalog.manifest("docmap")["files"]
         if e.get("max_doc_ord") is not None
-    )
-    new_dl = delta_post.groupBy(*id_cols).agg(F.sum("tf").alias("dl"))
-    new_docmap = assign_doc_ords(new_dl, id_cols, n_part,
-                                 start=int(old_max) + 1)
+    ))
+    src = None
+    if local:
+        # dense ordinals in id order, exactly as assign_doc_ords numbers
+        # (arrow sorts strings bytewise, as Spark does)
+        new_dl = delta_post.group_by(id_cols).aggregate([("tf", "sum")])
+        new_dl = new_dl.sort_by([(c, "ascending") for c in id_cols])
+        new_docmap = pa.table({
+            **{c: new_dl[c] for c in id_cols},
+            "dl": new_dl["tf_sum"],
+            "doc_ord": np.arange(start, start + len(new_dl),
+                                 dtype=np.int64),
+        })
+    else:
+        new_dl = delta_post.groupBy(*id_cols).agg(F.sum("tf").alias("dl"))
+        new_docmap = assign_doc_ords(new_dl, id_cols, n_part, start=start)
+        src = getattr(new_docmap, "_ord_source", None)
     b.catalog.write(
         new_docmap, "docmap",
         stats_cols=["doc_ord", id_cols[0]], mode="append"
     )
-    src = getattr(new_docmap, "_ord_source", None)
 
     b.catalog.write(delta_post, "postings", mode="append")
 
     # terms: merged df lands in a fresh generation dir; the manifest
     # pointer swap is the crash-atomic commit point (Catalog.replace) —
     # a crash mid-rewrite leaves the old terms snapshot fully readable
-    old_terms = b.catalog.read("terms")
-    delta_df = delta_post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    merged_terms = (
-        old_terms.withColumnRenamed("df", "df_old")
-        .join(delta_df.withColumnRenamed("df", "df_new"), "term",
-              "full_outer")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("df_old"), F.lit(0))
-                + F.coalesce(F.col("df_new"), F.lit(0))
-            ).alias("df"),
+    if local:
+        old_terms = b.catalog.read_arrow("terms", columns=["term", "df"])
+        counts = pc.value_counts(delta_post["term"])
+        delta_df = pa.table(
+            {"term": counts.field("values"), "df": counts.field("counts")}
+        ).cast(old_terms.schema)
+        summed = pa.concat_tables([old_terms, delta_df]).group_by(
+            "term").aggregate([("df", "sum")])
+        merged_terms = pa.table(
+            {"term": summed["term"], "df": summed["df_sum"]}
+        ).sort_by("term")
+    else:
+        old_terms = b.catalog.read("terms")
+        delta_df = delta_post.groupBy("term").agg(
+            F.count(F.lit(1)).alias("df"))
+        merged_terms = (
+            old_terms.withColumnRenamed("df", "df_old")
+            .join(delta_df.withColumnRenamed("df", "df_new"), "term",
+                  "full_outer")
+            .select(
+                "term",
+                (
+                    F.coalesce(F.col("df_old"), F.lit(0))
+                    + F.coalesce(F.col("df_new"), F.lit(0))
+                ).alias("df"),
+            )
         )
-    )
     b.catalog.replace(merged_terms, "terms", stats_cols=["term"],
                       row_group_bytes=LEAF_ROW_GROUP_BYTES)
 
@@ -132,13 +212,20 @@ def append_run(
     # (older snapshots) take one full recompute, which upgrades them.
     old = b.catalog.read_arrow("stats").to_pylist()[0]
     if old.get("sum_dl") is not None:
-        d = new_dl.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-        ).first()
-        n = int(old["n_docs"]) + int(d["n"])
-        s = int(old["sum_dl"]) + int(d["s"] or 0)
-        stats = spark.createDataFrame(
-            [(n, s / n, s)], "n_docs bigint, avgdl double, sum_dl bigint"
+        if local:
+            d_n, d_s = len(new_docmap), pc.sum(new_docmap["dl"]).as_py()
+        else:
+            d = new_dl.agg(
+                F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+            ).first()
+            d_n, d_s = d["n"], d["s"]
+        n = int(old["n_docs"]) + int(d_n)
+        s = int(old["sum_dl"]) + int(d_s or 0)
+        stats = pa.table(
+            {"n_docs": [n], "avgdl": [s / n], "sum_dl": [s]},
+            schema=pa.schema([("n_docs", pa.int64()),
+                              ("avgdl", pa.float64()),
+                              ("sum_dl", pa.int64())]),
         )
     else:
         stats = b.catalog.read("docmap").agg(
@@ -151,18 +238,10 @@ def append_run(
     # blocks: pack ONLY the delta postings; append with a fresh run_base
     n_runs = int(b.catalog.manifest("blocks")["props"].get("n_runs", 1))
     assert n_part < (1 << 16), "run_base layout assumes < 2^16 partitions"
-    enriched = delta_post.join(new_docmap, id_cols).select(
-        "term", "doc_ord", "tf", "dl"
-    )
-    packed = (
-        enriched.repartitionByRange(n_part, "term", "doc_ord")
-        .sortWithinPartitions("term", "doc_ord")
-        .withColumn("_pid", F.spark_partition_id())
-        .mapInPandas(
-            partial(_pack_partition, run_base=n_runs << 48),
-            schema=_BLOCKS_OUT,
-        )
-    )
+    enriched = _with_ords(delta_post, new_docmap, id_cols,
+                          ["term", "doc_ord", "tf", "dl"])
+    packed = _packed(enriched, ["term", "doc_ord"], _pack_partition,
+                     n_runs << 48, _BLOCKS_OUT, n_part)
     man = b.catalog.write(
         packed, "blocks", stats_cols=["term"], mode="append",
         props={"n_runs": n_runs + 1},
@@ -186,17 +265,12 @@ def append_run(
             n_pos_runs = int(
                 b.catalog.manifest("pos_blocks")["props"].get("n_runs", 1)
             )
-            enriched_pos = pos_delta.join(new_docmap, id_cols).select(
-                "term", "doc_ord", "pos"
-            )
-            packed_pos = (
-                enriched_pos.repartitionByRange(n_part, "term", "doc_ord")
-                .sortWithinPartitions("term", "doc_ord", "pos")
-                .withColumn("_pid", F.spark_partition_id())
-                .mapInPandas(
-                    partial(_pack_pos_partition, run_base=n_pos_runs << 48),
-                    schema=_POS_BLOCKS_OUT,
-                )
+            enriched_pos = _with_ords(pos_delta, new_docmap, id_cols,
+                                      ["term", "doc_ord", "pos"])
+            packed_pos = _packed(
+                enriched_pos, ["term", "doc_ord", "pos"],
+                _pack_pos_partition, n_pos_runs << 48, _POS_BLOCKS_OUT,
+                n_part,
             )
             b.catalog.write(
                 packed_pos, "pos_blocks", stats_cols=["term"],
@@ -216,15 +290,17 @@ def append_run(
         if (
             meta_delta is None
             or not want_cols
-            or not set(want_cols) <= set(meta_delta.columns)
+            or not set(want_cols) <= set(
+                meta_delta.column_names if local else meta_delta.columns)
         ):
             b.catalog.drop("docmeta")
             b.ckpt.unmark("docmeta")
             meta_mode = "invalidated"
         else:
-            new_meta = meta_delta.join(new_docmap, id_cols).select(
-                "doc_ord", *want_cols
-            )
+            new_meta = _with_ords(meta_delta, new_docmap, id_cols,
+                                  ["doc_ord", *want_cols])
+            if local:
+                new_meta = new_meta.sort_by("doc_ord")
             b.catalog.write(
                 new_meta, "docmeta", stats_cols=["doc_ord"], mode="append",
                 row_group_bytes=LEAF_ROW_GROUP_BYTES,
@@ -244,6 +320,25 @@ def append_run(
     }
 
 
+def _meta_cols(b, columns) -> list[str] | None:
+    """The committed docmeta columns when ``columns`` carries them all
+    (the docmeta delta can be maintained), else None."""
+    if not b.ckpt.is_done("docmeta"):
+        return None
+    want = b.catalog.manifest("docmeta").get("props", {}).get("meta_cols")
+    return list(want) if want and set(want) <= set(columns) else None
+
+
+def _check_unique(n_in: int, n_ids: int) -> None:
+    """``n_ids`` counts distinct ids over the rows with no null id (as
+    Spark's ``count_distinct``), so a null id fails the check too."""
+    if n_ids != n_in:
+        raise ValueError(
+            f"upsert input holds null or duplicate ids ({n_in} rows, "
+            f"{n_ids} distinct ids) — replace-by-id needs one row per id"
+        )
+
+
 def upsert_docs(builder, docs: DataFrame,
                 n_partitions: int | None = None) -> dict:
     """Insert-or-replace documents by id, O(delta).
@@ -258,13 +353,86 @@ def upsert_docs(builder, docs: DataFrame,
     ``purge_deleted`` (the documented stale-stats visibility contract);
     re-upserting the same id later tombstones the previous upsert's
     generation the same way.
+
+    A batch of at most ``DELETE_PRUNE_MAX_IDS`` rows takes the driver
+    tier (``tier: "driver"`` in the result): one bounded Spark action
+    reads ids, tokens (the JVM analyzer queries use) and metadata, and
+    every table delta commits from the driver as one file per table
+    (``n_partitions`` is ignored). The bound counts rows, not bytes: the
+    driver holds up to that many tokenized documents, a few times over
+    while it packs them. Bigger batches take the Spark tier, after the
+    bounded read (one job, cap + 1 tokenized rows) has found them too
+    big.
     """
     b = builder
     if not b.ckpt.is_done("blocks"):
         raise ValueError("upsert requires a committed index (build first)")
+    cap = b.DELETE_PRUNE_MAX_IDS
+    meta_cols = _meta_cols(b, docs.columns)
+    batch = docs.select(
+        *b.id_cols, tokens(b.text_col).alias("_tokens"), *(meta_cols or [])
+    ).limit(cap + 1).toArrow()
+    if batch.num_rows <= cap:
+        out = _upsert_local(b, batch, meta_cols)
+    else:
+        out = _upsert_spark(b, docs, meta_cols, n_partitions)
+    if not b.ckpt.is_done(UPSERT_MARK):
+        b.ckpt.mark_done(UPSERT_MARK)
+    return {"mode": "upsert", **out}
+
+
+def _upsert_local(b, batch: pa.Table, meta_cols: list[str] | None) -> dict:
+    """The driver tier of :func:`upsert_docs` over its collected batch."""
+    id_cols = list(b.id_cols)
     # align id types to the committed docmap (append must not fork the
     # parquet schema, e.g. pandas-born int64 turn_idx vs committed int32)
-    docmap_types = dict(b.catalog.read("docmap").dtypes)
+    dm_schema = b.catalog.arrow_schema("docmap")
+    for c in id_cols:
+        batch = batch.set_column(
+            batch.schema.get_field_index(c), c,
+            batch[c].cast(dm_schema.field(c).type),
+        )
+    ids = batch.select(id_cols)
+    _check_unique(len(ids),
+                  len(ids.drop_null().group_by(id_cols).aggregate([])))
+
+    # explode the token lists: one row per occurrence, with its position
+    toks = batch["_tokens"].combine_chunks()
+    row = pc.list_parent_indices(toks).to_numpy()
+    occ = pa.table({"_row": row, "term": pc.list_flatten(toks)})
+    tf = occ.group_by(["_row", "term"]).aggregate([([], "count_all")])
+    post_ids = ids.take(tf["_row"])
+    delta_post = pa.table({
+        "term": tf["term"],
+        **{c: post_ids[c] for c in id_cols},
+        "tf": tf["count_all"],
+    })
+
+    n_replaced = b.delete_docs(list(zip(*(ids[c].to_pylist()
+                                          for c in id_cols))))
+
+    pos_delta = None
+    if b.ckpt.is_done("pos_blocks"):
+        occ_ids = ids.take(row)
+        pos_delta = pa.table({
+            "term": occ["term"],
+            **{c: occ_ids[c] for c in id_cols},
+            "pos": np.arange(len(row)) - np.searchsorted(row, row),
+        })
+    meta_delta = batch.select([*id_cols, *meta_cols]) if meta_cols else None
+    out = append_run(
+        b, delta_post, pos_delta=pos_delta, meta_delta=meta_delta,
+        ckpt_extra={"upsert": True},
+    )
+    return {"tier": "driver", "n_replaced": n_replaced, **out}
+
+
+def _upsert_spark(b, docs: DataFrame, meta_cols: list[str] | None,
+                  n_partitions: int | None) -> dict:
+    """The Spark tier of :func:`upsert_docs` (batches over the cap)."""
+    # align id types to the committed docmap (append must not fork the
+    # parquet schema, e.g. pandas-born int64 turn_idx vs committed int32)
+    docmap_types = {f.name: f.dataType for f in b._docmap_schema().fields}
     docs = docs.select(
         *[
             F.col(c).cast(docmap_types[c]).alias(c) if c in docmap_types
@@ -278,39 +446,24 @@ def upsert_docs(builder, docs: DataFrame,
         F.count(F.lit(1)).alias("n"),
         F.count_distinct(*[F.col(i) for i in b.id_cols]).alias("d"),
     ).first()
-    n_in, n_ids = int(c["n"]), int(c["d"])
-    if n_ids != n_in:
-        raise ValueError(
-            f"upsert input holds duplicate ids ({n_in} rows, {n_ids} "
-            "distinct ids) — replace-by-id needs one row per id"
-        )
+    _check_unique(int(c["n"]), int(c["d"]))
 
     delta_post = build_postings(
         docs, id_cols=b.id_cols, text_col=b.text_col
     )
-    n_replaced = b.delete_docs(docs.select(*b.id_cols))
+    # over the cap: straight to delete_docs' Spark path
+    n_replaced = b._tombstone(b._alive_ords_df(docs.select(*b.id_cols)))
 
     pos_delta = None
     if b.ckpt.is_done("pos_blocks"):
-        from antidb_spark.functions.analyze import tokens
-
         pos_delta = docs.select(
             *b.id_cols, F.posexplode(tokens(b.text_col)).alias("pos", "term")
         ).select("term", *b.id_cols, "pos")
 
-    meta_delta = None
-    if b.ckpt.is_done("docmeta"):
-        want_cols = (
-            b.catalog.manifest("docmeta").get("props", {}).get("meta_cols")
-        )
-        if want_cols and set(want_cols) <= set(docs.columns):
-            meta_delta = docs.select(*b.id_cols, *want_cols)
-
+    meta_delta = docs.select(*b.id_cols, *meta_cols) if meta_cols else None
     out = append_run(
         b, delta_post, pos_delta=pos_delta, meta_delta=meta_delta,
         n_partitions=n_partitions,
         ckpt_extra={"upsert": True},
     )
-    if not b.ckpt.is_done(UPSERT_MARK):
-        b.ckpt.mark_done(UPSERT_MARK)
-    return {"mode": "upsert", "n_replaced": n_replaced, **out}
+    return {"tier": "spark", "n_replaced": n_replaced, **out}

@@ -34,10 +34,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -91,7 +93,7 @@ class Catalog:
 
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         name: str,
         stats_cols: list[str] | None = None,
         partition_by: list[str] | None = None,
@@ -110,7 +112,10 @@ class Catalog:
         small row groups — they are the B+tree leaf size: sorted data +
         per-row-group min/max stats mean a point probe decodes one small
         group instead of a whole 128 MB default group. Scan-heavy tables
-        keep the default."""
+        keep the default.
+
+        ``df`` may also be a driver-resident ``pyarrow.Table`` (see
+        :meth:`_write_files`); the commit itself is the same."""
         data_dir = self._data_dir_name(name) if mode == "append" else "data"
         if mode == "append" and props is None:
             # append semantics: table props are UNCHANGED unless the
@@ -136,12 +141,7 @@ class Catalog:
         if mode == "append" and self.exists(name):
             prev_entries = self.manifest(name)["files"]
             before = set(self._walk_parquet(ddir))
-        w = df.write.mode(mode).option("compression", "zstd")
-        if row_group_bytes:
-            w = w.option("parquet.block.size", str(int(row_group_bytes)))
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(ddir)
+        self._write_files(df, name, ddir, mode, row_group_bytes, partition_by)
         new_paths = None
         if prev_entries is not None:
             new_paths = [p for p in self._walk_parquet(ddir)
@@ -154,7 +154,7 @@ class Catalog:
 
     def replace(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         name: str,
         stats_cols: list[str] | None = None,
         props: dict[str, Any] | None = None,
@@ -173,15 +173,9 @@ class Catalog:
         explicitly expires history. The only dirs reclaimed here are
         generations NO snapshot references — i.e. leftovers of a replace
         that crashed between its data write and its commit."""
-        import shutil
-        import uuid as _uuid
-
-        gen = f"data-{_uuid.uuid4().hex[:8]}"
+        gen = f"data-{uuid.uuid4().hex[:8]}"
         ddir = os.path.join(self.table_dir(name), gen)
-        w = df.write.mode("overwrite").option("compression", "zstd")
-        if row_group_bytes:
-            w = w.option("parquet.block.size", str(int(row_group_bytes)))
-        w.parquet(ddir)
+        self._write_files(df, name, ddir, "overwrite", row_group_bytes)
         man = self.commit(name, stats_cols=stats_cols, props=props,
                           data_dir=gen, op="replace")
         referenced = self._snapshot_data_dirs(name)
@@ -192,6 +186,46 @@ class Catalog:
                 shutil.rmtree(os.path.join(self.table_dir(name), d),
                               ignore_errors=True)
         return man
+
+    def _write_files(
+        self,
+        data: DataFrame | pa.Table,
+        name: str,
+        ddir: str,
+        mode: str,
+        row_group_bytes: int | None,
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """Land one commit's data files under ``ddir``. A DataFrame goes
+        through Spark's writer. A ``pyarrow.Table`` is written from the
+        driver as ONE zstd file, no Spark job, cast to the committed
+        table's arrow schema so an append or rewrite never forks the
+        schema; timestamps are INT96, as Spark writes them by default."""
+        if isinstance(data, DataFrame):
+            w = data.write.mode(mode).option("compression", "zstd")
+            if row_group_bytes:
+                w = w.option("parquet.block.size", str(int(row_group_bytes)))
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(ddir)
+            return
+        if partition_by:
+            raise ValueError("partition_by needs a DataFrame")
+        schema = self.arrow_schema(name) if self.exists(name) else None
+        if schema is not None:
+            data = data.select(schema.names).cast(schema)
+        if mode == "overwrite":
+            shutil.rmtree(ddir, ignore_errors=True)
+        os.makedirs(ddir, exist_ok=True)
+        rows = None
+        if row_group_bytes and data.num_rows:
+            rows = max(1, int(row_group_bytes) * data.num_rows
+                       // max(1, data.nbytes))
+        pq.write_table(
+            data, os.path.join(ddir, f"part-00000-{uuid.uuid4()}.zstd.parquet"),
+            compression="zstd", row_group_size=rows,
+            use_deprecated_int96_timestamps=True,
+        )
 
     def _snapshot_data_dirs(self, name: str) -> set[str]:
         """Generation directories referenced by any retained snapshot
@@ -533,8 +567,6 @@ class Catalog:
         # generation dirs no retained snapshot references any more: this
         # is the reclaim point for generations abandoned by replace()
         # (which defers GC here so pinned snapshots stay readable)
-        import shutil
-
         live_dirs = self._snapshot_data_dirs(name)
         for d in os.listdir(tdir):
             if d not in live_dirs and (d == "data" or d.startswith("data-")):
@@ -594,13 +626,17 @@ class Catalog:
             return self.read(name).limit(0)
         return self.spark.read.parquet(*paths)
 
+    def arrow_schema(self, name: str) -> pa.Schema | None:
+        """Arrow schema of the head snapshot, from a cached footer (no
+        Spark job); None for a snapshot with no data files."""
+        dataset, _ = self._fragments(name)
+        return None if dataset is None else dataset.schema
+
     def read_arrow(self, name: str, columns: list[str] | None = None):
         """Unfiltered driver-side read → pyarrow Table (tiny relations:
         stats, per-query metadata). Zero Spark jobs."""
         dataset, _ = self._fragments(name)
         if dataset is None:
-            import pyarrow as pa
-
             return pa.table({c: pa.nulls(0) for c in (columns or [])})
         return dataset.to_table(columns=columns)
 
@@ -627,8 +663,6 @@ class Catalog:
             # base): no footer to borrow a schema from — synthesize an
             # empty table over the requested columns (null-typed; callers
             # only length-check / filter empty frames on this path)
-            import pyarrow as pa
-
             cols = columns if columns is not None else [col]
             return pa.table({c: pa.nulls(0) for c in cols})
         paths = self.pruned_file_paths(name, col, values, lo, hi)
@@ -663,6 +697,4 @@ class Catalog:
         return dataset.to_table(columns=columns, filter=filt)
 
     def drop(self, name: str) -> None:
-        import shutil
-
         shutil.rmtree(self.table_dir(name), ignore_errors=True)

@@ -31,7 +31,11 @@ watermark) and folds exactly that prefix each micro-batch. State is
 therefore O(events inside the watermark-delay window) per user — the
 standard disorder-buffer cost of event-time stateful operators — plus
 five longs for the session fold; a session's events leave state as soon
-as the watermark passes them, long before the session closes. Each
+as the watermark passes them, long before the session closes. Those
+five longs stay after a user's last session closes (the closed-session
+counter is what lets a returning user's numbering continue), so the
+state store holds one small entry per user ever seen: O(distinct users)
+resident, never removed by this operator. Each
 micro-batch shuffles only its own rows once on ``user_col`` (bounded by
 batch size, never corpus), and Arrow batches carry rows into the pandas
 fold. Late data: rows older than the watermark may be dropped by Spark
@@ -176,6 +180,8 @@ def sessionize_stream(
         )
         out = [_row(user, idx, cn, cf, cl) for idx, cn, cf, cl in closed]
         pending = ([last] if first != -1 else []) + [u for u, _ in buf]
+        # kept even with nothing pending: session_idx continuity needs
+        # the closed counter (O(distinct users) state, module docstring)
         state.update((
             n_closed, first, last, n,
             [u for u, _ in buf], [i for _, i in buf],
