@@ -2348,21 +2348,28 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Round-5 order: the 12
-    entries new this round (doc_chunks, sliding_counts, term_vectors,
-    stream_sessions, ann_recall, sketches, token_stats, asof/range
-    joins),
-    then the 30 entries with no driver
-    row in any round (repetition … time_travel), then the 13 last
-    attested in round 3 (minhash_dups … frame_sample), then entries
-    whose code paths changed this round, then the rest of the
-    round-4-attested block (the 7 that fell past the 50-row window —
-    fuzzy_topk, upsert_eq, upsert_topk, keyed_eq_persisted,
-    keyed_rng_persisted, eq_lookup, rng_lookup — are all
-    round-4-green). Round 6 should move the tail block
-    (term_counts … ngram_jaccard) to the front."""
+    round, least-recently-driver-attested first. Current order: the
+    three entries with no driver row in any round (packed_examples,
+    frame_sample, media_features), then the three attested longest ago
+    (media_decode, media_meta, embedding_dups), then the round-5 order
+    unchanged: the 12 entries new in round 5 (doc_chunks … bloom_check),
+    the 29 with no driver row in rounds 1-4 (repetition … time_travel),
+    the rest of the round-3-attested block (minhash_dups …
+    ann_ivf_topk) and the 7 round-4-attested entries whose code paths
+    changed in round 5 (fuzzy_topk … rng_lookup). The window now ends
+    after lang_id, so quality … rng_lookup and the tail block
+    (term_counts … ngram_jaccard) fall past it; the next rotation
+    should move the tail block to the front."""
     return {
-        # --- new this round — never attested
+        # --- never driver-attested in any round
+        "packed_examples": _q_packed_examples,
+        "frame_sample": _q_frame_sample,
+        "media_features": _q_media_features,
+        # --- driver-attested longest ago
+        "media_decode": _q_media_decode,
+        "media_meta": _q_media_meta,
+        "embedding_dups": _q_embedding_dups,
+        # --- new in round 5
         "doc_chunks": _q_doc_chunks,
         "sliding_counts": _q_sliding_counts,
         "term_vectors": _q_term_vectors,
@@ -2383,7 +2390,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "packed_sequences": _q_packed_sequences,
         "length_quantiles": _q_length_quantiles,
         "epoch_mix": _q_epoch_mix,
-        "packed_examples": _q_packed_examples,
         "shuffle_order": _q_shuffle_order,
         "stratified_sample": _q_stratified_sample,
         "dedup_resolve": _q_dedup_resolve,
@@ -2410,17 +2416,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_dups": _q_minhash_dups,
         "simhash_dups": _q_simhash_dups,
         "lang_id": _q_lang_id,
+        # ---- driver window (50) ends here ----
         "quality": _q_quality,
         "clone_candidates": _q_clone_candidates,
         "ann_cosine_topk": _q_ann_cosine_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
-        "embedding_dups": _q_embedding_dups,
-        "media_meta": _q_media_meta,
-        "media_features": _q_media_features,
-        "media_decode": _q_media_decode,
-        "frame_sample": _q_frame_sample,
-        # --- round-4 attested, but their code paths changed this round
+        # --- round-4 attested, but their code paths changed in round 5
         "fuzzy_topk": _q_fuzzy_topk,
         "upsert_eq": _q_upsert_eq,
         "upsert_topk": _q_upsert_topk,
@@ -2428,7 +2430,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "keyed_rng_persisted": _q_keyed_rng_persisted,
         "eq_lookup": _q_eq_lookup,
         "rng_lookup": _q_rng_lookup,
-        # ---- driver window (50) ends here ----
         "term_counts": _q_term_counts,
         "postings_tf": _q_postings,
         "term_df": _q_term_df,

@@ -1116,6 +1116,10 @@ class IndexBuilder:
             for t in ts:
                 if t in dfs:
                     qmap.setdefault(t, []).append(qid)
+        # per-term ceil(df/BLOCK_SIZE): candidate-block estimate for the
+        # prune cost gate (undercounts partition-boundary partial blocks
+        # — fine for a gate)
+        n_blocks = {t: (d + BLOCK_SIZE - 1) // BLOCK_SIZE for t, d in dfs.items()}
         return {
             "per_query": per_query,
             "terms": sorted(qmap),
@@ -1124,12 +1128,11 @@ class IndexBuilder:
             "qmap": {t: np.asarray(v, dtype=np.int64) for t, v in qmap.items()},
             "n_docs": n_docs,
             "avgdl": avgdl,
-            # per-term ceil(df/BLOCK_SIZE): candidate-block estimate for
-            # the prune cost gate (undercounts partition-boundary partial
-            # blocks — fine for a gate)
-            "est_blocks": int(
-                sum((d + BLOCK_SIZE - 1) // BLOCK_SIZE for d in dfs.values())
-            ),
+            "est_blocks": int(sum(n_blocks.values())),
+            # each term's blocks counted once per query holding it (= Σ_q
+            # of each query's own est_blocks): the work of scoring the
+            # queries one by one, which gates query_batch's driver tier
+            "fan_out": int(sum(n_blocks[t] * len(q) for t, q in qmap.items())),
         }
 
     @staticmethod
@@ -1312,10 +1315,20 @@ class IndexBuilder:
         Returns (query_id, *id_cols, score) with per-query rank order;
         deterministic tiebreak on doc_ord (= (*id_cols) order).
 
-        One-job architecture (the whole batch is planned driver-side
-        from committed metadata, then runs as a single Spark action plus
-        a tiny driver merge — no per-batch metadata jobs):
+        The whole batch is planned driver-side from committed metadata,
+        then scored by one of two tiers, with no per-batch metadata jobs;
+        both tiers end in the same tiny driver merge and id resolve:
 
+        0. tier choice (``_batch_on_driver``, from the plan of step 1):
+           a batch whose block fan-out (each term's blocks counted once
+           per query holding it) fits ``WARM_MAX_BLOCKS`` — the budget
+           one ``query_warm`` decodes on one core — is scored on the
+           driver by the warm kernel (``_warm_scores``: one cached
+           posting read for the union of its terms, per-query cost in
+           the query's own postings) and runs NO Spark job; ``prune``
+           does not apply there. Bigger batches run the single Spark
+           action of steps 2-4, whose Python tasks each pay a
+           ≈ 110-150 ms floor.
         1. ``_plan_queries``: tokenize + df/idf/stats, pyarrow only.
         2. manifest file pruning on term + (``prune``) metadata-only
            block-max θ thresholds pushed into the scan filter
@@ -1344,8 +1357,46 @@ class IndexBuilder:
             + [dm_schema[c] for c in self.id_cols]
             + [T.StructField("score", T.DoubleType(), True)]
         )
-        if plan is None:
+        if plan is None or k < 1:  # k < 1: reduce_topk cannot cut at k
             return self.spark.createDataFrame([], out_schema)
+        if self._batch_on_driver(plan):
+            tops = self._warm_scores(plan, k, dense=False)
+            top_pdf = pd.DataFrame({
+                "query_id": np.repeat(
+                    np.arange(len(tops), dtype=np.int32),
+                    [o.size for o, _ in tops],
+                ),
+                "doc_ord": np.concatenate([o for o, _ in tops]),
+                "score": np.concatenate([s for _, s in tops]),
+            })
+        else:
+            top_pdf = self._spark_top(queries, plan, k, prune)
+        if len(top_pdf) == 0:
+            return self.spark.createDataFrame([], out_schema)
+        top_pdf = top_pdf.sort_values(
+            ["query_id", "score", "doc_ord"], ascending=[True, False, True]
+        ).groupby("query_id", sort=False).head(k)
+        dm = self._resolve_ords(
+            [int(o) for o in sorted(set(top_pdf["doc_ord"]))]
+        )
+        merged = top_pdf.merge(dm, on="doc_ord").sort_values(
+            ["query_id", "score", "doc_ord"], ascending=[True, False, True]
+        )
+        return self.spark.createDataFrame(
+            merged[["query_id", *self.id_cols, "score"]], schema=out_schema
+        )
+
+    def _batch_on_driver(self, plan: dict) -> bool:
+        """The ``query_batch`` tier: True (driver) when the batch's block
+        fan-out fits the warm block budget, False (one Spark action)."""
+        return plan["fan_out"] <= self.WARM_MAX_BLOCKS
+
+    def _spark_top(
+        self, queries: Sequence[str], plan: dict, k: int, prune: bool | str
+    ) -> pd.DataFrame:
+        """(query_id, doc_ord, score) candidate rows of the Spark tier
+        (``query_batch`` steps 2-4): at least the top k of each query,
+        before the driver merge."""
         terms = plan["terms"]
         blocks = self._blocks_scan(terms).filter(F.col("term").isin(terms))
         # tombstones disarm block-max pruning even when requested: the
@@ -1513,25 +1564,11 @@ class IndexBuilder:
         # every other scan in the session (128 MB-row-group tables)
         # keeps the defaults
         with index_scan_conf(self.spark):
-            top_pdf = (
+            return (
                 bucketed.repartition(n_part, "bucket")
                 .mapInPandas(reduce_topk, schema=topk_schema)
                 .toPandas()
             )
-        if len(top_pdf) == 0:
-            return self.spark.createDataFrame([], out_schema)
-        top_pdf = top_pdf.sort_values(
-            ["query_id", "score", "doc_ord"], ascending=[True, False, True]
-        ).groupby("query_id", sort=False).head(k)
-        dm = self._resolve_ords(
-            [int(o) for o in sorted(set(top_pdf["doc_ord"]))]
-        )
-        merged = top_pdf.merge(dm, on="doc_ord").sort_values(
-            ["query_id", "score", "doc_ord"], ascending=[True, False, True]
-        )
-        return self.spark.createDataFrame(
-            merged[["query_id", *self.id_cols, "score"]], schema=out_schema
-        )
 
     def _pruned_blocks(self, blocks: DataFrame, qt: DataFrame, k: int) -> DataFrame:
         """Block-max pruning (module docstring invariant).
@@ -1613,6 +1650,15 @@ class IndexBuilder:
 
     # Above this many candidate blocks the interactive path would decode
     # too much on one core — fall back to the distributed batch path.
+    # The same budget gates query_batch's driver tier, against the
+    # batch's summed fan-out. Measured at 12,500 conversations (105,707
+    # turns), 4 vCPUs, caches fresh after an upsert, median of 3-5: the
+    # driver tier beat the Spark tier at every fan-out tried — 1.2k
+    # blocks 0.15 vs 1.40 s, 5.5k 0.33 vs 1.57 s, 20k 0.94 vs 2.59 s,
+    # 81k 2.56 vs 3.61 s (local[4]) — so the crossover is above 81k,
+    # 16× this gate. The Spark tier ran faster at local[2] than at
+    # local[4] (5.4k, fresh builder: 1.40 vs 2.24 s): more cores did not
+    # shrink it.
     WARM_MAX_BLOCKS = 5_000
     # Dense warm scoring allocates one float per corpus doc; above this
     # the sparse (np.unique) path is used instead (a 50M-doc dense array
@@ -1704,67 +1750,82 @@ class IndexBuilder:
         self, query: str | Sequence[str], k: int
     ) -> tuple[np.ndarray, np.ndarray] | None:
         """Driver-side top-k (doc_ords, scores) for one query (a string,
-        or a pre-expanded term list) — the shared scoring core of
-        ``query_warm`` / ``query_prefix_warm`` and the warm snippet tier
+        or a pre-expanded term list) — the warm tier of ``query_warm`` /
+        ``query_prefix_warm`` and the warm snippet tier
         (``phrase.term_positions_warm``). Returns None when the query
-        exceeds the warm block budget (caller falls back to the
-        distributed path); empty arrays when nothing matches."""
+        exceeds the warm block budget (caller falls back to
+        ``query_batch``); empty arrays when nothing matches."""
         plan = self._plan_queries([query])
-        empty = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
         if plan is None:
-            return empty
+            return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
         if plan["est_blocks"] > self.WARM_MAX_BLOCKS:
             return None
-        # per-term decoded postings from the LRU cache (one pruned read
-        # for the misses); concatenation in plan["terms"] order is the
-        # same term-ascending order the direct batch read produced, so
-        # float summation order — and therefore every score bit — is
-        # unchanged vs the uncached path.
-        cached = self._warm_postings(plan["terms"], plan["avgdl"])
-        sizes = np.array(
-            [cached[t][0].size for t in plan["terms"]], dtype=np.int64
-        )
-        if not sizes.sum():
-            return empty
-        ords = np.concatenate([cached[t][0] for t in plan["terms"]])
-        tfw = np.concatenate([cached[t][1] for t in plan["terms"]])
-        idf_map = plan["idf"]
-        idf_post = np.repeat(
-            np.array([idf_map[t] for t in plan["terms"]], dtype=np.float64),
-            sizes,
-        )
-        contrib = idf_post * tfw
-        # tombstoned docs: zero/drop BEFORE the top-k cut (zeroing keeps
-        # the "score 0.0 = no match" invariant — alive hits are > 0)
+        return self._warm_scores(
+            plan, k, dense=plan["n_docs"] <= self.DENSE_WARM_MAX_DOCS
+        )[0]
+
+    def _warm_scores(
+        self, plan: dict, k: int, dense: bool
+    ) -> list[tuple[np.ndarray, np.ndarray]]:
+        """Driver-side top-k (doc_ords, scores) of every query of
+        ``plan`` — the warm scoring kernel of ``_warm_top_ords`` and of
+        ``query_batch``'s driver tier. The postings of the union of the
+        plan's terms come from the LRU cache in ONE call (one pruned
+        pyarrow read for the misses). ``dense`` scores into one float
+        per corpus doc (O(n_docs) per query, no sort: one query on a
+        corpus that fits); otherwise a query costs a sort of its own
+        postings (np.unique), which is what a batch of many queries
+        over a big corpus needs."""
+        # per-term concatenation in sorted-term order is the
+        # term-ascending order of the Spark tier's reducer, so the float
+        # summation order — and therefore every score bit — is the same
+        # on both tiers (bincount adds each bin's weights in input order)
+        post = self._warm_postings(plan["terms"], plan["avgdl"])
         ts = self._tomb_state()
-        if plan["n_docs"] <= self.DENSE_WARM_MAX_DOCS:
-            # doc ordinals are DENSE → O(postings) bincount scoring, no
-            # sort (np.unique was the warm path's dominant cost); a hit
-            # never scores exactly 0.0 (idf, tfw > 0), so 0 = no match
-            scores = np.bincount(
-                ords, weights=contrib, minlength=plan["n_docs"]
-            )
-            if ts is not None:
-                dead = ts[1]
-                scores[dead[dead < scores.size]] = 0.0
-            cut = (
-                np.partition(scores, scores.size - k)[scores.size - k]
-                if scores.size > k else 0.0
-            )
-            cand = np.flatnonzero(scores >= max(cut, np.finfo(float).tiny))
-            order = np.lexsort((cand, -scores[cand]))[:k]
-            uniq, top = cand, cand[order]
-            top_scores = scores[top]
-        else:
-            uniq, inv = np.unique(ords, return_inverse=True)
-            scores = np.bincount(inv, weights=contrib, minlength=uniq.size)
-            if ts is not None:
-                alive = _alive_bits(ts[0], uniq)
-                uniq, scores = uniq[alive], scores[alive]
-            sel = np.lexsort((uniq, -scores))[:k]
-            top = uniq[sel]
-            top_scores = scores[sel]
-        return top.astype(np.int64), top_scores
+        out = []
+        for q_terms in plan["per_query"]:
+            terms = [t for t in q_terms if t in post]
+            if not terms:
+                out.append((np.empty(0, dtype=np.int64), np.empty(0)))
+                continue
+            ords = np.concatenate([post[t][0] for t in terms])
+            contrib = np.repeat(
+                np.array([plan["idf"][t] for t in terms], dtype=np.float64),
+                [post[t][0].size for t in terms],
+            ) * np.concatenate([post[t][1] for t in terms])
+            # tombstoned docs: zero/drop BEFORE the top-k cut (zeroing
+            # keeps the "score 0.0 = no match" invariant — alive hits
+            # are > 0)
+            if dense:
+                # doc ordinals are DENSE → O(postings) bincount scoring,
+                # no sort; a hit never scores exactly 0.0 (idf, tfw > 0),
+                # so 0 = no match
+                scores = np.bincount(
+                    ords, weights=contrib, minlength=plan["n_docs"]
+                )
+                if ts is not None:
+                    dead = ts[1]
+                    scores[dead[dead < scores.size]] = 0.0
+                cut = (
+                    np.partition(scores, scores.size - k)[scores.size - k]
+                    if scores.size > k else 0.0
+                )
+                cand = np.flatnonzero(
+                    scores >= max(cut, np.finfo(float).tiny)
+                )
+                top = cand[np.lexsort((cand, -scores[cand]))[:k]]
+                top_scores = scores[top]
+            else:
+                uniq, inv = np.unique(ords, return_inverse=True)
+                scores = np.bincount(inv, weights=contrib, minlength=uniq.size)
+                if ts is not None:
+                    alive = _alive_bits(ts[0], uniq)
+                    uniq, scores = uniq[alive], scores[alive]
+                sel = np.lexsort((uniq, -scores))[:k]
+                top = uniq[sel]
+                top_scores = scores[sel]
+            out.append((top.astype(np.int64), top_scores))
+        return out
 
     def query_warm(self, query: str, k: int = 10) -> pd.DataFrame:
         """Interactive single-query BM25 with NO Spark job — the warm
@@ -1773,15 +1834,18 @@ class IndexBuilder:
         decode + scoring, driver-side top-k, pyarrow docmap resolve.
         Used when the query's candidate blocks fit one core
         (≤ WARM_MAX_BLOCKS, i.e. rare/mid terms — the interactive
-        regime); stopword-heavy queries fall back to the distributed
-        ``query_batch``. Returns pandas (*id_cols, score), rank- and
-        value-identical to the batch path (pinned by tests)."""
+        regime); stopword-heavy queries fall back to ``query_batch``,
+        whose gate sends a query over that budget to its Spark tier.
+        Returns pandas (*id_cols, score), rank- and value-identical to
+        both ``query_batch`` tiers (pinned by tests)."""
         return self._warm_frame(query, k)
 
     def _warm_frame(self, query: str | Sequence[str], k: int) -> pd.DataFrame:
         """(*id_cols, score) top-k for one query (string or expanded
-        term list): the warm core plus id resolve, or ``query_batch``
-        when the query exceeds the warm block budget."""
+        term list): the warm core plus id resolve, or — when the query
+        exceeds the warm block budget — ``query_batch``, which for one
+        such query always takes its Spark tier (a single query's
+        fan-out is its block estimate)."""
         r = self._warm_top_ords(query, k)
         if r is None:
             out = self.query_batch([query], k=k).toPandas()
@@ -1849,19 +1913,21 @@ class IndexBuilder:
             if e.get("min_term") is None
             or not (e["max_term"] < start or e["min_term"] > end)
         ]
+        # cached Spark schemas: defining the scan infers nothing
+        schema = self._spark_schema("blocks")
         if keep:
             paths = [
                 os.path.join(self.catalog.table_dir("blocks"), e["path"])
                 for e in keep
             ]
-            blocks = self.spark.read.parquet(*paths)
+            blocks = self.spark.read.schema(schema).parquet(*paths)
         else:  # nothing overlaps → empty relation with the right schema
-            blocks = self.catalog.read("blocks").limit(0)
+            blocks = self.spark.createDataFrame([], schema)
         blocks = blocks.filter(
             (F.col("term") >= start) & (F.col("term") <= end)
         )
         post = self._drop_tombstones(self._decoded_postings(blocks))
-        docmap = self.catalog.read("docmap")
+        docmap = self.catalog.read("docmap", schema=self._docmap_schema())
         return (
             post.join(docmap.select("doc_ord", *self.id_cols), "doc_ord")
             .select("term", *self.id_cols, "tf", "doc_ord")

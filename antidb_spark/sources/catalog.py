@@ -42,6 +42,7 @@ from typing import Any
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Row-group cap for tables serving point reads (the B+tree leaf size).
 # Sorted data + per-row-group min/max stats let a point probe decode one
@@ -441,12 +442,16 @@ class Catalog:
         self._ds_cache[name] = (snap, dataset, frags)
         return dataset, frags
 
-    def read(self, name: str, snapshot_id: str | None = None) -> DataFrame:
+    def read(
+        self, name: str, snapshot_id: str | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame:
         """Scan the head snapshot (or, with ``snapshot_id``, time-travel
         to a retained one). Reads resolve through the MANIFEST's explicit
         file list, never a directory listing, so files from an in-flight
         or crashed (uncommitted) append are invisible — the Iceberg
-        isolation contract."""
+        isolation contract. A known ``schema`` skips Spark's
+        schema-inference job."""
         if not self.exists(name):
             raise FileNotFoundError(f"table {name!r} has no committed snapshot")
         man = self.manifest_at(name, snapshot_id) if snapshot_id else (
@@ -461,13 +466,16 @@ class Catalog:
 
                 raise SnapshotExpiredError(name, snapshot_id, missing)
         ddir = os.path.join(self.table_dir(name), man.get("data_dir", "data"))
+        reader = self.spark.read if schema is None else (
+            self.spark.read.schema(schema)
+        )
         if not paths:  # zero-file snapshot: no footer to infer from
-            return self.spark.read.parquet(ddir)
+            return reader.parquet(ddir)
         # basePath: explicit file lists alone drop Hive partition columns
         # (partition VALUES live only in directory names); anchoring the
         # scan at the generation dir restores them for partition_by
         # tables and is a no-op for flat layouts
-        return self.spark.read.option("basePath", ddir).parquet(*paths)
+        return reader.option("basePath", ddir).parquet(*paths)
 
     def manifest_at(self, name: str, snapshot_id: str) -> dict:
         """Manifest of a historical snapshot from the snapshot log (the

@@ -126,6 +126,10 @@ def run_suite(spark, docs, transcripts, n_turns):
     if phase_on("bm25_batch"):
         queries = query_set(N_QUERIES)
         timed("bm25_batch", lambda: builder.query_batch(queries, k=10).count())
+        # block fan-out decides the query_batch tier: at or under
+        # WARM_MAX_BLOCKS (small SPARK_GRAFT_BENCH_CONVS) the batch is
+        # scored on the driver, with no Spark action
+        extras["bm25_batch_fan_out"] = builder._plan_queries(queries)["fan_out"]
 
     if phase_on("stopword_batch"):
         # the degenerate all-equal-key nightmare (reference tests.py:432-477,
@@ -144,6 +148,9 @@ def run_suite(spark, docs, transcripts, n_turns):
         ]
         timed("stopword_batch",
               lambda: builder.query_batch(stop_qs, k=10).count())
+        extras["stopword_batch_fan_out"] = (
+            builder._plan_queries(stop_qs)["fan_out"]
+        )
 
     if phase_on("bm25_warm"):
         v = vocabulary(2000)

@@ -33,6 +33,9 @@ def child(cpus: int) -> None:
                       extra_conf={"spark.ui.enabled": "true"})
     b = IndexBuilder(spark, ROOT)
     qs = query_set(100)
+    # block fan-out: at or under WARM_MAX_BLOCKS the batch runs on the
+    # driver and there are no stages to compare
+    fan_out = b._plan_queries(qs)["fan_out"]
     t0 = time.time()
     b.query_batch(qs, k=10).count()
     warm = round(time.time() - t0, 2)
@@ -65,7 +68,7 @@ def child(cpus: int) -> None:
             "sh_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
         })
     print(json.dumps({"cpus": cpus, "warmup_s": warm, "seconds": meas,
-                      "stages": rows}))
+                      "fan_out": fan_out, "stages": rows}))
     spark.stop()
 
 
@@ -86,7 +89,7 @@ def main() -> None:
             continue
         d = json.loads(line)
         print(f"\n== local[{cpus}]  warmup {d['warmup_s']}s  "
-              f"measured {d['seconds']}s")
+              f"measured {d['seconds']}s  fan-out {d['fan_out']} blocks")
         tot = 0.0
         for s in d["stages"]:
             tot += s["runTime_s"]

@@ -77,8 +77,9 @@ def main() -> None:
     ))
 
     # physical-index query path: needs a built index. query_batch is
-    # driver-planned + eager (one Spark action and a tiny driver merge),
-    # so the audit captures its internal chain: manifest-pruned blocks
+    # driver-planned + eager (above the warm block budget one Spark
+    # action and a tiny driver merge; within it no Spark job at all),
+    # so the audit captures its Spark tier's chain: manifest-pruned blocks
     # scan → decode+score Arrow stage → ONE hash shuffle on doc_ord →
     # reducer top-k. No dfs/stats joins appear anywhere: df/idf/avgdl
     # ride in the stage closures from driver-side pyarrow reads.

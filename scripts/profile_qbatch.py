@@ -2,7 +2,10 @@
 
 Builds (or reuses) the scaling corpus index on tmpfs, then times the
 driver-side planning phases vs the Spark action for a 100-query batch
-at a chosen parallelism, printing a per-phase JSON line.
+at a chosen parallelism, printing a per-phase JSON line. The line
+carries the batch's block fan-out: below ``WARM_MAX_BLOCKS`` (small
+``n_convs``) ``query_batch`` scores on the driver and runs no Spark
+action, so read ``fan_out`` before the Spark numbers.
 
 Usage: python scripts/profile_qbatch.py [cpus] [n_convs]
 """
@@ -70,6 +73,8 @@ for rep in range(3):
         "phases": {k: round(v, 2) for k, v in phases.items()},
         "n_terms": len(terms),
         "est_blocks": plan["est_blocks"],
+        "fan_out": plan["fan_out"],
+        "tier": "driver" if b._batch_on_driver(plan) else "spark",
         "total": round(total, 2),
     }))
 

@@ -43,6 +43,9 @@ def child(conf_json: str) -> None:
 
     b = IndexBuilder(spark, ROOT)
     qs = query_set(100)
+    # block fan-out: at or under WARM_MAX_BLOCKS the batch runs on the
+    # driver, with no task time to diagnose
+    fan_out = b._plan_queries(qs)["fan_out"]
     t0 = time.time()
     b.query_batch(qs, k=10).count()
     warm = round(time.time() - t0, 2)
@@ -52,7 +55,8 @@ def child(conf_json: str) -> None:
     meas = round(time.time() - t0, 2)
     task_ms, _ = _stage_task_time_ms(spark, last)
     print(json.dumps({"warmup_s": warm, "seconds": meas,
-                      "task_time_s": round(task_ms / 1000, 2)}))
+                      "task_time_s": round(task_ms / 1000, 2),
+                      "fan_out": fan_out}))
     spark.stop()
 
 

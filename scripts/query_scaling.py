@@ -138,6 +138,10 @@ def child(mode: str, cpus: int) -> None:
                           "seconds": round(time.time() - t0, 2)}))
     else:
         qs = query_set(N_QUERIES)
+        # block fan-out: at or under WARM_MAX_BLOCKS (a small
+        # SPARK_GRAFT_QSCALE_CONVS) the batch runs on the driver, and
+        # the two levels measure no Spark scaling at all
+        fan_out = b._plan_queries(qs)["fan_out"]
         # warmup: JIT + page cache + builder metadata caches (discarded)
         t0 = time.time()
         b.query_batch(qs, k=10).count()
@@ -150,6 +154,7 @@ def child(mode: str, cpus: int) -> None:
         print(json.dumps({
             "mode": "query", "cpus": cpus, "seconds": meas_s,
             "warmup_s": warm_s, "task_time_s": round(task_ms / 1000, 2),
+            "fan_out": fan_out,
         }))
     spark.stop()
 

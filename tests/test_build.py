@@ -95,7 +95,8 @@ def test_indexed_equals_dataframe_path(spark, corpus, built):
         assert abs(ri["score"] - rd["score"]) < 1e-9
 
 
-def test_pruning_identical_topk(spark, built):
+def test_pruning_identical_topk(spark, built, pin_batch_tier):
+    pin_batch_tier("spark")  # pruning is a Spark-tier plan
     b, _ = built
     pruned = b.query_batch(QUERIES, k=10, prune=True).toPandas()
     full = b.query_batch(QUERIES, k=10, prune=False).toPandas()
@@ -104,7 +105,7 @@ def test_pruning_identical_topk(spark, built):
     assert (abs(pruned["score"] - full["score"]) < 1e-9).all()
 
 
-def test_pruning_skips_blocks(spark, corpus, tmp_path):
+def test_pruning_skips_blocks(spark, corpus, tmp_path, pin_batch_tier):
     """The prune pass must actually skip blocks — otherwise M5 is a
     no-op. Deterministic setup: single-partition build (block layout is
     otherwise randomized by repartitionByRange sampling), single-term
@@ -123,16 +124,18 @@ def test_pruning_skips_blocks(spark, corpus, tmp_path):
     survivors = b._pruned_blocks(blocks, qt, k=1).count()
     assert survivors < total
     # and pruning still returns the identical answer
+    pin_batch_tier("spark")
     a = b.query_batch(["the"], k=1, prune=True).toPandas()
     c = b.query_batch(["the"], k=1, prune=False).toPandas()
     assert a.values.tolist() == c.values.tolist()
 
 
-def test_reducer_slabs_identical(spark, built):
+def test_reducer_slabs_identical(spark, built, pin_batch_tier):
     """Shrinking the reducer geometry (forcing many tiny doc-range
     buckets, hence many blob rows and partition-boundary doc splits)
     must not change any answer — the partitioning is an implementation
     detail, not semantics."""
+    pin_batch_tier("spark")  # the reducers are the Spark tier's
     b, _ = built
     queries = QUERIES * 3  # 15 queries
     base = b.query_batch(queries, k=5, prune=False).toPandas()
@@ -147,24 +150,32 @@ def test_reducer_slabs_identical(spark, built):
     assert (abs(small["score"] - base["score"]) < 1e-9).all()
 
 
-def test_query_batch_bit_deterministic(spark, built):
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_query_batch_bit_deterministic(spark, built, pin_batch_tier, tier):
     """Reducer blobs concatenate sorted by source map partition and each
     query sums its terms in ascending-term order, so repeated identical
     batches are BIT-identical — exact float equality, not a tolerance —
-    regardless of shuffle arrival order."""
+    regardless of shuffle arrival order; and the driver tier, which
+    sums in the same order, gives the same bits as the Spark tier."""
     b, _ = built
+    pin_batch_tier(tier)
     a = b.query_batch(QUERIES, k=5).toPandas()
     c = b.query_batch(QUERIES, k=5).toPandas()
     assert a[["query_id", "conv_id", "turn_idx"]].values.tolist() == \
         c[["query_id", "conv_id", "turn_idx"]].values.tolist()
     assert (a["score"].to_numpy() == c["score"].to_numpy()).all()
+    pin_batch_tier("spark" if tier == "driver" else "driver")
+    other = b.query_batch(QUERIES, k=5).toPandas()
+    assert other.values.tolist() == a.values.tolist()  # exact floats
 
 
-def test_query_warm_matches_batch(spark, built):
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_query_warm_matches_batch(spark, built, pin_batch_tier, tier):
     """The driver-side interactive path (no Spark job) must be rank- and
-    value-identical to the distributed batch path, across the warm
-    regime, the fallback regime, and misses."""
+    value-identical to both batch tiers, across the warm regime, the
+    fallback regime, and misses."""
     b, _ = built
+    pin_batch_tier(tier)
     for q in ["kemuba0 data", "the of to and in", "bacoca0"]:
         warm = b.query_warm(q, k=5)
         batch = b.query_batch([q], k=5, prune=False).toPandas()
@@ -173,6 +184,64 @@ def test_query_warm_matches_batch(spark, built):
         assert (abs(warm["score"] - batch["score"]) < 1e-9).all(), q
     assert len(b.query_warm("zzzznotaterm")) == 0
     assert len(b.query_warm("...!!!")) == 0
+
+
+def _job_count(spark, group, fn):
+    """(result of ``fn()``, Spark jobs it ran) under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_batch_driver_tier_runs_no_spark_job(spark, built):
+    """A batch within the warm block budget is scored on the driver: on
+    a builder whose docmap schema is cached, defining and collecting it
+    runs no Spark job."""
+    b, _ = built
+    fresh = IndexBuilder(spark, b.root)
+    assert fresh._batch_on_driver(fresh._plan_queries(QUERIES))
+    want = fresh.query_batch(QUERIES, k=5).collect()  # caches the schema
+    got, jobs = _job_count(
+        spark, "driver_tier_batch",
+        lambda: fresh.query_batch(QUERIES, k=5).collect(),
+    )
+    assert jobs == 0
+    assert got == want and len(got) > 0
+
+
+def test_query_batch_gate_sends_big_fan_out_to_spark(spark, built,
+                                                     monkeypatch):
+    """The tier gate is the batch's block fan-out against the warm block
+    budget: one block under the fan-out sends the batch to Spark, at
+    the fan-out it stays on the driver, and both answer the same."""
+    b, _ = built
+    fan_out = b._plan_queries(QUERIES)["fan_out"]
+    assert fan_out > 1
+    monkeypatch.setattr(b, "WARM_MAX_BLOCKS", fan_out)
+    b.query_batch(QUERIES, k=5).collect()
+    drv, drv_jobs = _job_count(
+        spark, "gate_at", lambda: b.query_batch(QUERIES, k=5).collect()
+    )
+    monkeypatch.setattr(b, "WARM_MAX_BLOCKS", fan_out - 1)
+    spk, spk_jobs = _job_count(
+        spark, "gate_below", lambda: b.query_batch(QUERIES, k=5).collect()
+    )
+    assert drv_jobs == 0 and spk_jobs > 0
+    assert spk == drv
+
+
+def test_rng_terms_defines_without_a_job(spark, built):
+    """rng_terms reads blocks and docmap with the builder's cached Spark
+    schemas: once they are warm, defining a range scan infers nothing."""
+    b, _ = built
+    b.rng_terms("a", "c")  # warms both schemas
+    out, jobs = _job_count(spark, "rng_define", lambda: b.rng_terms("a", "z"))
+    assert jobs == 0
+    assert out.count() > 0
 
 
 def test_first_query_warm_runs_no_spark_job(spark, built):

@@ -88,7 +88,7 @@ def test_pinned_excludes_deleted_scores_unchanged(built):
     )
 
 
-def test_batch_and_warm_match_after_delete(built):
+def test_batch_and_warm_match_after_delete(built, pin_batch_tier):
     b, _, _, deleted = built
     pinned = b.query_pinned(QUERY, k=10).toPandas()
     batch = b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
@@ -116,7 +116,9 @@ def test_batch_and_warm_match_after_delete(built):
     warm = b.query_warm(QUERY, k=10)
     assert warm.values.tolist() == batch.values.tolist()
     # pruning stays LOSSLESS with tombstones (it disarms): explicit
-    # prune request returns the identical result
+    # prune request returns the identical result (pruning is a
+    # Spark-tier plan)
+    pin_batch_tier("spark")
     pruned = (
         b.query_batch([QUERY], k=10, prune=True)
         .toPandas().drop(columns=["query_id"])
@@ -216,7 +218,7 @@ def test_delete_validation_and_idempotence(built):
     )
 
 
-def test_purge_restores_exact_stats(spark, tmp_path):
+def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier):
     corpus = synth_transcripts(spark, n_convs=10, seed=5).cache()
     corpus.count()
     b = IndexBuilder(spark, str(tmp_path / "purge_idx"))
@@ -242,6 +244,7 @@ def test_purge_restores_exact_stats(spark, tmp_path):
         assert got.values.tolist() == want.values.tolist(), q
     assert b._corpus_stats() == ref._corpus_stats()
     # pruning re-armed: prune on/off identical again (and θ is exact)
+    pin_batch_tier("spark")
     p_on = b.query_batch([QUERY], k=10, prune=True).toPandas()
     p_off = b.query_batch([QUERY], k=10, prune=False).toPandas()
     assert p_on.values.tolist() == p_off.values.tolist()

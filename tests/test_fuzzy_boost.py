@@ -130,7 +130,7 @@ def test_symspell_equals_distributed_scan(built):
         word, 1, IndexBuilder.MAX_FUZZY_EXPANSIONS)
 
 
-def test_query_fuzzy_warm_matches_spark_path(built):
+def test_query_fuzzy_warm_matches_spark_path(built, pin_batch_tier):
     """Same contract as the prefix/wildcard warm tiers: bit-identical
     to query_batch over the expansion, rank-identical to the pinned
     query_fuzzy."""
@@ -138,6 +138,7 @@ def test_query_fuzzy_warm_matches_spark_path(built):
     probe = _fuzzy_probe(_vocab(corpus))
     exp = b.expand_fuzzy(probe, max_edits=2)
     warm = b.query_fuzzy_warm(probe, k=10, max_edits=2)
+    pin_batch_tier("spark")
     batch = b.query_batch([exp], k=10).toPandas().drop(columns=["query_id"])
     assert warm.values.tolist() == batch.values.tolist()  # bit-identical
     pinned = b.query_fuzzy(probe, k=10, max_edits=2).toPandas()

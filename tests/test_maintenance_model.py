@@ -44,7 +44,9 @@ def _fresh_text(rng):
 
 
 @pytest.mark.parametrize("seed", [101, 202])
-def test_random_maintenance_reconciles_to_rebuild(spark, tmp_path, seed):
+def test_random_maintenance_reconciles_to_rebuild(
+    spark, tmp_path, seed, pin_batch_tier
+):
     rng = random.Random(seed)
     corpus = synth_transcripts(spark, n_convs=8, seed=seed).cache()
     pdf = corpus.toPandas()
@@ -158,6 +160,7 @@ def test_random_maintenance_reconciles_to_rebuild(spark, tmp_path, seed):
     gw = ref.query_grouped(QUERIES[0], ["conv_id"], k=50).toPandas()
     assert gg.values.tolist() == gw.values.tolist(), seed
     warm = b.query_warm(QUERIES[0], k=10)
+    pin_batch_tier("spark")  # warm vs the independent Spark tier
     batch = b.query_batch([QUERIES[0]], k=10).toPandas().drop(
         columns=["query_id"]
     )

@@ -27,7 +27,7 @@ def _n_runs(b) -> int:
     return int(b.catalog.manifest("blocks")["props"].get("n_runs", 1))
 
 
-def test_optimize_after_append_and_upsert(spark, tmp_path):
+def test_optimize_after_append_and_upsert(spark, tmp_path, pin_batch_tier):
     corpus = synth_transcripts(spark, n_convs=12, seed=33).cache()
     corpus.count()
     base = corpus.filter(F.col("conv_id") < "conv_00000008")
@@ -75,6 +75,7 @@ def test_optimize_after_append_and_upsert(spark, tmp_path):
         want = ref.query_pinned(q, k=20).toPandas()
         assert got.values.tolist() == want.values.tolist(), q
     warm = b.query_warm(QUERY, k=10)
+    pin_batch_tier("spark")  # warm vs the independent Spark tier
     batch = b.query_batch([QUERY], k=10).toPandas().drop(
         columns=["query_id"]
     )

@@ -77,8 +77,9 @@ def test_query_prefix_equals_pinned_over_expansion(built):
     assert got.values.tolist() == want.values.tolist()
 
 
-def test_query_prefix_warm_matches_batch_and_ranks(built):
+def test_query_prefix_warm_matches_batch_and_ranks(built, pin_batch_tier):
     b, _ = built
+    pin_batch_tier("spark")  # warm vs the independent Spark tier
     exp = b.expand_prefix("s")
     warm = b.query_prefix_warm("s", k=10)
     batch = b.query_batch([exp], k=10).toPandas().drop(columns=["query_id"])

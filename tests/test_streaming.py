@@ -114,7 +114,8 @@ def _file_hashes(root: str) -> dict[str, str]:
     return out
 
 
-def test_incremental_compaction_appends_only(spark, corpus, tmp_path):
+def test_incremental_compaction_appends_only(spark, corpus, tmp_path,
+                                             pin_batch_tier):
     """O(delta) compaction: new-conversation deltas append files; every
     pre-existing BLOCK file stays byte-identical; answers equal a full
     batch build of the whole corpus (appended convs sort after the base,
@@ -147,14 +148,18 @@ def test_incremental_compaction_appends_only(spark, corpus, tmp_path):
     c = b2.query_batch(queries, k=5, prune=False).toPandas()
     assert a.values.tolist() == c.values.tolist()
     # pruning stays lossless over the appended index (bounds derived
-    # from current stats, not build-time stats)
+    # from current stats, not build-time stats); pruning is a
+    # Spark-tier plan
+    pin_batch_tier("spark")
     p = b.query_batch(queries, k=5, prune=True).toPandas()
     assert p.values.tolist() == c.values.tolist()
     # a second compaction with nothing new is a no-op
     assert compact_incremental(spark, sink, b)["mode"] == "noop"
 
 
-def test_query_warm_matches_batch_after_append(spark, corpus, tmp_path):
+def test_query_warm_matches_batch_after_append(
+    spark, corpus, tmp_path, pin_batch_tier
+):
     """Warm-tier postings cache over a MULTI-RUN blocks table (base +
     appended run): a query term's blocks from different runs interleave
     with other terms in the pruned read stream, so the per-term slicing
@@ -193,6 +198,7 @@ def test_query_warm_matches_batch_after_append(spark, corpus, tmp_path):
     b.catalog.read_pruned_arrow = shuffled
 
     post = b.catalog.read("postings")
+    pin_batch_tier("spark")  # the batch side reads blocks through Spark
     for q in ["the data", "a the of kemuba0", "data bacoca0 of"]:
         plan = b._plan_queries([q])
         assert plan is not None and plan["est_blocks"] <= b.WARM_MAX_BLOCKS

@@ -134,7 +134,8 @@ def test_upsert_replaces_and_inserts(upserted):
 
 
 @pytest.mark.parametrize("scale", ["dense", "sparse"])
-def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale):
+def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale,
+                                              pin_batch_tier):
     b, *_, sent, _, _, _ = upserted
     if scale == "sparse":
         # the large-corpus branches: sparse warm scorer (with the
@@ -149,13 +150,45 @@ def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale):
         )
         warm = b.query_warm(q, k=10)
         assert warm.values.tolist() == batch.values.tolist(), q
-    # pruning stays lossless (disarmed while tombstones exist)
+    # pruning stays lossless (disarmed while tombstones exist); pruning
+    # is a Spark-tier plan
+    pin_batch_tier("spark")
     pruned = (
         b.query_batch([QUERY], k=10, prune=True)
         .toPandas().drop(columns=["query_id"])
     )
     batch = b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
     assert pruned.values.tolist() == batch.values.tolist()
+
+
+@pytest.mark.parametrize("k", [3, 1000])
+def test_batch_tiers_agree_on_tombstoned_multirun_index(upserted, k,
+                                                        pin_batch_tier):
+    """Both ``query_batch`` tiers return equal rows with bit-equal
+    scores on a multi-run index whose top docs were deleted: the upsert
+    tombstoned the pre-upsert top 3 of QUERY. The batch also holds a
+    no-match query, a query with no tokens, and (k = 1000) queries with
+    fewer than k matches; a batch with no known term at all has an
+    empty plan, and k = 0 returns no rows on either tier."""
+    b, *_, replaced, _, sent, _, _, _ = upserted
+    assert b._tomb_state() is not None
+    assert len(b.catalog.manifest("blocks")["files"]) > 4  # > one run
+    queries = [QUERY, sent, f"the {sent}", "zzzznotaterm", "...!!!",
+               f"{_V[5]} {_V[50]} {_V[500]}"]
+    got = {}
+    for tier in ("driver", "spark"):
+        pin_batch_tier(tier)
+        got[tier] = b.query_batch(queries, k=k).toPandas()
+        assert b.query_batch(["zzzznotaterm", "...!!!"], k=k).count() == 0
+        assert b.query_batch(queries, k=0).count() == 0
+    drv, spk = got["driver"], got["spark"]
+    assert drv.values.tolist() == spk.values.tolist()  # exact floats
+    q0 = drv[drv["query_id"] == 0]
+    assert len(q0) == min(k, len(b.query_pinned(QUERY, k=10_000).toPandas()))
+    assert not set(zip(q0["conv_id"], q0["turn_idx"])) & set(replaced)
+    assert not set(drv["query_id"]) & {3, 4}
+    # the sentinel matches only the 5 upserted docs
+    assert (drv["query_id"] == 1).sum() == min(k, 5)
 
 
 def test_live_reader_sees_upsert(upserted):
@@ -578,11 +611,12 @@ def test_docmeta_dropped_when_upsert_lacks_meta_cols(spark, tmp_path):
     corpus.unpersist()
 
 
-def test_query_batch_packs_small_run_files(spark, tmp_path):
+def test_query_batch_packs_small_run_files(spark, tmp_path, pin_batch_tier):
     """Six one-conversation upserts leave a many-file blocks table of
     small runs; ``query_batch`` reads them in byte-packed scan tasks
     (about one per core), not one Python task per file, and answers
     exactly like the warm tier."""
+    pin_batch_tier("spark")  # the scan tasks are the Spark tier's
     corpus = synth_transcripts(spark, n_convs=16, seed=7)
     b = IndexBuilder(spark, str(tmp_path / "pack_idx"))
     b.build(corpus, n_partitions=4)

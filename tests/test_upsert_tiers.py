@@ -140,8 +140,9 @@ def test_tables_read_back_through_spark_and_arrow(copies):
                 .tolist())
 
 
-def test_queries_agree_across_tiers_and_paths(copies):
+def test_queries_agree_across_tiers_and_paths(copies, pin_batch_tier):
     drv, spk, _ = copies
+    pin_batch_tier("spark")  # warm vs the query_batch Spark tier
     batch = {}
     for name, b in (("driver", drv), ("spark", spk)):
         got = b.query_batch(QUERIES, k=10).toPandas()
@@ -178,10 +179,11 @@ def test_small_upsert_runs_at_most_two_jobs(spark, tmp_path):
         zip(part["conv_id"], part["turn_idx"]))
 
 
-def test_query_after_upsert_infers_no_schema(spark, tmp_path):
+def test_query_after_upsert_infers_no_schema(spark, tmp_path, pin_batch_tier):
     """An upsert keeps every table's schema, so the builder's cached
     Spark schemas stay valid: the first query_batch after it runs the
     same jobs as a repeat of that query, no schema-inference job."""
+    pin_batch_tier("spark")  # the blocks scan is the Spark tier's
     corpus = synth_transcripts(spark, n_convs=4, seed=7)
     b = IndexBuilder(spark, str(tmp_path / "schema"))
     b.build(corpus, n_partitions=2)

@@ -59,8 +59,9 @@ def test_reversed_dictionary_is_synced_and_sorted(built):
     assert all(r == t[::-1] for r, t in zip(rows["rterm"], rows["term"]))
 
 
-def test_query_wildcard_matches_expanded_batch(built):
+def test_query_wildcard_matches_expanded_batch(built, pin_batch_tier):
     b, _, _ = built
+    pin_batch_tier("spark")
     exp = b.expand_wildcard("*a3")
     assert exp
     via_wild = b.query_wildcard("*a3", k=10).toPandas()
@@ -72,11 +73,12 @@ def test_query_wildcard_matches_expanded_batch(built):
     )
 
 
-def test_warm_matches_distributed(built):
+def test_warm_matches_distributed(built, pin_batch_tier):
     """Warm tier bit-identical to the distributed batch path on the
     same expansion (the prefix-warm contract); the PINNED path rounds
     to 4dp before ranking, so it's compared on the rounded order."""
     b, _, _ = built
+    pin_batch_tier("spark")  # the distributed side, not the warm kernel
     for pat in ("*a3", "s*", "?he"):
         exp = b.expand_wildcard(pat)
         warm = b.query_wildcard_warm(pat, k=10)
