@@ -2348,19 +2348,63 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the
+    round, least-recently-driver-attested first. Current order: the 43
+    entries of the tail block (term_counts … ngram_jaccard), which fell
+    past the window last round, then the previous order unchanged: the
     three entries with no driver row in any round (packed_examples,
-    frame_sample, media_features), then the three attested longest ago
-    (media_decode, media_meta, embedding_dups), then the round-5 order
-    unchanged: the 12 entries new in round 5 (doc_chunks … bloom_check),
-    the 29 with no driver row in rounds 1-4 (repetition … time_travel),
-    the rest of the round-3-attested block (minhash_dups …
-    ann_ivf_topk) and the 7 round-4-attested entries whose code paths
-    changed in round 5 (fuzzy_topk … rng_lookup). The window now ends
-    after lang_id, so quality … rng_lookup and the tail block
-    (term_counts … ngram_jaccard) fall past it; the next rotation
-    should move the tail block to the front."""
+    frame_sample, media_features), the three attested longest ago
+    (media_decode, media_meta, embedding_dups), the 12 entries new in
+    round 5 (doc_chunks … bloom_check), the 29 with no driver row in
+    rounds 1-4 (repetition … time_travel), the rest of the
+    round-3-attested block (minhash_dups … ann_ivf_topk) and the 7
+    round-4-attested entries whose code paths changed in round 5
+    (fuzzy_topk … rng_lookup). The window now ends after doc_chunks;
+    the next rotation should move quality … rng_lookup to the front."""
     return {
+        # --- past the driver window last round: the tail block
+        "term_counts": _q_term_counts,
+        "postings_tf": _q_postings,
+        "term_df": _q_term_df,
+        "doc_lengths": _q_doc_lengths,
+        "corpus_stats": _q_corpus_stats,
+        "topk_bm25": _q_topk_bm25,
+        "indexed_topk": _q_indexed_topk,
+        "filtered_topk": _q_filtered_topk,
+        "conjunctive_topk": _q_conjunctive_topk,
+        "not_topk": _q_not_topk,
+        "bool_topk": _q_bool_topk,
+        "bool_msm": _q_bool_msm,
+        "synonym_topk": _q_synonym_topk,
+        "bm25f_topk": _q_bm25f_topk,
+        "deleted_topk": _q_deleted_topk,
+        "prefix_topk": _q_prefix_topk,
+        "wildcard_topk": _q_wildcard_topk,
+        "near_search": _q_near_search,
+        "slop_phrase": _q_slop_phrase,
+        "facet_counts": _q_facet_counts,
+        "paged_topk": _q_paged_topk,
+        "more_like_this": _q_more_like_this,
+        "regex_topk": _q_regex_topk,
+        "boosted_topk": _q_boosted_topk,
+        "decay_topk": _q_decay_topk,
+        "hit_count": _q_hit_count,
+        "grouped_topk": _q_grouped_topk,
+        "hybrid_topk": _q_hybrid_topk,
+        "sessionize": _q_sessionize,
+        "tumbling_counts": _q_tumbling_counts,
+        "merged_topk": _q_merged_topk,
+        "federated_topk": _q_federated_topk,
+        "spell_suggest": _q_spell_suggest,
+        "snippet_hits": _q_snippet_hits,
+        "lookup_dump": _q_lookup_dump,
+        "fallback_join": _q_fallback_join,
+        "interval_days": _q_interval_days,
+        "phrase_search": _q_phrase_search,
+        "phrase_adhoc": _q_phrase_adhoc,
+        "phrase_prefix": _q_phrase_prefix,
+        "fingerprints": _q_fingerprints,
+        "exact_dup_groups": _q_exact_dup_groups,
+        "ngram_jaccard": _q_ngram_jaccard,
         # --- never driver-attested in any round
         "packed_examples": _q_packed_examples,
         "frame_sample": _q_frame_sample,
@@ -2371,6 +2415,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_dups": _q_embedding_dups,
         # --- new in round 5
         "doc_chunks": _q_doc_chunks,
+        # ---- driver window (50) ends here ----
         "sliding_counts": _q_sliding_counts,
         "term_vectors": _q_term_vectors,
         "stream_sessions": _q_stream_sessions,
@@ -2416,7 +2461,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_dups": _q_minhash_dups,
         "simhash_dups": _q_simhash_dups,
         "lang_id": _q_lang_id,
-        # ---- driver window (50) ends here ----
         "quality": _q_quality,
         "clone_candidates": _q_clone_candidates,
         "ann_cosine_topk": _q_ann_cosine_topk,
@@ -2430,49 +2474,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "keyed_rng_persisted": _q_keyed_rng_persisted,
         "eq_lookup": _q_eq_lookup,
         "rng_lookup": _q_rng_lookup,
-        "term_counts": _q_term_counts,
-        "postings_tf": _q_postings,
-        "term_df": _q_term_df,
-        "doc_lengths": _q_doc_lengths,
-        "corpus_stats": _q_corpus_stats,
-        "topk_bm25": _q_topk_bm25,
-        "indexed_topk": _q_indexed_topk,
-        "filtered_topk": _q_filtered_topk,
-        "conjunctive_topk": _q_conjunctive_topk,
-        "not_topk": _q_not_topk,
-        "bool_topk": _q_bool_topk,
-        "bool_msm": _q_bool_msm,
-        "synonym_topk": _q_synonym_topk,
-        "bm25f_topk": _q_bm25f_topk,
-        "deleted_topk": _q_deleted_topk,
-        "prefix_topk": _q_prefix_topk,
-        "wildcard_topk": _q_wildcard_topk,
-        "near_search": _q_near_search,
-        "slop_phrase": _q_slop_phrase,
-        "facet_counts": _q_facet_counts,
-        "paged_topk": _q_paged_topk,
-        "more_like_this": _q_more_like_this,
-        "regex_topk": _q_regex_topk,
-        "boosted_topk": _q_boosted_topk,
-        "decay_topk": _q_decay_topk,
-        "hit_count": _q_hit_count,
-        "grouped_topk": _q_grouped_topk,
-        "hybrid_topk": _q_hybrid_topk,
-        "sessionize": _q_sessionize,
-        "tumbling_counts": _q_tumbling_counts,
-        "merged_topk": _q_merged_topk,
-        "federated_topk": _q_federated_topk,
-        "spell_suggest": _q_spell_suggest,
-        "snippet_hits": _q_snippet_hits,
-        "lookup_dump": _q_lookup_dump,
-        "fallback_join": _q_fallback_join,
-        "interval_days": _q_interval_days,
-        "phrase_search": _q_phrase_search,
-        "phrase_adhoc": _q_phrase_adhoc,
-        "phrase_prefix": _q_phrase_prefix,
-        "fingerprints": _q_fingerprints,
-        "exact_dup_groups": _q_exact_dup_groups,
-        "ngram_jaccard": _q_ngram_jaccard,
     }
 
 

@@ -7,7 +7,10 @@ max-score metadata for block-max WAND. Parquet's own zstd then compresses
 the binary columns again at the file level.
 
 Both encode and decode are vectorized: ≤10 passes over the array (one
-per possible varint byte), no per-value Python loop.
+per possible varint byte), no per-value Python loop. The block packers
+encode a whole Arrow batch in one pass too: ``segment_deltas`` turns
+every block's ordinals into gaps at once and ``varint_encode_blocks``
+encodes the batch's stream once, then cuts its bytes at block starts.
 """
 
 from __future__ import annotations
@@ -17,11 +20,8 @@ import numpy as np
 _MAX_VARINT_BYTES = 10
 
 
-def varint_encode(vals: np.ndarray) -> bytes:
-    """uint64 array → LEB128 bytes."""
-    vals = np.ascontiguousarray(vals, dtype=np.uint64)
-    if vals.size == 0:
-        return b""
+def _varint_bytes(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Non-empty uint64 array → (LEB128 bytes, first byte of each value)."""
     # bytes needed per value: ceil(bit_length / 7), min 1
     nb = np.ones(vals.shape, dtype=np.int64)
     shifted = vals >> np.uint64(7)
@@ -38,7 +38,38 @@ def varint_encode(vals: np.ndarray) -> bytes:
         chunk = ((vals[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
         cont = (nb[mask] > k + 1).astype(np.uint8) << 7
         out[starts[mask] + k] = chunk | cont
-    return out.tobytes()
+    return out, starts
+
+
+def varint_encode(vals: np.ndarray) -> bytes:
+    """uint64 array → LEB128 bytes."""
+    vals = np.ascontiguousarray(vals, dtype=np.uint64)
+    if vals.size == 0:
+        return b""
+    return _varint_bytes(vals)[0].tobytes()
+
+
+def varint_encode_blocks(vals: np.ndarray, starts: np.ndarray) -> list[bytes]:
+    """Encode a stream of blocks in one pass → one ``bytes`` per block.
+
+    ``starts`` are the ascending value indices where blocks begin (the
+    first is 0); block i equals ``varint_encode`` of its slice."""
+    vals = np.ascontiguousarray(vals, dtype=np.uint64)
+    if vals.size == 0:
+        return []
+    out, first_byte = _varint_bytes(vals)
+    cuts = np.append(first_byte[starts], out.size).tolist()
+    buf = out.tobytes()
+    return [buf[a:b] for a, b in zip(cuts[:-1], cuts[1:])]
+
+
+def segment_deltas(vals: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Gaps within each segment starting at ``starts``; the first value
+    of every segment stays absolute (``pack_postings``'s layout)."""
+    d = np.array(vals, dtype=np.int64)
+    d[1:] -= vals[:-1]
+    d[starts] = vals[starts]
+    return d
 
 
 def varint_decode(buf: bytes) -> np.ndarray:

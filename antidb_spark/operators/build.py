@@ -73,10 +73,9 @@ from pyspark.sql import types as T
 from antidb_spark.functions.analyze import tokens
 from antidb_spark.functions.bm25 import contribution
 from antidb_spark.functions.packing import (
-    pack_postings,
-    unpack_postings,
+    segment_deltas,
     varint_decode,
-    varint_encode,
+    varint_encode_blocks,
 )
 from antidb_spark.operators.stats import build_postings
 from antidb_spark.schema import DOC_ID_COLS
@@ -170,82 +169,116 @@ _POSTINGS_OUT = T.StructType(
 )
 
 
-def _pack_partition(
-    batches: Iterator[pd.DataFrame], run_base: int = 0
+def _pack_sorted(
+    batches: Iterator[pd.DataFrame],
+    run_base: int,
+    cols: list[str],
+    cut: Callable[[dict, bool], tuple[int, dict]],
+    out_cols: list[str],
 ) -> Iterator[pd.DataFrame]:
-    """Pack one sorted (term, doc_ord) partition into blocks.
+    """Drive a block packer over one sorted partition, a batch at a time.
 
-    Input batches are Arrow slices of a partition sorted by
-    (term, doc_ord); a term's run may span batches, so a per-term
-    remainder is carried until the term changes or the partition ends.
+    ``cut(frame, flush)`` packs a leading run of rows of the column dict
+    ``frame`` into blocks, returning (rows consumed, {column: per-block
+    values}). A term's run may span Arrow batches, so the uncut rows are
+    carried into the next batch until the partition ends (``flush``).
     block_id = run_base | pid << 32 | seq keeps ids unique without
     coordination (run_base = compaction run number << 48, so appended
-    runs never collide with committed blocks).
-    """
-    pending: pd.DataFrame | None = None
-    seq = 0
-    pid = None
+    runs never collide with committed blocks)."""
+    pending: dict | None = None
+    seq = pid = 0
 
-    def cut(frame: pd.DataFrame, flush: bool) -> Iterator[tuple]:
+    def emit(frame: dict, flush: bool) -> tuple[int, pd.DataFrame | None]:
         nonlocal seq
-        for term, grp in frame.groupby("term", sort=False):
-            is_last_term = term == frame["term"].iloc[-1]
-            n_full = len(grp) // BLOCK_SIZE
-            end = len(grp) if (flush or not is_last_term) else n_full * BLOCK_SIZE
-            for s in range(0, end, BLOCK_SIZE):
-                chunk = grp.iloc[s : s + BLOCK_SIZE]
-                if not (flush or not is_last_term) and len(chunk) < BLOCK_SIZE:
-                    break
-                ords = chunk["doc_ord"].to_numpy(dtype=np.int64)
-                tfs = chunk["tf"].to_numpy(dtype=np.int64)
-                dls = chunk["dl"].to_numpy(dtype=np.int64)
-                docs_b, tfs_b = pack_postings(
-                    ords.astype(np.uint64), tfs.astype(np.uint64)
-                )
-                dls_b = varint_encode(dls.astype(np.uint64))
-                # (tf, dl) Pareto front: tfw is monotone ↑tf ↓dl for ANY
-                # avgdl, so the block's exact max contribution is always
-                # achieved at a front point — exact, stats-independent
-                # block-max metadata (front is tiny, typically ≤ 5 pts)
-                order = np.lexsort((dls, -tfs))
-                sdl = dls[order]
-                prev_min = np.concatenate(
-                    ([np.iinfo(np.int64).max],
-                     np.minimum.accumulate(sdl)[:-1])
-                )
-                keep = sdl < prev_min
-                yield (
-                    term,
-                    run_base | (pid << 32) | seq,
-                    len(chunk),
-                    int(ords[0]),
-                    int(ords[-1]),
-                    tfs[order][keep].tolist(),
-                    sdl[keep].tolist(),
-                    docs_b,
-                    tfs_b,
-                    dls_b,
-                )
-                seq += 1
+        n_cut, out = cut(frame, flush)
+        n = len(out["term"])
+        out["block_id"] = run_base | (pid << 32) | np.arange(
+            seq, seq + n, dtype=np.int64)
+        seq += n
+        return n_cut, pd.DataFrame(out)[out_cols] if n else None
 
     for batch in batches:
         if len(batch) == 0:
             continue
-        if pid is None:
+        frame = {c: batch[c].to_numpy(object if c == "term" else np.int64)
+                 for c in cols}
+        if pending is None:
             pid = int(batch["_pid"].iloc[0])
-        frame = batch if pending is None else pd.concat([pending, batch])
-        last_term = frame["term"].iloc[-1]
-        rows = list(cut(frame, flush=False))
-        if rows:
-            yield pd.DataFrame(rows, columns=[f.name for f in _BLOCKS_OUT.fields])
-        # keep the unpacked tail of the last term for the next batch
-        tail = frame[frame["term"] == last_term]
-        n_packed = (len(tail) // BLOCK_SIZE) * BLOCK_SIZE
-        pending = tail.iloc[n_packed:] if n_packed < len(tail) else None
-    if pending is not None and len(pending):
-        rows = list(cut(pending, flush=True))
-        if rows:
-            yield pd.DataFrame(rows, columns=[f.name for f in _BLOCKS_OUT.fields])
+        else:
+            frame = {c: np.concatenate([pending[c], frame[c]]) for c in cols}
+        n_cut, out = emit(frame, flush=False)
+        if out is not None:
+            yield out
+        pending = {c: v[n_cut:] for c, v in frame.items()}
+    if pending is not None and len(pending["term"]):
+        out = emit(pending, flush=True)[1]
+        if out is not None:
+            yield out
+
+
+def _run_firsts(is_first: np.ndarray) -> np.ndarray:
+    """Index of the first element of each element's run, for the
+    run-start mask ``is_first`` (its element 0 is True)."""
+    idx = np.arange(is_first.size)
+    return np.maximum.accumulate(np.where(is_first, idx, 0))
+
+
+def _cut_blocks(frame: dict, flush: bool) -> tuple[int, dict]:
+    """(term, doc_ord, tf, dl) rows sorted by (term, doc_ord) → blocks of
+    ≤ BLOCK_SIZE postings per term, all encoded in one pass. Unless
+    flushing, only full blocks are cut from the last term, whose run may
+    continue in the next batch."""
+    term = frame["term"]
+    new_term = np.r_[True, term[1:] != term[:-1]]
+    n = term.size
+    if not flush:
+        last = int(np.flatnonzero(new_term)[-1])
+        n = last + (n - last) // BLOCK_SIZE * BLOCK_SIZE
+    ords, tfs, dls = (frame[c][:n] for c in ("doc_ord", "tf", "dl"))
+    is_start = (np.arange(n) - _run_firsts(new_term[:n])) % BLOCK_SIZE == 0
+    starts = np.flatnonzero(is_start)
+    blk = np.cumsum(is_start) - 1
+    # (tf, dl) Pareto front: tfw is monotone ↑tf ↓dl for ANY avgdl, so
+    # the block's exact max contribution is always achieved at a front
+    # point — exact, stats-independent block-max metadata (front is
+    # tiny, typically ≤ 5 pts). Sorted by (block, -tf, dl), a posting is
+    # on its block's front iff its dl is below every earlier dl of the
+    # block: a running minimum per block, by a log-step scan.
+    order = np.lexsort((dls, -tfs, blk))
+    sdl, stf = dls[order], tfs[order]
+    slot = np.arange(n) - starts[blk]
+    run_min, step = sdl.copy(), 1
+    while step < BLOCK_SIZE:
+        run_min[step:] = np.where(slot[step:] >= step, np.minimum(
+            run_min[step:], run_min[:-step]), run_min[step:])
+        step *= 2
+    big = np.iinfo(np.int64).max
+    keep = sdl < np.where(slot == 0, big, np.r_[big, run_min[:-1]])
+    front_cuts = np.cumsum(np.bincount(blk[keep], minlength=starts.size))[:-1]
+    n_docs = np.diff(np.r_[starts, n])
+    return n, {
+        "term": term[starts],
+        "n_docs": n_docs,
+        "min_ord": ords[starts],
+        "max_ord": ords[starts + n_docs - 1],
+        "tfs_front": np.split(stf[keep], front_cuts),
+        "dls_front": np.split(sdl[keep], front_cuts),
+        "docs_packed": varint_encode_blocks(
+            segment_deltas(ords, starts), starts),
+        "tfs_packed": varint_encode_blocks(tfs, starts),
+        "dls_packed": varint_encode_blocks(dls, starts),
+    }
+
+
+def _pack_partition(
+    batches: Iterator[pd.DataFrame], run_base: int = 0
+) -> Iterator[pd.DataFrame]:
+    """Pack one sorted (term, doc_ord) partition into blocks: one
+    vectorized encoding pass per Arrow batch (``_cut_blocks``), with the
+    carry-the-tail protocol and block_id layout of ``_pack_sorted``."""
+    yield from _pack_sorted(
+        batches, run_base, ["term", "doc_ord", "tf", "dl"], _cut_blocks,
+        [f.name for f in _BLOCKS_OUT.fields])
 
 
 def _decode_batch(batch: pd.DataFrame) -> tuple[np.ndarray, ...]:
@@ -759,7 +792,9 @@ class IndexBuilder:
         an index without deletes)."""
         if not self._n_tombstones():
             return None
-        return self.catalog.read("tombstones").select("doc_ord")
+        return self.catalog.read(
+            "tombstones", schema=self._spark_schema("tombstones")
+        ).select("doc_ord")
 
     def _drop_tombstones(self, df: DataFrame) -> DataFrame:
         """Anti-join a doc_ord-bearing relation against the tombstones
@@ -1885,14 +1920,15 @@ class IndexBuilder:
         tf), per-query groups in argument order, ties in (*id_cols)
         order, miss → empty (multiset semantics, SURVEY §2.4)."""
         uniq = list(dict.fromkeys(terms))
-        blocks = self.catalog.read_pruned("blocks", "term", uniq).filter(
-            F.col("term").isin(uniq)
-        )
+        # cached Spark schemas: defining the lookup infers nothing
+        blocks = self.catalog.read_pruned(
+            "blocks", "term", uniq, schema=self._spark_schema("blocks")
+        ).filter(F.col("term").isin(uniq))
         post = self._drop_tombstones(self._decoded_postings(blocks))
         qdf = self.spark.createDataFrame(
             [(i, t) for i, t in enumerate(terms)], "query_ord int, term string"
         )
-        docmap = self.catalog.read("docmap")
+        docmap = self.catalog.read("docmap", schema=self._docmap_schema())
         return (
             post.join(F.broadcast(qdf), "term")
             .join(docmap.select("doc_ord", *self.id_cols), "doc_ord")

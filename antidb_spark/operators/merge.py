@@ -13,8 +13,10 @@ block's FIRST ordinal absolute and every later doc a gap
 rewrites only the head varint of each block — a few bytes per ~128-doc
 block; gaps, tf/dl payloads, position payloads, and the
 stats-independent (tf, dl) Pareto-front pruning metadata are untouched.
-The remap runs as one ``mapInPandas`` pass over the source blocks scan
-(per-block work, same granularity as the build's ``_pack_partition``).
+The remap runs as one ``mapInPandas`` pass over the source blocks scan:
+one head rewrite per block and no re-encode, where the build's
+``_pack_partition`` encodes every posting, one whole Arrow batch at a
+time.
 
 Contract (mirrors the streaming append path in
 ``streaming/incremental.py``):

@@ -53,11 +53,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from antidb_spark.functions.analyze import py_tokens, tokens
-from antidb_spark.operators.build import _alive_bits
+from antidb_spark.operators.build import _alive_bits, _pack_sorted, _run_firsts
 from antidb_spark.functions.packing import (
-    pack_postings,
+    segment_deltas,
     varint_decode,
-    varint_encode,
+    varint_encode_blocks,
 )
 from antidb_spark.schema import DOC_ID_COLS
 from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES
@@ -155,93 +155,54 @@ _DECODED_POS = T.StructType(
 )
 
 
-def _usable_docs(n_docs: int, flush: bool, is_last_term: bool) -> int:
-    """How many leading docs of a term run may be cut into blocks.
-
-    Non-last terms in a frame are complete (a later term follows them in
-    the sorted stream); the frame's LAST term — and, crucially, its last
-    DOC, whose position rows may continue in the next Arrow batch — is
-    held back unless flushing, and only full blocks are cut from it."""
-    if flush or not is_last_term:
-        return n_docs
-    return ((n_docs - 1) // POS_BLOCK_SIZE) * POS_BLOCK_SIZE
+def _cut_pos_blocks(frame: dict, flush: bool) -> tuple[int, dict]:
+    """(term, doc_ord, pos) rows sorted by (term, doc_ord, pos) → blocks
+    of ≤ POS_BLOCK_SIZE docs per term, all encoded in one pass. Unless
+    flushing, the last term's last DOC — whose position rows may continue
+    in the next Arrow batch — is held back, and only full blocks are cut
+    from that term."""
+    term, ords = frame["term"], frame["doc_ord"]
+    new_term = np.r_[True, term[1:] != term[:-1]]
+    doc_rows = np.flatnonzero(new_term | np.r_[True, ords[1:] != ords[:-1]])
+    first = _run_firsts(new_term[doc_rows])  # each doc's term's first doc
+    n_docs = doc_rows.size
+    if not flush:
+        last = int(first[-1])
+        n_docs = last + (n_docs - last - 1) // POS_BLOCK_SIZE * POS_BLOCK_SIZE
+    n = int(doc_rows[n_docs]) if n_docs < doc_rows.size else term.size
+    doc_rows = doc_rows[:n_docs]
+    starts = np.flatnonzero(
+        (np.arange(n_docs) - first[:n_docs]) % POS_BLOCK_SIZE == 0)
+    docs = ords[doc_rows]
+    counts = np.diff(np.r_[starts, n_docs])
+    return n, {
+        "term": term[doc_rows[starts]],
+        "n_docs": counts,
+        "min_ord": docs[starts],
+        "max_ord": docs[starts + counts - 1],
+        "docs_packed": varint_encode_blocks(
+            segment_deltas(docs, starts), starts),
+        "tfs_packed": varint_encode_blocks(np.diff(np.r_[doc_rows, n]), starts),
+        # positions: per-doc delta+varint, concatenated across the block
+        "pos_packed": varint_encode_blocks(
+            segment_deltas(frame["pos"][:n], doc_rows), doc_rows[starts]),
+    }
 
 
 def _pack_pos_partition(
     batches: Iterator[pd.DataFrame], run_base: int = 0
 ) -> Iterator[pd.DataFrame]:
     """Pack one sorted (term, doc_ord, pos) partition of ROW-LEVEL
-    positional postings into blocks (same carry-the-tail protocol and
-    block_id layout as build._pack_partition). Consuming raw position
-    rows — not per-doc arrays — lets the build plan skip the
+    positional postings into blocks: one vectorized encoding pass per
+    Arrow batch (``_cut_pos_blocks``), with the carry-the-tail protocol
+    and block_id layout of ``build._pack_partition``. Consuming raw
+    position rows — not per-doc arrays — lets the build plan skip the
     collect_list aggregation shuffle entirely: explode → docmap join →
     ONE range shuffle → pack. Positions are per-doc delta+varint (first
     position absolute, then gaps), concatenated across the block."""
-    pending: pd.DataFrame | None = None
-    seq = 0
-    pid = None
-
-    def cut(frame: pd.DataFrame, flush: bool) -> Iterator[tuple]:
-        nonlocal seq
-        last_term = frame["term"].iloc[-1]
-        for term, grp in frame.groupby("term", sort=False):
-            ords_all = grp["doc_ord"].to_numpy(dtype=np.int64)
-            pos_all = grp["pos"].to_numpy(dtype=np.int64)
-            docs, first_idx, counts = np.unique(
-                ords_all, return_index=True, return_counts=True
-            )
-            usable = _usable_docs(docs.size, flush, term == last_term)
-            for s in range(0, usable, POS_BLOCK_SIZE):
-                e = min(s + POS_BLOCK_SIZE, usable)
-                dchunk = docs[s:e]
-                ccounts = counts[s:e]
-                row_lo = int(first_idx[s])
-                row_hi = (
-                    int(first_idx[e]) if e < docs.size else len(grp)
-                )
-                flat = pos_all[row_lo:row_hi]
-                docs_b, tfs_b = pack_postings(
-                    dchunk.astype(np.uint64), ccounts.astype(np.uint64)
-                )
-                d = flat.copy()
-                d[1:] -= flat[:-1]
-                starts = np.cumsum(ccounts) - ccounts
-                d[starts] = flat[starts]
-                yield (
-                    term,
-                    run_base | (pid << 32) | seq,
-                    int(dchunk.size),
-                    int(dchunk[0]),
-                    int(dchunk[-1]),
-                    docs_b,
-                    tfs_b,
-                    varint_encode(d.astype(np.uint64)),
-                )
-                seq += 1
-
-    cols = [f.name for f in _POS_BLOCKS_OUT.fields]
-    for batch in batches:
-        if len(batch) == 0:
-            continue
-        if pid is None:
-            pid = int(batch["_pid"].iloc[0])
-        frame = batch if pending is None else pd.concat([pending, batch])
-        last_term = frame["term"].iloc[-1]
-        rows = list(cut(frame, flush=False))
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-        # carry the UNCUT rows of the last term (its trailing partial
-        # block, including the possibly-batch-spanning last doc)
-        tail = frame[frame["term"] == last_term]
-        t_ords = tail["doc_ord"].to_numpy(dtype=np.int64)
-        t_docs, t_first = np.unique(t_ords, return_index=True)
-        usable = _usable_docs(t_docs.size, False, True)
-        consumed = int(t_first[usable]) if usable < t_docs.size else len(tail)
-        pending = tail.iloc[consumed:] if consumed < len(tail) else None
-    if pending is not None and len(pending):
-        rows = list(cut(pending, flush=True))
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
+    yield from _pack_sorted(
+        batches, run_base, ["term", "doc_ord", "pos"], _cut_pos_blocks,
+        [f.name for f in _POS_BLOCKS_OUT.fields])
 
 
 def _decode_pos_batch(

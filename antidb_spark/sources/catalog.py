@@ -622,17 +622,22 @@ class Catalog:
         values: list[Any] | None = None,
         lo: Any = None,
         hi: Any = None,
+        schema: StructType | None = None,
     ) -> DataFrame:
         """File-level skipping: read only data files whose [min,max] range
         for ``col`` can contain one of ``values`` / overlap [lo, hi]
         (B+tree-descent analog, prs.py:57-77). Falls back to the full
-        table when stats are absent."""
+        table when stats are absent. A known ``schema`` skips Spark's
+        schema-inference job, as in :meth:`read`."""
         paths = self.pruned_file_paths(name, col, values, lo, hi)
         if paths is None:
-            return self.read(name)
+            return self.read(name, schema=schema)
         if not paths:
-            return self.read(name).limit(0)
-        return self.spark.read.parquet(*paths)
+            return self.read(name, schema=schema).limit(0)
+        reader = self.spark.read if schema is None else (
+            self.spark.read.schema(schema)
+        )
+        return reader.parquet(*paths)
 
     def arrow_schema(self, name: str) -> pa.Schema | None:
         """Arrow schema of the head snapshot, from a cached footer (no

@@ -1,10 +1,13 @@
 """Per-round benchmark harness (driver contract).
 
-Runs the engine's headline workloads at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+Runs the engine's headline workloads at ``$SPARK_GRAFT_SF_DIR`` (default:
+the ``sf0.1`` test data) on ``local[$SPARK_GRAFT_CPUS]`` and prints two
+JSON lines: the full record, then a compact headline (under 1,500 chars,
+so a harness that keeps only the output's tail can still parse it)::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "sf": ..., "floor": {...},
+     "turns_per_sec": ..., "build_phases": {...}}
 
 Headline workloads (BASELINE.json metric = index-build throughput +
 top-k BM25 query latency):
@@ -434,7 +437,8 @@ def main() -> None:
     from antidb_spark.session import get_spark
     from antidb_spark.synth import synth_transcripts
 
-    spark = get_spark(master=f"local[{CPUS}]")
+    spark = get_spark(master=f"local[{CPUS}]",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     docs.count()  # warm the scan / JVM
@@ -523,21 +527,21 @@ def main() -> None:
     if "hybrid_warm" in timings:
         extras["hybrid_warm_ms"] = round(1000 * timings["hybrid_warm"], 2)
 
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline-suite wall time (index build + BM25 batch "
-                "+ lookups + pipeline ops; median of interleaved repeats)",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                **extras,
-            }
-        )
-    )
-    spark.stop()
+    record = {
+        "metric": "headline-suite wall time (index build + BM25 batch "
+        "+ lookups + pipeline ops; median of interleaved repeats)",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        **extras,
+    }
+    spark.stop()  # before printing: nothing may follow the headline
+    print(json.dumps(record))
+    headline = ("metric", "value", "unit", "sf", "floor", "turns_per_sec",
+                "build_phases")
+    print(json.dumps({k: record[k] for k in headline if k in record},
+                     separators=(",", ":")), flush=True)
 
 
 if __name__ == "__main__":

@@ -166,6 +166,23 @@ def test_match_paths_exclude_deleted(built):
     ) == term_docs - deleted
 
 
+def test_eq_terms_defines_without_a_job(built):
+    """On a warm builder over a tombstoned index, eq_terms reads blocks,
+    tombstones and docmap with the builder's cached Spark schemas:
+    defining the lookup runs no schema-inference job, and it collects
+    the rows of the first, schema-inferring call."""
+    b = built[0]
+    want = b.eq_terms("the", "data").collect()  # warms the schemas
+    sc = b.spark.sparkContext
+    sc.setJobGroup("eq_terms_define", "define eq_terms")
+    try:
+        df = b.eq_terms("the", "data")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("eq_terms_define") == []
+    assert want and df.collect() == want
+
+
 def test_positional_paths_exclude_deleted(built):
     b, corpus, _, deleted = built
     # pick a phrase present in at least one deleted doc
