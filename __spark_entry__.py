@@ -2348,20 +2348,35 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 43
-    entries of the tail block (term_counts … ngram_jaccard), which fell
-    past the window last round, then the previous order unchanged: the
-    three entries with no driver row in any round (packed_examples,
-    frame_sample, media_features), the three attested longest ago
-    (media_decode, media_meta, embedding_dups), the 12 entries new in
-    round 5 (doc_chunks … bloom_check), the 29 with no driver row in
-    rounds 1-4 (repetition … time_travel), the rest of the
-    round-3-attested block (minhash_dups … ann_ivf_topk) and the 7
-    round-4-attested entries whose code paths changed in round 5
-    (fuzzy_topk … rng_lookup). The window now ends after doc_chunks;
-    the next rotation should move quality … rng_lookup to the front."""
+    round, least-recently-driver-attested first. Current order: the 12
+    entries quality … rng_lookup, which sat longest past the window
+    (the last five of the round-3-attested block, then the 7
+    round-4-attested entries whose code paths changed in round 5), then
+    the previous order unchanged: the 43 entries of the tail block
+    (term_counts … ngram_jaccard), the three entries with no driver row
+    in any round (packed_examples, frame_sample, media_features), the
+    three attested longest ago (media_decode, media_meta,
+    embedding_dups), the 12 entries new in round 5 (doc_chunks …
+    bloom_check), the 29 with no driver row in rounds 1-4 (repetition …
+    time_travel) and the first three of the round-3-attested block
+    (minhash_dups, simhash_dups, lang_id). The window now ends after
+    phrase_search; the next rotation should move sliding_counts …
+    lang_id, which the last two windows missed, to the front."""
     return {
-        # --- past the driver window last round: the tail block
+        # --- attested longest ago of those past the window last round
+        "quality": _q_quality,
+        "clone_candidates": _q_clone_candidates,
+        "ann_cosine_topk": _q_ann_cosine_topk,
+        "ann_lsh_topk": _q_ann_lsh_topk,
+        "ann_ivf_topk": _q_ann_ivf_topk,
+        "fuzzy_topk": _q_fuzzy_topk,
+        "upsert_eq": _q_upsert_eq,
+        "upsert_topk": _q_upsert_topk,
+        "keyed_eq_persisted": _q_keyed_eq_persisted,
+        "keyed_rng_persisted": _q_keyed_rng_persisted,
+        "eq_lookup": _q_eq_lookup,
+        "rng_lookup": _q_rng_lookup,
+        # --- the tail block, in the driver window last round
         "term_counts": _q_term_counts,
         "postings_tf": _q_postings,
         "term_df": _q_term_df,
@@ -2400,6 +2415,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fallback_join": _q_fallback_join,
         "interval_days": _q_interval_days,
         "phrase_search": _q_phrase_search,
+        # ---- driver window (50) ends here ----
         "phrase_adhoc": _q_phrase_adhoc,
         "phrase_prefix": _q_phrase_prefix,
         "fingerprints": _q_fingerprints,
@@ -2415,7 +2431,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_dups": _q_embedding_dups,
         # --- new in round 5
         "doc_chunks": _q_doc_chunks,
-        # ---- driver window (50) ends here ----
         "sliding_counts": _q_sliding_counts,
         "term_vectors": _q_term_vectors,
         "stream_sessions": _q_stream_sessions,
@@ -2461,19 +2476,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_dups": _q_minhash_dups,
         "simhash_dups": _q_simhash_dups,
         "lang_id": _q_lang_id,
-        "quality": _q_quality,
-        "clone_candidates": _q_clone_candidates,
-        "ann_cosine_topk": _q_ann_cosine_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        # --- round-4 attested, but their code paths changed in round 5
-        "fuzzy_topk": _q_fuzzy_topk,
-        "upsert_eq": _q_upsert_eq,
-        "upsert_topk": _q_upsert_topk,
-        "keyed_eq_persisted": _q_keyed_eq_persisted,
-        "keyed_rng_persisted": _q_keyed_rng_persisted,
-        "eq_lookup": _q_eq_lookup,
-        "rng_lookup": _q_rng_lookup,
     }
 
 

@@ -32,7 +32,7 @@ _PY_SPLIT = re.compile(TOKEN_SPLIT_RE)
 def tokens(col: Column | str) -> Column:
     """array<string> of tokens for a text column (JVM-side expressions)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
+    return F.array_remove(F.split(F.lower(c), TOKEN_SPLIT_RE), "")
 
 
 def distinct_tokens(col: Column | str) -> Column:

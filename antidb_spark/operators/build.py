@@ -46,21 +46,20 @@ Scale design (10^12 turns, 1000 executors):
 Block-max pruning invariant (why skipped blocks cannot hide a winner):
 let m(b) = idf · max-over-front tfw — the EXACT max contribution in b
 under current stats — M_t = max m over query term t's blocks, and θ =
-a LOWER bound on the true k-th best score (from pass-1 exact partial
-scores, or from block metadata alone — see _meta_thresholds). A block
-b of term t is skipped only when ``m(b) + Σ_{t'≠t} M_{t'} < θ``. Any
-doc d with a posting in b has true score ≤ m(b) + Σ_{t'≠t} M_{t'} < θ,
-so d cannot be in the top k — hence every true top-k doc has ALL its
-blocks decoded and its exact score computed; docs partially scored
-because one of their blocks was skipped rank strictly below θ and
-cannot displace a winner.
+a LOWER bound on the true k-th best score (from block metadata alone
+— see _meta_thresholds). A block b of term t is skipped only when
+``m(b) + Σ_{t'≠t} M_{t'} < θ``. Any doc d with a posting in b has true
+score ≤ m(b) + Σ_{t'≠t} M_{t'} < θ, so d cannot be in the top k —
+hence every true top-k doc has ALL its blocks decoded and its exact
+score computed; docs partially scored because one of their blocks was
+skipped rank strictly below θ and cannot displace a winner.
 """
 
 from __future__ import annotations
 
 import os
 from collections import OrderedDict
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
 import numpy as np
@@ -322,6 +321,36 @@ def _alive_bits(bits: np.ndarray, ords: np.ndarray) -> np.ndarray:
     return m
 
 
+def _topk_slots(
+    parts: Iterable[tuple[np.ndarray, np.ndarray]], n_slots: int, k: int,
+    dead: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one per-query BM25 top-k kernel: ``query_warm`` and both
+    ``query_batch`` tiers rank through it, which is why they agree to
+    the bit.
+
+    ``parts`` holds one (slots, contributions) pair per query term, in
+    ascending term order, each slot at most once per term; slots index
+    a space of ``n_slots`` docs numbered in doc_ord order (doc_ord
+    itself, or a rank among the candidate docs). Each slot sums its
+    terms in that order (the pinned float order of the oracles), the
+    ``dead`` slots score 0, and the result is the top k (slots, scores)
+    by (score desc, slot asc). A slot scores 0.0 only with no live
+    posting (idf, tfw > 0), so 0 = no match."""
+    acc = np.zeros(n_slots)
+    for slot, contrib in parts:
+        acc[slot] += contrib
+    if dead is not None:
+        acc[dead] = 0.0
+    cut = (
+        np.partition(acc, n_slots - k)[n_slots - k] if n_slots > k > 0
+        else 0.0
+    )
+    cand = np.flatnonzero(acc >= max(cut, np.finfo(float).tiny))
+    top = cand[np.lexsort((cand, -acc[cand]))[:k]]
+    return top, acc[top]
+
+
 def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """blocks → (term, doc_ord, tf, dl) posting rows, vectorized."""
     for batch in batches:
@@ -572,34 +601,13 @@ class IndexBuilder:
             "term", "n_docs", "docs_packed", "tfs_packed", "dls_packed"
         ).mapInPandas(_decode_blocks, schema=_POSTINGS_OUT)
 
-    def _scored(self, post: DataFrame, qt: DataFrame) -> DataFrame:
-        """(query_id, doc_ord, score) exact BM25 from decoded postings.
-
-        No docmap join: decoded blocks carry dl per posting (the
-        self-contained block design), so scoring is joins against tiny
-        broadcast relations plus one aggregation."""
-        dfs = self.catalog.read("terms")
-        stats = self.catalog.read("stats")
-        return (
-            post.join(F.broadcast(qt), "term")
-            .join(F.broadcast(dfs.join(qt.select("term").distinct(), "term")), "term")
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "contrib",
-                contribution(F.col("tf"), F.col("df"), F.col("dl"),
-                             F.col("avgdl"), F.col("n_docs")),
-            )
-            .groupBy("query_id", "doc_ord")
-            .agg(F.sum("contrib").alias("score"))
-        )
-
     # Below this many candidate blocks, θ-pruning saves less than its
-    # metadata read costs under prune="auto" (decode-all of a few
-    # thousand 128-doc blocks is a sub-second map stage).
+    # metadata read costs (decode-all of a few thousand 128-doc blocks
+    # is a sub-second map stage), so the Spark tier does not prune.
     AUTO_PRUNE_MIN_BLOCKS = 5_000
     # Above this many candidate blocks, per-block (term, max_score)
-    # metadata no longer belongs on the driver; block-max pruning then
-    # runs as the distributed two-pass plan (_pruned_blocks).
+    # metadata no longer belongs on the driver; the Spark tier then
+    # scores every candidate block, unpruned (the same exact answer).
     META_MAX_BLOCKS = 2_000_000
     # reducer memory bounds, independent of data scale AND parallelism
     # level (the SAME algorithm must run at every level, or cross-level
@@ -1264,8 +1272,6 @@ class IndexBuilder:
         ~20 B each). The ``src`` column (map partition id) lets the
         reducer concatenate blobs in deterministic order, making float
         summation order reproducible run-to-run."""
-        from antidb_spark.functions.bm25 import B, K1
-
         idf, avgdl = plan["idf"], plan["avgdl"]
         n_docs = plan["n_docs"]
         term_ids = {t: i for i, t in enumerate(plan["terms"])}
@@ -1289,8 +1295,6 @@ class IndexBuilder:
                     continue
                 src = int(batch["_pid"].iloc[0])
                 _term_rep, ords, tfs, dls = _decode_batch(batch)
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
                 uniq, inv = np.unique(
                     batch["term"].to_numpy(), return_inverse=True
                 )
@@ -1299,8 +1303,8 @@ class IndexBuilder:
                 per_post = np.repeat(
                     inv, batch["n_docs"].to_numpy(dtype=np.int64)
                 )
-                tfw = (tf * (K1 + 1.0)) / (
-                    tf + K1 * (1.0 - B + (B * dl) / avgdl)
+                tfw = IndexBuilder._tfw(
+                    tfs.astype(np.float64), dls.astype(np.float64), avgdl
                 )
                 ords_l.append(ords.astype(np.int64, copy=False))
                 tids_l.append(tid_u[per_post])
@@ -1341,10 +1345,7 @@ class IndexBuilder:
             F.spark_partition_id().alias("_pid"),
         ).mapInPandas(gen, schema=out_schema)
 
-    def query_batch(
-        self, queries: Sequence[str], k: int = 10,
-        prune: bool | str = "auto",
-    ) -> DataFrame:
+    def query_batch(self, queries: Sequence[str], k: int = 10) -> DataFrame:
         """Batch top-k BM25 over the physical index.
 
         Returns (query_id, *id_cols, score) with per-query rank order;
@@ -1352,7 +1353,9 @@ class IndexBuilder:
 
         The whole batch is planned driver-side from committed metadata,
         then scored by one of two tiers, with no per-batch metadata jobs;
-        both tiers end in the same tiny driver merge and id resolve:
+        both tiers rank each query with the same kernel
+        (``_topk_slots``) and end in the same tiny driver merge and id
+        resolve:
 
         0. tier choice (``_batch_on_driver``, from the plan of step 1):
            a batch whose block fan-out (each term's blocks counted once
@@ -1360,16 +1363,16 @@ class IndexBuilder:
            one ``query_warm`` decodes on one core — is scored on the
            driver by the warm kernel (``_warm_scores``: one cached
            posting read for the union of its terms, per-query cost in
-           the query's own postings) and runs NO Spark job; ``prune``
-           does not apply there. Bigger batches run the single Spark
-           action of steps 2-4, whose Python tasks each pay a
-           ≈ 110-150 ms floor.
+           the query's own postings) and runs NO Spark job. Bigger
+           batches run the single Spark action of steps 2-4, whose
+           Python tasks each pay a ≈ 110-150 ms floor.
         1. ``_plan_queries``: tokenize + df/idf/stats, pyarrow only.
-        2. manifest file pruning on term + (``prune``) metadata-only
+        2. manifest file pruning on term, then — from
+           ``AUTO_PRUNE_MIN_BLOCKS`` to ``META_MAX_BLOCKS`` candidate
+           blocks, on an index without tombstones — metadata-only
            block-max θ thresholds pushed into the scan filter
-           (``_meta_thresholds`` — provably lossless, results identical
-           with pruning on or off). Above ``META_MAX_BLOCKS`` candidates
-           the distributed two-pass pruning plan is used instead.
+           (``_meta_thresholds`` — provably lossless: the answer is the
+           one an unpruned scan gives).
         3. ``_bucketed_contribs``: decode + score in one Arrow stage,
            packed into per-(map-partition, doc-range-bucket) binary
            blob rows → the ONE shuffle moves a few hundred blobs
@@ -1380,7 +1383,7 @@ class IndexBuilder:
            each decode task is a Python task with a ≈ 110-150 ms floor
            before its first row, so one task per small upsert run
            would cost more than the run's decode.
-        4. tree top-k: per-bucket dense accumulation + top-k (numpy,
+        4. tree top-k: per-bucket top-k of each query (``reduce_topk``,
            deterministic blob order) → driver merge of
            ≤ k·|queries|·n_partitions rows → id resolution against the
            docmap via manifest-pruned pyarrow (no docmap scan job).
@@ -1392,7 +1395,7 @@ class IndexBuilder:
             + [dm_schema[c] for c in self.id_cols]
             + [T.StructField("score", T.DoubleType(), True)]
         )
-        if plan is None or k < 1:  # k < 1: reduce_topk cannot cut at k
+        if plan is None or k < 1:  # k < 1: nothing to rank
             return self.spark.createDataFrame([], out_schema)
         if self._batch_on_driver(plan):
             tops = self._warm_scores(plan, k, dense=False)
@@ -1405,7 +1408,7 @@ class IndexBuilder:
                 "score": np.concatenate([s for _, s in tops]),
             })
         else:
-            top_pdf = self._spark_top(queries, plan, k, prune)
+            top_pdf = self._spark_top(plan, k)
         if len(top_pdf) == 0:
             return self.spark.createDataFrame([], out_schema)
         top_pdf = top_pdf.sort_values(
@@ -1426,29 +1429,28 @@ class IndexBuilder:
         fan-out fits the warm block budget, False (one Spark action)."""
         return plan["fan_out"] <= self.WARM_MAX_BLOCKS
 
-    def _spark_top(
-        self, queries: Sequence[str], plan: dict, k: int, prune: bool | str
-    ) -> pd.DataFrame:
+    def _spark_top(self, plan: dict, k: int) -> pd.DataFrame:
         """(query_id, doc_ord, score) candidate rows of the Spark tier
         (``query_batch`` steps 2-4): at least the top k of each query,
         before the driver merge."""
         terms = plan["terms"]
         blocks = self._blocks_scan(terms).filter(F.col("term").isin(terms))
-        # tombstones disarm block-max pruning even when requested: the
-        # θ thresholds estimate the k-th best score from metadata that
-        # still counts deleted docs, so θ can exceed the true alive
-        # k-th best and prune blocks holding alive results. Deletes
-        # trade pruning for instant visibility; purge_deleted re-arms.
+        # tombstones disarm block-max pruning: the θ thresholds estimate
+        # the k-th best score from metadata that still counts deleted
+        # docs, so θ can exceed the true alive k-th best and prune
+        # blocks holding alive results. Deletes trade pruning for
+        # instant visibility; purge_deleted re-arms.
         ts = self._tomb_state()
-        if ts is not None:
-            prune = False
         tomb_bc = (
             self.spark.sparkContext.broadcast(ts[0])
             if ts is not None else None
         )
-        if prune == "auto":
-            prune = plan["est_blocks"] >= self.AUTO_PRUNE_MIN_BLOCKS
-        if prune and plan["est_blocks"] <= self.META_MAX_BLOCKS:
+        prune = (
+            ts is None
+            and self.AUTO_PRUNE_MIN_BLOCKS <= plan["est_blocks"]
+            <= self.META_MAX_BLOCKS
+        )
+        if prune:
             thr = {
                 t: v for t, v in self._meta_thresholds(plan, k).items()
                 if v != float("-inf")
@@ -1479,11 +1481,6 @@ class IndexBuilder:
                     )
                     .drop("_thr")
                 )
-        elif prune:
-            from antidb_spark.operators.topk import query_terms_df
-
-            qt = query_terms_df(self.spark, queries)
-            blocks = self._pruned_blocks(blocks, qt, k)
         # reducer partition count is DATA-sized, not core-sized: target
         # ~TARGET_DOCS_PER_REDUCER candidate docs per task so the dense
         # slab geometry (and therefore per-core work) is the same at any
@@ -1494,7 +1491,6 @@ class IndexBuilder:
             -(-cand_docs // self.TARGET_DOCS_PER_REDUCER),
         )
         bucketed = self._bucketed_contribs(blocks, plan, n_part)
-        qmap_by_tid = [plan["qmap"][t] for t in plan["terms"]]
         topk_schema = T.StructType(
             [
                 T.StructField("query_id", T.IntegerType(), False),
@@ -1502,13 +1498,11 @@ class IndexBuilder:
                 T.StructField("score", T.DoubleType(), True),
             ]
         )
-
-        n_queries = len(plan["per_query"])
-        # query -> ascending term-id list (sorted-term order — the same
+        # query -> ascending term ids (sorted-term order — the same
         # pinned float-summation order the oracles use)
-        per_q_tids: list[list[int]] = [[] for _ in range(n_queries)]
-        for t_i, qids in enumerate(qmap_by_tid):
-            for q in qids:
+        per_q_tids: list[list[int]] = [[] for _ in plan["per_query"]]
+        for t_i, t in enumerate(plan["terms"]):
+            for q in plan["qmap"][t]:
                 per_q_tids[int(q)].append(t_i)
 
         def reduce_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1535,20 +1529,16 @@ class IndexBuilder:
             contrib_post = np.concatenate(
                 [np.frombuffer(r[3], dtype=np.float64) for r in rows]
             )
+            # slots: the partition's docs in doc_ord order
             u, doc_inv_post = np.unique(doc_post, return_inverse=True)
-            dead_idx = None
-            if tomb_bc is not None:
-                alive = _alive_bits(tomb_bc.value, u)
-                if not alive.all():
-                    dead_idx = np.flatnonzero(~alive)
-            # segment the partition's postings by term id ONCE; a doc
-            # appears at most once per term, so per-query accumulation
-            # is a direct fancy-indexed add per term — one pass over
-            # the query fan-out (shared hot terms expand to 10^8 fanned
-            # adds per batch; the previous shape materialized expanded
-            # (query, doc) index arrays and paid ~6 array passes over
-            # them). Scores are never exactly 0.0 (idf, tfw > 0) → 0 =
-            # no candidate.
+            dead = (
+                np.flatnonzero(~_alive_bits(tomb_bc.value, u))
+                if tomb_bc is not None else None
+            )
+            # segment the partition's postings by term id ONCE, so each
+            # query's kernel parts are slices (shared hot terms expand
+            # to 10^8 fanned adds per batch; materializing expanded
+            # (query, doc) index arrays paid ~6 array passes over them)
             torder = np.argsort(tid, kind="stable")
             doc_seg = doc_inv_post[torder]
             con_seg = contrib_post[torder]
@@ -1559,36 +1549,18 @@ class IndexBuilder:
                 int(t): (doc_seg[s:e], con_seg[s:e])
                 for t, s, e in zip(ut, tstarts, tends)
             }
-            dense = np.empty(u.size)
             frames = []
-            for q in range(n_queries):
-                present = [t for t in per_q_tids[q] if t in seg]
-                if not present:
+            for q, tids in enumerate(per_q_tids):
+                parts = [seg[t] for t in tids if t in seg]
+                if not parts:
                     continue
-                dense.fill(0.0)
-                for t in present:  # ascending term id = sorted terms
-                    d, c = seg[t]
-                    dense[d] += c
-                row = dense
-                if dead_idx is not None:
-                    row[dead_idx] = 0.0
-                if u.size > 4 * k:
-                    cut = np.partition(row, row.size - k)[row.size - k]
-                    cand = np.flatnonzero(
-                        row >= max(cut, np.finfo(float).tiny)
-                    )
-                else:
-                    cand = np.flatnonzero(row > 0.0)
-                if cand.size == 0:
-                    continue
-                order = np.lexsort((u[cand], -row[cand]))[:k]
-                sel = cand[order]
+                sel, score = _topk_slots(parts, u.size, k, dead)
                 frames.append(
                     pd.DataFrame(
                         {
                             "query_id": np.full(sel.size, q, dtype=np.int32),
                             "doc_ord": u[sel],
-                            "score": row[sel],
+                            "score": score,
                         }
                     )
                 )
@@ -1604,84 +1576,6 @@ class IndexBuilder:
                 .mapInPandas(reduce_topk, schema=topk_schema)
                 .toPandas()
             )
-
-    def _pruned_blocks(self, blocks: DataFrame, qt: DataFrame, k: int) -> DataFrame:
-        """Block-max pruning (module docstring invariant).
-
-        Pass 1: decode only the best block per (query, term), exact-score
-        those postings → per-query θ = k-th best partial score. Pass 2:
-        keep blocks with m(b) + Σ_{t'≠t} M_{t'} ≥ θ, where m(b) =
-        idf(df)·max-over-front tfw — the exact block max under CURRENT
-        stats, derived from the stats-independent (tf, dl) Pareto front.
-        """
-        from antidb_spark.functions.bm25 import idf, tf_weight
-
-        dfs = self.catalog.read("terms")
-        stats = self.catalog.read("stats")
-        meta = (
-            blocks.select("term", "block_id", "tfs_front", "dls_front")
-            .join(F.broadcast(qt), "term")
-            .join(
-                F.broadcast(dfs.join(qt.select("term").distinct(), "term")),
-                "term",
-            )
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "max_score",
-                idf(F.col("df"), F.col("n_docs"))
-                * F.array_max(
-                    F.zip_with(
-                        F.col("tfs_front"),
-                        F.col("dls_front"),
-                        lambda tf, dl: tf_weight(tf, dl, F.col("avgdl")),
-                    )
-                ),
-            )
-            .select("query_id", "term", "block_id", "max_score")
-        )
-        per_term_max = meta.groupBy("query_id", "term").agg(
-            F.max("max_score").alias("m_t")
-        )
-        per_query_sum = per_term_max.groupBy("query_id").agg(
-            F.sum("m_t").alias("m_sum")
-        )
-        # pass 1: best block per (query, term)
-        w_best = Window.partitionBy("query_id", "term").orderBy(
-            F.desc("max_score"), F.asc("block_id")
-        )
-        best_ids = (
-            meta.withColumn("_rn", F.row_number().over(w_best))
-            .filter(F.col("_rn") == 1)
-            .select("block_id")
-            .distinct()
-        )
-        pass1_blocks = blocks.join(F.broadcast(best_ids), "block_id")
-        pass1 = self._scored(self._decoded_postings(pass1_blocks), qt)
-        w_theta = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_ord")
-        )
-        theta = (
-            pass1.withColumn("_rn", F.row_number().over(w_theta))
-            .filter(F.col("_rn") == k)
-            .select("query_id", F.col("score").alias("theta"))
-        )
-        survivors = (
-            meta.join(F.broadcast(per_term_max), ["query_id", "term"])
-            .join(F.broadcast(per_query_sum), "query_id")
-            .join(F.broadcast(theta), "query_id", "left")
-            .filter(
-                F.col("theta").isNull()
-                | (F.col("max_score") + F.col("m_sum") - F.col("m_t")
-                   >= F.col("theta"))
-            )
-            .select("block_id")
-            .distinct()
-        )
-        return blocks.join(F.broadcast(survivors), "block_id")
-
-    def query(self, query: str, k: int = 10, prune: bool = True) -> DataFrame:
-        """Single-query top-k: (*id_cols, score)."""
-        return self.query_batch([query], k=k, prune=prune).drop("query_id")
 
     # Above this many candidate blocks the interactive path would decode
     # too much on one core — fall back to the distributed batch path.
@@ -1803,63 +1697,41 @@ class IndexBuilder:
         self, plan: dict, k: int, dense: bool
     ) -> list[tuple[np.ndarray, np.ndarray]]:
         """Driver-side top-k (doc_ords, scores) of every query of
-        ``plan`` — the warm scoring kernel of ``_warm_top_ords`` and of
-        ``query_batch``'s driver tier. The postings of the union of the
-        plan's terms come from the LRU cache in ONE call (one pruned
-        pyarrow read for the misses). ``dense`` scores into one float
-        per corpus doc (O(n_docs) per query, no sort: one query on a
-        corpus that fits); otherwise a query costs a sort of its own
-        postings (np.unique), which is what a batch of many queries
-        over a big corpus needs."""
-        # per-term concatenation in sorted-term order is the
-        # term-ascending order of the Spark tier's reducer, so the float
-        # summation order — and therefore every score bit — is the same
-        # on both tiers (bincount adds each bin's weights in input order)
+        ``plan`` through ``_topk_slots`` — the scoring of
+        ``_warm_top_ords`` and of ``query_batch``'s driver tier. The
+        postings of the union of the plan's terms come from the LRU
+        cache in ONE call (one pruned pyarrow read for the misses).
+        ``dense`` scores into one float per corpus doc (O(n_docs) per
+        query, no sort: one query on a corpus that fits); otherwise a
+        query costs a sort of its own postings (np.unique), which is
+        what a batch of many queries over a big corpus needs."""
         post = self._warm_postings(plan["terms"], plan["avgdl"])
         ts = self._tomb_state()
+        n_docs = plan["n_docs"]
+        dead = None if ts is None else ts[1][ts[1] < n_docs]
         out = []
         for q_terms in plan["per_query"]:
+            # sorted-term order: the term order of the Spark tier's
+            # reducer, so both tiers sum every score in the same order
             terms = [t for t in q_terms if t in post]
             if not terms:
                 out.append((np.empty(0, dtype=np.int64), np.empty(0)))
                 continue
-            ords = np.concatenate([post[t][0] for t in terms])
-            contrib = np.repeat(
-                np.array([plan["idf"][t] for t in terms], dtype=np.float64),
-                [post[t][0].size for t in terms],
-            ) * np.concatenate([post[t][1] for t in terms])
-            # tombstoned docs: zero/drop BEFORE the top-k cut (zeroing
-            # keeps the "score 0.0 = no match" invariant — alive hits
-            # are > 0)
+            ords = [post[t][0] for t in terms]
+            contribs = [plan["idf"][t] * post[t][1] for t in terms]
             if dense:
-                # doc ordinals are DENSE → O(postings) bincount scoring,
-                # no sort; a hit never scores exactly 0.0 (idf, tfw > 0),
-                # so 0 = no match
-                scores = np.bincount(
-                    ords, weights=contrib, minlength=plan["n_docs"]
-                )
-                if ts is not None:
-                    dead = ts[1]
-                    scores[dead[dead < scores.size]] = 0.0
-                cut = (
-                    np.partition(scores, scores.size - k)[scores.size - k]
-                    if scores.size > k else 0.0
-                )
-                cand = np.flatnonzero(
-                    scores >= max(cut, np.finfo(float).tiny)
-                )
-                top = cand[np.lexsort((cand, -scores[cand]))[:k]]
-                top_scores = scores[top]
-            else:
-                uniq, inv = np.unique(ords, return_inverse=True)
-                scores = np.bincount(inv, weights=contrib, minlength=uniq.size)
-                if ts is not None:
-                    alive = _alive_bits(ts[0], uniq)
-                    uniq, scores = uniq[alive], scores[alive]
-                sel = np.lexsort((uniq, -scores))[:k]
-                top = uniq[sel]
-                top_scores = scores[sel]
-            out.append((top.astype(np.int64), top_scores))
+                # doc ordinals are DENSE: slot = doc_ord, no sort
+                out.append(_topk_slots(zip(ords, contribs), n_docs, k, dead))
+                continue
+            # slot = rank of the doc among the query's own postings
+            uniq, inv = np.unique(np.concatenate(ords), return_inverse=True)
+            slots = np.split(inv, np.cumsum([o.size for o in ords])[:-1])
+            top, scores = _topk_slots(
+                zip(slots, contribs), uniq.size, k,
+                None if ts is None
+                else np.flatnonzero(~_alive_bits(ts[0], uniq)),
+            )
+            out.append((uniq[top], scores))
         return out
 
     def query_warm(self, query: str, k: int = 10) -> pd.DataFrame:
@@ -1991,14 +1863,15 @@ class IndexBuilder:
         import operator as _op
         from functools import reduce
 
-        blocks = self.catalog.read_pruned("blocks", "term", q_terms).filter(
-            F.col("term").isin(list(q_terms))
-        )
+        # cached Spark schemas: defining the scores infers nothing
+        blocks = self.catalog.read_pruned(
+            "blocks", "term", q_terms, schema=self._spark_schema("blocks")
+        ).filter(F.col("term").isin(list(q_terms)))
         post = self._decoded_postings(blocks)
-        dfs = self.catalog.read("terms").filter(
-            F.col("term").isin(list(q_terms))
-        )
-        stats = self.catalog.read("stats")
+        dfs = self.catalog.read(
+            "terms", schema=self._spark_schema("terms")
+        ).filter(F.col("term").isin(list(q_terms)))
+        stats = self.catalog.read("stats", schema=self._spark_schema("stats"))
         per_term = (
             post.join(F.broadcast(dfs), "term")
             .crossJoin(F.broadcast(stats))
@@ -2059,9 +1932,9 @@ class IndexBuilder:
                 raise ValueError(
                     f"after must be (score, {', '.join(self.id_cols)})"
                 )
-            docmap_ids = self.catalog.read("docmap").select(
-                "doc_ord", *self.id_cols
-            )
+            docmap_ids = self.catalog.read(
+                "docmap", schema=self._docmap_schema()
+            ).select("doc_ord", *self.id_cols)
             lex = F.lit(False)
             prefix_eq = F.lit(True)
             for c, v in zip(self.id_cols, ids_after):
@@ -2077,7 +1950,7 @@ class IndexBuilder:
                 F.col("score") < F.lit(float(s_after))
             ).unionByName(tied)
         top = top.orderBy(F.desc("score"), F.asc("doc_ord")).limit(k)
-        docmap = self.catalog.read("docmap")
+        docmap = self.catalog.read("docmap", schema=self._docmap_schema())
         return (
             docmap.select("doc_ord", *self.id_cols)
             .join(F.broadcast(top), "doc_ord")
@@ -2090,9 +1963,9 @@ class IndexBuilder:
         """Distinct doc_ords containing ANY of ``ex_terms`` (the NOT
         side), from manifest-pruned blocks — an anti-join input sized by
         the excluded terms' postings, never the corpus."""
-        blocks = self.catalog.read_pruned("blocks", "term", ex_terms).filter(
-            F.col("term").isin(list(ex_terms))
-        )
+        blocks = self.catalog.read_pruned(
+            "blocks", "term", ex_terms, schema=self._spark_schema("blocks")
+        ).filter(F.col("term").isin(list(ex_terms)))
         return self._decoded_postings(blocks).select("doc_ord").distinct()
 
     def query_pinned(
@@ -2765,22 +2638,10 @@ class IndexBuilder:
         the same contract as the prefix/wildcard warm tiers).
         Stopword-grade expansions exceeding the warm block budget fall
         back to the distributed batch path on the same expansion."""
-        cols = [*self.id_cols, "score"]
         exp = self.expand_fuzzy(term, max_edits, max_terms)
         if not exp:
-            return pd.DataFrame(columns=cols)
-        r = self._warm_top_ords(exp, k)
-        if r is None:
-            out = self.query_batch([exp], k=k).toPandas()
-            return out.drop(columns=["query_id"]).reset_index(drop=True)
-        top, top_scores = r
-        if top.size == 0:
-            return pd.DataFrame(columns=cols)
-        out = self._resolve_ords(
-            [int(o) for o in top]
-        )[list(self.id_cols)].copy()
-        out["score"] = top_scores
-        return out
+            return pd.DataFrame(columns=[*self.id_cols, "score"])
+        return self._warm_frame(exp, k)
 
     def expand_regex(
         self, pattern: str, max_terms: int | None = None
@@ -3048,22 +2909,10 @@ class IndexBuilder:
         through the shared warm core); falls back to the distributed
         batch path above the warm block budget — value-identical
         either way."""
-        cols = [*self.id_cols, "score"]
         exp = self.expand_wildcard(pattern, max_terms)
         if not exp:
-            return pd.DataFrame(columns=cols)
-        r = self._warm_top_ords(exp, k)
-        if r is None:
-            out = self.query_batch([exp], k=k).toPandas()
-            return out.drop(columns=["query_id"]).reset_index(drop=True)
-        top, top_scores = r
-        if top.size == 0:
-            return pd.DataFrame(columns=cols)
-        out = self._resolve_ords(
-            [int(o) for o in top]
-        )[list(self.id_cols)].copy()
-        out["score"] = top_scores
-        return out
+            return pd.DataFrame(columns=[*self.id_cols, "score"])
+        return self._warm_frame(exp, k)
 
     def query_boosted(
         self, weights: dict[str, float], k: int = 10

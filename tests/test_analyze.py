@@ -34,6 +34,18 @@ def test_three_way_tokenizer_parity(spark):
         assert got == expected, s
 
 
+def test_tokens_drops_every_empty_piece(spark):
+    """Splitting leaves empty pieces at a leading or trailing separator
+    and for a separator-only string; tokens() removes all of them, as
+    py_tokens does, and a null text stays null."""
+    texts = ["", " ", "--!!", "  lead", "trail.. ", ",,both,,", "a  -- b",
+             "x,,,y;;;z", None]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select(tokens("text").alias("toks")).collect()
+    got = [r["toks"] for r in rows]
+    assert got == [py_tokens(t) for t in texts[:-1]] + [None]
+
+
 def test_distinct_tokens_keeps_first_occurrence_order(spark):
     from antidb_spark.functions.analyze import distinct_tokens
 

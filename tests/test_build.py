@@ -83,9 +83,10 @@ def test_blocks_roundtrip_postings(spark, corpus, built):
     assert bad.count() == 0
 
 
-def test_indexed_equals_dataframe_path(spark, corpus, built):
+def test_indexed_equals_dataframe_path(spark, corpus, built, pin_prune):
     b, _ = built
-    idx_out = b.query_batch(QUERIES, k=10, prune=False).toPandas()
+    pin_prune(False)
+    idx_out = b.query_batch(QUERIES, k=10).toPandas()
     df_out = bm25_topk_batch(corpus, QUERIES, k=10).toPandas()
     assert len(idx_out) == len(df_out)
     for (_, ri), (_, rd) in zip(idx_out.iterrows(), df_out.iterrows()):
@@ -95,54 +96,64 @@ def test_indexed_equals_dataframe_path(spark, corpus, built):
         assert abs(ri["score"] - rd["score"]) < 1e-9
 
 
-def test_pruning_identical_topk(spark, built, pin_batch_tier):
+def test_pruning_identical_topk(spark, built, pin_batch_tier, pin_prune):
     pin_batch_tier("spark")  # pruning is a Spark-tier plan
     b, _ = built
-    pruned = b.query_batch(QUERIES, k=10, prune=True).toPandas()
-    full = b.query_batch(QUERIES, k=10, prune=False).toPandas()
+    pin_prune(True)
+    pruned = b.query_batch(QUERIES, k=10).toPandas()
+    pin_prune(False)
+    full = b.query_batch(QUERIES, k=10).toPandas()
     assert pruned[["query_id", "conv_id", "turn_idx"]].values.tolist() == \
         full[["query_id", "conv_id", "turn_idx"]].values.tolist()
     assert (abs(pruned["score"] - full["score"]) < 1e-9).all()
 
 
-def test_pruning_skips_blocks(spark, corpus, tmp_path, pin_batch_tier):
+def test_pruning_skips_blocks(spark, corpus, tmp_path, monkeypatch,
+                              pin_batch_tier, pin_prune):
     """The prune pass must actually skip blocks — otherwise M5 is a
     no-op. Deterministic setup: single-partition build (block layout is
     otherwise randomized by repartitionByRange sampling), single-term
-    query, k=1 → θ = the best block's best exact score, so every block
-    whose max_score falls below θ is provably skippable."""
+    query, k=1 → θ = the best block's exact max score, from metadata
+    alone, so every block whose max score falls below θ is provably
+    skippable: the Spark tier scores fewer of the term's blocks."""
     from pyspark.sql import functions as F
-
-    from antidb_spark.operators.topk import query_terms_df
 
     b = IndexBuilder(spark, str(tmp_path / "prune_idx"))
     b.build(corpus, n_partitions=1)
-    qt = query_terms_df(spark, ["the"])
-    blocks = b.catalog.read("blocks").filter(F.col("term") == "the")
-    total = blocks.count()
+    total = b.catalog.read("blocks").filter(F.col("term") == "the").count()
     assert total >= 3  # the stopword spans several blocks by design
-    survivors = b._pruned_blocks(blocks, qt, k=1).count()
-    assert survivors < total
-    # and pruning still returns the identical answer
+    scored = []  # blocks reaching the scoring stage, per batch
+    real = IndexBuilder._bucketed_contribs
+
+    def spy(self, blocks, plan, n_part):
+        scored.append(blocks.count())
+        return real(self, blocks, plan, n_part)
+
+    monkeypatch.setattr(IndexBuilder, "_bucketed_contribs", spy)
     pin_batch_tier("spark")
-    a = b.query_batch(["the"], k=1, prune=True).toPandas()
-    c = b.query_batch(["the"], k=1, prune=False).toPandas()
+    pin_prune(True)
+    a = b.query_batch(["the"], k=1).toPandas()
+    pin_prune(False)
+    c = b.query_batch(["the"], k=1).toPandas()
+    assert scored[0] < total == scored[1]
+    # and pruning still returns the identical answer
     assert a.values.tolist() == c.values.tolist()
 
 
-def test_reducer_slabs_identical(spark, built, pin_batch_tier):
+def test_reducer_slabs_identical(spark, built, pin_batch_tier, pin_prune):
     """Shrinking the reducer geometry (forcing many tiny doc-range
     buckets, hence many blob rows and partition-boundary doc splits)
     must not change any answer — the partitioning is an implementation
     detail, not semantics."""
     pin_batch_tier("spark")  # the reducers are the Spark tier's
+    pin_prune(False)
     b, _ = built
     queries = QUERIES * 3  # 15 queries
-    base = b.query_batch(queries, k=5, prune=False).toPandas()
+    base = b.query_batch(queries, k=5).toPandas()
     old = b.TARGET_DOCS_PER_REDUCER
     try:
         b.TARGET_DOCS_PER_REDUCER = 7  # dozens of buckets on the fixture
-        small = b.query_batch(queries, k=5, prune=False).toPandas()
+        small = b.query_batch(queries, k=5).toPandas()
     finally:
         b.TARGET_DOCS_PER_REDUCER = old
     assert small[["query_id", "conv_id", "turn_idx"]].values.tolist() == \
@@ -170,15 +181,17 @@ def test_query_batch_bit_deterministic(spark, built, pin_batch_tier, tier):
 
 
 @pytest.mark.parametrize("tier", ["driver", "spark"])
-def test_query_warm_matches_batch(spark, built, pin_batch_tier, tier):
+def test_query_warm_matches_batch(spark, built, pin_batch_tier, pin_prune,
+                                  tier):
     """The driver-side interactive path (no Spark job) must be rank- and
     value-identical to both batch tiers, across the warm regime, the
     fallback regime, and misses."""
     b, _ = built
     pin_batch_tier(tier)
+    pin_prune(False)
     for q in ["kemuba0 data", "the of to and in", "bacoca0"]:
         warm = b.query_warm(q, k=5)
-        batch = b.query_batch([q], k=5, prune=False).toPandas()
+        batch = b.query_batch([q], k=5).toPandas()
         assert warm[["conv_id", "turn_idx"]].values.tolist() == \
             batch[["conv_id", "turn_idx"]].values.tolist(), q
         assert (abs(warm["score"] - batch["score"]) < 1e-9).all(), q

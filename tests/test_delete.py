@@ -88,7 +88,7 @@ def test_pinned_excludes_deleted_scores_unchanged(built):
     )
 
 
-def test_batch_and_warm_match_after_delete(built, pin_batch_tier):
+def test_batch_and_warm_match_after_delete(built, pin_batch_tier, pin_prune):
     b, _, _, deleted = built
     pinned = b.query_pinned(QUERY, k=10).toPandas()
     batch = b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
@@ -115,13 +115,13 @@ def test_batch_and_warm_match_after_delete(built, pin_batch_tier):
     assert len(norm(br)) > 0
     warm = b.query_warm(QUERY, k=10)
     assert warm.values.tolist() == batch.values.tolist()
-    # pruning stays LOSSLESS with tombstones (it disarms): explicit
-    # prune request returns the identical result (pruning is a
+    # pruning stays LOSSLESS with tombstones (it disarms): a batch
+    # pinned to prune returns the identical result (pruning is a
     # Spark-tier plan)
     pin_batch_tier("spark")
+    pin_prune(True)
     pruned = (
-        b.query_batch([QUERY], k=10, prune=True)
-        .toPandas().drop(columns=["query_id"])
+        b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
     )
     assert pruned.values.tolist() == batch.values.tolist()
 
@@ -183,6 +183,27 @@ def test_eq_terms_defines_without_a_job(built):
     assert want and df.collect() == want
 
 
+def test_query_pinned_defines_without_a_job(built):
+    """On a warm builder over a tombstoned index, query_pinned reads
+    blocks, terms, stats, docmap and tombstones with the builder's
+    cached Spark schemas: defining a query that also excludes a term
+    and pages after a row runs no schema-inference job, and it collects
+    the rows of the first, schema-inferring call."""
+    b = built[0]
+    last = b.query_pinned(QUERY, k=3).collect()[-1]
+    args = dict(k=5, exclude=_V[200],
+                after=(last.score, last.conv_id, last.turn_idx))
+    want = b.query_pinned(QUERY, **args).collect()
+    sc = b.spark.sparkContext
+    sc.setJobGroup("pinned_define", "define query_pinned")
+    try:
+        df = b.query_pinned(QUERY, **args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("pinned_define") == []
+    assert want and df.collect() == want
+
+
 def test_positional_paths_exclude_deleted(built):
     b, corpus, _, deleted = built
     # pick a phrase present in at least one deleted doc
@@ -235,7 +256,8 @@ def test_delete_validation_and_idempotence(built):
     )
 
 
-def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier):
+def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier,
+                                    pin_prune):
     corpus = synth_transcripts(spark, n_convs=10, seed=5).cache()
     corpus.count()
     b = IndexBuilder(spark, str(tmp_path / "purge_idx"))
@@ -262,8 +284,10 @@ def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier):
     assert b._corpus_stats() == ref._corpus_stats()
     # pruning re-armed: prune on/off identical again (and θ is exact)
     pin_batch_tier("spark")
-    p_on = b.query_batch([QUERY], k=10, prune=True).toPandas()
-    p_off = b.query_batch([QUERY], k=10, prune=False).toPandas()
+    pin_prune(True)
+    p_on = b.query_batch([QUERY], k=10).toPandas()
+    pin_prune(False)
+    p_off = b.query_batch([QUERY], k=10).toPandas()
     assert p_on.values.tolist() == p_off.values.tolist()
     assert b.purge_deleted() == {"mode": "noop"}
     corpus.unpersist()

@@ -135,7 +135,7 @@ def test_upsert_replaces_and_inserts(upserted):
 
 @pytest.mark.parametrize("scale", ["dense", "sparse"])
 def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale,
-                                              pin_batch_tier):
+                                              pin_batch_tier, pin_prune):
     b, *_, sent, _, _, _ = upserted
     if scale == "sparse":
         # the large-corpus branches: sparse warm scorer (with the
@@ -153,10 +153,11 @@ def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale,
     # pruning stays lossless (disarmed while tombstones exist); pruning
     # is a Spark-tier plan
     pin_batch_tier("spark")
+    pin_prune(True)
     pruned = (
-        b.query_batch([QUERY], k=10, prune=True)
-        .toPandas().drop(columns=["query_id"])
+        b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
     )
+    pin_prune(False)
     batch = b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
     assert pruned.values.tolist() == batch.values.tolist()
 
