@@ -173,7 +173,7 @@ def _q_interval_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- physical-index path (M2+M5): build in a temp dir, query pinned ----
+# --- physical-index path (M2): build in a temp dir, query pinned ----
 
 
 def _q_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2348,22 +2348,66 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 12
-    entries quality … rng_lookup, which sat longest past the window
-    (the last five of the round-3-attested block, then the 7
-    round-4-attested entries whose code paths changed in round 5), then
-    the previous order unchanged: the 43 entries of the tail block
-    (term_counts … ngram_jaccard), the three entries with no driver row
-    in any round (packed_examples, frame_sample, media_features), the
-    three attested longest ago (media_decode, media_meta,
-    embedding_dups), the 12 entries new in round 5 (doc_chunks …
-    bloom_check), the 29 with no driver row in rounds 1-4 (repetition …
-    time_travel) and the first three of the round-3-attested block
-    (minhash_dups, simhash_dups, lang_id). The window now ends after
-    phrase_search; the next rotation should move sliding_counts …
-    lang_id, which the last two windows missed, to the front."""
+    round, least-recently-driver-attested first. Current order: the 43
+    entries sliding_counts … lang_id, which the last two windows missed
+    (11 of the 12 entries new in round 5, the 29 with no driver row in
+    rounds 1-4, and the three last attested in round 3), then the
+    previous order unchanged: quality … rng_lookup (12) and the tail
+    block term_counts … ngram_jaccard (43), which made up the last
+    window, then the entries with no driver row in any round
+    (packed_examples, frame_sample, media_features), the three attested
+    longest ago (media_decode, media_meta, embedding_dups) and
+    doc_chunks. The window now ends after upsert_eq; the next rotation
+    should move phrase_adhoc … ngram_jaccard and packed_examples …
+    doc_chunks (12 entries, last in a window two rotations ago) to the
+    front."""
     return {
-        # --- attested longest ago of those past the window last round
+        # --- missed by the last two driver windows (round 5 new,
+        # never attested in rounds 1-4, last attested round 3)
+        "sliding_counts": _q_sliding_counts,
+        "term_vectors": _q_term_vectors,
+        "stream_sessions": _q_stream_sessions,
+        "ann_recall": _q_ann_recall,
+        "hll_vocab": _q_hll_vocab,
+        "token_stats": _q_token_stats,
+        "asof_join": _q_asof_join,
+        "range_join": _q_range_join,
+        "hll_card": _q_hll_card,
+        "cms_counts": _q_cms_counts,
+        "bloom_check": _q_bloom_check,
+        "repetition": _q_repetition,
+        "pii_redact": _q_pii_redact,
+        "decontam": _q_decontam,
+        "dataset_split": _q_dataset_split,
+        "packed_sequences": _q_packed_sequences,
+        "length_quantiles": _q_length_quantiles,
+        "epoch_mix": _q_epoch_mix,
+        "shuffle_order": _q_shuffle_order,
+        "stratified_sample": _q_stratified_sample,
+        "dedup_resolve": _q_dedup_resolve,
+        "keywords": _q_keywords,
+        "score_explain": _q_score_explain,
+        "percolate": _q_percolate,
+        "facet_hist": _q_facet_hist,
+        "facet_card": _q_facet_card,
+        "group_must": _q_group_must,
+        "sig_terms": _q_sig_terms,
+        "complete_prefix": _q_complete,
+        "group_hits": _q_group_hits,
+        "rescored_topk": _q_rescored_topk,
+        "kmeans_clusters": _q_kmeans,
+        "temperature_mix": _q_temperature_mix,
+        "cluster_mix": _q_cluster_mix,
+        "dup_groups": _q_dup_groups,
+        "curated": _q_curated,
+        "pq_topk": _q_pq_topk,
+        "pq_refined": _q_pq_refined,
+        "ivfpq_topk": _q_ivfpq_topk,
+        "time_travel": _q_time_travel,
+        "minhash_dups": _q_minhash_dups,
+        "simhash_dups": _q_simhash_dups,
+        "lang_id": _q_lang_id,
+        # --- in the driver window last round
         "quality": _q_quality,
         "clone_candidates": _q_clone_candidates,
         "ann_cosine_topk": _q_ann_cosine_topk,
@@ -2371,12 +2415,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_topk": _q_ann_ivf_topk,
         "fuzzy_topk": _q_fuzzy_topk,
         "upsert_eq": _q_upsert_eq,
+        # ---- driver window (50) ends here ----
         "upsert_topk": _q_upsert_topk,
         "keyed_eq_persisted": _q_keyed_eq_persisted,
         "keyed_rng_persisted": _q_keyed_rng_persisted,
         "eq_lookup": _q_eq_lookup,
         "rng_lookup": _q_rng_lookup,
-        # --- the tail block, in the driver window last round
         "term_counts": _q_term_counts,
         "postings_tf": _q_postings,
         "term_df": _q_term_df,
@@ -2415,7 +2459,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fallback_join": _q_fallback_join,
         "interval_days": _q_interval_days,
         "phrase_search": _q_phrase_search,
-        # ---- driver window (50) ends here ----
         "phrase_adhoc": _q_phrase_adhoc,
         "phrase_prefix": _q_phrase_prefix,
         "fingerprints": _q_fingerprints,
@@ -2431,51 +2474,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_dups": _q_embedding_dups,
         # --- new in round 5
         "doc_chunks": _q_doc_chunks,
-        "sliding_counts": _q_sliding_counts,
-        "term_vectors": _q_term_vectors,
-        "stream_sessions": _q_stream_sessions,
-        "ann_recall": _q_ann_recall,
-        "hll_vocab": _q_hll_vocab,
-        "token_stats": _q_token_stats,
-        "asof_join": _q_asof_join,
-        "range_join": _q_range_join,
-        "hll_card": _q_hll_card,
-        "cms_counts": _q_cms_counts,
-        "bloom_check": _q_bloom_check,
-        # --- never driver-attested (rounds 1-4) — must be in the window
-        "repetition": _q_repetition,
-        "pii_redact": _q_pii_redact,
-        "decontam": _q_decontam,
-        "dataset_split": _q_dataset_split,
-        "packed_sequences": _q_packed_sequences,
-        "length_quantiles": _q_length_quantiles,
-        "epoch_mix": _q_epoch_mix,
-        "shuffle_order": _q_shuffle_order,
-        "stratified_sample": _q_stratified_sample,
-        "dedup_resolve": _q_dedup_resolve,
-        "keywords": _q_keywords,
-        "score_explain": _q_score_explain,
-        "percolate": _q_percolate,
-        "facet_hist": _q_facet_hist,
-        "facet_card": _q_facet_card,
-        "group_must": _q_group_must,
-        "sig_terms": _q_sig_terms,
-        "complete_prefix": _q_complete,
-        "group_hits": _q_group_hits,
-        "rescored_topk": _q_rescored_topk,
-        "kmeans_clusters": _q_kmeans,
-        "temperature_mix": _q_temperature_mix,
-        "cluster_mix": _q_cluster_mix,
-        "dup_groups": _q_dup_groups,
-        "curated": _q_curated,
-        "pq_topk": _q_pq_topk,
-        "pq_refined": _q_pq_refined,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "time_travel": _q_time_travel,
-        # --- last attested round 3
-        "minhash_dups": _q_minhash_dups,
-        "simhash_dups": _q_simhash_dups,
-        "lang_id": _q_lang_id,
     }
 
 

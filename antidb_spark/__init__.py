@@ -9,10 +9,11 @@ distributed Spark engine:
   ``(conv_id, turn_idx, role, text, tool, ts)`` instead of raw text lines
   (row identity = key columns, never byte offsets);
 - index: a sorted, range-partitioned postings table ``(term, doc, tf)``
-  plus delta+varint-packed block tables with block-max metadata, instead
-  of the reference's pickled B+tree ZipFile (``idx.py:160-261``);
+  plus delta+varint-packed block tables, instead of the reference's
+  pickled B+tree ZipFile (``idx.py:160-261``);
 - queries: antidb-parity ``eq``/``rng`` lookups (``prs.py:86-131``) and
-  top-k BM25 with block-max pruning, all as Catalyst-planned DataFrame ops.
+  top-k BM25 over manifest-pruned block scans, all as Catalyst-planned
+  DataFrame ops.
 
 No code is ported from the reference; citations in docstrings point at the
 behavior being matched, not code being copied.

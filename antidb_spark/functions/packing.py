@@ -2,9 +2,8 @@
 
 The reference compresses index leaves as zstd-pickled columnar pairs
 (idx.py:160-173); the north rule upgrades this to delta-encoded,
-varint-compressed docID gaps inside binary cells, with per-block
-max-score metadata for block-max WAND. Parquet's own zstd then compresses
-the binary columns again at the file level.
+varint-compressed docID gaps inside binary cells. Parquet's own zstd
+then compresses the binary columns again at the file level.
 
 Both encode and decode are vectorized: ≤10 passes over the array (one
 per possible varint byte), no per-value Python loop. The block packers

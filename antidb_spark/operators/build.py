@@ -1,4 +1,4 @@
-"""Physical index build + indexed query path (SURVEY M2 + M5).
+"""Physical index build + indexed query path (SURVEY M2).
 
 Distributed analog of the reference's ``Idx.idx()`` (idx.py:85-92): one
 resumable build job producing four Iceberg-style tables —
@@ -8,15 +8,13 @@ resumable build job producing four Iceberg-style tables —
   final rank tiebreak can sort by ordinal alone.
 - ``terms``   (term, df): exact document frequencies.
 - ``stats``   (n_docs, avgdl): single-row corpus stats.
-- ``blocks``  (term, block_id, n_docs, min_ord, max_ord, tfs_front,
-  dls_front, docs_packed, tfs_packed, dls_packed): posting lists cut
-  into ~128-doc blocks, docID gaps delta+varint-packed into binary
-  cells (the reference's zstd-pickled columnar leaves, idx.py:160-173,
-  upgraded per the north rule). Pruning metadata is the block's
-  STATS-INDEPENDENT (tf, dl) Pareto front; the exact BM25 block max is
-  derived at query time from current df/avgdl/N (tfw is monotone ↑tf
-  ↓dl, so the max is always on the front), which keeps committed
-  blocks valid under incremental appends.
+- ``blocks``  (term, block_id, n_docs, min_ord, max_ord, docs_packed,
+  tfs_packed, dls_packed): posting lists cut into ~128-doc blocks,
+  docID gaps delta+varint-packed into binary cells (the reference's
+  zstd-pickled columnar leaves, idx.py:160-173, upgraded per the north
+  rule). Blocks hold no score: BM25 is computed at query time from
+  current df/avgdl/N, which keeps committed blocks valid under
+  incremental appends.
 
 Scale design (10^12 turns, 1000 executors):
 
@@ -38,21 +36,11 @@ Scale design (10^12 turns, 1000 executors):
   a restarted build skips committed stages (idx.py:85-92 analog, at
   stage granularity with per-partition durability inside each stage from
   Spark task retry + atomic snapshot commit).
-- **Query-time pruning**: file-level min/max skipping on ``term``
-  replaces the reference's B+tree descent (prs.py:57-77); block-max
-  pruning (M5) then skips blocks that provably cannot contribute a
-  top-k document.
-
-Block-max pruning invariant (why skipped blocks cannot hide a winner):
-let m(b) = idf · max-over-front tfw — the EXACT max contribution in b
-under current stats — M_t = max m over query term t's blocks, and θ =
-a LOWER bound on the true k-th best score (from block metadata alone
-— see _meta_thresholds). A block b of term t is skipped only when
-``m(b) + Σ_{t'≠t} M_{t'} < θ``. Any doc d with a posting in b has true
-score ≤ m(b) + Σ_{t'≠t} M_{t'} < θ, so d cannot be in the top k —
-hence every true top-k doc has ALL its blocks decoded and its exact
-score computed; docs partially scored because one of their blocks was
-skipped rank strictly below θ and cannot displace a winner.
+- **Query-time file skipping**: file-level min/max skipping on ``term``
+  replaces the reference's B+tree descent (prs.py:57-77); every block
+  of the surviving files' query terms is then decoded and scored
+  exactly, the decode-everything columnar scan of the ICDE 2025
+  columnar inverted index.
 """
 
 from __future__ import annotations
@@ -150,8 +138,6 @@ _BLOCKS_OUT = T.StructType(
         T.StructField("n_docs", T.IntegerType(), False),
         T.StructField("min_ord", T.LongType(), False),
         T.StructField("max_ord", T.LongType(), False),
-        T.StructField("tfs_front", T.ArrayType(T.LongType()), False),
-        T.StructField("dls_front", T.ArrayType(T.LongType()), False),
         T.StructField("docs_packed", T.BinaryType(), False),
         T.StructField("tfs_packed", T.BinaryType(), False),
         T.StructField("dls_packed", T.BinaryType(), False),
@@ -234,34 +220,14 @@ def _cut_blocks(frame: dict, flush: bool) -> tuple[int, dict]:
         last = int(np.flatnonzero(new_term)[-1])
         n = last + (n - last) // BLOCK_SIZE * BLOCK_SIZE
     ords, tfs, dls = (frame[c][:n] for c in ("doc_ord", "tf", "dl"))
-    is_start = (np.arange(n) - _run_firsts(new_term[:n])) % BLOCK_SIZE == 0
-    starts = np.flatnonzero(is_start)
-    blk = np.cumsum(is_start) - 1
-    # (tf, dl) Pareto front: tfw is monotone ↑tf ↓dl for ANY avgdl, so
-    # the block's exact max contribution is always achieved at a front
-    # point — exact, stats-independent block-max metadata (front is
-    # tiny, typically ≤ 5 pts). Sorted by (block, -tf, dl), a posting is
-    # on its block's front iff its dl is below every earlier dl of the
-    # block: a running minimum per block, by a log-step scan.
-    order = np.lexsort((dls, -tfs, blk))
-    sdl, stf = dls[order], tfs[order]
-    slot = np.arange(n) - starts[blk]
-    run_min, step = sdl.copy(), 1
-    while step < BLOCK_SIZE:
-        run_min[step:] = np.where(slot[step:] >= step, np.minimum(
-            run_min[step:], run_min[:-step]), run_min[step:])
-        step *= 2
-    big = np.iinfo(np.int64).max
-    keep = sdl < np.where(slot == 0, big, np.r_[big, run_min[:-1]])
-    front_cuts = np.cumsum(np.bincount(blk[keep], minlength=starts.size))[:-1]
+    starts = np.flatnonzero(
+        (np.arange(n) - _run_firsts(new_term[:n])) % BLOCK_SIZE == 0)
     n_docs = np.diff(np.r_[starts, n])
     return n, {
         "term": term[starts],
         "n_docs": n_docs,
         "min_ord": ords[starts],
         "max_ord": ords[starts + n_docs - 1],
-        "tfs_front": np.split(stf[keep], front_cuts),
-        "dls_front": np.split(sdl[keep], front_cuts),
         "docs_packed": varint_encode_blocks(
             segment_deltas(ords, starts), starts),
         "tfs_packed": varint_encode_blocks(tfs, starts),
@@ -440,14 +406,13 @@ class IndexBuilder:
         # in _heads (see _at_head), except the Spark schemas, which are
         # keyed by the files' arrow schema (see _spark_schema) and so
         # outlive commits that keep it; per-term values in bounded LRUs:
-        # df (terms table), block fronts and pruned scan relations
-        # (blocks table), and decoded warm postings with their tf
+        # df (terms table), pruned scan relations (blocks table), and
+        # decoded warm postings with their tf
         # weights (blocks table + the avgdl those weights used) — the
         # reference likewise keeps decompressed leaves in-process.
         self._heads: dict[tuple[str, Any], tuple[str, Any]] = {}
         self._schemas: dict[str, tuple[pa.Schema, T.StructType]] = {}
         self._dfs = _SnapshotLRU()
-        self._fronts = _SnapshotLRU(lambda v: 0 if v is None else v[1].size)
         self._postings = _SnapshotLRU(lambda v: v[0].size)
         self._scans = _SnapshotLRU()
 
@@ -457,9 +422,6 @@ class IndexBuilder:
     # the WARM_MAX_BLOCKS gate (~640k postings), so the cache holds the
     # working set of hot terms without ever approaching corpus size.
     POSTINGS_CACHE_MAX = 8_000_000
-    # ~50M front points ≈ 1.2 GB of driver arrays at float64×3 — the
-    # ceiling for cached per-term block fronts
-    FRONT_CACHE_MAX_ELEMS = 50_000_000
 
     # -- build ------------------------------------------------------------
 
@@ -555,19 +517,18 @@ class IndexBuilder:
             with self.timer.phase("blocks"):
                 postings = self.catalog.read("postings")
                 docmap = self.catalog.read("docmap")
-                # blocks carry (max_tf, min_dl), not a precomputed
-                # score, so packing needs NO df/stats join — the BM25
-                # bound is derived at query time from current stats
-                # (see _meta_thresholds); this also keeps appended
-                # blocks valid after df/avgdl/N drift.
+                # blocks carry raw (doc, tf, dl) postings, not scores,
+                # so packing needs NO df/stats join — BM25 is computed
+                # at query time from current stats, which keeps
+                # appended blocks valid after df/avgdl/N drift.
                 enriched = postings.join(docmap, self.id_cols).select(
                     "term", "doc_ord", "tf", "dl"
                 )
                 # block_id layout: run_base(16 bits, <<48) | pid(16, <<32)
                 # | seq(32). Enforce the pid width HERE, where the layout
                 # is established — an unchecked >=2^16-partition build
-                # would overlap appended-run id space (pruning-only
-                # weakening, but the invariant belongs at the source).
+                # would overlap appended-run id space, so ids would stop
+                # being unique; the invariant belongs at the source.
                 assert n_part < (1 << 16), (
                     "block_id layout assumes < 2^16 pack partitions"
                 )
@@ -601,14 +562,6 @@ class IndexBuilder:
             "term", "n_docs", "docs_packed", "tfs_packed", "dls_packed"
         ).mapInPandas(_decode_blocks, schema=_POSTINGS_OUT)
 
-    # Below this many candidate blocks, θ-pruning saves less than its
-    # metadata read costs (decode-all of a few thousand 128-doc blocks
-    # is a sub-second map stage), so the Spark tier does not prune.
-    AUTO_PRUNE_MIN_BLOCKS = 5_000
-    # Above this many candidate blocks, per-block (term, max_score)
-    # metadata no longer belongs on the driver; the Spark tier then
-    # scores every candidate block, unpruned (the same exact answer).
-    META_MAX_BLOCKS = 2_000_000
     # reducer memory bounds, independent of data scale AND parallelism
     # level (the SAME algorithm must run at every level, or cross-level
     # comparisons measure the code path, not scaling):
@@ -653,40 +606,6 @@ class IndexBuilder:
             sum(e["rows"] for e in man["files"]),
         )
         return {t: d for t, d in got.items() if d is not None}
-
-    def _term_fronts(self, terms: Sequence[str]) -> dict[str, tuple]:
-        """{term: (lens, ftf, fdl)} — per-block Pareto-front arrays of
-        the term's blocks, concatenated (lens = front sizes per block),
-        from the per-term cache. The fronts are stats-INDEPENDENT, so
-        the cache stays valid within a snapshot regardless of df/avgdl
-        drift; the avgdl-dependent tfw is computed per batch. Bounded
-        by total front elements (a stopword's fronts at 10^11 docs are
-        ~10^9 points)."""
-
-        def load(missing: list[str]) -> dict:
-            meta = self.catalog.read_pruned_arrow(
-                "blocks", "term", missing,
-                columns=["term", "tfs_front", "dls_front"],
-            ).to_pandas()
-            out = {}
-            for t, g in meta.groupby("term"):
-                lens = g["tfs_front"].map(len).to_numpy(dtype=np.int64)
-                out[t] = (
-                    lens,
-                    np.concatenate(g["tfs_front"].to_numpy()).astype(
-                        np.float64
-                    ),
-                    np.concatenate(g["dls_front"].to_numpy()).astype(
-                        np.float64
-                    ),
-                )
-            return out
-
-        got = self._fronts.get(
-            self.catalog.manifest("blocks")["snapshot_id"], terms, load,
-            self.FRONT_CACHE_MAX_ELEMS,
-        )
-        return {t: v for t, v in got.items() if v is not None}
 
     def _at_head(self, table: str, load: Callable[[], Any]) -> Any:
         """``load()`` as of the head snapshot of ``table``, cached until
@@ -839,10 +758,7 @@ class IndexBuilder:
         n_docs) intentionally KEEP counting deleted docs until
         ``purge_deleted`` or the next full rebuild — the standard
         delete-visibility contract (deletes are instant, statistics
-        heal at merge), and what keeps the delete O(delta). Block-max
-        pruning disarms while tombstones exist (a threshold fed by
-        deleted docs' scores could prune blocks holding alive results);
-        purging re-arms it.
+        heal at merge), and what keeps the delete O(delta).
 
         ``docs``: a DataFrame carrying ``id_cols`` (extra columns
         ignored) or an iterable of id tuples. Unknown ids are ignored;
@@ -953,8 +869,8 @@ class IndexBuilder:
         """Physically remove tombstoned docs: rebuild the index from the
         committed postings minus the deleted docs' rows (O(total
         postings) — the merge/expunge step). Exact statistics are
-        restored (df/avgdl/n_docs over the survivors), block-max
-        pruning re-arms, and ordinals renumber densely. Committed
+        restored (df/avgdl/n_docs over the survivors) and ordinals
+        renumber densely. Committed
         positional and docmeta side layers SURVIVE the renumbering via
         ordinal remap (see ``_rebuild_from``) — no corpus re-scan;
         dead generations drop from the layers in the same pass."""
@@ -1107,7 +1023,7 @@ class IndexBuilder:
         index), out-of-band, never required for correctness (every
         query path is multi-run-exact); run it when the runs count
         grows. With tombstones present this IS ``purge_deleted``
-        (physical expunge + exact stats + pruning re-armed). Committed
+        (physical expunge + exact stats). Committed
         pos_blocks / docmeta layers SURVIVE via ordinal remap
         (``_rebuild_from``) — phrase and filtered service continue with
         no corpus re-scan."""
@@ -1160,8 +1076,8 @@ class IndexBuilder:
                 if t in dfs:
                     qmap.setdefault(t, []).append(qid)
         # per-term ceil(df/BLOCK_SIZE): candidate-block estimate for the
-        # prune cost gate (undercounts partition-boundary partial blocks
-        # — fine for a gate)
+        # query_warm gate and the Spark tier's reducer count (undercounts
+        # partition-boundary partial blocks — fine for both)
         n_blocks = {t: (d + BLOCK_SIZE - 1) // BLOCK_SIZE for t, d in dfs.items()}
         return {
             "per_query": per_query,
@@ -1183,74 +1099,6 @@ class IndexBuilder:
         from antidb_spark.functions.bm25 import B, K1
 
         return (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + (B * dl) / avgdl))
-
-    def _meta_thresholds(self, plan: dict, k: int) -> dict[str, float]:
-        """Metadata-only block-max pruning thresholds, driver-side.
-
-        Blocks store the stats-independent (tf, dl) PARETO FRONT of
-        their postings; with CURRENT corpus stats the block's exact max
-        contribution is ``m(b) = idf · max over front of tfw(tf, dl,
-        avgdl)`` (tfw is monotone ↑tf ↓dl, so the max over all postings
-        is achieved on the front) — exact even after incremental
-        appends changed df/avgdl/N since the block was packed.
-
-        θ_q lower bound WITHOUT decoding any block: each m(b) is
-        achieved by a REAL posting whose doc's total score ≥ m(b), and
-        a term's blocks partition its postings into distinct docs — so
-        the k-th largest m over a single term's blocks lower-bounds the
-        true k-th best score of any query containing the term; θ_q =
-        max over q's terms (None if every term has < k blocks). A block
-        b of term t is then skippable for q when m(b) + Σ_{t'≠t} M_{t'}
-        < θ_q (module-docstring invariant). The per-TERM keep threshold
-        (min over queries containing the term) is returned on the tfw
-        SCALE (thr/idf, one ulp down per rearrangement) so the scan
-        filter is a pure expression over the front arrays and the avgdl
-        literal — no joins.
-        """
-        fronts = self._term_fronts(plan["terms"])
-        avgdl = plan["avgdl"]
-        big_m: dict[str, float] = {}
-        kth: dict[str, float | None] = {}
-        for t, (lens, ftf, fdl) in fronts.items():
-            tfw_flat = self._tfw(ftf, fdl, avgdl)
-            n_blocks = lens.size
-            max_tfw = np.full(n_blocks, float("-inf"))
-            np.maximum.at(
-                max_tfw, np.repeat(np.arange(n_blocks), lens), tfw_flat
-            )
-            m = plan["idf"][t] * max_tfw
-            big_m[t] = float(m.max())
-            kth[t] = (
-                float(np.partition(m, m.size - k)[m.size - k])
-                if m.size >= k else None
-            )
-        neg_inf = float("-inf")
-        thr: dict[str, float] = {}
-        for ts in plan["per_query"]:
-            pts = [t for t in ts if t in big_m]
-            if not pts:
-                continue
-            thetas = [kth[t] for t in pts if kth[t] is not None]
-            if not thetas:
-                # < k guaranteed docs from metadata alone → no pruning
-                # for ANY of this query's terms
-                for t in pts:
-                    thr[t] = neg_inf
-                continue
-            theta = max(thetas)
-            m_sum = sum(big_m[t] for t in pts)
-            for t in pts:
-                cand = np.nextafter(theta - (m_sum - big_m[t]), neg_inf)
-                thr[t] = min(thr.get(t, float("inf")), float(cand))
-        # m scale → tfw scale (m = idf·tfw, idf > 0), one more ulp of
-        # slack against the rearrangement
-        out: dict[str, float] = {}
-        for t, v in thr.items():
-            if v == neg_inf:
-                out[t] = neg_inf
-            else:
-                out[t] = float(np.nextafter(v / plan["idf"][t], neg_inf))
-        return out
 
     def _bucketed_contribs(
         self, blocks: DataFrame, plan: dict, n_part: int
@@ -1367,12 +1215,8 @@ class IndexBuilder:
            batches run the single Spark action of steps 2-4, whose
            Python tasks each pay a ≈ 110-150 ms floor.
         1. ``_plan_queries``: tokenize + df/idf/stats, pyarrow only.
-        2. manifest file pruning on term, then — from
-           ``AUTO_PRUNE_MIN_BLOCKS`` to ``META_MAX_BLOCKS`` candidate
-           blocks, on an index without tombstones — metadata-only
-           block-max θ thresholds pushed into the scan filter
-           (``_meta_thresholds`` — provably lossless: the answer is the
-           one an unpruned scan gives).
+        2. manifest file pruning on term; every block of the query
+           terms in the surviving files is then scored.
         3. ``_bucketed_contribs``: decode + score in one Arrow stage,
            packed into per-(map-partition, doc-range-bucket) binary
            blob rows → the ONE shuffle moves a few hundred blobs
@@ -1435,52 +1279,12 @@ class IndexBuilder:
         before the driver merge."""
         terms = plan["terms"]
         blocks = self._blocks_scan(terms).filter(F.col("term").isin(terms))
-        # tombstones disarm block-max pruning: the θ thresholds estimate
-        # the k-th best score from metadata that still counts deleted
-        # docs, so θ can exceed the true alive k-th best and prune
-        # blocks holding alive results. Deletes trade pruning for
-        # instant visibility; purge_deleted re-arms.
+        # deleted docs are dropped in the reducer, after scoring
         ts = self._tomb_state()
         tomb_bc = (
             self.spark.sparkContext.broadcast(ts[0])
             if ts is not None else None
         )
-        prune = (
-            ts is None
-            and self.AUTO_PRUNE_MIN_BLOCKS <= plan["est_blocks"]
-            <= self.META_MAX_BLOCKS
-        )
-        if prune:
-            thr = {
-                t: v for t, v in self._meta_thresholds(plan, k).items()
-                if v != float("-inf")
-            }
-            if thr:
-                from antidb_spark.functions.bm25 import tf_weight
-
-                # exact per-block max tfw from the (tf, dl) Pareto front
-                # and the current-avgdl literal; thresholds arrive via a
-                # broadcast hash join (a create_map of 2·|terms| literals
-                # is rebuilt PER ROW by codegen — measurable at 10^5
-                # block rows × 10^3 query terms)
-                thr_df = self.spark.createDataFrame(
-                    list(thr.items()), "term string, _thr double"
-                )
-                block_tfw = F.array_max(
-                    F.zip_with(
-                        F.col("tfs_front"),
-                        F.col("dls_front"),
-                        lambda tf, dl: tf_weight(tf, dl, F.lit(plan["avgdl"])),
-                    )
-                )
-                blocks = (
-                    blocks.join(F.broadcast(thr_df), "term", "left")
-                    .filter(
-                        block_tfw
-                        >= F.coalesce(F.col("_thr"), F.lit(float("-inf")))
-                    )
-                    .drop("_thr")
-                )
         # reducer partition count is DATA-sized, not core-sized: target
         # ~TARGET_DOCS_PER_REDUCER candidate docs per task so the dense
         # slab geometry (and therefore per-core work) is the same at any

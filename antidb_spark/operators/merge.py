@@ -11,8 +11,7 @@ Why this is cheap: packed posting payloads are delta-encoded with the
 block's FIRST ordinal absolute and every later doc a gap
 (``functions/packing.pack_postings``), so a uniform ordinal shift
 rewrites only the head varint of each block — a few bytes per ~128-doc
-block; gaps, tf/dl payloads, position payloads, and the
-stats-independent (tf, dl) Pareto-front pruning metadata are untouched.
+block; gaps, tf/dl payloads and position payloads are untouched.
 The remap runs as one ``mapInPandas`` pass over the source blocks scan:
 one head rewrite per block and no re-encode, where the build's
 ``_pack_partition`` encodes every posting, one whole Arrow batch at a

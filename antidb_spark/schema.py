@@ -26,39 +26,4 @@ TRANSCRIPTS_SCHEMA = T.StructType(
     ]
 )
 
-# Postings: one row per (term, doc) with term frequency — the distributed
-# analog of the reference's `[sort_key, lstart]` index entry (idx.py:143-149).
-POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("tf", T.LongType(), False),
-    ]
-)
-
-# Packed posting blocks: delta+varint docID gaps + tfs + doc lengths in
-# binary cells. Block-max pruning metadata is the block's (tf, dl)
-# PARETO FRONT, not a precomputed score: the exact block-max BM25
-# contribution idf(df)·max-over-front tfw is derived at query time from
-# CURRENT corpus stats (tfw is monotone ↑tf, ↓dl, so the max over all
-# postings is achieved on the front), which keeps pruning lossless and
-# exact after incremental appends change df/avgdl/N.
-# Analog of the reference's zstd-pickled columnar leaves (idx.py:160-173),
-# with block metadata playing the role of node first-keys (idx.py:225).
-BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("block_id", T.LongType(), False),
-        T.StructField("n_docs", T.IntegerType(), False),
-        T.StructField("min_ord", T.LongType(), False),
-        T.StructField("max_ord", T.LongType(), False),
-        T.StructField("tfs_front", T.ArrayType(T.LongType()), False),
-        T.StructField("dls_front", T.ArrayType(T.LongType()), False),
-        T.StructField("docs_packed", T.BinaryType(), False),
-        T.StructField("tfs_packed", T.BinaryType(), False),
-        T.StructField("dls_packed", T.BinaryType(), False),
-    ]
-)
-
 DOC_ID_COLS = ("conv_id", "turn_idx")

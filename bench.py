@@ -137,8 +137,8 @@ def run_suite(spark, docs, transcripts, n_turns):
     if phase_on("stopword_batch"):
         # the degenerate all-equal-key nightmare (reference tests.py:432-477,
         # every row under ONE key): a batch of queries made ONLY of the
-        # corpus's top-df terms — the postings skew block-max pruning +
-        # the bucketed blob shuffle must bound. Target: within ~3× of the
+        # corpus's top-df terms — the postings skew the exact block scan
+        # and the bucketed blob shuffle must bound. Target: within ~3× of the
         # mixed-frequency bm25_batch floor.
         top_terms = [
             r["term"]

@@ -103,9 +103,8 @@ def main() -> None:
             "list), row-group stats prune inside files. The ONLY exchange "
             "is hashpartitioning(bucket) moving a few hundred packed "
             "binary blob rows (per map-partition, per doc-range bucket) — "
-            "not per-posting rows; scoring constants (idf/avgdl) and the "
-            "block-max θ thresholds travel in the closure/broadcast, "
-            "never as wide joins.",
+            "not per-posting rows; scoring constants (idf/avgdl) travel "
+            "in the closure, never as wide joins.",
             plan_of(chain),
         ))
 
@@ -666,7 +665,7 @@ def main() -> None:
                        "In(term" in blocks_plan
                        or "EqualTo(term" in blocks_plan))
         checks.append(("indexed batch: one bucket blob exchange, no wide "
-                       "joins (θ broadcast only)",
+                       "joins",
                        blocks_plan.count("hashpartitioning(bucket") == 1
                        and "SortMergeJoin" not in blocks_plan))
         topk_plan = by_title["BM25 top-k, index-free (flagship `entry`)"]

@@ -62,8 +62,6 @@ for rep in range(3):
         import pyspark.sql.functions as F
 
         blocks = b._blocks_scan(terms).filter(F.col("term").isin(terms))
-    with clock("meta_thresholds"):
-        thr = b._meta_thresholds(plan, 10)
     with clock("query_batch_total"):
         out = b.query_batch(qs, k=10)
         n = out.count()

@@ -38,20 +38,3 @@ def pin_batch_tier(monkeypatch):
         )
 
     return pin
-
-
-@pytest.fixture
-def pin_prune(monkeypatch):
-    """``pin_prune(True)`` turns the Spark tier's block-max pruning on
-    for every ``query_batch`` of the test up to ``META_MAX_BLOCKS``
-    candidate blocks, ``pin_prune(False)`` turns it off, whatever the
-    batch's block estimate. Tombstones still disarm it."""
-    from antidb_spark.operators.build import IndexBuilder
-
-    def pin(on: bool) -> None:
-        monkeypatch.setattr(
-            IndexBuilder, "AUTO_PRUNE_MIN_BLOCKS",
-            0 if on else IndexBuilder.META_MAX_BLOCKS + 1,
-        )
-
-    return pin

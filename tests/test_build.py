@@ -1,9 +1,9 @@
-"""Physical index (M2) + block-max pruning (M5) + resumability (M4).
+"""Physical index (M2) + resumability (M4).
 
 Correctness bar: the indexed query path must be rank-identical to the
 index-free DataFrame path (which tests/test_bm25.py already pins to the
-pandas oracle), with pruning on or off, and a resumed build must skip
-committed stages and produce identical answers.
+pandas oracle) on both ``query_batch`` tiers, and a resumed build must
+skip committed stages and produce identical answers.
 """
 
 from __future__ import annotations
@@ -83,9 +83,11 @@ def test_blocks_roundtrip_postings(spark, corpus, built):
     assert bad.count() == 0
 
 
-def test_indexed_equals_dataframe_path(spark, corpus, built, pin_prune):
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_indexed_equals_dataframe_path(spark, corpus, built, pin_batch_tier,
+                                       tier):
     b, _ = built
-    pin_prune(False)
+    pin_batch_tier(tier)
     idx_out = b.query_batch(QUERIES, k=10).toPandas()
     df_out = bm25_topk_batch(corpus, QUERIES, k=10).toPandas()
     assert len(idx_out) == len(df_out)
@@ -96,57 +98,12 @@ def test_indexed_equals_dataframe_path(spark, corpus, built, pin_prune):
         assert abs(ri["score"] - rd["score"]) < 1e-9
 
 
-def test_pruning_identical_topk(spark, built, pin_batch_tier, pin_prune):
-    pin_batch_tier("spark")  # pruning is a Spark-tier plan
-    b, _ = built
-    pin_prune(True)
-    pruned = b.query_batch(QUERIES, k=10).toPandas()
-    pin_prune(False)
-    full = b.query_batch(QUERIES, k=10).toPandas()
-    assert pruned[["query_id", "conv_id", "turn_idx"]].values.tolist() == \
-        full[["query_id", "conv_id", "turn_idx"]].values.tolist()
-    assert (abs(pruned["score"] - full["score"]) < 1e-9).all()
-
-
-def test_pruning_skips_blocks(spark, corpus, tmp_path, monkeypatch,
-                              pin_batch_tier, pin_prune):
-    """The prune pass must actually skip blocks — otherwise M5 is a
-    no-op. Deterministic setup: single-partition build (block layout is
-    otherwise randomized by repartitionByRange sampling), single-term
-    query, k=1 → θ = the best block's exact max score, from metadata
-    alone, so every block whose max score falls below θ is provably
-    skippable: the Spark tier scores fewer of the term's blocks."""
-    from pyspark.sql import functions as F
-
-    b = IndexBuilder(spark, str(tmp_path / "prune_idx"))
-    b.build(corpus, n_partitions=1)
-    total = b.catalog.read("blocks").filter(F.col("term") == "the").count()
-    assert total >= 3  # the stopword spans several blocks by design
-    scored = []  # blocks reaching the scoring stage, per batch
-    real = IndexBuilder._bucketed_contribs
-
-    def spy(self, blocks, plan, n_part):
-        scored.append(blocks.count())
-        return real(self, blocks, plan, n_part)
-
-    monkeypatch.setattr(IndexBuilder, "_bucketed_contribs", spy)
-    pin_batch_tier("spark")
-    pin_prune(True)
-    a = b.query_batch(["the"], k=1).toPandas()
-    pin_prune(False)
-    c = b.query_batch(["the"], k=1).toPandas()
-    assert scored[0] < total == scored[1]
-    # and pruning still returns the identical answer
-    assert a.values.tolist() == c.values.tolist()
-
-
-def test_reducer_slabs_identical(spark, built, pin_batch_tier, pin_prune):
+def test_reducer_slabs_identical(spark, built, pin_batch_tier):
     """Shrinking the reducer geometry (forcing many tiny doc-range
     buckets, hence many blob rows and partition-boundary doc splits)
     must not change any answer — the partitioning is an implementation
     detail, not semantics."""
     pin_batch_tier("spark")  # the reducers are the Spark tier's
-    pin_prune(False)
     b, _ = built
     queries = QUERIES * 3  # 15 queries
     base = b.query_batch(queries, k=5).toPandas()
@@ -181,14 +138,12 @@ def test_query_batch_bit_deterministic(spark, built, pin_batch_tier, tier):
 
 
 @pytest.mark.parametrize("tier", ["driver", "spark"])
-def test_query_warm_matches_batch(spark, built, pin_batch_tier, pin_prune,
-                                  tier):
+def test_query_warm_matches_batch(spark, built, pin_batch_tier, tier):
     """The driver-side interactive path (no Spark job) must be rank- and
     value-identical to both batch tiers, across the warm regime, the
     fallback regime, and misses."""
     b, _ = built
     pin_batch_tier(tier)
-    pin_prune(False)
     for q in ["kemuba0 data", "the of to and in", "bacoca0"]:
         warm = b.query_warm(q, k=5)
         batch = b.query_batch([q], k=5).toPandas()

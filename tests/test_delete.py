@@ -6,7 +6,7 @@ O(delta) instead of the reference's from-scratch rebuild, idx.py:85-92).
 
 Pins: every query path excludes deleted docs; surviving docs' SCORES are
 bit-identical to pre-delete (the stale-stats contract is observable);
-warm == batch after deletes; pruning stays lossless (disarmed);
+warm == batch after deletes, on both ``query_batch`` tiers;
 deletes survive O(delta) appends and segment merges; purge and full
 rebuilds physically remove the docs and restore exact statistics.
 """
@@ -88,7 +88,7 @@ def test_pinned_excludes_deleted_scores_unchanged(built):
     )
 
 
-def test_batch_and_warm_match_after_delete(built, pin_batch_tier, pin_prune):
+def test_batch_and_warm_match_after_delete(built, pin_batch_tier):
     b, _, _, deleted = built
     pinned = b.query_pinned(QUERY, k=10).toPandas()
     batch = b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
@@ -115,15 +115,13 @@ def test_batch_and_warm_match_after_delete(built, pin_batch_tier, pin_prune):
     assert len(norm(br)) > 0
     warm = b.query_warm(QUERY, k=10)
     assert warm.values.tolist() == batch.values.tolist()
-    # pruning stays LOSSLESS with tombstones (it disarms): a batch
-    # pinned to prune returns the identical result (pruning is a
-    # Spark-tier plan)
+    # the Spark tier drops the tombstoned docs too: a batch pinned to
+    # it returns the identical result
     pin_batch_tier("spark")
-    pin_prune(True)
-    pruned = (
+    on_spark = (
         b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
     )
-    assert pruned.values.tolist() == batch.values.tolist()
+    assert on_spark.values.tolist() == batch.values.tolist()
 
 
 def test_match_paths_exclude_deleted(built):
@@ -256,8 +254,7 @@ def test_delete_validation_and_idempotence(built):
     )
 
 
-def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier,
-                                    pin_prune):
+def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier):
     corpus = synth_transcripts(spark, n_convs=10, seed=5).cache()
     corpus.count()
     b = IndexBuilder(spark, str(tmp_path / "purge_idx"))
@@ -282,13 +279,12 @@ def test_purge_restores_exact_stats(spark, tmp_path, pin_batch_tier,
         want = ref.query_pinned(q, k=20).toPandas()
         assert got.values.tolist() == want.values.tolist(), q
     assert b._corpus_stats() == ref._corpus_stats()
-    # pruning re-armed: prune on/off identical again (and θ is exact)
+    # both query_batch tiers agree on the purged index
     pin_batch_tier("spark")
-    pin_prune(True)
-    p_on = b.query_batch([QUERY], k=10).toPandas()
-    pin_prune(False)
-    p_off = b.query_batch([QUERY], k=10).toPandas()
-    assert p_on.values.tolist() == p_off.values.tolist()
+    p_spark = b.query_batch([QUERY], k=10).toPandas()
+    pin_batch_tier("driver")
+    p_driver = b.query_batch([QUERY], k=10).toPandas()
+    assert p_spark.values.tolist() == p_driver.values.tolist()
     assert b.purge_deleted() == {"mode": "noop"}
     corpus.unpersist()
 

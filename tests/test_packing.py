@@ -87,18 +87,6 @@ RUN_LENGTHS = st.sampled_from([1, 127, 128, 129, 3 * 128 + 1]) | st.integers(1, 
 PID = 7
 
 
-def _front(tfs, dls) -> tuple[list, list]:
-    """(tf, dl) Pareto front, tf descending: a point is kept when its dl
-    is below that of every point with a higher tf (or an equal tf and a
-    lower dl)."""
-    front, best = [], None
-    for tf, dl in sorted(zip(tfs, dls), key=lambda p: (-p[0], p[1])):
-        if best is None or dl < best:
-            front.append((tf, dl))
-            best = dl
-    return [tf for tf, _ in front], [dl for _, dl in front]
-
-
 def _ref_blocks(rows, run_base: int) -> list[tuple]:
     out = []
     for term, grp in groupby(rows, key=lambda r: r[0]):
@@ -108,7 +96,7 @@ def _ref_blocks(rows, run_base: int) -> list[tuple]:
             docs_b, tfs_b = pack_postings(np.array(ords, np.uint64),
                                           np.array(tfs, np.uint64))
             out.append((term, run_base | PID << 32 | len(out), len(ords),
-                        ords[0], ords[-1], *_front(tfs, dls), docs_b, tfs_b,
+                        ords[0], ords[-1], docs_b, tfs_b,
                         varint_encode(np.array(dls, np.uint64))))
     return out
 
@@ -148,8 +136,8 @@ def _run_kernel(kernel, rows, cols, cuts, run_base) -> list[tuple]:
 def _partition(draw, positional: bool):
     """Rows of one sorted partition: term runs of boundary-heavy lengths
     (postings, or docs for positions), ordinals optionally ≥ 2^35 so
-    gaps and heads take multi-byte varints, tf/dl drawn from tiny ranges
-    so the Pareto front sees ties, and random batch cuts."""
+    gaps and heads take multi-byte varints, tf/dl drawn from tiny
+    ranges, and random batch cuts."""
     lens = draw(st.lists(RUN_LENGTHS, min_size=1, max_size=4))
     base = draw(st.sampled_from([0, 2**35 + 3]))
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))

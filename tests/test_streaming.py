@@ -83,8 +83,7 @@ def test_ingestion_idempotent_on_restart(spark, source_dir, tmp_path):
     assert sink.deltas(spark).count() == n1
 
 
-def test_compact_answers_equal_batch_index(spark, corpus, source_dir, tmp_path,
-                                           pin_prune):
+def test_compact_answers_equal_batch_index(spark, corpus, source_dir, tmp_path):
     root = str(tmp_path / "stream_idx3")
     sink = PostingsDeltaSink(root)
     q = run_ingestion(_read_stream(spark, source_dir), sink,
@@ -97,7 +96,6 @@ def test_compact_answers_equal_batch_index(spark, corpus, source_dir, tmp_path,
     b2 = IndexBuilder(spark, str(tmp_path / "batch_idx"))
     b2.build(corpus)
     queries = ["the kemuba0", "data bacoca0 of"]
-    pin_prune(False)
     a = b.query_batch(queries, k=5).toPandas()
     c = b2.query_batch(queries, k=5).toPandas()
     assert a.values.tolist() == c.values.tolist()
@@ -117,7 +115,7 @@ def _file_hashes(root: str) -> dict[str, str]:
 
 
 def test_incremental_compaction_appends_only(spark, corpus, tmp_path,
-                                             pin_batch_tier, pin_prune):
+                                             pin_batch_tier):
     """O(delta) compaction: new-conversation deltas append files; every
     pre-existing BLOCK file stays byte-identical; answers equal a full
     batch build of the whole corpus (appended convs sort after the base,
@@ -146,15 +144,12 @@ def test_incremental_compaction_appends_only(spark, corpus, tmp_path,
     b2 = IndexBuilder(spark, str(tmp_path / "inc_batch"))
     b2.build(corpus, n_partitions=4)
     queries = ["the kemuba0", "data bacoca0 of", "zzzznotaterm"]
-    pin_prune(False)
     a = b.query_batch(queries, k=5).toPandas()
     c = b2.query_batch(queries, k=5).toPandas()
     assert a.values.tolist() == c.values.tolist()
-    # pruning stays lossless over the appended index (bounds derived
-    # from current stats, not build-time stats); pruning is a
-    # Spark-tier plan
+    # the Spark tier agrees over the appended index (scores from
+    # current stats, not build-time stats)
     pin_batch_tier("spark")
-    pin_prune(True)
     p = b.query_batch(queries, k=5).toPandas()
     assert p.values.tolist() == c.values.tolist()
     # a second compaction with nothing new is a no-op
@@ -162,7 +157,7 @@ def test_incremental_compaction_appends_only(spark, corpus, tmp_path,
 
 
 def test_query_warm_matches_batch_after_append(
-    spark, corpus, tmp_path, pin_batch_tier, pin_prune
+    spark, corpus, tmp_path, pin_batch_tier
 ):
     """Warm-tier postings cache over a MULTI-RUN blocks table (base +
     appended run): a query term's blocks from different runs interleave
@@ -203,7 +198,6 @@ def test_query_warm_matches_batch_after_append(
 
     post = b.catalog.read("postings")
     pin_batch_tier("spark")  # the batch side reads blocks through Spark
-    pin_prune(False)
     for q in ["the data", "a the of kemuba0", "data bacoca0 of"]:
         plan = b._plan_queries([q])
         assert plan is not None and plan["est_blocks"] <= b.WARM_MAX_BLOCKS

@@ -135,7 +135,7 @@ def test_upsert_replaces_and_inserts(upserted):
 
 @pytest.mark.parametrize("scale", ["dense", "sparse"])
 def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale,
-                                              pin_batch_tier, pin_prune):
+                                              pin_batch_tier):
     b, *_, sent, _, _, _ = upserted
     if scale == "sparse":
         # the large-corpus branches: sparse warm scorer (with the
@@ -150,16 +150,15 @@ def test_warm_matches_batch_on_multirun_index(upserted, monkeypatch, scale,
         )
         warm = b.query_warm(q, k=10)
         assert warm.values.tolist() == batch.values.tolist(), q
-    # pruning stays lossless (disarmed while tombstones exist); pruning
-    # is a Spark-tier plan
+    # the Spark tier agrees with the driver tier on the tombstoned
+    # multi-run index
     pin_batch_tier("spark")
-    pin_prune(True)
-    pruned = (
+    on_spark = (
         b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
     )
-    pin_prune(False)
+    pin_batch_tier("driver")
     batch = b.query_batch([QUERY], k=10).toPandas().drop(columns=["query_id"])
-    assert pruned.values.tolist() == batch.values.tolist()
+    assert on_spark.values.tolist() == batch.values.tolist()
 
 
 @pytest.mark.parametrize("k", [3, 1000])
