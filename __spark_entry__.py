@@ -2348,22 +2348,29 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 43
-    entries sliding_counts … lang_id, which the last two windows missed
-    (11 of the 12 entries new in round 5, the 29 with no driver row in
-    rounds 1-4, and the three last attested in round 3), then the
-    previous order unchanged: quality … rng_lookup (12) and the tail
-    block term_counts … ngram_jaccard (43), which made up the last
-    window, then the entries with no driver row in any round
-    (packed_examples, frame_sample, media_features), the three attested
-    longest ago (media_decode, media_meta, embedding_dups) and
-    doc_chunks. The window now ends after upsert_eq; the next rotation
-    should move phrase_adhoc … ngram_jaccard and packed_examples …
-    doc_chunks (12 entries, last in a window two rotations ago) to the
-    front."""
+    round, least-recently-driver-attested first. Current order: the 12
+    entries outside the last two windows (phrase_adhoc …
+    ngram_jaccard and packed_examples … doc_chunks), then the previous
+    order unchanged: sliding_counts … lang_id (43) and quality …
+    rng_lookup (12), then term_counts … phrase_search (38). The window
+    now ends after pq_refined; the next rotation should move
+    upsert_topk … rng_lookup and term_counts … phrase_search (43
+    entries, outside this window and the last) to the front."""
     return {
-        # --- missed by the last two driver windows (round 5 new,
-        # never attested in rounds 1-4, last attested round 3)
+        # --- outside the last two driver windows
+        "phrase_adhoc": _q_phrase_adhoc,
+        "phrase_prefix": _q_phrase_prefix,
+        "fingerprints": _q_fingerprints,
+        "exact_dup_groups": _q_exact_dup_groups,
+        "ngram_jaccard": _q_ngram_jaccard,
+        "packed_examples": _q_packed_examples,
+        "frame_sample": _q_frame_sample,
+        "media_features": _q_media_features,
+        "media_decode": _q_media_decode,
+        "media_meta": _q_media_meta,
+        "embedding_dups": _q_embedding_dups,
+        "doc_chunks": _q_doc_chunks,
+        # --- in the last driver window
         "sliding_counts": _q_sliding_counts,
         "term_vectors": _q_term_vectors,
         "stream_sessions": _q_stream_sessions,
@@ -2402,12 +2409,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curated": _q_curated,
         "pq_topk": _q_pq_topk,
         "pq_refined": _q_pq_refined,
+        # ---- driver window (50) ends here ----
         "ivfpq_topk": _q_ivfpq_topk,
         "time_travel": _q_time_travel,
         "minhash_dups": _q_minhash_dups,
         "simhash_dups": _q_simhash_dups,
         "lang_id": _q_lang_id,
-        # --- in the driver window last round
         "quality": _q_quality,
         "clone_candidates": _q_clone_candidates,
         "ann_cosine_topk": _q_ann_cosine_topk,
@@ -2415,7 +2422,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_topk": _q_ann_ivf_topk,
         "fuzzy_topk": _q_fuzzy_topk,
         "upsert_eq": _q_upsert_eq,
-        # ---- driver window (50) ends here ----
+        # --- outside the last driver window
         "upsert_topk": _q_upsert_topk,
         "keyed_eq_persisted": _q_keyed_eq_persisted,
         "keyed_rng_persisted": _q_keyed_rng_persisted,
@@ -2459,21 +2466,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fallback_join": _q_fallback_join,
         "interval_days": _q_interval_days,
         "phrase_search": _q_phrase_search,
-        "phrase_adhoc": _q_phrase_adhoc,
-        "phrase_prefix": _q_phrase_prefix,
-        "fingerprints": _q_fingerprints,
-        "exact_dup_groups": _q_exact_dup_groups,
-        "ngram_jaccard": _q_ngram_jaccard,
-        # --- never driver-attested in any round
-        "packed_examples": _q_packed_examples,
-        "frame_sample": _q_frame_sample,
-        "media_features": _q_media_features,
-        # --- driver-attested longest ago
-        "media_decode": _q_media_decode,
-        "media_meta": _q_media_meta,
-        "embedding_dups": _q_embedding_dups,
-        # --- new in round 5
-        "doc_chunks": _q_doc_chunks,
     }
 
 

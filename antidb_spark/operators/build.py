@@ -434,8 +434,12 @@ class IndexBuilder:
         table (the dominant cost — the reference's 41-min presrt_idxs,
         README.md:185-191); every later stage derives from that table,
         so a resume after the tokenize stage never re-reads the corpus.
+        The table is build scratch: once ``blocks`` commits it is
+        dropped, and ``blocks`` + ``docmap`` (minus ``tombstones``) are
+        the only committed postings (see :meth:`_alive_postings`).
         ``corpus=None`` is allowed when stage 0 is already committed
-        (e.g. the streaming compactor hands in pre-built postings).
+        mid-build (a resume, or a rebuild / the streaming compactor
+        handing in pre-built postings).
         """
         n_part = n_partitions or self.spark.sparkContext.defaultParallelism
 
@@ -548,6 +552,7 @@ class IndexBuilder:
                 snapshot=man["snapshot_id"],
                 seconds=self.timer.phases[-1]["seconds"],
             )
+        self.catalog.drop("postings")
 
         metrics = {
             "phases": self.timer.phases,
@@ -555,12 +560,33 @@ class IndexBuilder:
         }
         return metrics
 
+    def _mark_stage0(self, man: dict) -> None:
+        """Mark the committed ``postings`` snapshot ``man`` (pre-built
+        (term, *id_cols, tf) rows) as stage 0, so the next :meth:`build`
+        derives the rest from it."""
+        self.ckpt.mark_done(
+            "postings", rows=sum(e["rows"] for e in man["files"]),
+            snapshot=man["snapshot_id"], seconds=0.0,
+        )
+
     # -- query ------------------------------------------------------------
 
     def _decoded_postings(self, blocks: DataFrame) -> DataFrame:
         return blocks.select(
             "term", "n_docs", "docs_packed", "tfs_packed", "dls_packed"
         ).mapInPandas(_decode_blocks, schema=_POSTINGS_OUT)
+
+    def _alive_postings(self) -> DataFrame:
+        """(term, *id_cols, tf) of the alive documents: the committed
+        blocks decoded, tombstones dropped, ids resolved via the docmap.
+        One row per alive (term, doc) — what every rebuild starts from."""
+        post = self._drop_tombstones(
+            self._decoded_postings(self.catalog.read("blocks"))
+        )
+        return post.join(
+            self.catalog.read("docmap").select("doc_ord", *self.id_cols),
+            "doc_ord",
+        ).select("term", *self.id_cols, "tf")
 
     # reducer memory bounds, independent of data scale AND parallelism
     # level (the SAME algorithm must run at every level, or cross-level
@@ -642,8 +668,9 @@ class IndexBuilder:
         """Spark schema of the docmap (see :meth:`_spark_schema`)."""
         return self._spark_schema("docmap")
 
-    #: every table an index may commit, in rollback order
-    INDEX_TABLES = ("docmap", "postings", "terms", "terms_rev",
+    #: every table an index may commit, in rollback order (the stage-0
+    #: ``postings`` table is build scratch, never committed past build)
+    INDEX_TABLES = ("docmap", "terms", "terms_rev",
                     "terms_del", "stats", "blocks", "pos_blocks",
                     "docmeta", "tombstones", "termvecs")
 
@@ -867,46 +894,24 @@ class IndexBuilder:
 
     def purge_deleted(self, n_partitions: int | None = None) -> dict:
         """Physically remove tombstoned docs: rebuild the index from the
-        committed postings minus the deleted docs' rows (O(total
-        postings) — the merge/expunge step). Exact statistics are
-        restored (df/avgdl/n_docs over the survivors) and ordinals
-        renumber densely. Committed
-        positional and docmeta side layers SURVIVE the renumbering via
-        ordinal remap (see ``_rebuild_from``) — no corpus re-scan;
-        dead generations drop from the layers in the same pass."""
-        tomb = self._tombstones_df()
-        if tomb is None:
+        alive postings decoded from blocks (O(total postings) — the
+        merge/expunge step). Exact statistics are restored
+        (df/avgdl/n_docs over the survivors) and ordinals renumber
+        densely. Committed positional and docmeta side layers SURVIVE
+        the renumbering via ordinal remap (see ``_rebuild``) — no
+        corpus re-scan; dead generations drop from the layers in the
+        same pass."""
+        n_dead = self._n_tombstones()
+        if not n_dead:
             return {"mode": "noop"}
-        n_part = n_partitions or self.spark.sparkContext.defaultParallelism
-        from antidb_spark.operators.upsert import UPSERT_MARK, alive_postings
+        return {"mode": "purged", "n_purged": n_dead,
+                **self._rebuild(n_partitions)}
 
-        if self.ckpt.is_done(UPSERT_MARK):
-            # upserts happened: the id-keyed postings table holds
-            # superseded generations of the same id (dropping by dead
-            # IDS would also drop the alive replacement generation) —
-            # reconstruct alive rows from the ordinal-keyed blocks
-            # instead (see operators/upsert.py module docstring)
-            n_dead = tomb.count()
-            merged = alive_postings(self).localCheckpoint()
-        else:
-            dead_ids = (
-                self.catalog.read("docmap")
-                .join(tomb, "doc_ord", "left_semi")
-                .select(*self.id_cols)
-            )
-            n_dead = dead_ids.count()
-            merged = (
-                self.catalog.read("postings")
-                .join(dead_ids, list(self.id_cols), "left_anti")
-                .localCheckpoint()
-            )
-        layers = self._rebuild_from(merged, n_part)
-        return {"mode": "purged", "n_purged": n_dead, **layers}
-
-    def _rebuild_from(self, merged: DataFrame, n_part: int) -> dict:
+    def _rebuild(self, n_partitions: int | None) -> dict:
         """Shared in-place rebuild core of ``purge_deleted`` /
-        ``optimize``: rewrite stage-0 postings as ``merged`` and rebuild
-        the derived layers — PRESERVING committed pos_blocks / docmeta
+        ``optimize``: write the alive postings (decoded from blocks) as
+        the build's stage 0 and rebuild the derived
+        layers — PRESERVING committed pos_blocks / docmeta
         by ORDINAL REMAP (decode → old→new ordinal map join → repack)
         instead of dropping them. The rebuild renumbers ordinals, but
         the layers' content is already in the committed tables, so no
@@ -925,6 +930,7 @@ class IndexBuilder:
             _POS_BLOCKS_OUT,
         )
 
+        n_part = n_partitions or self.spark.sparkContext.defaultParallelism
         keep_pos = self.ckpt.is_done("pos_blocks")
         keep_meta = self.ckpt.is_done("docmeta")
         meta_cols = (
@@ -950,15 +956,15 @@ class IndexBuilder:
         )
         meta_src = self.catalog.read("docmeta") if keep_meta else None
 
-        for tbl in ("postings", "docmap", "stats", "terms", "terms_rev",
-                    "terms_del", "blocks", "tombstones", "termvecs"):
+        # stage 0 is written while its sources (blocks, docmap,
+        # tombstones) are still committed: the table pins the alive
+        # postings, with no in-memory copy
+        man = self.catalog.write(self._alive_postings(), "postings")
+        for tbl in ("docmap", "stats", "terms", "terms_rev", "terms_del",
+                    "blocks", "tombstones", "termvecs"):
             self.catalog.drop(tbl)
         self.ckpt.reset()
-        man = self.catalog.write(merged, "postings")
-        self.ckpt.mark_done(
-            "postings", rows=sum(e["rows"] for e in man["files"]),
-            snapshot=man["snapshot_id"], seconds=0.0,
-        )
+        self._mark_stage0(man)
         self.build(corpus=None, n_partitions=n_part)
 
         out: dict = {}
@@ -1015,7 +1021,7 @@ class IndexBuilder:
 
     def optimize(self, n_partitions: int | None = None) -> dict:
         """Force-merge (the Lucene forceMerge analog): rebuild the
-        derived layers from the committed stage-0 postings into a
+        derived layers from the alive postings decoded from blocks into a
         SINGLE blocks run, restoring the locality that O(delta)
         appends/upserts trade away — after many compactions a term's
         postings are scattered across runs, which costs extra block
@@ -1025,7 +1031,7 @@ class IndexBuilder:
         grows. With tombstones present this IS ``purge_deleted``
         (physical expunge + exact stats). Committed
         pos_blocks / docmeta layers SURVIVE via ordinal remap
-        (``_rebuild_from``) — phrase and filtered service continue with
+        (``_rebuild``) — phrase and filtered service continue with
         no corpus re-scan."""
         n_runs = int(
             self.catalog.manifest("blocks")["props"].get("n_runs", 1)
@@ -1035,10 +1041,8 @@ class IndexBuilder:
             return {**out, "mode": "optimized", "n_runs_before": n_runs}
         if n_runs <= 1:
             return {"mode": "noop", "n_runs_before": n_runs}
-        n_part = n_partitions or self.spark.sparkContext.defaultParallelism
-        merged = self.catalog.read("postings").localCheckpoint()
-        layers = self._rebuild_from(merged, n_part)
-        return {"mode": "optimized", "n_runs_before": n_runs, **layers}
+        return {"mode": "optimized", "n_runs_before": n_runs,
+                **self._rebuild(n_partitions)}
 
     def _plan_queries(self, queries: Sequence[str]) -> dict | None:
         """Driver-side query planning, ZERO Spark jobs (this is what

@@ -127,14 +127,11 @@ def merge_index(
         )
     ) + 1
 
-    # docmap + raw postings: append with shifted ordinals / as-is
+    # docmap: append with shifted ordinals
     dst.catalog.write(
         src_docmap.withColumn("doc_ord", F.col("doc_ord") + F.lit(offset)),
         "docmap", stats_cols=["doc_ord", dst.id_cols[0]],
         mode="append",
-    )
-    dst.catalog.write(
-        src.catalog.read("postings"), "postings", mode="append"
     )
 
     # terms: df sums (full outer — either side may own a term alone)
@@ -245,14 +242,6 @@ def merge_index(
         tomb_mode = "merged"
     elif dst._n_tombstones():
         tomb_mode = "kept"
-
-    # upsert marker propagates: src's raw postings were appended AS-IS,
-    # so superseded generations it carried now live in dst's id-keyed
-    # postings table too (see operators/upsert.py module docstring)
-    from antidb_spark.operators.upsert import UPSERT_MARK
-
-    if src.ckpt.is_done(UPSERT_MARK) and not dst.ckpt.is_done(UPSERT_MARK):
-        dst.ckpt.mark_done(UPSERT_MARK)
 
     return {
         "mode": "merge",

@@ -19,19 +19,10 @@ committed from there with pyarrow and the same kernels — an upsert's
 cost is otherwise per-job constants, dozens of jobs for a few dozen
 documents. Bigger batches run the distributed plan.
 
-Data-model note (why `alive_postings` exists): the stage-0 ``postings``
-table is keyed by id columns, not ordinals. An upsert appends the new
-generation's rows WITHOUT touching the old generation's — after the
-first upsert that table can hold superseded generations of the same id,
-indistinguishable from each other. Every query path is unaffected (they
-read the ordinal-keyed blocks, and dead ordinals drop at the tombstone
-chokepoints), but the two consumers that rebuild FROM the id-keyed
-table — ``purge_deleted`` and streaming full-compaction — would merge
-or double-drop generations. Once the ``has_upserts`` checkpoint marker
-is set they therefore reconstruct alive postings from blocks + docmap +
-tombstones (`alive_postings`) — exact, one generation per id, same
-O(index) cost class as the rebuild itself. The marker clears with the
-checkpoint reset those rebuilds perform.
+Data-model note: the packed ``blocks`` (ordinal-keyed) + ``docmap`` minus
+``tombstones`` are the only committed postings, so an upsert appends one
+blocks run and leaves superseded generations to the tombstones; every
+rebuild reads alive postings from there (``IndexBuilder._alive_postings``).
 """
 
 from __future__ import annotations
@@ -49,22 +40,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from antidb_spark.functions.analyze import tokens
 from antidb_spark.operators.stats import build_postings
 from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES
-
-UPSERT_MARK = "has_upserts"
-
-
-def alive_postings(builder) -> DataFrame:
-    """(term, *id_cols, tf) of ALIVE documents, reconstructed from the
-    ordinal-keyed blocks (lossless) minus tombstones, ids resolved via
-    the docmap — the authoritative source once the id-keyed stage-0
-    table may hold superseded generations (see module docstring)."""
-    post = builder._drop_tombstones(
-        builder._decoded_postings(builder.catalog.read("blocks"))
-    )
-    docmap = builder.catalog.read("docmap")
-    return post.join(
-        docmap.select("doc_ord", *builder.id_cols), "doc_ord"
-    ).select("term", *builder.id_cols, "tf")
 
 
 def _with_ords(rel, new_docmap, id_cols: list[str], cols: list[str]):
@@ -113,7 +88,7 @@ def append_run(
 
     ``delta_post``: (term, *id_cols, tf) — every id must denote a NEW
     ordinal (brand-new doc, or an upsert whose previous generations are
-    already tombstoned). Appends files to docmap/postings/blocks (fresh
+    already tombstoned). Appends files to docmap/blocks (fresh
     ``run_base`` so block ids can't collide; committed files untouched),
     rewrites the small terms/stats tables (crash-atomic manifest swap),
     and maintains the side layers: ``pos_delta`` (term, *id_cols, pos)
@@ -168,8 +143,6 @@ def append_run(
         new_docmap, "docmap",
         stats_cols=["doc_ord", id_cols[0]], mode="append"
     )
-
-    b.catalog.write(delta_post, "postings", mode="append")
 
     # terms: merged df lands in a fresh generation dir; the manifest
     # pointer swap is the crash-atomic commit point (Catalog.replace) —
@@ -376,8 +349,6 @@ def upsert_docs(builder, docs: DataFrame,
         out = _upsert_local(b, batch, meta_cols)
     else:
         out = _upsert_spark(b, docs, meta_cols, n_partitions)
-    if not b.ckpt.is_done(UPSERT_MARK):
-        b.ckpt.mark_done(UPSERT_MARK)
     return {"mode": "upsert", **out}
 
 

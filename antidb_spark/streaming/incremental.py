@@ -21,7 +21,7 @@ Design (idiomatic Structured Streaming):
   the ordinary ``IndexBuilder`` over the merged relation into a fresh
   index root (the full, from-scratch level).
 - ``compact_incremental``: the O(delta) level — appends new-doc
-  postings/docmap/block/pos_block FILES to the committed index (no
+  docmap/block/pos_block FILES to the committed index (no
   existing block file is touched; stats-independent block metadata
   keeps them valid as corpus stats drift), rewrites only the small
   terms/stats tables, and retires consumed delta batches in the sink
@@ -300,11 +300,7 @@ def compact(
     # hand the builder pre-tokenized postings: write stage 0 directly,
     # then let the normal resumable pipeline derive the rest
     if not b.ckpt.is_done("postings"):
-        man = b.catalog.write(postings, "postings")
-        b.ckpt.mark_done(
-            "postings", rows=sum(e["rows"] for e in man["files"]),
-            snapshot=man["snapshot_id"], seconds=0.0,
-        )
+        b._mark_stage0(b.catalog.write(postings, "postings"))
     b.build(corpus=None)
     return b
 
@@ -320,8 +316,8 @@ def compact_incremental(
     O(delta) instead of O(total index).
 
     Append path (every delta doc is NEW — the streaming norm: new turns
-    / new conversations): appends files to the postings, docmap, blocks,
-    and pos_blocks tables (never touching a committed block file —
+    / new conversations): appends files to the docmap, blocks, and
+    pos_blocks tables (never touching a committed block file —
     appended blocks get a fresh ``run_base`` so block_ids can't collide, and
     block metadata is stats-independent so existing blocks stay valid
     as df/avgdl/N grow), renumbers only the new docs after the
@@ -351,11 +347,7 @@ def compact_incremental(
     "append"|"upsert"|"full"|"noop", ...}.
     """
     from antidb_spark.operators.build import IndexBuilder
-    from antidb_spark.operators.upsert import (
-        UPSERT_MARK,
-        alive_postings,
-        append_run,
-    )
+    from antidb_spark.operators.upsert import append_run
 
     if update_mode not in ("rebuild", "upsert"):
         raise ValueError(f"unknown update_mode {update_mode!r}")
@@ -420,8 +412,6 @@ def compact_incremental(
             n_partitions=n_part,
             ckpt_extra={"batches": sorted(todo), "upsert": True},
         )
-        if n_replaced and not b.ckpt.is_done(UPSERT_MARK):
-            b.ckpt.mark_done(UPSERT_MARK)
         sink.mark_compacted(todo)
         return {
             "mode": "upsert", "n_replaced": n_replaced,
@@ -430,46 +420,25 @@ def compact_incremental(
         }
 
     if n_updates > 0:
-        if b.ckpt.is_done(UPSERT_MARK):
-            # upserts happened: the id-keyed postings table holds
-            # superseded generations of the same id — rebuild from the
-            # ordinal-keyed blocks instead (see operators/upsert.py)
-            old_post = alive_postings(b)
-        else:
-            old_post = b.catalog.read("postings")
-            # full rebuild PURGES tombstoned docs: their committed
-            # postings are dropped before the merge (a delta that
-            # re-writes a deleted doc re-creates it with the delta's
-            # content alone)
-            tomb = b._tombstones_df()
-            if tomb is not None:
-                dead_ids = docmap.join(tomb, "doc_ord", "left_semi").select(
-                    *sink.id_cols
-                )
-                old_post = old_post.join(
-                    dead_ids, sink.id_cols, "left_anti"
-                )
+        # full rebuild in place, PURGING tombstoned docs: only alive
+        # postings merge (a delta that re-writes a deleted doc
+        # re-creates it with the delta's content alone); stage 0 is
+        # written before its source tables drop
         merged = (
-            old_post
+            b._alive_postings()
             .unionByName(delta_post)
             .groupBy("term", *sink.id_cols)
             .agg(F.sum("tf").alias("tf"))
         )
-        # full rebuild in place: localCheckpoint pins the merged relation
-        # before its source tables are dropped out from under it
-        merged = merged.localCheckpoint()
+        man = b.catalog.write(merged, "postings")
         # docmeta drops too: a full rebuild renumbers doc ordinals, and
         # metadata for pre-existing docs is not in the sink — filtered
         # queries raise until build_doc_meta re-runs over the corpus
-        for tbl in ("postings", "docmap", "stats", "terms", "blocks",
-                    "pos_blocks", "docmeta", "tombstones"):
+        for tbl in ("docmap", "stats", "terms", "blocks", "pos_blocks",
+                    "docmeta", "tombstones"):
             b.catalog.drop(tbl)
         b.ckpt.reset()
-        man = b.catalog.write(merged, "postings")
-        b.ckpt.mark_done(
-            "postings", rows=sum(e["rows"] for e in man["files"]),
-            snapshot=man["snapshot_id"], seconds=0.0,
-        )
+        b._mark_stage0(man)
         b.build(corpus=None, n_partitions=n_part)
         sink.mark_compacted(todo)
         return {"mode": "full", "reason": f"{n_updates} existing docs updated"}

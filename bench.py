@@ -478,8 +478,11 @@ def main() -> None:
     # traffic) is one-sided — it only ever inflates — so the floor is
     # the stable cross-run comparable on this shared box
     floor = {k: round(min(r[k] for r in reps), 4) for k in reps[0]}
+    # every repeat in run order: tells the cold first repeat (first
+    # Spark action of the process) apart from host noise
+    per_repeat = {k: [r[k] for r in reps] for k in reps[0]}
     extras: dict = {"repeats": len(reps), "spread": spread, "floor": floor,
-                    **run_extras}
+                    "per_repeat": per_repeat, **run_extras}
     if "upsert_delta" in timings and "n_upsert_docs" in extras:
         extras["upsert_docs_per_sec"] = round(
             extras["n_upsert_docs"] / timings["upsert_delta"], 1

@@ -8,9 +8,6 @@ skip committed stages and produce identical answers.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
 from antidb_spark.operators.build import IndexBuilder, assign_doc_ords
@@ -45,9 +42,12 @@ def built(spark, corpus, tmp_path_factory):
 
 def test_build_tables_committed(built):
     b, metrics = built
-    for tbl in ("postings", "docmap", "stats", "terms", "blocks"):
+    for tbl in ("docmap", "stats", "terms", "blocks"):
         assert b.catalog.exists(tbl), tbl
         assert b.ckpt.is_done(tbl)
+    # stage 0 committed, then dropped once blocks did: build scratch
+    assert b.ckpt.is_done("postings")
+    assert not b.catalog.exists("postings")
     phases = [p["phase"] for p in metrics["phases"]]
     assert phases == ["postings", "docmap", "terms", "blocks"]
     assert all(p["ok"] for p in metrics["phases"])
@@ -253,25 +253,25 @@ def test_resume_skips_committed_stages(spark, corpus, built):
     assert m2["phases"] == []  # everything committed → nothing re-ran
 
 
-def test_resume_after_partial_failure(spark, corpus, built, tmp_path):
-    """Kill-after-stage-2 simulation: copy checkpoints/tables for the
-    first three stages only; rebuild must run exactly the missing
-    stages and answer identically."""
+def test_resume_after_partial_failure(spark, corpus, built, tmp_path,
+                                      monkeypatch):
+    """Kill-in-stage-2 simulation: the terms write raises on a fresh
+    root; the resumed build must run exactly the missing stages and
+    answer identically."""
     b, _ = built
-    root2 = str(tmp_path / "idx2")
-    os.makedirs(root2)
-    for tbl in ("postings", "docmap", "stats"):
-        shutil.copytree(
-            os.path.join(b.root, tbl), os.path.join(root2, tbl)
-        )
-    ck_src = os.path.join(b.root, "_checkpoints")
-    ck_dst = os.path.join(root2, "_checkpoints")
-    os.makedirs(ck_dst)
-    for fn in os.listdir(ck_src):
-        if fn.startswith(("postings", "docmap", "stats")):
-            shutil.copy(os.path.join(ck_src, fn), os.path.join(ck_dst, fn))
-    b2 = IndexBuilder(spark, root2)
-    m2 = b2.build(corpus)
+    b2 = IndexBuilder(spark, str(tmp_path / "idx2"))
+    real = b2.catalog.write
+
+    def crash_on_terms(df, name, *args, **kwargs):
+        if name == "terms":
+            raise RuntimeError("killed in the terms stage")
+        return real(df, name, *args, **kwargs)
+
+    monkeypatch.setattr(b2.catalog, "write", crash_on_terms)
+    with pytest.raises(RuntimeError, match="killed"):
+        b2.build(corpus)
+    monkeypatch.setattr(b2.catalog, "write", real)
+    m2 = IndexBuilder(spark, b2.root).build(corpus)
     assert [p["phase"] for p in m2["phases"]] == ["terms", "blocks"]
     a = b.query_batch(QUERIES[:2], k=5).toPandas()
     c = b2.query_batch(QUERIES[:2], k=5).toPandas()

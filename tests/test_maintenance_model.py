@@ -114,6 +114,9 @@ def test_random_maintenance_reconciles_to_rebuild(
         else:
             b.optimize(n_partitions=4)
 
+        # blocks + docmap are the only committed postings: no operation
+        # leaves the stage-0 build scratch behind
+        assert not b.catalog.exists("postings"), (seed, step, op)
         # visibility contract after every step: the alive id set of an
         # exhaustive stopword query equals the model's docs containing
         # the term (stats may be stale; membership may not)
@@ -149,6 +152,7 @@ def test_random_maintenance_reconciles_to_rebuild(
     # final reconcile: optimize purges everything; every query path now
     # VALUE-identical to a fresh build over the model corpus
     b.optimize(n_partitions=4)
+    assert not b.catalog.exists("postings"), seed
     ref = IndexBuilder(spark, str(tmp_path / "mm_ref"))
     ref.build(_df(spark, model, sorted(model)), n_partitions=4)
     assert b._corpus_stats() == ref._corpus_stats()

@@ -66,10 +66,12 @@ def merged(spark, tmp_path_factory):
 
 
 def test_merge_reports_full_layer_merge(merged):
-    _, _, _, info, _, _ = merged
+    dst, _, _, info, _, _ = merged
     assert info["mode"] == "merge"
     assert info["pos_blocks"] == "merged"
     assert info["docmeta"] == "merged"
+    # blocks + docmap are dst's only committed postings after the merge
+    assert not dst.catalog.exists("postings")
 
 
 @pytest.mark.parametrize("qi", range(len(QUERIES)))

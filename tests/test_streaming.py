@@ -196,7 +196,7 @@ def test_query_warm_matches_batch_after_append(
 
     b.catalog.read_pruned_arrow = shuffled
 
-    post = b.catalog.read("postings")
+    post = build_postings(corpus)  # base + tail, independent of the index
     pin_batch_tier("spark")  # the batch side reads blocks through Spark
     for q in ["the data", "a the of kemuba0", "data bacoca0 of"]:
         plan = b._plan_queries([q])
@@ -430,7 +430,7 @@ def test_incremental_compaction_update_falls_back(spark, corpus, tmp_path):
         .groupBy("term", "conv_id", "turn_idx")
         .agg(F.sum("tf").alias("tf"))
     )
-    got = b.catalog.read("postings")
+    got = b._alive_postings()  # decoded from the rebuilt blocks
     diff = got.exceptAll(merged).union(merged.exceptAll(got))
     assert diff.count() == 0
     assert b.query_batch(["the kemuba0"], k=3).count() == 3

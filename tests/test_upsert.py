@@ -13,8 +13,8 @@ the resulting multi-run index (the round-4 advisory fix); phrase and
 facet layers serve the NEW generation only; purge-after-upsert ==
 fresh build (results AND statistics); full streaming compaction after
 upserts reconstructs alive postings (no generation merge/double-drop);
-the has_upserts marker propagates through segment merge and clears on
-rebuild; duplicate-id input rejected.
+a purge after merging an upserted index keeps only the new generation;
+duplicate-id input rejected.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from antidb_spark.operators.phrase import (
     phrase_warm,
 )
 from antidb_spark.operators.stats import build_postings
-from antidb_spark.operators.upsert import UPSERT_MARK
 from antidb_spark.streaming.incremental import (
     PostingsDeltaSink,
     compact_incremental,
@@ -105,7 +104,6 @@ def test_upsert_replaces_and_inserts(upserted):
     assert m["n_replaced"] == 3
     assert m["pos_mode"] == "append"
     assert m["meta_mode"] == "append"
-    assert b.ckpt.is_done(UPSERT_MARK)
     # the sentinel query returns exactly the 5 upserted docs
     got = b.query_pinned(sent, k=100).toPandas()
     want_ids = {(r["conv_id"], r["turn_idx"]) for r in rows}
@@ -303,7 +301,6 @@ def test_purge_after_upsert_matches_fresh_build(spark, tmp_path):
     assert m["n_replaced"] == 2
     p = b.purge_deleted(n_partitions=4)
     assert p == {"mode": "purged", "n_purged": 2}
-    assert not b.ckpt.is_done(UPSERT_MARK)  # marker clears with the reset
     ref = IndexBuilder(spark, str(tmp_path / "pu_ref"))
     ref.build(_logical_corpus(spark, corpus, rows), n_partitions=4)
     for q in (QUERY, _V[600], "the will", _V[1000]):
@@ -361,8 +358,7 @@ def test_full_compaction_after_upsert_reconstructs_alive(spark, tmp_path):
     b.upsert_docs(spark.createDataFrame(pd.DataFrame(rows)),
                   n_partitions=4)
     # a delta updating a DIFFERENT alive doc forces the full rebuild,
-    # which must use alive_postings (not the generation-ambiguous
-    # id-keyed table)
+    # which must merge only the alive generation of every id
     victim = (
         corpus.join(
             spark.createDataFrame(
@@ -377,7 +373,6 @@ def test_full_compaction_after_upsert_reconstructs_alive(spark, tmp_path):
     sink(victim, batch_id=0)
     m = compact_incremental(spark, sink, b, n_partitions=4)
     assert m["mode"] == "full"
-    assert not b.ckpt.is_done(UPSERT_MARK)
     assert not b.catalog.exists("tombstones")
     # upserted generation (and ONLY it) present; the streaming-update
     # contract is additive, so the victim's tf doubled — rebuild the
@@ -402,7 +397,7 @@ def test_full_compaction_after_upsert_reconstructs_alive(spark, tmp_path):
     corpus.unpersist()
 
 
-def test_merge_propagates_upsert_marker(spark, tmp_path):
+def test_purge_after_merging_an_upserted_index(spark, tmp_path):
     from antidb_spark.operators.merge import merge_index
 
     corpus = synth_transcripts(spark, n_convs=8, seed=19).cache()
@@ -425,11 +420,7 @@ def test_merge_propagates_upsert_marker(spark, tmp_path):
         ),
         n_partitions=4,
     )
-    assert not dst.ckpt.is_done(UPSERT_MARK)
     merge_index(spark, dst, src, n_partitions=4)
-    # marker must follow the superseded generations into dst, so dst's
-    # later purge/full-rebuild takes the alive_postings path
-    assert dst.ckpt.is_done(UPSERT_MARK)
     got = dst.query_pinned(s9, k=10).toPandas()
     assert set(
         map(tuple, got[["conv_id", "turn_idx"]].values.tolist())
@@ -511,7 +502,6 @@ def test_streaming_upsert_mode_is_o_delta(spark, tmp_path):
     assert m["mode"] == "upsert"
     assert m["n_replaced"] == 1
     assert m["pos_mode"] == "append" and m["meta_mode"] == "append"
-    assert b.ckpt.is_done(UPSERT_MARK)
     # O(delta): every committed block/pos_block file byte-identical
     after = _file_hashes(os.path.join(b.root, "blocks"))
     after_pos = _file_hashes(os.path.join(b.root, "pos_blocks"))
@@ -570,7 +560,7 @@ def test_streaming_upsert_mode_is_o_delta(spark, tmp_path):
 
 def test_streaming_upsert_mode_pure_insert_appends(spark, tmp_path):
     """update_mode='upsert' with only NEW docs behaves like the append
-    path (no tombstones, no marker) — the mode is safe as a default."""
+    path (no tombstones) — the mode is safe as a default."""
     corpus = synth_transcripts(spark, n_convs=8, seed=37).cache()
     corpus.count()
     base = corpus.filter(F.col("conv_id") < "conv_00000006")
@@ -583,7 +573,6 @@ def test_streaming_upsert_mode_pure_insert_appends(spark, tmp_path):
         spark, sink, b, n_partitions=4, update_mode="upsert"
     )
     assert m["mode"] == "upsert" and m["n_replaced"] == 0
-    assert not b.ckpt.is_done(UPSERT_MARK)
     assert b._n_tombstones() == 0
     ref = IndexBuilder(spark, str(tmp_path / "pi_ref"))
     ref.build(corpus, n_partitions=4)

@@ -109,7 +109,7 @@ def test_each_copy_took_its_tier(copies):
 
 def test_tiers_commit_equal_tables(copies):
     drv, spk, _ = copies
-    for table in ("docmap", "postings", "terms", "tombstones", "docmeta"):
+    for table in ("docmap", "terms", "tombstones", "docmeta"):
         assert _rows(drv, table) == _rows(spk, table), table
     assert (drv.catalog.read_arrow("stats").to_pylist()
             == spk.catalog.read_arrow("stats").to_pylist())
