@@ -45,7 +45,6 @@ Scale design (10^12 turns, 1000 executors):
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
@@ -57,7 +56,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from antidb_spark.functions.analyze import tokens
 from antidb_spark.functions.bm25 import contribution
 from antidb_spark.functions.packing import (
     segment_deltas,
@@ -402,16 +400,14 @@ class IndexBuilder:
         # commit by this builder or by another one on the same root
         # (upsert, compaction, merge, rollback) reaches the next query
         # with no caller invalidating anything. Whole-table values —
-        # corpus stats, tombstone state, docmap frame and schema — live
-        # in _heads (see _at_head), except the Spark schemas, which are
-        # keyed by the files' arrow schema (see _spark_schema) and so
-        # outlive commits that keep it; per-term values in bounded LRUs:
-        # df (terms table), pruned scan relations (blocks table), and
-        # decoded warm postings with their tf
-        # weights (blocks table + the avgdl those weights used) — the
-        # reference likewise keeps decompressed leaves in-process.
+        # corpus stats, tombstone state, docmap frame — live in _heads
+        # (see _at_head); per-term values in bounded LRUs: df (terms
+        # table), pruned scan relations (blocks table), and decoded warm
+        # postings with their tf weights (blocks table + the avgdl those
+        # weights used) — the reference likewise keeps decompressed
+        # leaves in-process. Spark schemas are the catalog's
+        # (Catalog.spark_schema), so no index read infers one twice.
         self._heads: dict[tuple[str, Any], tuple[str, Any]] = {}
-        self._schemas: dict[str, tuple[pa.Schema, T.StructType]] = {}
         self._dfs = _SnapshotLRU()
         self._postings = _SnapshotLRU(lambda v: v[0].size)
         self._scans = _SnapshotLRU()
@@ -576,6 +572,15 @@ class IndexBuilder:
             "term", "n_docs", "docs_packed", "tfs_packed", "dls_packed"
         ).mapInPandas(_decode_blocks, schema=_POSTINGS_OUT)
 
+    def _term_postings(self, terms: Sequence[str]) -> DataFrame:
+        """Decoded (term, doc_ord, tf, dl) postings of ``terms``, from
+        their manifest-pruned blocks (tombstoned docs included)."""
+        terms = list(terms)
+        return self._decoded_postings(
+            self.catalog.read_pruned("blocks", "term", terms)
+            .filter(F.col("term").isin(terms))
+        )
+
     def _alive_postings(self) -> DataFrame:
         """(term, *id_cols, tf) of the alive documents: the committed
         blocks decoded, tombstones dropped, ids resolved via the docmap.
@@ -596,17 +601,15 @@ class IndexBuilder:
     def _blocks_scan(self, q_terms: Sequence[str]) -> DataFrame:
         """Manifest-pruned blocks relation, cached by resolved file list
         (repeat batches over the same files skip re-planning the scan)."""
+        terms = list(q_terms)
         snap = self.catalog.manifest("blocks")["snapshot_id"]
-        paths = self.catalog.pruned_file_paths("blocks", "term", list(q_terms))
-        if paths is None:
-            return self.catalog.read("blocks")
-        if not paths:
-            return self.catalog.read("blocks").limit(0)
+        paths = self.catalog.pruned_file_paths("blocks", "term", terms)
+        if not paths:  # no stats (a full scan), or nothing can match
+            return self.catalog.read_pruned("blocks", "term", terms)
         key = tuple(sorted(paths))
-        schema = self._spark_schema("blocks")
         return self._scans.get(
             snap, [key],
-            lambda _: {key: self.spark.read.schema(schema).parquet(*paths)},
+            lambda _: {key: self.catalog.read_pruned("blocks", "term", terms)},
             self.SCAN_CACHE_MAX,
         )[key]
 
@@ -646,27 +649,6 @@ class IndexBuilder:
         if hit is None or hit[0] != snap:
             hit = self._heads[key] = (snap, load())
         return hit[1]
-
-    def _spark_schema(self, table: str) -> T.StructType:
-        """Spark schema of ``table``'s head snapshot. Inferring it is a
-        Spark job, so it is cached by the arrow schema of the head's
-        first file, metadata included (a cached footer, no job; Spark
-        writes its own schema into that metadata): a commit that keeps
-        the schema, as every append and upsert does, infers nothing, so
-        the first query after an upsert runs no inference job."""
-        arrow = self.catalog.arrow_schema(table)
-        if arrow is None:  # no data file: nothing to key on
-            return self.catalog.read(table).schema
-        hit = self._schemas.get(table)
-        if hit is None or not hit[0].equals(arrow, check_metadata=True):
-            hit = self._schemas[table] = (
-                arrow, self.catalog.read(table).schema
-            )
-        return hit[1]
-
-    def _docmap_schema(self) -> T.StructType:
-        """Spark schema of the docmap (see :meth:`_spark_schema`)."""
-        return self._spark_schema("docmap")
 
     #: every table an index may commit, in rollback order (the stage-0
     #: ``postings`` table is build scratch, never committed past build)
@@ -746,9 +728,7 @@ class IndexBuilder:
         an index without deletes)."""
         if not self._n_tombstones():
             return None
-        return self.catalog.read(
-            "tombstones", schema=self._spark_schema("tombstones")
-        ).select("doc_ord")
+        return self.catalog.read("tombstones").select("doc_ord")
 
     def _drop_tombstones(self, df: DataFrame) -> DataFrame:
         """Anti-join a doc_ord-bearing relation against the tombstones
@@ -822,7 +802,7 @@ class IndexBuilder:
             hits = pa.table({"doc_ord": self._alive_ords_of(rows)})
         else:
             if ids is None:
-                dm_schema = self._docmap_schema()
+                dm_schema = self.catalog.spark_schema("docmap")
                 ids = self.spark.createDataFrame(
                     rows, T.StructType([dm_schema[c] for c in self.id_cols])
                 )
@@ -1237,7 +1217,7 @@ class IndexBuilder:
            docmap via manifest-pruned pyarrow (no docmap scan job).
         """
         plan = self._plan_queries(queries)
-        dm_schema = self._docmap_schema()
+        dm_schema = self.catalog.spark_schema("docmap")
         out_schema = T.StructType(
             [T.StructField("query_id", T.IntegerType(), False)]
             + [dm_schema[c] for c in self.id_cols]
@@ -1599,16 +1579,13 @@ class IndexBuilder:
         """Batch point lookup from packed blocks: (query_ord, *id_cols,
         tf), per-query groups in argument order, ties in (*id_cols)
         order, miss → empty (multiset semantics, SURVEY §2.4)."""
-        uniq = list(dict.fromkeys(terms))
-        # cached Spark schemas: defining the lookup infers nothing
-        blocks = self.catalog.read_pruned(
-            "blocks", "term", uniq, schema=self._spark_schema("blocks")
-        ).filter(F.col("term").isin(uniq))
-        post = self._drop_tombstones(self._decoded_postings(blocks))
+        post = self._drop_tombstones(
+            self._term_postings(dict.fromkeys(terms))
+        )
         qdf = self.spark.createDataFrame(
             [(i, t) for i, t in enumerate(terms)], "query_ord int, term string"
         )
-        docmap = self.catalog.read("docmap", schema=self._docmap_schema())
+        docmap = self.catalog.read("docmap")
         return (
             post.join(F.broadcast(qdf), "term")
             .join(docmap.select("doc_ord", *self.id_cols), "doc_ord")
@@ -1623,27 +1600,11 @@ class IndexBuilder:
 
         if start > end:
             raise QueryStartGtEndError(start, end)
-        man = self.catalog.manifest("blocks")
-        keep = [
-            e for e in man["files"]
-            if e.get("min_term") is None
-            or not (e["max_term"] < start or e["min_term"] > end)
-        ]
-        # cached Spark schemas: defining the scan infers nothing
-        schema = self._spark_schema("blocks")
-        if keep:
-            paths = [
-                os.path.join(self.catalog.table_dir("blocks"), e["path"])
-                for e in keep
-            ]
-            blocks = self.spark.read.schema(schema).parquet(*paths)
-        else:  # nothing overlaps → empty relation with the right schema
-            blocks = self.spark.createDataFrame([], schema)
-        blocks = blocks.filter(
-            (F.col("term") >= start) & (F.col("term") <= end)
-        )
+        blocks = self.catalog.read_pruned(
+            "blocks", "term", lo=start, hi=end
+        ).filter((F.col("term") >= start) & (F.col("term") <= end))
         post = self._drop_tombstones(self._decoded_postings(blocks))
-        docmap = self.catalog.read("docmap", schema=self._docmap_schema())
+        docmap = self.catalog.read("docmap")
         return (
             post.join(docmap.select("doc_ord", *self.id_cols), "doc_ord")
             .select("term", *self.id_cols, "tf", "doc_ord")
@@ -1671,15 +1632,11 @@ class IndexBuilder:
         import operator as _op
         from functools import reduce
 
-        # cached Spark schemas: defining the scores infers nothing
-        blocks = self.catalog.read_pruned(
-            "blocks", "term", q_terms, schema=self._spark_schema("blocks")
-        ).filter(F.col("term").isin(list(q_terms)))
-        post = self._decoded_postings(blocks)
-        dfs = self.catalog.read(
-            "terms", schema=self._spark_schema("terms")
-        ).filter(F.col("term").isin(list(q_terms)))
-        stats = self.catalog.read("stats", schema=self._spark_schema("stats"))
+        post = self._term_postings(q_terms)
+        dfs = self.catalog.read("terms").filter(
+            F.col("term").isin(list(q_terms))
+        )
+        stats = self.catalog.read("stats")
         per_term = (
             post.join(F.broadcast(dfs), "term")
             .crossJoin(F.broadcast(stats))
@@ -1706,7 +1663,7 @@ class IndexBuilder:
         )
 
     def _empty_topk(self) -> DataFrame:
-        dm = self._docmap_schema()
+        dm = self.catalog.spark_schema("docmap")
         schema = ", ".join(
             f"{c} {dm[c].dataType.simpleString()}"
             for c in self.id_cols
@@ -1740,9 +1697,9 @@ class IndexBuilder:
                 raise ValueError(
                     f"after must be (score, {', '.join(self.id_cols)})"
                 )
-            docmap_ids = self.catalog.read(
-                "docmap", schema=self._docmap_schema()
-            ).select("doc_ord", *self.id_cols)
+            docmap_ids = self.catalog.read("docmap").select(
+                "doc_ord", *self.id_cols
+            )
             lex = F.lit(False)
             prefix_eq = F.lit(True)
             for c, v in zip(self.id_cols, ids_after):
@@ -1758,7 +1715,7 @@ class IndexBuilder:
                 F.col("score") < F.lit(float(s_after))
             ).unionByName(tied)
         top = top.orderBy(F.desc("score"), F.asc("doc_ord")).limit(k)
-        docmap = self.catalog.read("docmap", schema=self._docmap_schema())
+        docmap = self.catalog.read("docmap")
         return (
             docmap.select("doc_ord", *self.id_cols)
             .join(F.broadcast(top), "doc_ord")
@@ -1767,14 +1724,25 @@ class IndexBuilder:
             .drop("doc_ord")
         )
 
-    def _excluded_ords(self, ex_terms: Sequence[str]) -> DataFrame:
-        """Distinct doc_ords containing ANY of ``ex_terms`` (the NOT
-        side), from manifest-pruned blocks — an anti-join input sized by
-        the excluded terms' postings, never the corpus."""
-        blocks = self.catalog.read_pruned(
-            "blocks", "term", ex_terms, schema=self._spark_schema("blocks")
-        ).filter(F.col("term").isin(list(ex_terms)))
-        return self._decoded_postings(blocks).select("doc_ord").distinct()
+    def _matching_ords(
+        self, terms: Sequence[str], require_all: bool = False
+    ) -> DataFrame:
+        """Distinct alive doc_ords holding ANY of ``terms`` (EVERY one
+        with ``require_all``), from their manifest-pruned blocks — a
+        match test with no scoring, sized by the terms' postings, never
+        the corpus. The candidate set of the facets, ``hit_count`` and
+        ``significant_terms``, and the NOT side of the pinned family."""
+        post = self._term_postings(terms).select("term", "doc_ord")
+        if require_all:
+            cand = (
+                post.groupBy("doc_ord")
+                .agg(F.count_distinct("term").alias("_nt"))
+                .filter(F.col("_nt") == len(terms))
+                .select("doc_ord")
+            )
+        else:
+            cand = post.select("doc_ord").distinct()
+        return self._drop_tombstones(cand)
 
     def query_pinned(
         self,
@@ -1818,7 +1786,7 @@ class IndexBuilder:
         ex_terms = sorted(set(py_tokens(exclude))) if exclude else []
         if ex_terms:
             scored = scored.join(
-                self._excluded_ords(ex_terms), "doc_ord", "left_anti"
+                self._matching_ords(ex_terms), "doc_ord", "left_anti"
             )
         return self._resolve_topk(
             scored.select("doc_ord", "score"), k, after=after
@@ -1858,10 +1826,7 @@ class IndexBuilder:
         top_ords = dm.join(F.broadcast(tops), list(self.id_cols)).select(
             "doc_ord", *self.id_cols, "score"
         )
-        blocks = self.catalog.read_pruned("blocks", "term", q_terms).filter(
-            F.col("term").isin(q_terms)
-        )
-        post = self._decoded_postings(blocks).join(
+        post = self._term_postings(q_terms).join(
             F.broadcast(top_ords), "doc_ord"
         )
         dfs = self.catalog.read("terms").filter(F.col("term").isin(q_terms))
@@ -1910,29 +1875,17 @@ class IndexBuilder:
         from antidb_spark.functions.analyze import py_tokens
 
         gcols = list(group_cols)
-        unknown = [c for c in gcols if c not in self.id_cols]
-        if unknown:
-            # group attributes may live in docmeta instead (documents:
-            # source/lang) — same resolution rule as group_top_hits
-            if not self.ckpt.is_done("docmeta"):
-                raise ValueError(
-                    f"group_cols {unknown} not in id_cols "
-                    f"{list(self.id_cols)} and docmeta is not built"
-                )
-            meta = self.catalog.read("docmeta")
-            missing = [c for c in gcols if c not in meta.columns]
-            if missing:
-                # one source serves the whole group key: mixing id
-                # components with docmeta attrs needs the attrs
-                # (or ids) duplicated into docmeta at build_doc_meta
-                raise ValueError(
-                    f"group_cols {missing} not all in docmeta columns "
-                    f"{[c for c in meta.columns if c != 'doc_ord']}"
-                )
+        # group attributes may live in docmeta instead (documents:
+        # source/lang) — same resolution rule as group_top_hits. One
+        # source serves the whole group key: mixing id components with
+        # docmeta attrs needs the ids duplicated into docmeta
+        src = (
+            self.catalog.read("docmap")
+            if all(c in self.id_cols for c in gcols)
+            else self._docmeta(*gcols)
+        )
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
-            src = self.catalog.read("docmap") if not unknown \
-                else self.catalog.read("docmeta")
             schema = ", ".join(
                 [f"{c} {src.schema[c].dataType.simpleString()}"
                  for c in gcols]
@@ -1942,12 +1895,8 @@ class IndexBuilder:
         scored = self._drop_tombstones(
             self._pinned_doc_scores(q_terms).select("doc_ord", "score")
         )
-        gsrc = (
-            self.catalog.read("docmap") if not unknown
-            else self.catalog.read("docmeta")
-        ).select("doc_ord", *gcols)
         return (
-            scored.join(gsrc, "doc_ord")
+            scored.join(src.select("doc_ord", *gcols), "doc_ord")
             .groupBy(*gcols)
             .agg(
                 F.count(F.lit(1)).alias("n_hits"),
@@ -2005,7 +1954,7 @@ class IndexBuilder:
         ex_terms = sorted(set(py_tokens(must_not))) if must_not else []
         if ex_terms:
             scored = scored.join(
-                self._excluded_ords(ex_terms), "doc_ord", "left_anti"
+                self._matching_ords(ex_terms), "doc_ord", "left_anti"
             )
         return self._resolve_topk(
             scored.select("doc_ord", "score"), k
@@ -2057,10 +2006,7 @@ class IndexBuilder:
         mapping = self.spark.createDataFrame(
             pairs, "term string, rep string"
         )
-        blocks = self.catalog.read_pruned("blocks", "term", all_terms).filter(
-            F.col("term").isin(all_terms)
-        )
-        post = self._decoded_postings(blocks)
+        post = self._term_postings(all_terms)
         # one row per (rep, doc): the group's blended tf; dl is a
         # per-doc constant so max() just carries it through
         grouped = (
@@ -2583,7 +2529,7 @@ class IndexBuilder:
                 return self.spark.createDataFrame(
                     [], self._termvec_schema()
                 )
-            dm_schema = self._docmap_schema()
+            dm_schema = self.catalog.spark_schema("docmap")
             docs = self.spark.createDataFrame(
                 rows, T.StructType([dm_schema[c] for c in self.id_cols])
             )
@@ -2621,7 +2567,7 @@ class IndexBuilder:
         return out.select(*self.id_cols, "term", "tf", "dl", "df")
 
     def _termvec_schema(self) -> T.StructType:
-        dm = self._docmap_schema()
+        dm = self.catalog.spark_schema("docmap")
         return T.StructType(
             [dm[c] for c in self.id_cols]
             + [
@@ -2770,10 +2716,8 @@ class IndexBuilder:
             raise ValueError(
                 f"half_life_days must be > 0, got {half_life_days}"
             )
-        if not self.ckpt.is_done("docmeta"):
-            raise ValueError(
-                "docmeta not built (build_doc_meta(corpus, [age_col]))"
-            )
+        ages = self._docmeta(age_col).select("doc_ord", age_col)
+
         import operator as _op
         from functools import reduce
 
@@ -2781,7 +2725,6 @@ class IndexBuilder:
         if not q_terms:
             return self._empty_topk()
         scored = self._pinned_doc_scores(q_terms)
-        ages = self.catalog.read("docmeta").select("doc_ord", age_col)
         decay = F.lit(1.0) / (
             F.lit(1.0)
             + F.col(age_col).cast("double") / F.lit(float(half_life_days))
@@ -2808,7 +2751,7 @@ class IndexBuilder:
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
             return self.spark.createDataFrame([(0,)], "n_docs bigint")
-        return self._drop_tombstones(self._excluded_ords(q_terms)).agg(
+        return self._matching_ords(q_terms).agg(
             F.count(F.lit(1)).alias("n_docs")
         )
 
@@ -2851,6 +2794,21 @@ class IndexBuilder:
         )
         return man
 
+    def _docmeta(self, *cols: str) -> DataFrame:
+        """The committed ``docmeta`` relation, which must exist and
+        carry every column of ``cols`` (``ValueError`` otherwise)."""
+        if not self.ckpt.is_done("docmeta"):
+            raise ValueError(
+                "docmeta not built (build_doc_meta(corpus, meta_cols))"
+            )
+        meta = self.catalog.read("docmeta")
+        missing = [c for c in cols if c not in meta.columns]
+        if missing:
+            raise ValueError(
+                f"not docmeta columns: {', '.join(map(repr, missing))}"
+            )
+        return meta
+
     def facet_counts(
         self, query: str, facet_col: str, require_all: bool = False
     ) -> DataFrame:
@@ -2868,33 +2826,14 @@ class IndexBuilder:
         the facet agg is a map-side-combinable count."""
         from antidb_spark.functions.analyze import py_tokens
 
-        if not self.ckpt.is_done("docmeta"):
-            raise ValueError(
-                "docmeta not built (build_doc_meta(corpus, meta_cols))"
-            )
-        meta = self.catalog.read("docmeta")
-        if facet_col not in meta.columns:
-            raise ValueError(f"{facet_col!r} is not a docmeta column")
+        meta = self._docmeta(facet_col)
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
             return self.spark.createDataFrame(
                 [], f"facet {meta.schema[facet_col].dataType.simpleString()}"
                 ", n_docs long",
             )
-        blocks = self.catalog.read_pruned("blocks", "term", q_terms).filter(
-            F.col("term").isin(q_terms)
-        )
-        post = self._decoded_postings(blocks).select("term", "doc_ord")
-        if require_all:
-            cand = (
-                post.groupBy("doc_ord")
-                .agg(F.count_distinct("term").alias("_nt"))
-                .filter(F.col("_nt") == len(q_terms))
-                .select("doc_ord")
-            )
-        else:
-            cand = post.select("doc_ord").distinct()
-        cand = self._drop_tombstones(cand)
+        cand = self._matching_ords(q_terms, require_all)
         return (
             meta.join(cand, "doc_ord", "left_semi")
             .groupBy(F.col(facet_col).alias("facet"))
@@ -2918,30 +2857,11 @@ class IndexBuilder:
 
         if width <= 0:
             raise ValueError("width must be positive")
-        if not self.ckpt.is_done("docmeta"):
-            raise ValueError(
-                "docmeta not built (build_doc_meta(corpus, meta_cols))"
-            )
-        meta = self.catalog.read("docmeta")
-        if facet_col not in meta.columns:
-            raise ValueError(f"{facet_col!r} is not a docmeta column")
+        meta = self._docmeta(facet_col)
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
             return self.spark.createDataFrame([], "bucket long, n_docs long")
-        blocks = self.catalog.read_pruned("blocks", "term", q_terms).filter(
-            F.col("term").isin(q_terms)
-        )
-        post = self._decoded_postings(blocks).select("term", "doc_ord")
-        if require_all:
-            cand = (
-                post.groupBy("doc_ord")
-                .agg(F.count_distinct("term").alias("_nt"))
-                .filter(F.col("_nt") == len(q_terms))
-                .select("doc_ord")
-            )
-        else:
-            cand = post.select("doc_ord").distinct()
-        cand = self._drop_tombstones(cand)
+        cand = self._matching_ords(q_terms, require_all)
         v = F.col(facet_col).cast("long")
         return (
             meta.join(cand, "doc_ord", "left_semi")
@@ -2978,18 +2898,10 @@ class IndexBuilder:
 
         if not clauses:
             raise ValueError("at least one clause required")
-        if group_col in self.id_cols:
-            gsrc = self.catalog.read("docmap").select("doc_ord", group_col)
-        else:
-            if not self.ckpt.is_done("docmeta"):
-                raise ValueError(
-                    f"{group_col!r} is not an id column and docmeta is "
-                    "not built (build_doc_meta(corpus, meta_cols))"
-                )
-            meta = self.catalog.read("docmeta")
-            if group_col not in meta.columns:
-                raise ValueError(f"{group_col!r} is not a docmeta column")
-            gsrc = meta.select("doc_ord", group_col)
+        gsrc = (
+            self.catalog.read("docmap") if group_col in self.id_cols
+            else self._docmeta(group_col)
+        ).select("doc_ord", group_col)
         per_clause = []
         for i, clause in enumerate(clauses):
             q_terms = sorted(set(py_tokens(clause)))
@@ -3032,32 +2944,13 @@ class IndexBuilder:
         ``facet_counts``."""
         from antidb_spark.functions.analyze import py_tokens
 
-        if not self.ckpt.is_done("docmeta"):
-            raise ValueError(
-                "docmeta not built (build_doc_meta(corpus, meta_cols))"
-            )
-        meta = self.catalog.read("docmeta")
-        if facet_col not in meta.columns:
-            raise ValueError(f"{facet_col!r} is not a docmeta column")
+        meta = self._docmeta(facet_col)
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
             return self.spark.createDataFrame(
                 [(0, 0)], "n_values bigint, n_docs bigint"
             ).filter(F.lit(False))
-        blocks = self.catalog.read_pruned("blocks", "term", q_terms).filter(
-            F.col("term").isin(q_terms)
-        )
-        post = self._decoded_postings(blocks).select("term", "doc_ord")
-        if require_all:
-            cand = (
-                post.groupBy("doc_ord")
-                .agg(F.count_distinct("term").alias("_nt"))
-                .filter(F.col("_nt") == len(q_terms))
-                .select("doc_ord")
-            )
-        else:
-            cand = post.select("doc_ord").distinct()
-        cand = self._drop_tombstones(cand)
+        cand = self._matching_ords(q_terms, require_all)
         return meta.join(cand, "doc_ord", "left_semi").agg(
             F.count_distinct(facet_col).alias("n_values"),
             F.count(F.lit(1)).alias("n_docs"),
@@ -3097,7 +2990,7 @@ class IndexBuilder:
         out_schema = "term string, fg_df bigint, bg_df bigint, score double"
         if not q_terms:
             return self.spark.createDataFrame([], out_schema)
-        fg = self._drop_tombstones(self._excluded_ords(q_terms))
+        fg = self._matching_ords(q_terms)
         fg_n = fg.agg(F.count(F.lit(1)).alias("n_fg"))
         post = self._decoded_postings(
             self.catalog.read("blocks")
@@ -3198,22 +3091,14 @@ class IndexBuilder:
         from antidb_spark.functions.analyze import py_tokens
 
         q_terms = sorted(set(py_tokens(query)))
-        if group_col in self.id_cols:
-            gsrc = self.catalog.read("docmap").select("doc_ord", group_col)
-        else:
-            if not self.ckpt.is_done("docmeta"):
-                raise ValueError(
-                    f"{group_col!r} is not an id column and docmeta is "
-                    "not built (build_doc_meta(corpus, meta_cols))"
-                )
-            meta = self.catalog.read("docmeta")
-            if group_col not in meta.columns:
-                raise ValueError(f"{group_col!r} is not a docmeta column")
-            gsrc = meta.select("doc_ord", group_col)
+        gsrc = (
+            self.catalog.read("docmap") if group_col in self.id_cols
+            else self._docmeta(group_col)
+        ).select("doc_ord", group_col)
         id_out = [c for c in self.id_cols if c != group_col]
         if not q_terms:
             gt = gsrc.schema[group_col].dataType.simpleString()
-            dm = self._docmap_schema()
+            dm = self.catalog.spark_schema("docmap")
             schema = ", ".join(
                 [f"{group_col} {gt}", "best_score double", "rank int"]
                 + [f"{c} {dm[c].dataType.simpleString()}"
@@ -3327,10 +3212,7 @@ class IndexBuilder:
         docs resolve ids."""
         from antidb_spark.functions.analyze import py_tokens
 
-        if not self.ckpt.is_done("docmeta"):
-            raise ValueError(
-                "docmeta not built (build_doc_meta(corpus, meta_cols))"
-            )
+        meta = self._docmeta()
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
             return self._empty_topk()
@@ -3341,10 +3223,8 @@ class IndexBuilder:
         ex_terms = sorted(set(py_tokens(exclude))) if exclude else []
         if ex_terms:
             scored = scored.join(
-                self._excluded_ords(ex_terms), "doc_ord", "left_anti"
+                self._matching_ords(ex_terms), "doc_ord", "left_anti"
             )
-        keep = self.catalog.read("docmeta").filter(F.expr(where))
-        filtered = scored.join(
-            keep.select("doc_ord"), "doc_ord", "left_semi"
-        )
+        keep = meta.filter(F.expr(where)).select("doc_ord")
+        filtered = scored.join(keep, "doc_ord", "left_semi")
         return self._resolve_topk(filtered.select("doc_ord", "score"), k)

@@ -112,10 +112,7 @@ def federated_topk(
 
     outs = []
     for b in builders:
-        blocks = b.catalog.read_pruned("blocks", "term", q_terms).filter(
-            F.col("term").isin(q_terms)
-        )
-        post = b._drop_tombstones(b._decoded_postings(blocks))
+        post = b._drop_tombstones(b._term_postings(q_terms))
         # pinned float discipline: per-term partials summed in
         # sorted-term fixed order, rounded to 4dp before ranking (the
         # same association order as the single-index path and the SQL

@@ -167,10 +167,7 @@ class FieldedIndex:
             b = self.sub[f]
             b_f = float(bs.get(f, B))
             _, avgdl = b._corpus_stats()
-            blocks = b.catalog.read_pruned("blocks", "term", reps).filter(
-                F.col("term").isin(reps)
-            )
-            post = b._decoded_postings(blocks)
+            post = b._term_postings(reps)
             norm = F.lit(1.0 - b_f) + F.lit(b_f) * (
                 F.col("dl").cast("double") / F.lit(float(avgdl))
             )

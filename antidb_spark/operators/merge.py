@@ -171,7 +171,7 @@ def merge_index(
         .withColumn("_pid", F.spark_partition_id())
         .mapInPandas(
             partial(_remap_partition, offset=offset, run_base=n_runs << 48),
-            schema=src.catalog.read("blocks").schema,
+            schema=src.catalog.spark_schema("blocks"),
         )
     )
     dst.catalog.write(
@@ -193,7 +193,7 @@ def merge_index(
                 .mapInPandas(
                     partial(_remap_partition, offset=offset,
                             run_base=pn_runs << 48),
-                    schema=src.catalog.read("pos_blocks").schema,
+                    schema=src.catalog.spark_schema("pos_blocks"),
                 )
             )
             dst.catalog.write(

@@ -48,7 +48,7 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -309,15 +309,39 @@ def build_positional_index(
 
 
 def _empty_phrase_result(builder) -> DataFrame:
-    dm = builder.catalog.read("docmap")
+    dm = builder.catalog.spark_schema("docmap")
     schema = ", ".join(
-        [
-            f"{c} {dm.schema[c].dataType.simpleString()}"
-            for c in builder.id_cols
-        ]
+        [f"{c} {dm[c].dataType.simpleString()}" for c in builder.id_cols]
         + ["phrase_freq long"]
     )
     return builder.spark.createDataFrame([], schema)
+
+
+def _pos_postings(builder, terms: Sequence[str]) -> DataFrame:
+    """Decoded (term, doc_ord, pos) rows of ``terms``, from their
+    manifest-pruned ``pos_blocks`` (tombstoned docs included)."""
+    terms = list(terms)
+    return (
+        builder.catalog.read_pruned("pos_blocks", "term", terms)
+        .filter(F.col("term").isin(terms))
+        .select("term", "n_docs", "docs_packed", "tfs_packed", "pos_packed")
+        .mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
+    )
+
+
+def _id_rows(builder, per_doc: DataFrame, rank: Column) -> DataFrame:
+    """The alive rows of the per-doc relation ``per_doc``, doc_ord
+    resolved to id_cols through the docmap, ordered by ``rank`` and then
+    the ids."""
+    ids = list(builder.id_cols)
+    cols = [c for c in per_doc.columns if c != "doc_ord"]
+    return (
+        builder._drop_tombstones(per_doc)
+        .join(builder.catalog.read("docmap").select("doc_ord", *ids),
+              "doc_ord")
+        .select(*ids, *cols)
+        .orderBy(rank, *[F.asc(c) for c in ids])
+    )
 
 
 def phrase_query(builder, phrase: str) -> DataFrame:
@@ -350,15 +374,8 @@ def _slot_anchored_freq(builder, slot_rows, n_slots: int) -> DataFrame:
     slot an anchor can only arise once (one token per position), so a
     plain count suffices even when a slot maps to MANY terms (the
     prefix-expansion case)."""
-    uniq = sorted({t for _, t in slot_rows})
-    blocks = builder.catalog.read_pruned("pos_blocks", "term", uniq).filter(
-        F.col("term").isin(uniq)
-    )
-    decoded = blocks.select(
-        "term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"
-    ).mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
-    spark = builder.spark
-    slots = spark.createDataFrame(slot_rows, "slot int, term string")
+    decoded = _pos_postings(builder, sorted({t for _, t in slot_rows}))
+    slots = builder.spark.createDataFrame(slot_rows, "slot int, term string")
     anchors = (
         decoded.join(F.broadcast(slots), "term")
         .select("doc_ord", (F.col("pos") - F.col("slot")).alias("anchor"))
@@ -369,17 +386,10 @@ def _slot_anchored_freq(builder, slot_rows, n_slots: int) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_slots"))
         .filter(F.col("n_slots") == n_slots)
     )
-    freq = builder._drop_tombstones(
-        matched.groupBy("doc_ord").agg(
-            F.count(F.lit(1)).alias("phrase_freq")
-        )
+    freq = matched.groupBy("doc_ord").agg(
+        F.count(F.lit(1)).alias("phrase_freq")
     )
-    docmap = builder.catalog.read("docmap")
-    return (
-        freq.join(docmap.select("doc_ord", *builder.id_cols), "doc_ord")
-        .select(*builder.id_cols, "phrase_freq")
-        .orderBy(F.desc("phrase_freq"), *[F.asc(c) for c in builder.id_cols])
-    )
+    return _id_rows(builder, freq, F.desc("phrase_freq"))
 
 
 def phrase_prefix_query(
@@ -442,12 +452,7 @@ def near_query(
         raise ValueError("near_query terms must differ")
     if not builder.ckpt.is_done("pos_blocks"):
         raise ValueError("positional index not built (build_positional_index)")
-    blocks = builder.catalog.read_pruned(
-        "pos_blocks", "term", [ta, tb]
-    ).filter(F.col("term").isin([ta, tb]))
-    decoded = blocks.select(
-        "term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"
-    ).mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
+    decoded = _pos_postings(builder, [ta, tb])
     pa_ = decoded.filter(F.col("term") == ta).select(
         "doc_ord", F.col("pos").alias("pa")
     )
@@ -459,18 +464,11 @@ def near_query(
         .withColumn("dist", F.abs(F.col("pa") - F.col("pb")))
         .filter(F.col("dist") <= window)
     )
-    per_doc = builder._drop_tombstones(
-        pairs.groupBy("doc_ord").agg(
-            F.min("dist").cast("long").alias("min_dist"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
+    per_doc = pairs.groupBy("doc_ord").agg(
+        F.min("dist").cast("long").alias("min_dist"),
+        F.count(F.lit(1)).alias("n_pairs"),
     )
-    dm = builder.catalog.read("docmap")
-    return (
-        per_doc.join(dm.select("doc_ord", *builder.id_cols), "doc_ord")
-        .select(*builder.id_cols, "min_dist", "n_pairs")
-        .orderBy(F.asc("min_dist"), *[F.asc(c) for c in builder.id_cols])
-    )
+    return _id_rows(builder, per_doc, F.asc("min_dist"))
 
 
 def near_warm(
@@ -492,23 +490,13 @@ def near_warm(
     if not builder.ckpt.is_done("pos_blocks"):
         raise ValueError("positional index not built (build_positional_index)")
     cols = [*builder.id_cols, "min_dist", "n_pairs"]
-    dfs = builder.catalog.read_pruned_arrow(
-        "terms", "term", [ta, tb], columns=["term", "df"]
-    )
-    est_blocks = sum(
-        (int(d) + POS_BLOCK_SIZE - 1) // POS_BLOCK_SIZE
-        for d in dfs.column("df").to_pylist()
-    )
-    if est_blocks > PHRASE_WARM_MAX_BLOCKS:
+    if not _fits_warm(builder, [ta, tb]):
         out = near_query(builder, ta, tb, window).toPandas()
         return out.reset_index(drop=True)
-    tbl = builder.catalog.read_pruned_arrow(
-        "pos_blocks", "term", [ta, tb],
-        columns=["term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"],
-    ).to_pandas()
-    if not len(tbl):
+    got = _warm_positions(builder, [ta, tb])
+    if got is None:
         return pd.DataFrame(columns=cols)
-    uniq_terms, tids, ords, pos = _decode_pos_batch(tbl)
+    uniq_terms, tids, ords, pos = got
     tindex = {t: i for i, t in enumerate(uniq_terms)}
     if ta not in tindex or tb not in tindex:
         return pd.DataFrame(columns=cols)
@@ -544,23 +532,9 @@ def near_warm(
     n_pairs = np.bincount(inv, weights=hn).astype(np.int64)
     min_dist = np.full(u.size, np.iinfo(np.int64).max)
     np.minimum.at(min_dist, inv, hnn)
-    ts = builder._tomb_state()
-    if ts is not None:
-        alive = _alive_bits(ts[0], u)
-        u, n_pairs, min_dist = u[alive], n_pairs[alive], min_dist[alive]
-        if u.size == 0:
-            return pd.DataFrame(columns=cols)
-    dm = (
-        builder.catalog.read_pruned_arrow(
-            "docmap", "doc_ord", values=[int(o) for o in u],
-            columns=["doc_ord", *builder.id_cols],
-        )
-        .to_pandas()
-        .set_index("doc_ord")
-    )
-    out = dm.loc[u, list(builder.id_cols)].reset_index(drop=True)
-    out["min_dist"] = min_dist
-    out["n_pairs"] = n_pairs
+    out = _alive_rows(builder, u, min_dist=min_dist, n_pairs=n_pairs)
+    if out is None:
+        return pd.DataFrame(columns=cols)
     return out.sort_values(
         ["min_dist", *builder.id_cols]
     ).reset_index(drop=True)
@@ -599,14 +573,8 @@ def term_positions(builder, query: str, k: int = 10) -> DataFrame:
         .limit(k)
         .select("doc_ord")
     )
-    blocks = builder.catalog.read_pruned("pos_blocks", "term", terms).filter(
-        F.col("term").isin(terms)
-    )
-    decoded = blocks.select(
-        "term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"
-    ).mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
     hits = (
-        decoded.join(F.broadcast(top), "doc_ord")
+        _pos_postings(builder, terms).join(F.broadcast(top), "doc_ord")
         .groupBy("doc_ord", "term")
         .agg(
             F.min("pos").alias("first_pos"),
@@ -635,17 +603,9 @@ def term_positions_warm(builder, query: str, k: int = 10) -> pd.DataFrame:
         raise ValueError("positional index not built (build_positional_index)")
     if not terms:
         return pd.DataFrame(columns=cols)
-    dfs = builder.catalog.read_pruned_arrow(
-        "terms", "term", terms, columns=["term", "df"]
-    )
-    est_blocks = sum(
-        (int(d) + POS_BLOCK_SIZE - 1) // POS_BLOCK_SIZE
-        for d in dfs.column("df").to_pylist()
-    )
     r = (
-        None
-        if est_blocks > PHRASE_WARM_MAX_BLOCKS
-        else builder._warm_top_ords(query, k)
+        builder._warm_top_ords(query, k) if _fits_warm(builder, terms)
+        else None
     )
     if r is None:
         out = term_positions(builder, query, k=k).toPandas()
@@ -653,13 +613,10 @@ def term_positions_warm(builder, query: str, k: int = 10) -> pd.DataFrame:
     top, _scores = r
     if top.size == 0:
         return pd.DataFrame(columns=cols)
-    tbl = builder.catalog.read_pruned_arrow(
-        "pos_blocks", "term", terms,
-        columns=["term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"],
-    ).to_pandas()
-    if not len(tbl):
+    got = _warm_positions(builder, terms)
+    if got is None:
         return pd.DataFrame(columns=cols)
-    uniq_terms, tids, ords, pos = _decode_pos_batch(tbl)
+    uniq_terms, tids, ords, pos = got
     # pruned files can carry neighbor terms from the same row group —
     # keep only the query's terms, then only the top-k docs
     keep_tid = np.isin(uniq_terms, terms)
@@ -696,6 +653,38 @@ _WARM_SHIFT = 33
 # too much on one core — fall back to the distributed phrase_query
 # (same gate design as IndexBuilder.WARM_MAX_BLOCKS)
 PHRASE_WARM_MAX_BLOCKS = 5_000
+
+
+def _fits_warm(builder, terms: Sequence[str]) -> bool:
+    """Whether the positional blocks of ``terms``, Σ ceil(df /
+    POS_BLOCK_SIZE) by the terms table, fit ``PHRASE_WARM_MAX_BLOCKS``."""
+    dfs = builder._term_dfs(terms).values()
+    return sum(-(-d // POS_BLOCK_SIZE) for d in dfs) <= PHRASE_WARM_MAX_BLOCKS
+
+
+def _warm_positions(builder, terms: Sequence[str]):
+    """``_decode_pos_batch`` of ``terms``' positional blocks, read with
+    manifest-pruned pyarrow (no Spark job); None when there are none."""
+    tbl = builder.catalog.read_pruned_arrow(
+        "pos_blocks", "term", list(terms),
+        columns=["term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"],
+    ).to_pandas()
+    return _decode_pos_batch(tbl) if len(tbl) else None
+
+
+def _alive_rows(builder, ords: np.ndarray, **cols: np.ndarray):
+    """(*id_cols, *cols) of the alive ones of the distinct doc ordinals
+    ``ords`` (each value array of ``cols`` aligned with them), ids from
+    the builder's docmap resolve; None when no ordinal is alive."""
+    ts = builder._tomb_state()
+    if ts is not None:
+        alive = _alive_bits(ts[0], ords)
+        ords = ords[alive]
+        cols = {c: v[alive] for c, v in cols.items()}
+    if ords.size == 0:
+        return None
+    ids = builder._resolve_ords([int(o) for o in ords])
+    return ids[list(builder.id_cols)].assign(**cols)
 
 
 def phrase_warm(builder, phrase: str) -> pd.DataFrame:
@@ -751,22 +740,12 @@ def _warm_slots(builder, slot_terms, fallback) -> pd.DataFrame:
     the estimated block load exceeds the warm budget."""
     cols = [*builder.id_cols, "phrase_freq"]
     uniq = sorted({t for ts in slot_terms for t in ts})
-    dfs = builder.catalog.read_pruned_arrow(
-        "terms", "term", uniq, columns=["term", "df"]
-    )
-    est_blocks = sum(
-        (int(d) + POS_BLOCK_SIZE - 1) // POS_BLOCK_SIZE
-        for d in dfs.column("df").to_pylist()
-    )
-    if est_blocks > PHRASE_WARM_MAX_BLOCKS:
+    if not _fits_warm(builder, uniq):
         return fallback().toPandas().reset_index(drop=True)
-    tbl = builder.catalog.read_pruned_arrow(
-        "pos_blocks", "term", uniq,
-        columns=["term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"],
-    ).to_pandas()
-    if not len(tbl):
+    got = _warm_positions(builder, uniq)
+    if got is None:
         return pd.DataFrame(columns=cols)
-    uniq_terms, tids, ords, pos = _decode_pos_batch(tbl)
+    uniq_terms, tids, ords, pos = got
     tindex = {t: i for i, t in enumerate(uniq_terms)}
     u_docs, doc_inv = np.unique(ords, return_inverse=True)
     anchors: np.ndarray | None = None
@@ -785,23 +764,9 @@ def _warm_slots(builder, slot_terms, fallback) -> pd.DataFrame:
         if anchors.size == 0:
             return pd.DataFrame(columns=cols)
     hit_docs, freqs = np.unique(anchors >> _WARM_SHIFT, return_counts=True)
-    hit_ords = u_docs[hit_docs]
-    ts = builder._tomb_state()
-    if ts is not None:
-        alive = _alive_bits(ts[0], hit_ords)
-        hit_ords, freqs = hit_ords[alive], freqs[alive]
-        if hit_ords.size == 0:
-            return pd.DataFrame(columns=cols)
-    dm = (
-        builder.catalog.read_pruned_arrow(
-            "docmap", "doc_ord", values=[int(o) for o in hit_ords],
-            columns=["doc_ord", *builder.id_cols],
-        )
-        .to_pandas()
-        .set_index("doc_ord")
-    )
-    out = dm.loc[hit_ords, list(builder.id_cols)].reset_index(drop=True)
-    out["phrase_freq"] = freqs
+    out = _alive_rows(builder, u_docs[hit_docs], phrase_freq=freqs)
+    if out is None:
+        return pd.DataFrame(columns=cols)
     return out.sort_values(
         ["phrase_freq", *builder.id_cols], ascending=[False] + [True] * len(builder.id_cols)
     ).reset_index(drop=True)
@@ -842,13 +807,7 @@ def phrase_slop_query(builder, phrase: str, slop: int) -> DataFrame:
         raise ValueError("phrase_slop_query needs at least two terms")
     if not builder.ckpt.is_done("pos_blocks"):
         raise ValueError("positional index not built (build_positional_index)")
-    uniq = sorted(set(terms))
-    blocks = builder.catalog.read_pruned("pos_blocks", "term", uniq).filter(
-        F.col("term").isin(uniq)
-    )
-    decoded = blocks.select(
-        "term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"
-    ).mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
+    decoded = _pos_postings(builder, sorted(set(terms)))
     chain = decoded.filter(F.col("term") == terms[0]).select(
         "doc_ord", F.col("pos").alias("p1"), F.col("pos").alias("cur")
     )
@@ -865,20 +824,11 @@ def phrase_slop_query(builder, phrase: str, slop: int) -> DataFrame:
     n = len(terms)
     disp = (F.col("cur") - F.col("p1") - F.lit(n - 1)).alias("disp")
     matches = chain.select("doc_ord", disp).filter(F.col("disp") <= slop)
-    per_doc = builder._drop_tombstones(
-        matches.groupBy("doc_ord").agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min("disp").cast("long").alias("min_disp"),
-        )
+    per_doc = matches.groupBy("doc_ord").agg(
+        F.count(F.lit(1)).alias("n_matches"),
+        F.min("disp").cast("long").alias("min_disp"),
     )
-    dm = builder.catalog.read("docmap")
-    return (
-        per_doc.join(dm.select("doc_ord", *builder.id_cols), "doc_ord")
-        .select(*builder.id_cols, "n_matches", "min_disp")
-        .orderBy(
-            F.desc("n_matches"), *[F.asc(c) for c in builder.id_cols]
-        )
-    )
+    return _id_rows(builder, per_doc, F.desc("n_matches"))
 
 
 def phrase_slop_warm(builder, phrase: str, slop: int) -> pd.DataFrame:
@@ -899,23 +849,13 @@ def phrase_slop_warm(builder, phrase: str, slop: int) -> pd.DataFrame:
         raise ValueError("positional index not built (build_positional_index)")
     cols = [*builder.id_cols, "n_matches", "min_disp"]
     uniq = sorted(set(terms))
-    dfs = builder.catalog.read_pruned_arrow(
-        "terms", "term", uniq, columns=["term", "df"]
-    )
-    est_blocks = sum(
-        (int(d) + POS_BLOCK_SIZE - 1) // POS_BLOCK_SIZE
-        for d in dfs.column("df").to_pylist()
-    )
-    if est_blocks > PHRASE_WARM_MAX_BLOCKS:
+    if not _fits_warm(builder, uniq):
         out = phrase_slop_query(builder, phrase, slop).toPandas()
         return out.reset_index(drop=True)
-    tbl = builder.catalog.read_pruned_arrow(
-        "pos_blocks", "term", uniq,
-        columns=["term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"],
-    ).to_pandas()
-    if not len(tbl):
+    got = _warm_positions(builder, uniq)
+    if got is None:
         return pd.DataFrame(columns=cols)
-    uniq_terms, tids, ords, pos = _decode_pos_batch(tbl)
+    uniq_terms, tids, ords, pos = got
     tindex = {t: i for i, t in enumerate(uniq_terms)}
     if any(t not in tindex for t in terms):
         return pd.DataFrame(columns=cols)
@@ -946,24 +886,9 @@ def phrase_slop_warm(builder, phrase: str, slop: int) -> pd.DataFrame:
     n_matches = np.bincount(inv).astype(np.int64)
     min_disp = np.full(u.size, np.iinfo(np.int64).max)
     np.minimum.at(min_disp, inv, hdisp)
-    ts = builder._tomb_state()
-    if ts is not None:
-        alive = _alive_bits(ts[0], u)
-        u, n_matches, min_disp = u[alive], n_matches[alive], min_disp[alive]
-        if u.size == 0:
-            return pd.DataFrame(columns=cols)
-    dm = (
-        builder.catalog.read_pruned_arrow(
-            "docmap", "doc_ord", values=[int(o) for o in u],
-            columns=["doc_ord", *builder.id_cols],
-        )
-        .to_pandas()
-        .set_index("doc_ord")
-    )
-    out = dm.loc[u, list(builder.id_cols)].reset_index(drop=True)
-    out["n_matches"] = n_matches
-    out["min_disp"] = min_disp
-    out = out.sort_values(
+    out = _alive_rows(builder, u, n_matches=n_matches, min_disp=min_disp)
+    if out is None:
+        return pd.DataFrame(columns=cols)
+    return out.sort_values(
         ["n_matches", *builder.id_cols], ascending=[False] + [True] * len(builder.id_cols)
     ).reset_index(drop=True)
-    return out

@@ -403,7 +403,9 @@ def _upsert_spark(b, docs: DataFrame, meta_cols: list[str] | None,
     """The Spark tier of :func:`upsert_docs` (batches over the cap)."""
     # align id types to the committed docmap (append must not fork the
     # parquet schema, e.g. pandas-born int64 turn_idx vs committed int32)
-    docmap_types = {f.name: f.dataType for f in b._docmap_schema().fields}
+    docmap_types = {
+        f.name: f.dataType for f in b.catalog.spark_schema("docmap").fields
+    }
     docs = docs.select(
         *[
             F.col(c).cast(docmap_types[c]).alias(c) if c in docmap_types

@@ -65,6 +65,9 @@ class Catalog:
         # appends/replaces are picked up automatically.
         self._man_cache: dict[str, tuple[int, dict]] = {}
         self._ds_cache: dict[str, tuple[str, Any, dict[str, Any]]] = {}
+        # Spark schemas of head snapshots, keyed by their arrow schema
+        # (see spark_schema)
+        self._schemas: dict[str, tuple[pa.Schema, StructType]] = {}
 
     # -- paths -----------------------------------------------------------
 
@@ -431,10 +434,7 @@ class Catalog:
         hit = self._ds_cache.get(name)
         if hit is not None and hit[0] == snap:
             return hit[1], hit[2]
-        paths = [
-            os.path.join(self.table_dir(name), e["path"])
-            for e in man["files"]
-        ]
+        paths = self._paths(name, man)
         dataset = ds.dataset(paths, format="parquet") if paths else None
         frags = (
             {f.path: f for f in dataset.get_fragments()} if dataset else {}
@@ -442,29 +442,32 @@ class Catalog:
         self._ds_cache[name] = (snap, dataset, frags)
         return dataset, frags
 
-    def read(
-        self, name: str, snapshot_id: str | None = None,
-        schema: StructType | None = None,
-    ) -> DataFrame:
+    def read(self, name: str, snapshot_id: str | None = None) -> DataFrame:
         """Scan the head snapshot (or, with ``snapshot_id``, time-travel
         to a retained one). Reads resolve through the MANIFEST's explicit
         file list, never a directory listing, so files from an in-flight
         or crashed (uncommitted) append are invisible — the Iceberg
-        isolation contract. A known ``schema`` skips Spark's
-        schema-inference job."""
+        isolation contract. A head read takes its schema from
+        :meth:`spark_schema`, so once that is cached defining the scan
+        runs no Spark job; a time-travel read infers its own, as an old
+        snapshot may have other columns than the head."""
         if not self.exists(name):
             raise FileNotFoundError(f"table {name!r} has no committed snapshot")
-        man = self.manifest_at(name, snapshot_id) if snapshot_id else (
-            self.manifest(name)
-        )
-        paths = [os.path.join(self.table_dir(name), e["path"])
-                 for e in man["files"]]
-        if snapshot_id:
-            missing = [p for p in paths if not os.path.exists(p)]
-            if missing:
-                from ..err import SnapshotExpiredError
+        if not snapshot_id:
+            man = self.manifest(name)
+            schema = self.spark_schema(name) if man["files"] else None
+            return self._scan(name, man, schema)
+        return self._scan(name, self._retained(name, snapshot_id))
 
-                raise SnapshotExpiredError(name, snapshot_id, missing)
+    def _paths(self, name: str, man: dict) -> list[str]:
+        return [os.path.join(self.table_dir(name), e["path"])
+                for e in man["files"]]
+
+    def _scan(self, name: str, man: dict, schema: StructType | None = None,
+              paths: list[str] | None = None) -> DataFrame:
+        """Spark scan of ``paths`` (default: every data file of the
+        snapshot ``man``). Without a ``schema`` Spark infers one, a job."""
+        paths = self._paths(name, man) if paths is None else paths
         ddir = os.path.join(self.table_dir(name), man.get("data_dir", "data"))
         reader = self.spark.read if schema is None else (
             self.spark.read.schema(schema)
@@ -476,6 +479,23 @@ class Catalog:
         # scan at the generation dir restores them for partition_by
         # tables and is a no-op for flat layouts
         return reader.option("basePath", ddir).parquet(*paths)
+
+    def spark_schema(self, name: str) -> StructType:
+        """Spark schema of ``name``'s head snapshot. Inferring it is a
+        Spark job, so it is cached by the head's arrow schema, metadata
+        included (a cached footer, no job; Spark writes its own schema
+        into that metadata): a commit that keeps the schema, as every
+        append and upsert does, infers nothing. A snapshot with no data
+        file has nothing to key on and infers each time."""
+        arrow = self.arrow_schema(name)
+        if arrow is None:
+            return self.read(name).schema
+        hit = self._schemas.get(name)
+        if hit is None or not hit[0].equals(arrow, check_metadata=True):
+            hit = self._schemas[name] = (
+                arrow, self._scan(name, self.manifest(name)).schema
+            )
+        return hit[1]
 
     def manifest_at(self, name: str, snapshot_id: str) -> dict:
         """Manifest of a historical snapshot from the snapshot log (the
@@ -493,6 +513,17 @@ class Catalog:
 
             raise UnknownSnapshotError(name, snapshot_id) from None
 
+    def _retained(self, name: str, snapshot_id: str) -> dict:
+        """Manifest of ``snapshot_id``, whose data files must all still
+        exist (``SnapshotExpiredError`` once expiry deleted one)."""
+        man = self.manifest_at(name, snapshot_id)
+        missing = [p for p in self._paths(name, man) if not os.path.exists(p)]
+        if missing:
+            from ..err import SnapshotExpiredError
+
+            raise SnapshotExpiredError(name, snapshot_id, missing)
+        return man
+
     def read_at(self, name: str, snapshot_id: str) -> DataFrame:
         """Time-travel scan (Iceberg ``VERSION AS OF`` analog)."""
         return self.read(name, snapshot_id=snapshot_id)
@@ -504,14 +535,7 @@ class Catalog:
         :meth:`expire_snapshots` reclaims them. The restore is itself a
         new commit (fresh snapshot id, ``op="restore"``), so caches keyed
         on snapshot id invalidate and the log keeps a full audit trail."""
-        man = dict(self.manifest_at(name, snapshot_id))
-        paths = [os.path.join(self.table_dir(name), e["path"])
-                 for e in man["files"]]
-        missing = [p for p in paths if not os.path.exists(p)]
-        if missing:
-            from ..err import SnapshotExpiredError
-
-            raise SnapshotExpiredError(name, snapshot_id, missing)
+        man = dict(self._retained(name, snapshot_id))
         man["snapshot_id"] = uuid.uuid4().hex
         man["parent_id"] = (
             self.manifest(name)["snapshot_id"] if self.exists(name) else None
@@ -622,22 +646,19 @@ class Catalog:
         values: list[Any] | None = None,
         lo: Any = None,
         hi: Any = None,
-        schema: StructType | None = None,
     ) -> DataFrame:
         """File-level skipping: read only data files whose [min,max] range
         for ``col`` can contain one of ``values`` / overlap [lo, hi]
         (B+tree-descent analog, prs.py:57-77). Falls back to the full
-        table when stats are absent. A known ``schema`` skips Spark's
-        schema-inference job, as in :meth:`read`."""
+        table when stats are absent. The schema comes from
+        :meth:`spark_schema`, as in :meth:`read`."""
         paths = self.pruned_file_paths(name, col, values, lo, hi)
         if paths is None:
-            return self.read(name, schema=schema)
+            return self.read(name)
         if not paths:
-            return self.read(name, schema=schema).limit(0)
-        reader = self.spark.read if schema is None else (
-            self.spark.read.schema(schema)
-        )
-        return reader.parquet(*paths)
+            return self.read(name).limit(0)
+        return self._scan(name, self.manifest(name), self.spark_schema(name),
+                          paths)
 
     def arrow_schema(self, name: str) -> pa.Schema | None:
         """Arrow schema of the head snapshot, from a cached footer (no

@@ -202,16 +202,6 @@ def test_query_batch_gate_sends_big_fan_out_to_spark(spark, built,
     assert spk == drv
 
 
-def test_rng_terms_defines_without_a_job(spark, built):
-    """rng_terms reads blocks and docmap with the builder's cached Spark
-    schemas: once they are warm, defining a range scan infers nothing."""
-    b, _ = built
-    b.rng_terms("a", "c")  # warms both schemas
-    out, jobs = _job_count(spark, "rng_define", lambda: b.rng_terms("a", "z"))
-    assert jobs == 0
-    assert out.count() > 0
-
-
 def test_first_query_warm_runs_no_spark_job(spark, built):
     b, _ = built
     fresh = IndexBuilder(spark, b.root)

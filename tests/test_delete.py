@@ -164,41 +164,78 @@ def test_match_paths_exclude_deleted(built):
     ) == term_docs - deleted
 
 
-def test_eq_terms_defines_without_a_job(built):
-    """On a warm builder over a tombstoned index, eq_terms reads blocks,
-    tombstones and docmap with the builder's cached Spark schemas:
-    defining the lookup runs no schema-inference job, and it collects
-    the rows of the first, schema-inferring call."""
-    b = built[0]
-    want = b.eq_terms("the", "data").collect()  # warms the schemas
-    sc = b.spark.sparkContext
-    sc.setJobGroup("eq_terms_define", "define eq_terms")
-    try:
-        df = b.eq_terms("the", "data")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("eq_terms_define") == []
-    assert want and df.collect() == want
-
-
-def test_query_pinned_defines_without_a_job(built):
-    """On a warm builder over a tombstoned index, query_pinned reads
-    blocks, terms, stats, docmap and tombstones with the builder's
-    cached Spark schemas: defining a query that also excludes a term
-    and pages after a row runs no schema-inference job, and it collects
-    the rows of the first, schema-inferring call."""
+def _paged_pinned(built):
+    """query_pinned that also excludes a term and pages after a row."""
     b = built[0]
     last = b.query_pinned(QUERY, k=3).collect()[-1]
     args = dict(k=5, exclude=_V[200],
                 after=(last.score, last.conv_id, last.turn_idx))
-    want = b.query_pinned(QUERY, **args).collect()
+    return lambda: b.query_pinned(QUERY, **args)
+
+
+def _alive_pair(built):
+    """The first two words of the first alive doc with two different
+    ones: an adjacent pair, so a phrase and a NEAR both match."""
+    _, corpus, _, deleted = built
+    for r in corpus.orderBy("conv_id", "turn_idx").collect():
+        words = r.text.split()
+        if (r.conv_id, r.turn_idx) not in deleted and len(words) >= 2 \
+                and words[0] != words[1]:
+            return words[0], words[1]
+    raise AssertionError("no doc with two different words")
+
+
+def _phrase(built):
+    phrase = " ".join(_alive_pair(built))
+    return lambda: phrase_query(built[0], phrase)
+
+
+def _near(built):
+    ta, tb = _alive_pair(built)
+    return lambda: near_query(built[0], ta, tb, 3)
+
+
+_DEFINE = {
+    "query_pinned": _paged_pinned,
+    "query_bool": lambda built: lambda: built[0].query_bool(
+        must="the", should=f"{_V[200]} {_V[1000]}", must_not=_V[300]),
+    "query_grouped": lambda built: lambda: built[0].query_grouped(
+        QUERY, ["conv_id"], k=5),
+    "group_top_hits": lambda built: lambda: built[0].group_top_hits(
+        QUERY, "conv_id", n_per_group=2, k_groups=5),
+    "explain": lambda built: lambda: built[0].explain(QUERY, k=5),
+    "query_synonyms": lambda built: lambda: built[0].query_synonyms(
+        QUERY, {_V[200]: [_V[300]]}, k=5),
+    "facet_counts": lambda built: lambda: built[0].facet_counts(
+        QUERY, "role"),
+    "significant_terms": lambda built: lambda: built[0].significant_terms(
+        QUERY),
+    "hit_count": lambda built: lambda: built[0].hit_count(QUERY),
+    "eq_terms": lambda built: lambda: built[0].eq_terms("the", "data"),
+    "rng_terms": lambda built: lambda: built[0].rng_terms("a", "z"),
+    "phrase_query": _phrase,
+    "near_query": _near,
+    "term_positions": lambda built: lambda: term_positions(
+        built[0], QUERY, k=5),
+}
+
+
+@pytest.mark.parametrize("method", list(_DEFINE))
+def test_defines_without_a_job(built, method):
+    """On a warm builder over a tombstoned index with docmeta and
+    pos_blocks, every index read takes the catalog's cached Spark
+    schema: defining the query runs no Spark job, and it collects the
+    rows of the first call."""
+    b = built[0]
+    define = _DEFINE[method](built)
+    want = define().collect()  # warms the schemas
     sc = b.spark.sparkContext
-    sc.setJobGroup("pinned_define", "define query_pinned")
+    sc.setJobGroup(f"define_{method}", f"define {method}")
     try:
-        df = b.query_pinned(QUERY, **args)
+        df = define()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("pinned_define") == []
+    assert sc.statusTracker().getJobIdsForGroup(f"define_{method}") == []
     assert want and df.collect() == want
 
 

@@ -148,6 +148,35 @@ def test_partitioned_table_keeps_partition_columns(spark, cat):
     assert got.filter(F.col("p") == 1).count() == 5
 
 
+def test_head_reads_infer_each_schema_once(spark, cat):
+    """A catalog infers a table's Spark schema once per head arrow
+    schema: a second read defines its scan with no Spark job, a replace
+    that adds a column shows it on the next read, a time-travel read of
+    the older snapshot keeps that snapshot's columns, and a partitioned
+    table keeps its partition column on a cached-schema read."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    m1 = cat.write(_t(spark, 0, 5), "t")
+    assert cat.read("t").columns == ["k"]
+    sc.setJobGroup("second_read", "second read")
+    try:
+        again = cat.read("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("second_read") == []
+    assert again.count() == 5
+    cat.replace(_t(spark, 0, 5).withColumn("x", F.col("k") * 2), "t")
+    assert cat.read("t").columns == ["k", "x"]
+    assert cat.read_at("t", m1["snapshot_id"]).columns == ["k"]
+    df = _t(spark, 0, 10).withColumn("p", (F.col("k") % 2).cast("int"))
+    cat.write(df, "part", partition_by=["p"])
+    cat.read("part")  # caches the schema
+    got = cat.read("part")
+    assert "p" in got.columns
+    assert got.filter(F.col("p") == 1).count() == 5
+
+
 def test_snapshot_log_files_on_disk(spark, cat):
     m1 = cat.write(_t(spark, 0, 3), "t")
     sdir = os.path.join(cat.table_dir("t"), "_snapshots")
