@@ -2348,15 +2348,28 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 43
-    entries outside the last two windows (upsert_topk … rng_lookup and
-    term_counts … phrase_search), then the previous order unchanged:
-    phrase_adhoc … doc_chunks (12), sliding_counts … lang_id (43) and
-    quality … upsert_eq (7). The window now ends after frame_sample;
-    the next rotation should move ivfpq_topk … upsert_eq (12 entries,
-    outside this window and the last) to the front."""
+    round, least-recently-driver-attested first. Current order: the 12
+    entries outside the last two windows (ivfpq_topk … upsert_eq), then
+    the previous order unchanged: upsert_topk … phrase_search (43),
+    phrase_adhoc … frame_sample (7) and media_features … pq_refined
+    (43). The window now ends after spell_suggest; the next rotation
+    should move media_features … pq_refined (43 entries, outside this
+    window and the last) to the front."""
     return {
         # --- outside the last two driver windows
+        "ivfpq_topk": _q_ivfpq_topk,
+        "time_travel": _q_time_travel,
+        "minhash_dups": _q_minhash_dups,
+        "simhash_dups": _q_simhash_dups,
+        "lang_id": _q_lang_id,
+        "quality": _q_quality,
+        "clone_candidates": _q_clone_candidates,
+        "ann_cosine_topk": _q_ann_cosine_topk,
+        "ann_lsh_topk": _q_ann_lsh_topk,
+        "ann_ivf_topk": _q_ann_ivf_topk,
+        "fuzzy_topk": _q_fuzzy_topk,
+        "upsert_eq": _q_upsert_eq,
+        # --- in the last driver window
         "upsert_topk": _q_upsert_topk,
         "keyed_eq_persisted": _q_keyed_eq_persisted,
         "keyed_rng_persisted": _q_keyed_rng_persisted,
@@ -2395,12 +2408,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "merged_topk": _q_merged_topk,
         "federated_topk": _q_federated_topk,
         "spell_suggest": _q_spell_suggest,
+        # ---- driver window (50) ends here ----
         "snippet_hits": _q_snippet_hits,
         "lookup_dump": _q_lookup_dump,
         "fallback_join": _q_fallback_join,
         "interval_days": _q_interval_days,
         "phrase_search": _q_phrase_search,
-        # --- in the last driver window
         "phrase_adhoc": _q_phrase_adhoc,
         "phrase_prefix": _q_phrase_prefix,
         "fingerprints": _q_fingerprints,
@@ -2408,7 +2421,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": _q_ngram_jaccard,
         "packed_examples": _q_packed_examples,
         "frame_sample": _q_frame_sample,
-        # ---- driver window (50) ends here ----
+        # --- outside the last driver window
         "media_features": _q_media_features,
         "media_decode": _q_media_decode,
         "media_meta": _q_media_meta,
@@ -2452,19 +2465,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curated": _q_curated,
         "pq_topk": _q_pq_topk,
         "pq_refined": _q_pq_refined,
-        # --- outside the last driver window
-        "ivfpq_topk": _q_ivfpq_topk,
-        "time_travel": _q_time_travel,
-        "minhash_dups": _q_minhash_dups,
-        "simhash_dups": _q_simhash_dups,
-        "lang_id": _q_lang_id,
-        "quality": _q_quality,
-        "clone_candidates": _q_clone_candidates,
-        "ann_cosine_topk": _q_ann_cosine_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "fuzzy_topk": _q_fuzzy_topk,
-        "upsert_eq": _q_upsert_eq,
     }
 
 

@@ -13,11 +13,11 @@ visibility contract `delete_docs` documents).
 
 Two tiers, chosen by input size against the cap bounded deletes
 already use (``IndexBuilder.DELETE_PRUNE_MAX_IDS``). A batch within it
-is read to the driver in ONE bounded Spark action (ids, JVM-analyzed
-tokens, metadata) and every table delta is numbered, packed and
-committed from there with pyarrow and the same kernels — an upsert's
-cost is otherwise per-job constants, dozens of jobs for a few dozen
-documents. Bigger batches run the distributed plan.
+is read to the driver (ids, JVM tokens, metadata; no Spark job for a
+driver-resident input, else ONE bounded action) and every table delta
+is numbered, packed and committed from there with pyarrow and the same
+kernels — an upsert's cost is otherwise per-job constants, dozens of
+jobs for a few dozen documents. Bigger batches run the distributed plan.
 
 Data-model note: the packed ``blocks`` (ordinal-keyed) + ``docmap`` minus
 ``tombstones`` are the only committed postings, so an upsert appends one
@@ -113,10 +113,10 @@ def append_run(
     )
 
     b = builder
-    spark = b.spark
     id_cols = list(b.id_cols)
     local = isinstance(delta_post, pa.Table)
-    n_part = n_partitions or spark.sparkContext.defaultParallelism
+    n_part = 1 if local else (  # a pyarrow delta packs as ONE partition
+        n_partitions or b.spark.sparkContext.defaultParallelism)
 
     start = 1 + int(max(
         e["max_doc_ord"]
@@ -293,13 +293,40 @@ def append_run(
     }
 
 
-def _meta_cols(b, columns) -> list[str] | None:
-    """The committed docmeta columns when ``columns`` carries them all
+def _meta_cols(b, docs: DataFrame) -> list[str] | None:
+    """The committed docmeta columns when ``docs`` carries them all
     (the docmeta delta can be maintained), else None."""
     if not b.ckpt.is_done("docmeta"):
         return None
     want = b.catalog.manifest("docmeta").get("props", {}).get("meta_cols")
-    return list(want) if want and set(want) <= set(columns) else None
+    return list(want) if want and set(want) <= set(docs.columns) else None
+
+
+def _read_delta(docs, id_cols, text_col, meta_cols, n) -> pa.Table:
+    """At most ``n`` rows of (*id_cols, ``_tokens``, *meta_cols). A
+    pandas-born input is a local relation that absorbs the projection
+    and limit: ``collect()`` runs no job. Others cost one ``toArrow`` job
+    (a limited ``collect`` runs one per scale-up step). Tokens cross
+    space-joined (each matches ``[a-z0-9]+``), timestamps as epoch
+    micros (``collect`` makes naive local-zone datetimes)."""
+    ts = [c for c in meta_cols if dict(docs.dtypes)[c] == "timestamp"]
+    q = docs.select(
+        *id_cols, F.array_join(tokens(text_col), " ").alias("_tokens"),
+        *[F.unix_micros(c).alias(c) if c in ts else c for c in meta_cols],
+    ).limit(n)
+    if docs.isLocal():
+        batch = pa.Table.from_struct_array(pa.array(
+            q.collect(), pa.struct(to_arrow_schema(q.schema))))
+    else:
+        batch = q.toArrow()
+    joined = batch["_tokens"]
+    split = pc.split_pattern(joined, " ")
+    decoded = {  # "" is a doc without tokens; a null text stays null
+        "_tokens": pc.if_else(pc.equal(joined, ""),
+                              pa.scalar([], split.type), split),
+        **{c: batch[c].cast(pa.timestamp("us", tz="UTC")) for c in ts},
+    }
+    return pa.table({c: decoded.get(c, batch[c]) for c in batch.column_names})
 
 
 def _check_unique(n_in: int, n_ids: int) -> None:
@@ -328,23 +355,21 @@ def upsert_docs(builder, docs: DataFrame,
     generation the same way.
 
     A batch of at most ``DELETE_PRUNE_MAX_IDS`` rows takes the driver
-    tier (``tier: "driver"`` in the result): one bounded Spark action
-    reads ids, tokens (the JVM analyzer queries use) and metadata, and
-    every table delta commits from the driver as one file per table
+    tier (``tier: "driver"`` in the result): one bounded read (no job
+    for a driver-resident input, else one action) brings ids, tokens
+    (the JVM analyzer queries use) and metadata to the driver, and every
+    table delta commits from there as one file per table
     (``n_partitions`` is ignored). The bound counts rows, not bytes: the
     driver holds up to that many tokenized documents, a few times over
     while it packs them. Bigger batches take the Spark tier, after the
-    bounded read (one job, cap + 1 tokenized rows) has found them too
-    big.
+    bounded read (cap + 1 tokenized rows) has found them too big.
     """
     b = builder
     if not b.ckpt.is_done("blocks"):
         raise ValueError("upsert requires a committed index (build first)")
     cap = b.DELETE_PRUNE_MAX_IDS
-    meta_cols = _meta_cols(b, docs.columns)
-    batch = docs.select(
-        *b.id_cols, tokens(b.text_col).alias("_tokens"), *(meta_cols or [])
-    ).limit(cap + 1).toArrow()
+    meta_cols = _meta_cols(b, docs)
+    batch = _read_delta(docs, b.id_cols, b.text_col, meta_cols or [], cap + 1)
     if batch.num_rows <= cap:
         out = _upsert_local(b, batch, meta_cols)
     else:

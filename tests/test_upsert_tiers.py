@@ -7,23 +7,31 @@ re-upsert of an id) applied to two copies of one index — one copy on
 each tier — leave equal docmap, postings, terms, stats, tombstones,
 decoded blocks / pos_blocks and docmeta; every table reads back the
 same through Spark and through pyarrow; warm == batch on both copies;
-a small upsert on the driver tier runs at most two Spark jobs; and the
-first query after it infers no schema.
+a small upsert on the driver tier runs at most two Spark jobs — none
+from a pandas-born input, one from a file-backed one; its bounded read
+brings the same tokens as ``toArrow`` and the same timestamps in any
+Python time zone; and the first query after it infers no schema.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
+from antidb_spark.functions.analyze import tokens
 from antidb_spark.operators.build import IndexBuilder, _decode_batch
 from antidb_spark.operators.phrase import (
     _decode_pos_batch,
     build_positional_index,
     phrase_query,
 )
+from antidb_spark.operators.upsert import _read_delta
 from antidb_spark.synth import synth_transcripts, vocabulary
 
 _V = vocabulary(5000)
@@ -177,6 +185,116 @@ def test_small_upsert_runs_at_most_two_jobs(spark, tmp_path):
     hits = b.query_warm(_V[4990], k=100)
     assert set(zip(hits["conv_id"], hits["turn_idx"])) == set(
         zip(part["conv_id"], part["turn_idx"]))
+
+
+@pytest.fixture(scope="module")
+def small(spark, tmp_path_factory):
+    """A 4-conversation index and three of its conversations re-texted
+    with a new token: a driver-tier upsert batch."""
+    corpus = synth_transcripts(spark, n_convs=4, seed=3)
+    b = IndexBuilder(spark, str(tmp_path_factory.mktemp("jobless")))
+    b.build(corpus, n_partitions=2)
+    pdf = corpus.toPandas()
+    part = pdf[pdf["conv_id"].isin(sorted(set(pdf["conv_id"]))[:3])].copy()
+    part["text"] = [f"{_V[4990]} {t}" for t in part["text"]]
+    return b, part, corpus.schema
+
+
+def _upsert_jobs(b, docs, group):
+    sc = b.spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = b.upsert_docs(docs)
+    finally:
+        sc.setJobGroup(f"{group}-after", "after")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pandas_born_small_upsert_runs_no_job(spark, small):
+    b, part, schema = small
+    docs = spark.createDataFrame(part, schema=schema)
+    out, jobs = _upsert_jobs(b, docs, "upsert-pandas")
+    assert out["tier"] == "driver" and jobs == 0
+    hits = b.query_warm(_V[4990], k=100)
+    assert set(zip(hits["conv_id"], hits["turn_idx"])) == set(
+        zip(part["conv_id"], part["turn_idx"]))
+
+
+def test_parquet_backed_small_upsert_runs_one_job(spark, small, tmp_path):
+    """A file-backed input is read in one bounded job, however many
+    files it has (a limited ``collect`` would run one per scale-up)."""
+    b, part, schema = small
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(part, schema=schema).repartition(3) \
+        .write.parquet(path)
+    docs = spark.read.schema(schema).parquet(path)
+    assert len(docs.inputFiles()) == 3
+    out, jobs = _upsert_jobs(b, docs, "upsert-parquet")
+    assert out["tier"] == "driver" and jobs == 1
+    assert out["n_replaced"] == len(part)
+
+
+def test_driver_tier_timestamps_in_a_non_utc_zone(spark, tmp_path):
+    """``collect`` turns a timestamp into a naive datetime in the Python
+    process's zone; the driver tier must still commit the same docmeta
+    ``ts`` as the Spark tier when that zone is not UTC."""
+    corpus = synth_transcripts(spark, n_convs=2, seed=13)
+    root = str(tmp_path / "driver")
+    b = IndexBuilder(spark, root)
+    b.build(corpus, n_partitions=2)
+    b.build_doc_meta(corpus, META)
+    shutil.copytree(root, str(tmp_path / "spark"))
+    drv = IndexBuilder(spark, root)
+    spk = IndexBuilder(spark, str(tmp_path / "spark"))
+    spk.DELETE_PRUNE_MAX_IDS = 0
+    pdf = corpus.toPandas().iloc[:3]
+    docs = spark.createDataFrame(pdf, schema=corpus.schema)
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    try:
+        assert time.timezone == -19800  # UTC+05:30 took effect
+        outs = [x.upsert_docs(docs) for x in (drv, spk)]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert [o["tier"] for o in outs] == ["driver", "spark"]
+    assert [o["meta_mode"] for o in outs] == ["append", "append"]
+    assert _rows(drv, "docmeta") == _rows(spk, "docmeta")
+    new_ts = drv.catalog.read_arrow("docmeta").to_pandas() \
+        .sort_values("doc_ord")["ts"].tail(len(pdf))
+    assert (sorted(pd.to_datetime(new_ts).dt.tz_localize(None))
+            == sorted(pd.to_datetime(pdf["ts"])))
+
+
+_TEXT = st.one_of(
+    st.none(), st.text(max_size=40),
+    st.sampled_from(["", " ", "?!", "--", "İstanbul ǅemal ß ﬁx K",
+                     "ÀÉÎ õü Σίσυφος", "a\u00a0b\tc\nd", "x\x00y"]),
+)
+
+
+@settings(max_examples=30, deadline=None)
+@given(texts=st.lists(_TEXT, min_size=1, max_size=6))
+def test_bounded_read_tokens_match_to_arrow(spark, texts):
+    """The driver tier's bounded read (space-joined token strings, split
+    in pyarrow; jobless for a local input, ``toArrow`` otherwise) brings
+    exactly the token lists a ``toArrow`` of ``tokens`` brings: empty
+    and punctuation-only docs give [], a null text stays null."""
+    docs = spark.createDataFrame(
+        pd.DataFrame({"conv_id": [f"c{i}" for i in range(len(texts))],
+                      "turn_idx": range(len(texts)), "text": texts}),
+        schema="conv_id string, turn_idx int, text string")
+    want = docs.select("conv_id", "turn_idx",
+                       tokens("text").alias("_tokens")).toArrow()
+    for d in (docs, docs.repartition(2)):  # jobless read, toArrow read
+        got = _read_delta(d, ["conv_id", "turn_idx"], "text", [], 10)
+        assert got.column_names == want.column_names
+        assert (sorted(got.to_pylist(), key=lambda r: r["turn_idx"])
+                == want.to_pylist())
 
 
 def test_query_after_upsert_infers_no_schema(spark, tmp_path, pin_batch_tier):
