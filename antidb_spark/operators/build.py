@@ -45,14 +45,16 @@ Scale design (10^12 turns, 1000 executors):
 
 from __future__ import annotations
 
+import operator as _op
 from collections import OrderedDict
-from collections.abc import Callable, Iterable, Iterator, Sequence
+from collections.abc import Callable, Collection, Iterable, Iterator, Sequence
+from functools import reduce
 from typing import Any
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -313,6 +315,68 @@ def _topk_slots(
     cand = np.flatnonzero(acc >= max(cut, np.finfo(float).tiny))
     top = cand[np.lexsort((cand, -acc[cand]))[:k]]
     return top, acc[top]
+
+
+def literal_dfs(dfs: dict[str, int]) -> Column:
+    """``CASE term WHEN t THEN df(t) … END`` over ``dfs`` (NULL for any
+    other term): each df as a literal, no relation to scan or join."""
+    items = sorted(dfs.items())
+    if not items:
+        return F.lit(None).cast("long")
+    case = F.when(F.col("term") == items[0][0], items[0][1])
+    for t, d in items[1:]:
+        case = case.when(F.col("term") == t, d)
+    return case
+
+
+def fold_pinned(
+    rows: DataFrame, keys: Sequence[str], key: str = "term",
+    by: Sequence[str] = ("doc_ord",),
+    weights: Sequence[float] | None = None,
+) -> DataFrame:
+    """The pinned float fold of ``rows``' ``contrib`` → (*by, c0..,
+    raw, score): c{i} sums a group's rows whose ``key`` is keys[i]
+    (NULL ⟺ none), raw adds coalesce(c{i}, 0)·w{i} in ``keys`` order
+    (sorted by callers: the association order the SQL oracles
+    reproduce), score = round(raw, 4). A group holds at most one row
+    per key, so the weight is bit-identical to a per-row multiply."""
+    aggs = [
+        F.sum(F.when(F.col(key) == t, F.col("contrib"))).alias(f"c{i}")
+        for i, t in enumerate(keys)
+    ]
+    if weights is None:
+        weights = [1.0] * len(keys)
+    parts = [
+        F.coalesce(F.col(f"c{i}"), F.lit(0.0)) * F.lit(float(w))
+        if w != 1.0 else F.coalesce(F.col(f"c{i}"), F.lit(0.0))
+        for i, w in enumerate(weights)
+    ]
+    return (
+        rows.groupBy(*by).agg(*aggs)
+        .withColumn("raw", reduce(_op.add, parts))
+        .withColumn("score", F.round(F.col("raw"), 4))
+    )
+
+
+def pinned_scores(
+    post: DataFrame, keys: Sequence[str], df: Column, n_docs: int,
+    avgdl: float, key: str = "term",
+    weights: Sequence[float] | None = None,
+) -> DataFrame:
+    """The pinned BM25 scoring core: :func:`fold_pinned` of
+    ``contribution(tf, df, dl, avgdl, n_docs)`` over (doc_ord, ``key``,
+    tf, dl) rows, N and avgdl as literals — under an index's own
+    statistics, a federation's global ones or synonym groups' blended
+    df. It stays a Spark expression: a driver-side idf need not match
+    Spark's ``log`` to the ulp, and one ulp can flip a 4dp round."""
+    return fold_pinned(
+        post.withColumn(
+            "contrib",
+            contribution(F.col("tf"), df, F.col("dl"), F.lit(avgdl),
+                         F.lit(n_docs)),
+        ),
+        keys, key=key, weights=weights,
+    )
 
 
 def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1616,50 +1680,53 @@ class IndexBuilder:
         self, q_terms: Sequence[str],
         weights: Sequence[float] | None = None,
     ) -> DataFrame:
-        """Per-doc deterministic BM25 scores from the committed index:
-        (doc_ord, c0..c{n-1}, score) where c{i} is term i's summed
-        contribution (NULL ⟺ the doc lacks term i) and score is the
-        sorted-term fixed-order sum rounded to 4dp — the shared scoring
-        core of ``query_pinned`` / ``query_filtered`` (same float
-        discipline as ``topk.bm25_topk_pinned``).
-
-        ``weights`` (aligned to ``q_terms``) scales term i's
-        contribution by w{i} BEFORE the fixed-order sum — query-time
-        boosting. Each doc has at most one posting row per term, so
-        c{i} is a single contribution value and ``c{i} * w{i}`` is
-        bit-identical to a per-row multiply (the form a SQL ordered
-        aggregate reproduces)."""
-        import operator as _op
-        from functools import reduce
-
-        post = self._term_postings(q_terms)
-        dfs = self.catalog.read("terms").filter(
-            F.col("term").isin(list(q_terms))
+        """Per-doc pinned BM25 scores of ``q_terms`` (sorted), (doc_ord,
+        c0.., raw, score) with c{i} NULL ⟺ the doc lacks term i: the
+        :func:`pinned_scores` core over the terms' manifest-pruned
+        blocks, df/N/avgdl as literals from the snapshot-keyed
+        ``_term_dfs`` / ``_corpus_stats`` caches — no plan scans
+        ``terms`` or ``stats``. ``weights`` boosts term i."""
+        dfs = self._term_dfs(q_terms)
+        n_docs, avgdl = self._corpus_stats()
+        return pinned_scores(
+            self._term_postings(sorted(dfs)), q_terms, literal_dfs(dfs),
+            n_docs, avgdl, weights=weights,
         )
-        stats = self.catalog.read("stats")
-        per_term = (
-            post.join(F.broadcast(dfs), "term")
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "contrib",
-                contribution(F.col("tf"), F.col("df"), F.col("dl"),
-                             F.col("avgdl"), F.col("n_docs")),
+
+    def _pinned_topk(
+        self, q_terms: Sequence[str], k: int,
+        weights: Sequence[float] | None = None,
+        must: Collection[str] = (), min_should: int = 0,
+        must_not: Sequence[str] = (), keep: DataFrame | None = None,
+        after: tuple | None = None,
+    ) -> DataFrame:
+        """The pinned family's one top-k entry: ``_pinned_doc_scores``
+        of ``q_terms`` (sorted; none → empty) under one must/must-not
+        spec, then ``_resolve_topk``. Docs hold every ``must`` term
+        (c{i} NOT NULL) and ≥ ``min_should`` of the others (more than
+        there are → empty, the Lucene contract); any ``must_not`` term
+        anti-joins a doc out; ``keep`` (doc_ords) semi-joins the rest."""
+        opt = [i for i, t in enumerate(q_terms) if t not in must]
+        if not q_terms or len(opt) < min_should:
+            return self._empty_topk()
+        scored = self._pinned_doc_scores(q_terms, weights)
+        for i, t in enumerate(q_terms):
+            if t in must:
+                scored = scored.filter(F.col(f"c{i}").isNotNull())
+        if min_should:
+            matched = reduce(_op.add, [
+                F.when(F.col(f"c{i}").isNotNull(), 1).otherwise(0)
+                for i in opt
+            ])
+            scored = scored.filter(matched >= int(min_should))
+        if must_not:
+            scored = scored.join(
+                self._matching_ords(must_not), "doc_ord", "left_anti"
             )
-        )
-        aggs = [
-            F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(f"c{i}")
-            for i, t in enumerate(q_terms)
-        ]
-        if weights is None:
-            weights = [1.0] * len(q_terms)
-        parts = [
-            F.coalesce(F.col(f"c{i}"), F.lit(0.0)) * F.lit(float(w))
-            if w != 1.0 else F.coalesce(F.col(f"c{i}"), F.lit(0.0))
-            for i, w in enumerate(weights)
-        ]
-        score = F.round(reduce(_op.add, parts), 4)
-        return per_term.groupBy("doc_ord").agg(*aggs).withColumn(
-            "score", score
+        if keep is not None:
+            scored = scored.join(keep, "doc_ord", "left_semi")
+        return self._resolve_topk(
+            scored.select("doc_ord", "score"), k, after=after
         )
 
     def _empty_topk(self) -> DataFrame:
@@ -1689,7 +1756,7 @@ class IndexBuilder:
         Tombstoned docs are dropped here, BEFORE the top-k cut — the
         single chokepoint for the whole pinned query family (plain /
         filtered / bool / boosted / prefix / fuzzy / regex / MLT /
-        paging)."""
+        paging / synonyms / decayed / each federated segment)."""
         top = self._drop_tombstones(top)
         if after is not None:
             s_after, *ids_after = after
@@ -1722,6 +1789,9 @@ class IndexBuilder:
             .select(*self.id_cols, "score", "doc_ord")
             .orderBy(F.desc("score"), F.asc("doc_ord"))
             .drop("doc_ord")
+            # the join holds ≤ k rows already: the limit plans the order
+            # as a TakeOrderedAndProject, not a range-partitioned sort
+            .limit(k)
         )
 
     def _matching_ords(
@@ -1755,8 +1825,9 @@ class IndexBuilder:
         """Cross-engine-deterministic top-k over the physical index:
         per-term contributions summed in sorted-term fixed order, score
         rounded to 4dp before ranking (same discipline as
-        ``topk.bm25_topk_pinned`` — see its docstring), sourcing
-        tf/df/dl from the committed index tables.
+        ``topk.bm25_topk_pinned`` — see its docstring): tf/dl from the
+        terms' manifest-pruned blocks, df/N/avgdl as driver-planned
+        literals (``_pinned_doc_scores``).
 
         Boolean modes over the same scored aggregate:
 
@@ -1777,19 +1848,9 @@ class IndexBuilder:
         from antidb_spark.functions.analyze import py_tokens
 
         q_terms = sorted(set(py_tokens(query)))
-        if not q_terms:
-            return self._empty_topk()
-        scored = self._pinned_doc_scores(q_terms)
-        if require_all:
-            for i in range(len(q_terms)):
-                scored = scored.filter(F.col(f"c{i}").isNotNull())
-        ex_terms = sorted(set(py_tokens(exclude))) if exclude else []
-        if ex_terms:
-            scored = scored.join(
-                self._matching_ords(ex_terms), "doc_ord", "left_anti"
-            )
-        return self._resolve_topk(
-            scored.select("doc_ord", "score"), k, after=after
+        return self._pinned_topk(
+            q_terms, k, must=q_terms if require_all else (),
+            must_not=sorted(set(py_tokens(exclude or ""))), after=after,
         )
 
     def explain(self, query: str, k: int = 10) -> DataFrame:
@@ -1804,53 +1865,38 @@ class IndexBuilder:
         ONLY those k docs (broadcast) against the decoded pruned
         blocks, so explain never scores more than the query already
         did. ``score`` is the doc's pinned 4dp total; factor columns
-        round at 6dp for cross-engine hashing."""
+        round at 6dp for cross-engine hashing. The df/idf factors take
+        the same driver-planned df/N/avgdl literals the score used."""
         from antidb_spark.functions.analyze import py_tokens
         from antidb_spark.functions.bm25 import idf as _idf
         from antidb_spark.functions.bm25 import tf_weight as _tfw
 
-        q_terms = sorted(set(py_tokens(query)))
         tops = self.query_pinned(query, k=k)
-        if not q_terms:
-            return tops.limit(0).select(
-                *self.id_cols, F.lit("").alias("term"),
-                F.lit(0).cast("long").alias("tf"),
-                F.lit(0).cast("long").alias("dl"),
-                F.lit(0).cast("long").alias("df"),
-                F.lit(0.0).alias("idf"), F.lit(0.0).alias("tf_weight"),
-                F.lit(0.0).alias("contribution"), F.col("score"),
-            )
         # drop tombstoned ordinals BEFORE the id join: after an upsert
         # the docmap holds superseded generations under the same id
         dm = self._drop_tombstones(self.catalog.read("docmap"))
         top_ords = dm.join(F.broadcast(tops), list(self.id_cols)).select(
             "doc_ord", *self.id_cols, "score"
         )
-        post = self._term_postings(q_terms).join(
+        dfs = self._term_dfs(sorted(set(py_tokens(query))))
+        df = literal_dfs(dfs)
+        n_docs, avgdl = (F.lit(v) for v in self._corpus_stats())
+        post = self._term_postings(sorted(dfs)).join(
             F.broadcast(top_ords), "doc_ord"
         )
-        dfs = self.catalog.read("terms").filter(F.col("term").isin(q_terms))
-        stats = self.catalog.read("stats")
-        return (
-            post.join(F.broadcast(dfs), "term")
-            .crossJoin(F.broadcast(stats))
-            .select(
-                *self.id_cols,
-                "term",
-                F.col("tf").cast("long").alias("tf"),
-                F.col("dl").cast("long").alias("dl"),
-                F.col("df").cast("long").alias("df"),
-                F.round(_idf(F.col("df"), F.col("n_docs")), 6).alias("idf"),
-                F.round(
-                    _tfw(F.col("tf"), F.col("dl"), F.col("avgdl")), 6
-                ).alias("tf_weight"),
-                F.round(
-                    contribution(F.col("tf"), F.col("df"), F.col("dl"),
-                                 F.col("avgdl"), F.col("n_docs")),
-                    6,
-                ).alias("contribution"),
-                "score",
-            )
+        return post.select(
+            *self.id_cols,
+            "term",
+            F.col("tf").cast("long").alias("tf"),
+            F.col("dl").cast("long").alias("dl"),
+            df.cast("long").alias("df"),
+            F.round(_idf(df, n_docs), 6).alias("idf"),
+            F.round(_tfw(F.col("tf"), F.col("dl"), avgdl), 6)
+            .alias("tf_weight"),
+            F.round(
+                contribution(F.col("tf"), df, F.col("dl"), avgdl, n_docs), 6
+            ).alias("contribution"),
+            "score",
         )
 
     def query_grouped(
@@ -1930,34 +1976,10 @@ class IndexBuilder:
         from antidb_spark.functions.analyze import py_tokens
 
         must_t = set(py_tokens(must))
-        q_terms = sorted(must_t | set(py_tokens(should)))
-        if not q_terms:
-            return self._empty_topk()
-        scored = self._pinned_doc_scores(q_terms)
-        for i, t in enumerate(q_terms):
-            if t in must_t:
-                scored = scored.filter(F.col(f"c{i}").isNotNull())
-        if min_should_match:
-            import operator as _op
-            from functools import reduce
-
-            opt_idx = [
-                i for i, t in enumerate(q_terms) if t not in must_t
-            ]
-            if len(opt_idx) < min_should_match:
-                return self._empty_topk()
-            matched = reduce(_op.add, [
-                F.when(F.col(f"c{i}").isNotNull(), 1).otherwise(0)
-                for i in opt_idx
-            ])
-            scored = scored.filter(matched >= int(min_should_match))
-        ex_terms = sorted(set(py_tokens(must_not))) if must_not else []
-        if ex_terms:
-            scored = scored.join(
-                self._matching_ords(ex_terms), "doc_ord", "left_anti"
-            )
-        return self._resolve_topk(
-            scored.select("doc_ord", "score"), k
+        return self._pinned_topk(
+            sorted(must_t | set(py_tokens(should))), k, must=must_t,
+            min_should=min_should_match,
+            must_not=sorted(set(py_tokens(must_not))),
         )
 
     def query_synonyms(
@@ -1981,15 +2003,14 @@ class IndexBuilder:
         terms' manifest-pruned block files; group df comes from a tiny
         per-rep aggregate broadcast back onto the candidates (NOT a
         window over rep — that would funnel a stopword-grade group's
-        postings into one task at scale).
+        postings into one task at scale; members overlap, so it cannot
+        come from member dfs). The blended rows score through the
+        shared :func:`pinned_scores` core, N and avgdl as literals.
 
         Reference analog: A1's synonym FALLBACK tries alternate keys
         only on a miss (lookup.py:146-196; reference README annotation
         loop) — this is the ranking-level generalization a full-text
         engine exposes for the same need."""
-        import operator as _op
-        from functools import reduce
-
         from antidb_spark.functions.analyze import py_tokens
 
         synonyms = synonyms or {}
@@ -2017,25 +2038,10 @@ class IndexBuilder:
         gdf = grouped.groupBy("rep").agg(
             F.count(F.lit(1)).alias("df")
         )
-        stats = self.catalog.read("stats")
-        scored = (
-            grouped.join(F.broadcast(gdf), "rep")
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "contrib",
-                contribution(F.col("tf"), F.col("df"), F.col("dl"),
-                             F.col("avgdl"), F.col("n_docs")),
-            )
-        )
-        aggs = [
-            F.sum(F.when(F.col("rep") == r, F.col("contrib"))).alias(f"c{i}")
-            for i, r in enumerate(reps)
-        ]
-        parts = [
-            F.coalesce(F.col(f"c{i}"), F.lit(0.0)) for i in range(len(reps))
-        ]
-        top = scored.groupBy("doc_ord").agg(*aggs).withColumn(
-            "score", F.round(reduce(_op.add, parts), 4)
+        n_docs, avgdl = self._corpus_stats()
+        top = pinned_scores(
+            grouped.join(F.broadcast(gdf), "rep"), reps, F.col("df"),
+            n_docs, avgdl, key="rep",
         )
         return self._resolve_topk(top.select("doc_ord", "score"), k)
 
@@ -2079,12 +2085,7 @@ class IndexBuilder:
         the expanded set), pinned float discipline. Expansion is
         driver-side from the range-pruned terms table; scoring reads
         only the expansions' manifest-pruned blocks."""
-        exp = self.expand_prefix(prefix, max_terms)
-        if not exp:
-            return self._empty_topk()
-        return self._resolve_topk(
-            self._pinned_doc_scores(exp).select("doc_ord", "score"), k
-        )
+        return self._pinned_topk(self.expand_prefix(prefix, max_terms), k)
 
     def more_like_this(
         self, text: str, m: int = 5, k: int = 10
@@ -2104,11 +2105,7 @@ class IndexBuilder:
         from antidb_spark.functions.analyze import py_tokens
 
         tf = Counter(py_tokens(text))
-        if not tf:
-            return self._empty_topk()
         dfs = self._term_dfs(sorted(tf))
-        if not dfs:
-            return self._empty_topk()
         n_docs, _ = self._corpus_stats()
         weighted = sorted(
             (
@@ -2117,10 +2114,7 @@ class IndexBuilder:
             ),
             key=lambda kv: (-kv[1], kv[0]),
         )
-        sel = sorted(t for t, _ in weighted[:m])
-        return self._resolve_topk(
-            self._pinned_doc_scores(sel).select("doc_ord", "score"), k
-        )
+        return self._pinned_topk(sorted(t for t, _ in weighted[:m]), k)
 
     # -- fuzzy (edit-distance) and regex term search ----------------------
 
@@ -2374,11 +2368,7 @@ class IndexBuilder:
         the edit-distance expansion, pinned float discipline. Scoring
         reads only the expansions' manifest-pruned blocks."""
         exp = self.expand_fuzzy(term, max_edits, max_terms)
-        if not exp:
-            return self._empty_topk()
-        return self._resolve_topk(
-            self._pinned_doc_scores(exp).select("doc_ord", "score"), k
-        )
+        return self._pinned_topk(exp, k)
 
     def query_fuzzy_warm(
         self, term: str, k: int = 10, max_edits: int = 1,
@@ -2423,12 +2413,7 @@ class IndexBuilder:
     ) -> DataFrame:
         """Regex term top-k: the anchored-match expansion scored as a
         multi-term disjunct (per-expansion idf, pinned floats)."""
-        exp = self.expand_regex(pattern, max_terms)
-        if not exp:
-            return self._empty_topk()
-        return self._resolve_topk(
-            self._pinned_doc_scores(exp).select("doc_ord", "score"), k
-        )
+        return self._pinned_topk(self.expand_regex(pattern, max_terms), k)
 
     # -- wildcard ("*fix", "pre*fix") over a reversed dictionary ----------
 
@@ -2648,12 +2633,7 @@ class IndexBuilder:
         """Wildcard top-k ("*ing", "s?an"): the glob expansion scored as
         a multi-term disjunct — per-expansion idf, pinned float
         discipline, identical scoring contract to ``query_prefix``."""
-        exp = self.expand_wildcard(pattern, max_terms)
-        if not exp:
-            return self._empty_topk()
-        return self._resolve_topk(
-            self._pinned_doc_scores(exp).select("doc_ord", "score"), k
-        )
+        return self._pinned_topk(self.expand_wildcard(pattern, max_terms), k)
 
     def query_wildcard_warm(
         self, pattern: str, k: int = 10, max_terms: int | None = None
@@ -2683,13 +2663,10 @@ class IndexBuilder:
         for key, w in weights.items():
             for tok in py_tokens(key):
                 norm[tok] = float(w)
-        if not norm:
-            return self._empty_topk()
         q_terms = sorted(norm)
-        scored = self._pinned_doc_scores(
-            q_terms, weights=[norm[t] for t in q_terms]
+        return self._pinned_topk(
+            q_terms, k, weights=[norm[t] for t in q_terms]
         )
-        return self._resolve_topk(scored.select("doc_ord", "score"), k)
 
     def query_decayed(
         self, query: str, k: int = 10, age_col: str = "age_days",
@@ -2717,14 +2694,9 @@ class IndexBuilder:
                 f"half_life_days must be > 0, got {half_life_days}"
             )
         ages = self._docmeta(age_col).select("doc_ord", age_col)
-
-        import operator as _op
-        from functools import reduce
-
         q_terms = sorted(set(py_tokens(query)))
         if not q_terms:
             return self._empty_topk()
-        scored = self._pinned_doc_scores(q_terms)
         decay = F.lit(1.0) / (
             F.lit(1.0)
             + F.col(age_col).cast("double") / F.lit(float(half_life_days))
@@ -2732,13 +2704,9 @@ class IndexBuilder:
         # decay the UNROUNDED fixed-order sum and round ONCE at the
         # output boundary — rounding the 4dp score again would put the
         # product on .00005 ties where engines' rounding modes diverge
-        raw = reduce(_op.add, [
-            F.coalesce(F.col(f"c{i}"), F.lit(0.0))
-            for i in range(len(q_terms))
-        ])
-        decayed = scored.join(ages, "doc_ord").withColumn(
-            "score", F.round(raw * decay, 4)
-        )
+        decayed = self._pinned_doc_scores(q_terms).join(
+            ages, "doc_ord"
+        ).withColumn("score", F.round(F.col("raw") * decay, 4))
         return self._resolve_topk(decayed.select("doc_ord", "score"), k)
 
     def hit_count(self, query: str) -> DataFrame:
@@ -2892,8 +2860,6 @@ class IndexBuilder:
         exchange. Float discipline: each clause max is the 4dp-rounded
         pinned score; the cross-clause sum is a fixed-order fold of
         ≤ len(clauses) doubles, rounded once at 4dp."""
-        from functools import reduce
-
         from antidb_spark.functions.analyze import py_tokens
 
         if not clauses:
@@ -3212,19 +3178,9 @@ class IndexBuilder:
         docs resolve ids."""
         from antidb_spark.functions.analyze import py_tokens
 
-        meta = self._docmeta()
+        keep = self._docmeta().filter(F.expr(where)).select("doc_ord")
         q_terms = sorted(set(py_tokens(query)))
-        if not q_terms:
-            return self._empty_topk()
-        scored = self._pinned_doc_scores(q_terms)
-        if require_all:
-            for i in range(len(q_terms)):
-                scored = scored.filter(F.col(f"c{i}").isNotNull())
-        ex_terms = sorted(set(py_tokens(exclude))) if exclude else []
-        if ex_terms:
-            scored = scored.join(
-                self._matching_ords(ex_terms), "doc_ord", "left_anti"
-            )
-        keep = meta.filter(F.expr(where)).select("doc_ord")
-        filtered = scored.join(keep, "doc_ord", "left_semi")
-        return self._resolve_topk(filtered.select("doc_ord", "score"), k)
+        return self._pinned_topk(
+            q_terms, k, must=q_terms if require_all else (),
+            must_not=sorted(set(py_tokens(exclude or ""))), keep=keep,
+        )

@@ -12,8 +12,9 @@ Exactness invariant (the same one ``merge_index`` proves physically):
 for id-disjoint segments, ``federated_topk([build(A), build(B)], q) ≡
 build(A ∪ B).query_pinned(q)`` — including ties. Why it holds:
 
-- global n_docs = Σ n_i and global total_dl = Σ n_i·avgdl_i, so the
-  merged corpus's avgdl is exactly recoverable from per-segment stats;
+- global n_docs = Σ n_i and global Σ dl = Σ sum_dl_i (integers), so
+  the merged corpus's avgdl is exactly recoverable from per-segment
+  stats;
 - global df(t) = Σ df_i(t) (a doc lives in exactly one segment);
 - a doc's (tf, dl) lives wholly in its segment, so its pinned BM25
   score is computable segment-locally once the global (df, avgdl,
@@ -24,9 +25,12 @@ build(A ∪ B).query_pinned(q)`` — including ties. Why it holds:
   single-index path uses (its doc_ord order IS id order).
 
 Scale shape: planning is driver-side pyarrow over each segment's
-committed metadata (no Spark jobs); each segment reads only its
-manifest-pruned block files for the query's terms; the merge moves
-k rows per segment. Nothing touches a segment's files.
+committed metadata (no Spark jobs); each segment scores through the
+single-index pinned core (``build.pinned_scores``) with the global
+df/N/avgdl as literals — this module holds no BM25 arithmetic — and
+reads only its manifest-pruned block files for the query's terms;
+``_resolve_topk`` cuts a segment-local top-k, and the merge moves k
+rows per segment. Nothing touches a segment's files.
 
 Statistics contract with deletes/upserts: per-segment stats count dead
 generations until that segment's ``purge_deleted`` — identical to the
@@ -40,7 +44,6 @@ with correct global ranking is what a fleet of those archives needs.
 
 from __future__ import annotations
 
-import operator as _op
 from collections.abc import Sequence
 from functools import reduce
 
@@ -48,23 +51,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from antidb_spark.functions.analyze import py_tokens
-from antidb_spark.functions.bm25 import contribution
+from antidb_spark.operators.build import literal_dfs, pinned_scores
 
 
 def federated_stats(builders) -> tuple[int, float]:
-    """Global (n_docs, avgdl) across segments, driver-side only.
-    Segments carrying the exact ``sum_dl`` contribute it directly
-    (integer-exact Σ dl, so the global avgdl is bit-identical to a
-    union build's); older snapshots fall back to n_i·avgdl_i."""
+    """Global (n_docs, avgdl) across segments, driver-side only: each
+    segment's exact ``sum_dl`` adds up integer-exact, so the global
+    avgdl is bit-identical to a union build's."""
     n_docs, total_dl = 0, 0.0
     for b in builders:
         row = b.catalog.read_arrow("stats").to_pylist()[0]
-        n_i = int(row["n_docs"])
-        n_docs += n_i
-        if row.get("sum_dl") is not None:
-            total_dl += float(row["sum_dl"])
-        else:
-            total_dl += n_i * float(row["avgdl"])
+        n_docs += int(row["n_docs"])
+        total_dl += float(row["sum_dl"])
     return n_docs, (total_dl / n_docs if n_docs else 0.0)
 
 
@@ -92,7 +90,8 @@ def federated_topk(
     Each segment contributes at most k candidate rows (its local top-k
     under the GLOBAL stats, tiebroken on doc_ord = segment id order);
     the final rank is (score desc, *id_cols asc), the single-index
-    tiebreak."""
+    tiebreak. ``spark`` is not used: each segment plans on its own
+    builder's session."""
     if not builders:
         raise ValueError("federated_topk needs at least one segment")
     id_cols = list(builders[0].id_cols)
@@ -106,54 +105,16 @@ def federated_topk(
     if not gdfs:
         return builders[0]._empty_topk()
     n_docs, avgdl = federated_stats(builders)
-    dfs_df = spark.createDataFrame(
-        sorted(gdfs.items()), "term string, df long"
-    )
-
-    outs = []
-    for b in builders:
-        post = b._drop_tombstones(b._term_postings(q_terms))
-        # pinned float discipline: per-term partials summed in
-        # sorted-term fixed order, rounded to 4dp before ranking (the
-        # same association order as the single-index path and the SQL
-        # oracles — rank identity across engines)
-        aggs = [
-            F.sum(
-                F.when(F.col("term") == t, F.col("contrib"))
-            ).alias(f"c{i}")
-            for i, t in enumerate(q_terms)
-        ]
-        score = F.round(
-            reduce(
-                _op.add,
-                [F.coalesce(F.col(f"c{i}"), F.lit(0.0))
-                 for i in range(len(q_terms))],
-            ),
-            4,
+    outs = [
+        b._resolve_topk(
+            pinned_scores(
+                b._term_postings(sorted(gdfs)), q_terms, literal_dfs(gdfs),
+                n_docs, avgdl,
+            ).select("doc_ord", "score"),
+            k,
         )
-        scored = (
-            post.join(F.broadcast(dfs_df), "term")
-            .withColumn(
-                "contrib",
-                contribution(F.col("tf"), F.col("df"), F.col("dl"),
-                             F.lit(avgdl), F.lit(n_docs)),
-            )
-            .groupBy("doc_ord")
-            .agg(*aggs)
-            .withColumn("score", score)
-            .select("doc_ord", "score")
-        )
-        # segment-local top-k on the narrow relation (doc_ord IS the
-        # segment's id order), THEN resolve ids — only k rows meet the
-        # docmap (same shape as IndexBuilder._resolve_topk)
-        local = scored.orderBy(F.desc("score"), F.asc("doc_ord")).limit(k)
-        docmap = b.catalog.read("docmap").select("doc_ord", *id_cols)
-        outs.append(
-            docmap.join(F.broadcast(local), "doc_ord").select(
-                *id_cols, "score"
-            )
-        )
-
+        for b in builders
+    ]
     merged = reduce(lambda a, c: a.unionByName(c), outs)
     return merged.orderBy(
         F.desc("score"), *[F.asc(c) for c in id_cols]

@@ -35,8 +35,9 @@ Scale notes (100 TB lens):
 Float discipline: per (term, doc, field) there is exactly one posting,
 so the field blend folds coalesced per-field columns in sorted-field
 order; per-doc scores fold per-term partials in sorted-term order and
-round to 4dp at the boundary — same pinned contract as `query_pinned`,
-so a DuckDB ordered aggregate reproduces the scores bit-for-bit.
+round to 4dp at the boundary (`build.fold_pinned`, the pinned contract
+of `query_pinned`), so a DuckDB ordered aggregate reproduces the scores
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ from pyspark.sql import functions as F
 
 from antidb_spark.functions.analyze import py_tokens
 from antidb_spark.functions.bm25 import B, K1, idf
-from antidb_spark.operators.build import IndexBuilder
+from antidb_spark.operators.build import IndexBuilder, fold_pinned
 from antidb_spark.schema import DOC_ID_COLS
 
 META_NAME = "fielded.json"
@@ -206,23 +207,9 @@ class FieldedIndex:
             idf(F.col("df"), F.lit(n_docs))
             * F.col("tfn") / (F.lit(float(K1)) + F.col("tfn")),
         )
-        taggs = [
-            F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(f"c{i}")
-            for i, t in enumerate(reps)
-        ]
-        parts = [
-            F.coalesce(F.col(f"c{i}"), F.lit(0.0)) for i in range(len(reps))
-        ]
-        top = scored.groupBy(*self.id_cols).agg(*taggs).withColumn(
-            "score", F.round(reduce(_op.add, parts), 4)
-        )
+        top = fold_pinned(scored, reps, by=self.id_cols)
         order = [F.col("score").desc()] + [F.col(c).asc() for c in self.id_cols]
         return top.select(*self.id_cols, "score").orderBy(*order).limit(k)
 
     def _empty_topk(self) -> DataFrame:
-        dm = self.sub[self.fields[0]].catalog.read("docmap")
-        schema = ", ".join(
-            f"{c} {dm.schema[c].dataType.simpleString()}"
-            for c in self.id_cols
-        ) + ", score double"
-        return self.spark.createDataFrame([], schema)
+        return self.sub[self.fields[0]]._empty_topk()

@@ -181,31 +181,23 @@ def append_run(
     # (count, sum dl) — O(delta), never a docmap re-scan. Bit-identical
     # to a from-scratch recompute: dl are ints, integer-valued double
     # sums below 2^53 are exact in any association order, and fresh
-    # builds compute avgdl as the same sum/count. Pre-sum_dl indexes
-    # (older snapshots) take one full recompute, which upgrades them.
+    # builds compute avgdl as the same sum/count.
     old = b.catalog.read_arrow("stats").to_pylist()[0]
-    if old.get("sum_dl") is not None:
-        if local:
-            d_n, d_s = len(new_docmap), pc.sum(new_docmap["dl"]).as_py()
-        else:
-            d = new_dl.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-            ).first()
-            d_n, d_s = d["n"], d["s"]
-        n = int(old["n_docs"]) + int(d_n)
-        s = int(old["sum_dl"]) + int(d_s or 0)
-        stats = pa.table(
-            {"n_docs": [n], "avgdl": [s / n], "sum_dl": [s]},
-            schema=pa.schema([("n_docs", pa.int64()),
-                              ("avgdl", pa.float64()),
-                              ("sum_dl", pa.int64())]),
-        )
+    if local:
+        d_n, d_s = len(new_docmap), pc.sum(new_docmap["dl"]).as_py()
     else:
-        stats = b.catalog.read("docmap").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("sum_dl"),
-        )
+        d = new_dl.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+        ).first()
+        d_n, d_s = d["n"], d["s"]
+    n = int(old["n_docs"]) + int(d_n)
+    s = int(old["sum_dl"]) + int(d_s or 0)
+    stats = pa.table(
+        {"n_docs": [n], "avgdl": [s / n], "sum_dl": [s]},
+        schema=pa.schema([("n_docs", pa.int64()),
+                          ("avgdl", pa.float64()),
+                          ("sum_dl", pa.int64())]),
+    )
     b.catalog.replace(stats, "stats")
 
     # blocks: pack ONLY the delta postings; append with a fresh run_base

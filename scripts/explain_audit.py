@@ -18,6 +18,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 import tempfile
 
@@ -217,11 +218,12 @@ def main() -> None:
         sections.append((
             "federated shard search (two segments, global stats)",
             "One manifest-pruned blocks scan PER SEGMENT with In(term,…) "
-            "pushdown; the global df table is a tiny BroadcastExchange "
-            "(driver-computed Σ segment dfs — global avgdl/N ride as "
-            "literals, no stats joins); each segment cuts a local top-k "
-            "on the narrow (doc_ord, score) relation before its k rows "
-            "broadcast-join the docmap; the cross-segment merge is "
+            "pushdown, scored by the single-index pinned core; the "
+            "global df (driver-computed Σ segment dfs), avgdl and N ride "
+            "as literals — no terms/stats scan, no df join; each segment "
+            "cuts a local top-k on the narrow (doc_ord, score) relation "
+            "before its k rows broadcast-join the docmap; the "
+            "cross-segment merge is "
             "TakeOrdered over ≤ k·segments rows — nothing global ever "
             "materializes.",
             plan_of(federated_topk(spark, [fa, fb],
@@ -714,7 +716,8 @@ def main() -> None:
         checks.append(("federated: term pushdown on BOTH segment scans",
                        fed_plan.count("In(term") >= 2
                        or fed_plan.count("EqualTo(term") >= 2))
-        checks.append(("federated: global dfs broadcast, no stats joins",
+        checks.append(("federated: k-row docmap resolve broadcasts, no "
+                       "sort-merge join",
                        "BroadcastExchange" in fed_plan
                        and "SortMergeJoin" not in fed_plan))
         checks.append(("federated: cross-segment merge is TakeOrdered",
@@ -867,6 +870,23 @@ def main() -> None:
                        "cartesian / broadcast-nested-loop",
                        "CartesianProduct" not in rng_plan
                        and "BroadcastNestedLoopJoin" not in rng_plan))
+        pinned = [
+            "metadata-filtered BM25 (docmeta late materialization)",
+            "recency-decayed BM25 (reciprocal age boost)",
+            "grouped rollup (conversation-level query_grouped)",
+            "wildcard top-k (reversed-dictionary expansion)",
+            "snippet highlights (term_positions from pos_blocks)",
+            "federated shard search (two segments, global stats)",
+            "per-group top hits (group_top_hits two-phase top-n)",
+            "rescore window (query_rescored phrase rerank)",
+        ]
+        meta_scan = re.compile(r"InMemoryFileIndex \[[^\]]*/(terms|stats)/")
+        checks.append(("pinned family: df/N/avgdl are literals — no terms "
+                       "or stats table scan in filtered, decayed, "
+                       "grouped, wildcard, snippet, federated, "
+                       "group_top_hits or rescored",
+                       not any(meta_scan.search(by_title[t])
+                               for t in pinned)))
         f.write("## Property checks\n\n")
         for name, ok in checks:
             f.write(f"- {'PASS' if ok else 'FAIL'}: {name}\n")

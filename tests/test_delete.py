@@ -14,11 +14,13 @@ rebuilds physically remove the docs and restore exact statistics.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
 from antidb_spark.operators.build import IndexBuilder
+from antidb_spark.operators.federate import federated_topk
 from antidb_spark.operators.phrase import (
     build_positional_index,
     near_query,
@@ -217,6 +219,15 @@ _DEFINE = {
     "near_query": _near,
     "term_positions": lambda built: lambda: term_positions(
         built[0], QUERY, k=5),
+    "query_filtered": lambda built: lambda: built[0].query_filtered(
+        QUERY, "role = 'user'", k=5, exclude=_V[300]),
+    "query_prefix": lambda built: lambda: built[0].query_prefix("th", k=5),
+    "more_like_this": lambda built: lambda: built[0].more_like_this(
+        QUERY, m=2, k=5),
+    "query_boosted": lambda built: lambda: built[0].query_boosted(
+        {"the": 0.5, _V[200]: 2.0}, k=5),
+    "federated_topk": lambda built: lambda: federated_topk(
+        built[0].spark, [built[0]], QUERY, k=5),
 }
 
 
@@ -237,6 +248,27 @@ def test_defines_without_a_job(built, method):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(f"define_{method}") == []
     assert want and df.collect() == want
+
+
+def test_pinned_family_reads_no_terms_or_stats(built):
+    """The pinned family takes df, N and avgdl as driver-planned
+    literals: none of these plans scans the terms or stats table."""
+    b = built[0]
+    shapes = {
+        "query_pinned": b.query_pinned(QUERY, k=5),
+        "query_synonyms": b.query_synonyms(QUERY, {_V[200]: [_V[300]]}, k=5),
+        "explain": b.explain(QUERY, k=5),
+        "term_positions": term_positions(b, QUERY, k=5),
+        "federated_topk": federated_topk(b.spark, [b], QUERY, k=5),
+    }
+    meta = tuple(
+        os.path.realpath(b.catalog.table_dir(t)) + os.sep
+        for t in ("terms", "stats")
+    )
+    for name, df in shapes.items():
+        read = [os.path.realpath(urlparse(f).path) for f in df.inputFiles()]
+        assert read, name
+        assert not [f for f in read if f.startswith(meta)], name
 
 
 def test_positional_paths_exclude_deleted(built):
