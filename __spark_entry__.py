@@ -2348,15 +2348,28 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 43
-    entries outside the last two windows (media_features … pq_refined),
-    then the previous order unchanged: ivfpq_topk … spell_suggest (50,
-    the last window) and snippet_hits … frame_sample (12). The window
-    now ends after clone_candidates; the next rotation should move
-    snippet_hits … frame_sample (12 entries, outside this window and
-    the last) to the front."""
+    round, least-recently-driver-attested first. Current order: the 12
+    entries outside the last two windows (snippet_hits …
+    frame_sample), then the previous order unchanged: media_features …
+    clone_candidates (50, the last window) and ann_cosine_topk …
+    spell_suggest (43). The window now ends after temperature_mix; the
+    next rotation should move ann_cosine_topk … spell_suggest (43
+    entries, outside this window and the last) to the front."""
     return {
         # --- outside the last two driver windows
+        "snippet_hits": _q_snippet_hits,
+        "lookup_dump": _q_lookup_dump,
+        "fallback_join": _q_fallback_join,
+        "interval_days": _q_interval_days,
+        "phrase_search": _q_phrase_search,
+        "phrase_adhoc": _q_phrase_adhoc,
+        "phrase_prefix": _q_phrase_prefix,
+        "fingerprints": _q_fingerprints,
+        "exact_dup_groups": _q_exact_dup_groups,
+        "ngram_jaccard": _q_ngram_jaccard,
+        "packed_examples": _q_packed_examples,
+        "frame_sample": _q_frame_sample,
+        # --- in the last driver window
         "media_features": _q_media_features,
         "media_decode": _q_media_decode,
         "media_meta": _q_media_meta,
@@ -2395,12 +2408,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rescored_topk": _q_rescored_topk,
         "kmeans_clusters": _q_kmeans,
         "temperature_mix": _q_temperature_mix,
+        # ---- driver window (50) ends here ----
         "cluster_mix": _q_cluster_mix,
         "dup_groups": _q_dup_groups,
         "curated": _q_curated,
         "pq_topk": _q_pq_topk,
         "pq_refined": _q_pq_refined,
-        # --- in the last driver window
         "ivfpq_topk": _q_ivfpq_topk,
         "time_travel": _q_time_travel,
         "minhash_dups": _q_minhash_dups,
@@ -2408,7 +2421,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": _q_lang_id,
         "quality": _q_quality,
         "clone_candidates": _q_clone_candidates,
-        # ---- driver window (50) ends here ----
+        # --- outside the last driver window
         "ann_cosine_topk": _q_ann_cosine_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
@@ -2452,19 +2465,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "merged_topk": _q_merged_topk,
         "federated_topk": _q_federated_topk,
         "spell_suggest": _q_spell_suggest,
-        # --- outside the last driver window
-        "snippet_hits": _q_snippet_hits,
-        "lookup_dump": _q_lookup_dump,
-        "fallback_join": _q_fallback_join,
-        "interval_days": _q_interval_days,
-        "phrase_search": _q_phrase_search,
-        "phrase_adhoc": _q_phrase_adhoc,
-        "phrase_prefix": _q_phrase_prefix,
-        "fingerprints": _q_fingerprints,
-        "exact_dup_groups": _q_exact_dup_groups,
-        "ngram_jaccard": _q_ngram_jaccard,
-        "packed_examples": _q_packed_examples,
-        "frame_sample": _q_frame_sample,
     }
 
 

@@ -246,30 +246,55 @@ def _pack_partition(
         [f.name for f in _BLOCKS_OUT.fields])
 
 
-def _decode_batch(batch: pd.DataFrame) -> tuple[np.ndarray, ...]:
-    """Vectorized whole-batch block decode → (term_rep, ords, tfs, dls).
+#: the packed streams of a ``blocks`` row, in ``_decode_streams`` order
+_PACKED = ("docs_packed", "tfs_packed", "dls_packed")
 
-    One varint pass over the CONCATENATED buffers of all blocks in the
-    Arrow batch (instead of a per-block Python loop), then segment-wise
-    delta reconstruction: with cs = global cumsum of deltas and
-    excl = cs - deltas (exclusive prefix), the absolute ordinal at
-    position i of a block starting at s is cs[i] - excl[s] — because the
-    first delta of every block is its absolute first ordinal.
+
+def _decode_streams(counts: np.ndarray, docs, tfs, third) -> tuple:
+    """Vectorized block decode of the CONCATENATED packed streams of
+    blocks holding ``counts`` postings each → (ords, tfs, third): the
+    dls of ``blocks``, the position gaps of ``pos_blocks``.
+
+    One varint pass per stream over all blocks (instead of a per-block
+    Python loop), then segment-wise delta reconstruction: with cs =
+    global cumsum of deltas and excl = cs - deltas (exclusive prefix),
+    the absolute ordinal at position i of a block starting at s is
+    cs[i] - excl[s] — because the first delta of every block is its
+    absolute first ordinal.
     """
-    counts = batch["n_docs"].to_numpy(dtype=np.int64)
     # decode the three streams SEPARATELY: tfs (and often dls) are
     # all-single-byte buffers that take varint_decode's O(1-pass) fast
     # path; concatenating them with the multi-byte doc deltas would
     # force everything onto the general path (measured 2× slower)
-    deltas = varint_decode(b"".join(batch["docs_packed"])).astype(np.int64)
-    tfs = varint_decode(b"".join(batch["tfs_packed"]))
-    dls = varint_decode(b"".join(batch["dls_packed"]))
+    deltas = varint_decode(docs).astype(np.int64)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     cs = np.cumsum(deltas)
-    base = np.repeat(cs[starts] - deltas[starts], counts)
-    ords = cs - base
-    term_rep = np.repeat(batch["term"].to_numpy(), counts)
-    return term_rep, ords, tfs, dls
+    ords = cs - np.repeat(cs[starts] - deltas[starts], counts)
+    return ords, varint_decode(tfs), varint_decode(third)
+
+
+def _decode_batch(batch: pd.DataFrame, cols: Sequence[str] = _PACKED) -> tuple:
+    """(counts, *``_decode_streams``) of a pandas batch of blocks."""
+    counts = batch["n_docs"].to_numpy(dtype=np.int64)
+    return counts, *_decode_streams(
+        counts, *(b"".join(batch[c]) for c in cols))
+
+
+def _decode_table(tbl: pa.Table) -> tuple:
+    """(counts, *``_decode_streams``) of a non-empty Arrow table of
+    blocks: each stream is its binary column's data buffer sliced by
+    the column's offsets, no Python ``bytes`` per block."""
+
+    def data(col: str) -> np.ndarray:
+        arr = tbl.column(col).combine_chunks()
+        _, offsets, buf = arr.buffers()
+        width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        lo, hi = np.frombuffer(offsets, width)[[arr.offset,
+                                                arr.offset + len(arr)]]
+        return np.frombuffer(buf, np.uint8)[lo:hi]
+
+    counts = tbl.column("n_docs").to_numpy().astype(np.int64)
+    return counts, *_decode_streams(counts, *map(data, _PACKED))
 
 
 def _alive_bits(bits: np.ndarray, ords: np.ndarray) -> np.ndarray:
@@ -285,6 +310,14 @@ def _alive_bits(bits: np.ndarray, ords: np.ndarray) -> np.ndarray:
     o = ords[in_r]
     m[in_r] = ((bits[o >> 3] >> (o & 7)) & 1) == 0
     return m
+
+
+def _by_ord(tbl: pa.Table) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+    """(doc_ord, *id_cols) rows → (sorted doc_ords, {id_col: values in
+    that order}), ids converted as ``Table.to_pandas`` converts them."""
+    tbl = tbl.sort_by("doc_ord")
+    return tbl.column("doc_ord").to_numpy(), {
+        c: tbl.column(c).to_pandas().to_numpy() for c in tbl.column_names[1:]}
 
 
 def _topk_slots(
@@ -384,10 +417,10 @@ def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for batch in batches:
         if len(batch) == 0:
             continue
-        term_rep, ords, tfs, dls = _decode_batch(batch)
+        counts, ords, tfs, dls = _decode_batch(batch)
         yield pd.DataFrame(
             {
-                "term": term_rep,
+                "term": np.repeat(batch["term"].to_numpy(), counts),
                 "doc_ord": ords,
                 "tf": tfs.astype(np.int64),
                 "dl": dls.astype(np.int64),
@@ -464,14 +497,16 @@ class IndexBuilder:
         # commit by this builder or by another one on the same root
         # (upsert, compaction, merge, rollback) reaches the next query
         # with no caller invalidating anything. Whole-table values —
-        # corpus stats, tombstone state, docmap frame — live in _heads
-        # (see _at_head); per-term values in bounded LRUs: df (terms
-        # table), pruned scan relations (blocks table), and decoded warm
-        # postings with their tf weights (blocks table + the avgdl those
-        # weights used) — the reference likewise keeps decompressed
-        # leaves in-process. Spark schemas are the catalog's
-        # (Catalog.spark_schema), so no index read infers one twice.
-        self._heads: dict[tuple[str, Any], tuple[str, Any]] = {}
+        # corpus stats, tombstone state, the doc_ord-sorted docmap ids —
+        # live in _heads (see _at_head; ids and tombstones extend by
+        # the new files of an append); per-term values in bounded LRUs:
+        # df (terms table), pruned scan relations (blocks table), and
+        # decoded warm postings with their tf weights (blocks table +
+        # the avgdl those weights used) — the reference likewise keeps
+        # decompressed leaves in-process. Spark schemas are the
+        # catalog's (Catalog.spark_schema), so no index read infers one
+        # twice.
+        self._heads: dict[tuple[str, Any], tuple[str, list, Any]] = {}
         self._dfs = _SnapshotLRU()
         self._postings = _SnapshotLRU(lambda v: v[0].size)
         self._scans = _SnapshotLRU()
@@ -700,19 +735,33 @@ class IndexBuilder:
         )
         return {t: d for t, d in got.items() if d is not None}
 
-    def _at_head(self, table: str, load: Callable[[], Any]) -> Any:
+    def _at_head(
+        self, table: str, load: Callable[[], Any],
+        extend: Callable[[Any, list[str]], Any] | None = None,
+    ) -> Any:
         """``load()`` as of the head snapshot of ``table``, cached until
         the table commits another. The snapshot id is read BEFORE
         loading, so a commit racing the load caches newer data under
         the older id — the next call reloads once — never stale data
         under the newer id. One entry per loader (keyed by its code),
-        so ``load`` must depend on nothing but the table."""
-        snap = self.catalog.manifest(table)["snapshot_id"]
+        so ``load`` must depend on nothing but the table.
+
+        An append (a head file list that strictly extends the cached
+        one) is served by ``extend(cached, new_files)`` when given: the
+        extended value, or None to reload. As a racing load may already
+        hold some of those files, ``extend`` must tolerate them."""
+        man = self.catalog.manifest(table)
         key = (table, load.__code__)
         hit = self._heads.get(key)
-        if hit is None or hit[0] != snap:
-            hit = self._heads[key] = (snap, load())
-        return hit[1]
+        if hit is None or hit[0] != man["snapshot_id"]:
+            files = [e["path"] for e in man["files"]]
+            n = len(hit[1]) if hit else len(files)
+            value = None
+            if extend and n < len(files) and files[:n] == hit[1]:
+                value = extend(hit[2], files[n:])
+            hit = self._heads[key] = (
+                man["snapshot_id"], files, load() if value is None else value)
+        return hit[2]
 
     #: every table an index may commit, in rollback order (the stage-0
     #: ``postings`` table is build scratch, never committed past build)
@@ -810,16 +859,21 @@ class IndexBuilder:
         if not self._n_tombstones():
             return None
 
-        def load() -> tuple[np.ndarray, np.ndarray]:
-            t = self.catalog.read_arrow("tombstones", columns=["doc_ord"])
-            dead = np.unique(t.column("doc_ord").to_numpy())
+        def load(
+            old: tuple = (None, np.empty(0, np.int64)),
+            files: list[str] | None = None,
+        ) -> tuple[np.ndarray, np.ndarray]:
+            # an append's ordinals join the cached ones (``_at_head``)
+            dead = np.union1d(old[1], self.catalog.read_arrow(
+                "tombstones", columns=["doc_ord"], files=files,
+            ).column("doc_ord").to_numpy())
             bits = np.zeros((int(dead[-1]) >> 3) + 1, dtype=np.uint8)
             np.bitwise_or.at(
                 bits, dead >> 3, (1 << (dead & 7)).astype(np.uint8)
             )
             return bits, dead
 
-        return self._at_head("tombstones", load)
+        return self._at_head("tombstones", load, load)
 
     def delete_docs(self, docs) -> int:
         """Tombstone documents by id — O(|docs| + tombstones), no index
@@ -1190,15 +1244,13 @@ class IndexBuilder:
                 if len(batch) == 0:
                     continue
                 src = int(batch["_pid"].iloc[0])
-                _term_rep, ords, tfs, dls = _decode_batch(batch)
+                counts, ords, tfs, dls = _decode_batch(batch)
                 uniq, inv = np.unique(
                     batch["term"].to_numpy(), return_inverse=True
                 )
                 idf_u = np.array([idf[t] for t in uniq], dtype=np.float64)
                 tid_u = np.array([term_ids[t] for t in uniq], dtype=np.int32)
-                per_post = np.repeat(
-                    inv, batch["n_docs"].to_numpy(dtype=np.int64)
-                )
+                per_post = np.repeat(inv, counts)
                 tfw = IndexBuilder._tfw(
                     tfs.astype(np.float64), dls.astype(np.float64), avgdl
                 )
@@ -1250,8 +1302,8 @@ class IndexBuilder:
         The whole batch is planned driver-side from committed metadata,
         then scored by one of two tiers, with no per-batch metadata jobs;
         both tiers rank each query with the same kernel
-        (``_topk_slots``) and end in the same tiny driver merge and id
-        resolve:
+        (``_topk_slots``) and end in the same id resolve (``_ids_of``)
+        and Arrow-built result frame:
 
         0. tier choice (``_batch_on_driver``, from the plan of step 1):
            a batch whose block fan-out (each term's blocks counted once
@@ -1276,9 +1328,10 @@ class IndexBuilder:
            before its first row, so one task per small upsert run
            would cost more than the run's decode.
         4. tree top-k: per-bucket top-k of each query (``reduce_topk``,
-           deterministic blob order) → driver merge of
-           ≤ k·|queries|·n_partitions rows → id resolution against the
-           docmap via manifest-pruned pyarrow (no docmap scan job).
+           deterministic blob order) → numpy driver merge of
+           ≤ k·|queries|·n_partitions rows → id resolution from the
+           driver's docmap arrays (no docmap scan job). The driver tier
+           needs no merge: each query's top k is already ranked.
         """
         plan = self._plan_queries(queries)
         dm_schema = self.catalog.spark_schema("docmap")
@@ -1288,32 +1341,25 @@ class IndexBuilder:
             + [T.StructField("score", T.DoubleType(), True)]
         )
         if plan is None or k < 1:  # k < 1: nothing to rank
-            return self.spark.createDataFrame([], out_schema)
-        if self._batch_on_driver(plan):
+            qid, ords, scores = (np.empty(0, dtype=t) for t in (
+                np.int32, np.int64, np.float64))
+        elif self._batch_on_driver(plan):
+            # each query's top k, already ranked (score desc, doc_ord asc)
             tops = self._warm_scores(plan, k, dense=False)
-            top_pdf = pd.DataFrame({
-                "query_id": np.repeat(
-                    np.arange(len(tops), dtype=np.int32),
-                    [o.size for o, _ in tops],
-                ),
-                "doc_ord": np.concatenate([o for o, _ in tops]),
-                "score": np.concatenate([s for _, s in tops]),
-            })
+            qid = np.repeat(np.arange(len(tops), dtype=np.int32),
+                            [o.size for o, _ in tops])
+            ords = np.concatenate([o for o, _ in tops])
+            scores = np.concatenate([s for _, s in tops])
         else:
-            top_pdf = self._spark_top(plan, k)
-        if len(top_pdf) == 0:
-            return self.spark.createDataFrame([], out_schema)
-        top_pdf = top_pdf.sort_values(
-            ["query_id", "score", "doc_ord"], ascending=[True, False, True]
-        ).groupby("query_id", sort=False).head(k)
-        dm = self._resolve_ords(
-            [int(o) for o in sorted(set(top_pdf["doc_ord"]))]
-        )
-        merged = top_pdf.merge(dm, on="doc_ord").sort_values(
-            ["query_id", "score", "doc_ord"], ascending=[True, False, True]
-        )
+            qid, ords, scores = self._spark_top(plan, k)
+        ids = {
+            c: pa.array(v, from_pandas=True)
+            for c, v in self._ids_of(ords).items()
+        } if ords.size else {c: pa.nulls(0) for c in self.id_cols}
+        # an Arrow table becomes a LocalRelation: collect runs no job
         return self.spark.createDataFrame(
-            merged[["query_id", *self.id_cols, "score"]], schema=out_schema
+            pa.table({"query_id": qid, **ids, "score": scores}),
+            schema=out_schema,
         )
 
     def _batch_on_driver(self, plan: dict) -> bool:
@@ -1321,10 +1367,10 @@ class IndexBuilder:
         fan-out fits the warm block budget, False (one Spark action)."""
         return plan["fan_out"] <= self.WARM_MAX_BLOCKS
 
-    def _spark_top(self, plan: dict, k: int) -> pd.DataFrame:
-        """(query_id, doc_ord, score) candidate rows of the Spark tier
-        (``query_batch`` steps 2-4): at least the top k of each query,
-        before the driver merge."""
+    def _spark_top(self, plan: dict, k: int) -> tuple[np.ndarray, ...]:
+        """(query_ids, doc_ords, scores) of the Spark tier (``query_batch``
+        steps 2-4): each query's top k ranked by (score desc, doc_ord
+        asc), merged on the driver from its reducers' candidates."""
         terms = plan["terms"]
         blocks = self._blocks_scan(terms).filter(F.col("term").isin(terms))
         # deleted docs are dropped in the reducer, after scoring
@@ -1423,11 +1469,18 @@ class IndexBuilder:
         # every other scan in the session (128 MB-row-group tables)
         # keeps the defaults
         with index_scan_conf(self.spark):
-            return (
+            cand = (
                 bucketed.repartition(n_part, "bucket")
                 .mapInPandas(reduce_topk, schema=topk_schema)
-                .toPandas()
+                .toArrow()
             )
+        qid, ords, scores = (
+            cand.column(c).to_numpy() for c in ("query_id", "doc_ord", "score")
+        )
+        order = np.lexsort((ords, -scores, qid))
+        qid, ords, scores = qid[order], ords[order], scores[order]
+        keep = np.arange(qid.size) - np.searchsorted(qid, qid) < k
+        return qid[keep], ords[keep], scores[keep]
 
     # Above this many candidate blocks the interactive path would decode
     # too much on one core — fall back to the distributed batch path.
@@ -1447,29 +1500,41 @@ class IndexBuilder:
     DENSE_WARM_MAX_DOCS = 50_000_000
     # Below this corpus size the whole (doc_ord → ids) mapping lives on
     # the driver (≈ 2M rows ≈ tens of MB) and final id resolution is a
-    # dict lookup; above it, resolution stays a pruned pyarrow read.
+    # binary search; above it, resolution stays a pruned pyarrow read.
     DOCMAP_CACHE_MAX_DOCS = 2_000_000
 
-    def _resolve_ords(self, ords: Sequence[int]) -> pd.DataFrame:
-        """(doc_ord, *id_cols) rows for the given ordinals — driver
-        docmap cache when the corpus qualifies, else manifest-pruned
-        pyarrow (row-group predicate) read. Zero Spark jobs either way."""
+    def _ids_of(self, ords: np.ndarray) -> dict[str, np.ndarray]:
+        """{id_col: values} of the doc ordinals ``ords``, in request
+        order — from the driver's doc_ord-sorted docmap arrays when the
+        corpus qualifies (extended in place on append), else from a
+        manifest-pruned pyarrow read. Zero Spark jobs either way. An
+        ordinal not in the docmap raises KeyError."""
+        ords = np.asarray(ords, dtype=np.int64)
+        cols = ["doc_ord", *self.id_cols]
         n_docs, _ = self._corpus_stats()
         if n_docs <= self.DOCMAP_CACHE_MAX_DOCS:
-            pdf = self._at_head("docmap", lambda: self.catalog.read_arrow(
-                "docmap", columns=["doc_ord", *self.id_cols]
-            ).to_pandas().set_index("doc_ord"))
-            return pdf.loc[list(ords)].reset_index()
-        return (
-            self.catalog.read_pruned_arrow(
-                "docmap", "doc_ord", values=[int(o) for o in ords],
-                columns=["doc_ord", *self.id_cols],
-            )
-            .to_pandas()
-            .set_index("doc_ord")
-            .loc[list(ords)]  # request order, same as the cached branch
-            .reset_index()
-        )
+
+            def read(files: list[str] | None = None) -> tuple:
+                return _by_ord(self.catalog.read_arrow(
+                    "docmap", columns=cols, files=files))
+
+            def extend(old: tuple, files: list[str]) -> tuple | None:
+                new = read(files)
+                if old[0].size and new[0].size and new[0][0] <= old[0][-1]:
+                    return None  # not an ordinal append: reload
+                return np.r_[old[0], new[0]], {
+                    c: np.r_[v, new[1][c]] for c, v in old[1].items()}
+
+            keys, ids = self._at_head("docmap", read, extend)
+        else:
+            keys, ids = _by_ord(self.catalog.read_pruned_arrow(
+                "docmap", "doc_ord", values=ords.tolist(), columns=cols))
+        at = np.searchsorted(keys, ords)
+        found = at < keys.size
+        found[found] = keys[at[found]] == ords[found]
+        if not found.all():
+            raise KeyError(ords[~found].tolist())
+        return {c: v[at] for c, v in ids.items()}
 
     def _warm_postings(
         self, terms: Sequence[str], avgdl: float
@@ -1488,21 +1553,26 @@ class IndexBuilder:
         snap = self.catalog.manifest("blocks")["snapshot_id"]
 
         def load(missing: list[str]) -> dict:
-            batch = self.catalog.read_pruned_arrow(
+            tbl = self.catalog.read_pruned_arrow(
                 "blocks", "term", missing,
-                columns=["term", "n_docs", "docs_packed", "tfs_packed",
-                         "dls_packed"],
-            ).to_pandas()
+                columns=["term", "n_docs", *_PACKED],
+            )
             empty = (
                 np.empty(0, dtype=np.int64),
                 np.empty(0, dtype=np.float64),
             )
             found: dict[str, tuple] = {}
-            if len(batch):
-                term_rep, ords, tfs, dls = _decode_batch(batch)
+            if tbl.num_rows:
+                counts, ords, tfs, dls = _decode_table(tbl)
                 tfw = self._tfw(
                     tfs.astype(np.float64), dls.astype(np.float64), avgdl
                 )
+                # one int code per block term, in term order
+                uniq, inv = np.unique(
+                    tbl.column("term").to_numpy(zero_copy_only=False),
+                    return_inverse=True,
+                )
+                code = np.repeat(inv, counts)
                 # The decoded stream is term-major only within one run;
                 # after compact_incremental appends, a term's blocks from
                 # different runs interleave with other query terms. A
@@ -1512,15 +1582,13 @@ class IndexBuilder:
                 # exactly one run — so per-doc bincount summation order
                 # stays the per-query-term order regardless of how a
                 # term's runs were ordered in the raw stream.
-                if term_rep.size and (term_rep[1:] < term_rep[:-1]).any():
-                    order = np.argsort(term_rep, kind="stable")
-                    term_rep = term_rep[order]
+                if (code[1:] < code[:-1]).any():
+                    order = np.argsort(code, kind="stable")
                     ords, tfw = ords[order], tfw[order]
-                bounds = np.flatnonzero(term_rep[1:] != term_rep[:-1]) + 1
-                starts = np.concatenate(([0], bounds))
-                ends = np.concatenate((bounds, [term_rep.size]))
-                for s, e in zip(starts, ends):
-                    found[term_rep[s]] = (ords[s:e], tfw[s:e])
+                n_post = np.bincount(code, minlength=uniq.size)
+                ends = np.cumsum(n_post)
+                for t, s, e in zip(uniq, ends - n_post, ends):
+                    found[t] = (ords[s:e], tfw[s:e])
             return {t: found.get(t, empty) for t in missing}
 
         return self._postings.get(
@@ -1590,7 +1658,8 @@ class IndexBuilder:
         """Interactive single-query BM25 with NO Spark job — the warm
         path matching the reference's hundredths-of-a-second class
         (README.md:43,47): manifest-pruned pyarrow block reads, numpy
-        decode + scoring, driver-side top-k, pyarrow docmap resolve.
+        decode + scoring, driver-side top-k, ids from the driver's
+        doc_ord-sorted docmap arrays (``_ids_of``).
         Used when the query's candidate blocks fit one core
         (≤ WARM_MAX_BLOCKS, i.e. rare/mid terms — the interactive
         regime); stopword-heavy queries fall back to ``query_batch``,
@@ -1612,11 +1681,7 @@ class IndexBuilder:
         top, top_scores = r
         if top.size == 0:
             return pd.DataFrame(columns=[*self.id_cols, "score"])
-        out = self._resolve_ords(
-            [int(o) for o in top]
-        )[list(self.id_cols)].copy()
-        out["score"] = top_scores
-        return out
+        return pd.DataFrame({**self._ids_of(top), "score": top_scores})
 
     def query_prefix_warm(
         self, prefix: str, k: int = 10, max_terms: int | None = None
@@ -2938,8 +3003,8 @@ class IndexBuilder:
         manifest-pruned blocks (tombstones dropped) → ONE inner join
         against the decoded postings stream keyed on doc_ord → a
         map-side-combinable per-term count. Background df comes from
-        the committed ``terms`` table and N from ``stats`` — both tiny
-        broadcasts. The postings decode is a full-index pass: that is
+        the committed ``terms`` table (a tiny broadcast) and N from the
+        driver's cached corpus stats (a literal). The postings decode is a full-index pass: that is
         the operation's inherent cost (every term's foreground
         frequency is needed); engines that avoid it sample the
         foreground instead, which composes here — pass a pre-filtered
@@ -2971,13 +3036,11 @@ class IndexBuilder:
         bg = self.catalog.read("terms").select(
             "term", F.col("df").alias("bg_df")
         )
-        st = self.catalog.read("stats").select("n_docs")
         fg_pct = F.col("fg_df") / F.col("n_fg")
-        bg_pct = F.col("bg_df") / F.col("n_docs")
+        bg_pct = F.col("bg_df") / F.lit(self._corpus_stats()[0])
         return (
             fg_df.join(F.broadcast(bg), "term")
             .crossJoin(F.broadcast(fg_n))
-            .crossJoin(F.broadcast(st))
             .withColumn(
                 "score",
                 F.round((fg_pct - bg_pct) * (fg_pct / bg_pct), 6),

@@ -53,10 +53,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from antidb_spark.functions.analyze import py_tokens, tokens
-from antidb_spark.operators.build import _alive_bits, _pack_sorted, _run_firsts
+from antidb_spark.operators.build import (
+    _alive_bits, _decode_batch, _pack_sorted, _run_firsts,
+)
 from antidb_spark.functions.packing import (
     segment_deltas,
-    varint_decode,
     varint_encode_blocks,
 )
 from antidb_spark.schema import DOC_ID_COLS
@@ -205,25 +206,24 @@ def _pack_pos_partition(
         [f.name for f in _POS_BLOCKS_OUT.fields])
 
 
+#: the packed streams of a ``pos_blocks`` row, in ``_decode_batch`` order
+_POS_PACKED = ("docs_packed", "tfs_packed", "pos_packed")
+
+
 def _decode_pos_batch(
     batch: pd.DataFrame,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Whole-batch vectorized decode →
     (uniq_terms, tid_per_pos, ord_per_pos, pos).
 
-    Doc ordinals reconstruct exactly like build._decode_batch (segment
-    cumsum over concatenated deltas); positions add one more nesting
-    level — segments are per DOC (lengths = the decoded tf counts).
+    Doc ordinals and tfs come from build's block decoder; positions
+    add one more nesting level — segments are per DOC (lengths = the
+    decoded tf counts).
     Terms come back as BLOCK-level unique strings + per-position int
     ids: expanding object strings per position (and comparing them)
     would be a hidden Python loop over 10^5-10^6 elements."""
-    counts = batch["n_docs"].to_numpy(dtype=np.int64)
-    ddeltas = varint_decode(b"".join(batch["docs_packed"])).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    cs = np.cumsum(ddeltas)
-    ords = cs - np.repeat(cs[starts] - ddeltas[starts], counts)
-    tfs = varint_decode(b"".join(batch["tfs_packed"])).astype(np.int64)
-    pdeltas = varint_decode(b"".join(batch["pos_packed"])).astype(np.int64)
+    counts, ords, tfs, pdeltas = _decode_batch(batch, _POS_PACKED)
+    tfs, pdeltas = tfs.astype(np.int64), pdeltas.astype(np.int64)
     pstarts = np.cumsum(tfs) - tfs
     pcs = np.cumsum(pdeltas)
     pos = pcs - np.repeat(pcs[pstarts] - pdeltas[pstarts], tfs)
@@ -324,7 +324,7 @@ def _pos_postings(builder, terms: Sequence[str]) -> DataFrame:
     return (
         builder.catalog.read_pruned("pos_blocks", "term", terms)
         .filter(F.col("term").isin(terms))
-        .select("term", "n_docs", "docs_packed", "tfs_packed", "pos_packed")
+        .select("term", "n_docs", *_POS_PACKED)
         .mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
     )
 
@@ -631,14 +631,12 @@ def term_positions_warm(builder, query: str, k: int = 10) -> pd.DataFrame:
     )
     first_pos = p[new]
     n_hits = np.diff(np.r_[new, o.size])
-    g_ord, g_tid = o[new], t[new]
-    ids = builder._resolve_ords([int(x) for x in g_ord])[
-        list(builder.id_cols)
-    ].reset_index(drop=True)
-    out = ids.copy()
-    out["term"] = uniq_terms[g_tid]
-    out["first_pos"] = first_pos.astype(np.int64)
-    out["n_hits"] = n_hits.astype(np.int64)
+    out = pd.DataFrame({
+        **builder._ids_of(o[new]),
+        "term": uniq_terms[t[new]],
+        "first_pos": first_pos.astype(np.int64),
+        "n_hits": n_hits.astype(np.int64),
+    })
     return out.sort_values(
         [*builder.id_cols, "term"]
     ).reset_index(drop=True)
@@ -667,7 +665,7 @@ def _warm_positions(builder, terms: Sequence[str]):
     manifest-pruned pyarrow (no Spark job); None when there are none."""
     tbl = builder.catalog.read_pruned_arrow(
         "pos_blocks", "term", list(terms),
-        columns=["term", "n_docs", "docs_packed", "tfs_packed", "pos_packed"],
+        columns=["term", "n_docs", *_POS_PACKED],
     ).to_pandas()
     return _decode_pos_batch(tbl) if len(tbl) else None
 
@@ -683,8 +681,7 @@ def _alive_rows(builder, ords: np.ndarray, **cols: np.ndarray):
         cols = {c: v[alive] for c, v in cols.items()}
     if ords.size == 0:
         return None
-    ids = builder._resolve_ords([int(o) for o in ords])
-    return ids[list(builder.id_cols)].assign(**cols)
+    return pd.DataFrame({**builder._ids_of(ords), **cols})
 
 
 def phrase_warm(builder, phrase: str) -> pd.DataFrame:

@@ -666,13 +666,36 @@ class Catalog:
         dataset, _ = self._fragments(name)
         return None if dataset is None else dataset.schema
 
-    def read_arrow(self, name: str, columns: list[str] | None = None):
+    def read_arrow(self, name: str, columns: list[str] | None = None,
+                   files: list[str] | None = None):
         """Unfiltered driver-side read → pyarrow Table (tiny relations:
-        stats, per-query metadata). Zero Spark jobs."""
-        dataset, _ = self._fragments(name)
+        stats, per-query metadata), or only the head snapshot's data
+        ``files`` (manifest paths) when given. Zero Spark jobs."""
+        dataset, frags = self._fragments(name)
         if dataset is None:
             return pa.table({c: pa.nulls(0) for c in (columns or [])})
+        if files is not None:
+            dataset = self._subset(dataset, frags, [
+                os.path.join(self.table_dir(name), f) for f in files])
         return dataset.to_table(columns=columns)
+
+    @staticmethod
+    def _subset(full, frags: dict, paths: list[str]):
+        """The dataset of ``paths``, built from the CACHED fragments of
+        ``full`` — no dataset re-discovery, no footer re-reads
+        (fragments memoize their metadata)."""
+        import pyarrow.dataset as ds
+
+        sel = [frags.get(p) for p in paths]
+        if any(f is None for f in sel):
+            # path-normalization mismatch: plain per-call dataset
+            return ds.dataset(paths, format="parquet")
+        if len(sel) == len(frags):
+            return full
+        return ds.FileSystemDataset(
+            sel, schema=full.schema, format=full.format,
+            filesystem=full.filesystem,
+        )
 
     def read_pruned_arrow(
         self,
@@ -704,21 +727,7 @@ class Catalog:
             # provably empty: schema-only, no IO
             tbl = full.schema.empty_table()
             return tbl.select(columns) if columns is not None else tbl
-        if paths is None or len(paths) == len(frags):
-            dataset = full
-        else:
-            # subset of the CACHED fragments — no dataset re-discovery,
-            # no footer re-reads (fragments memoize their metadata)
-            sel = [frags.get(p) for p in paths]
-            if all(f is not None for f in sel):
-                dataset = ds.FileSystemDataset(
-                    [f for f in sel if f is not None],
-                    schema=full.schema,
-                    format=full.format,
-                    filesystem=full.filesystem,
-                )
-            else:  # path-normalization mismatch: plain per-call dataset
-                dataset = ds.dataset(paths, format="parquet")
+        dataset = full if paths is None else self._subset(full, frags, paths)
         filt = None
         if values is not None:
             filt = ds.field(col).isin(values)

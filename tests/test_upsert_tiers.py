@@ -19,6 +19,7 @@ import os
 import shutil
 import time
 
+import numpy as np
 import pandas as pd
 import pytest
 from hypothesis import given, settings
@@ -93,8 +94,9 @@ def _rows(b, table, cols=None):
 
 
 def _blocks(b):
-    terms, ords, tfs, dls = _decode_batch(
-        b.catalog.read_arrow("blocks").to_pandas())
+    batch = b.catalog.read_arrow("blocks").to_pandas()
+    counts, ords, tfs, dls = _decode_batch(batch)
+    terms = np.repeat(batch["term"].to_numpy(), counts)
     return sorted(zip(terms, ords.tolist(), tfs.tolist(), dls.tolist()))
 
 
