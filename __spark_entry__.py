@@ -2348,80 +2348,15 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 12
-    entries outside the last two windows (snippet_hits …
-    frame_sample), then the previous order unchanged: media_features …
-    clone_candidates (50, the last window) and ann_cosine_topk …
-    spell_suggest (43). The window now ends after temperature_mix; the
-    next rotation should move ann_cosine_topk … spell_suggest (43
-    entries, outside this window and the last) to the front."""
+    round, least-recently-driver-attested first. Current order: the 43
+    entries outside the last two windows (ann_cosine_topk …
+    spell_suggest), then the previous order unchanged: snippet_hits …
+    frame_sample (12) and media_features … clone_candidates (50). The
+    window now ends after phrase_prefix; the next rotation should move
+    cluster_mix … clone_candidates (12 entries, outside this window
+    and the last) to the front."""
     return {
         # --- outside the last two driver windows
-        "snippet_hits": _q_snippet_hits,
-        "lookup_dump": _q_lookup_dump,
-        "fallback_join": _q_fallback_join,
-        "interval_days": _q_interval_days,
-        "phrase_search": _q_phrase_search,
-        "phrase_adhoc": _q_phrase_adhoc,
-        "phrase_prefix": _q_phrase_prefix,
-        "fingerprints": _q_fingerprints,
-        "exact_dup_groups": _q_exact_dup_groups,
-        "ngram_jaccard": _q_ngram_jaccard,
-        "packed_examples": _q_packed_examples,
-        "frame_sample": _q_frame_sample,
-        # --- in the last driver window
-        "media_features": _q_media_features,
-        "media_decode": _q_media_decode,
-        "media_meta": _q_media_meta,
-        "embedding_dups": _q_embedding_dups,
-        "doc_chunks": _q_doc_chunks,
-        "sliding_counts": _q_sliding_counts,
-        "term_vectors": _q_term_vectors,
-        "stream_sessions": _q_stream_sessions,
-        "ann_recall": _q_ann_recall,
-        "hll_vocab": _q_hll_vocab,
-        "token_stats": _q_token_stats,
-        "asof_join": _q_asof_join,
-        "range_join": _q_range_join,
-        "hll_card": _q_hll_card,
-        "cms_counts": _q_cms_counts,
-        "bloom_check": _q_bloom_check,
-        "repetition": _q_repetition,
-        "pii_redact": _q_pii_redact,
-        "decontam": _q_decontam,
-        "dataset_split": _q_dataset_split,
-        "packed_sequences": _q_packed_sequences,
-        "length_quantiles": _q_length_quantiles,
-        "epoch_mix": _q_epoch_mix,
-        "shuffle_order": _q_shuffle_order,
-        "stratified_sample": _q_stratified_sample,
-        "dedup_resolve": _q_dedup_resolve,
-        "keywords": _q_keywords,
-        "score_explain": _q_score_explain,
-        "percolate": _q_percolate,
-        "facet_hist": _q_facet_hist,
-        "facet_card": _q_facet_card,
-        "group_must": _q_group_must,
-        "sig_terms": _q_sig_terms,
-        "complete_prefix": _q_complete,
-        "group_hits": _q_group_hits,
-        "rescored_topk": _q_rescored_topk,
-        "kmeans_clusters": _q_kmeans,
-        "temperature_mix": _q_temperature_mix,
-        # ---- driver window (50) ends here ----
-        "cluster_mix": _q_cluster_mix,
-        "dup_groups": _q_dup_groups,
-        "curated": _q_curated,
-        "pq_topk": _q_pq_topk,
-        "pq_refined": _q_pq_refined,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "time_travel": _q_time_travel,
-        "minhash_dups": _q_minhash_dups,
-        "simhash_dups": _q_simhash_dups,
-        "lang_id": _q_lang_id,
-        "quality": _q_quality,
-        "clone_candidates": _q_clone_candidates,
-        # --- outside the last driver window
         "ann_cosine_topk": _q_ann_cosine_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
@@ -2465,6 +2400,72 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "merged_topk": _q_merged_topk,
         "federated_topk": _q_federated_topk,
         "spell_suggest": _q_spell_suggest,
+        # --- in the last driver window
+        "snippet_hits": _q_snippet_hits,
+        "lookup_dump": _q_lookup_dump,
+        "fallback_join": _q_fallback_join,
+        "interval_days": _q_interval_days,
+        "phrase_search": _q_phrase_search,
+        "phrase_adhoc": _q_phrase_adhoc,
+        "phrase_prefix": _q_phrase_prefix,
+        # ---- driver window (50) ends here ----
+        "fingerprints": _q_fingerprints,
+        "exact_dup_groups": _q_exact_dup_groups,
+        "ngram_jaccard": _q_ngram_jaccard,
+        "packed_examples": _q_packed_examples,
+        "frame_sample": _q_frame_sample,
+        # --- in the last two driver windows
+        "media_features": _q_media_features,
+        "media_decode": _q_media_decode,
+        "media_meta": _q_media_meta,
+        "embedding_dups": _q_embedding_dups,
+        "doc_chunks": _q_doc_chunks,
+        "sliding_counts": _q_sliding_counts,
+        "term_vectors": _q_term_vectors,
+        "stream_sessions": _q_stream_sessions,
+        "ann_recall": _q_ann_recall,
+        "hll_vocab": _q_hll_vocab,
+        "token_stats": _q_token_stats,
+        "asof_join": _q_asof_join,
+        "range_join": _q_range_join,
+        "hll_card": _q_hll_card,
+        "cms_counts": _q_cms_counts,
+        "bloom_check": _q_bloom_check,
+        "repetition": _q_repetition,
+        "pii_redact": _q_pii_redact,
+        "decontam": _q_decontam,
+        "dataset_split": _q_dataset_split,
+        "packed_sequences": _q_packed_sequences,
+        "length_quantiles": _q_length_quantiles,
+        "epoch_mix": _q_epoch_mix,
+        "shuffle_order": _q_shuffle_order,
+        "stratified_sample": _q_stratified_sample,
+        "dedup_resolve": _q_dedup_resolve,
+        "keywords": _q_keywords,
+        "score_explain": _q_score_explain,
+        "percolate": _q_percolate,
+        "facet_hist": _q_facet_hist,
+        "facet_card": _q_facet_card,
+        "group_must": _q_group_must,
+        "sig_terms": _q_sig_terms,
+        "complete_prefix": _q_complete,
+        "group_hits": _q_group_hits,
+        "rescored_topk": _q_rescored_topk,
+        "kmeans_clusters": _q_kmeans,
+        "temperature_mix": _q_temperature_mix,
+        # --- in the window before the last
+        "cluster_mix": _q_cluster_mix,
+        "dup_groups": _q_dup_groups,
+        "curated": _q_curated,
+        "pq_topk": _q_pq_topk,
+        "pq_refined": _q_pq_refined,
+        "ivfpq_topk": _q_ivfpq_topk,
+        "time_travel": _q_time_travel,
+        "minhash_dups": _q_minhash_dups,
+        "simhash_dups": _q_simhash_dups,
+        "lang_id": _q_lang_id,
+        "quality": _q_quality,
+        "clone_candidates": _q_clone_candidates,
     }
 
 

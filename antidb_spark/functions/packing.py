@@ -10,11 +10,15 @@ per possible varint byte), no per-value Python loop. The block packers
 encode a whole Arrow batch in one pass too: ``segment_deltas`` turns
 every block's ordinals into gaps at once and ``varint_encode_blocks``
 encodes the batch's stream once, then cuts its bytes at block starts.
+A stream of blocks is one Arrow binary column over one buffer
+(``binary_array`` builds it, ``binary_data`` reads it back), so no
+block is ever a Python ``bytes`` of its own.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MAX_VARINT_BYTES = 10
 
@@ -48,18 +52,38 @@ def varint_encode(vals: np.ndarray) -> bytes:
     return _varint_bytes(vals)[0].tobytes()
 
 
-def varint_encode_blocks(vals: np.ndarray, starts: np.ndarray) -> list[bytes]:
-    """Encode a stream of blocks in one pass → one ``bytes`` per block.
+def binary_array(data: np.ndarray, offsets: np.ndarray) -> pa.BinaryArray:
+    """One binary value per slice ``data[offsets[i]:offsets[i + 1]]`` of
+    the raw bytes of the contiguous array ``data``, all over one buffer
+    (raises past Arrow ``binary``'s 2 GiB of int32 offsets)."""
+    offs = pa.array(offsets, pa.int32())
+    return pa.Array.from_buffers(
+        pa.binary(), len(offs) - 1,
+        [None, offs.buffers()[1], pa.py_buffer(data)])
+
+
+def binary_data(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """The bytes of a binary column's values, concatenated: its data
+    buffer sliced by its offsets, no Python ``bytes`` per value."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    _, offsets, buf = col.buffers()
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    lo, hi = np.frombuffer(offsets, width)[[col.offset, col.offset + len(col)]]
+    return np.frombuffer(buf, np.uint8)[lo:hi]
+
+
+def varint_encode_blocks(vals: np.ndarray, starts: np.ndarray) -> pa.BinaryArray:
+    """Encode a stream of blocks in one pass → one binary value per
+    block, over the stream's one encoded buffer.
 
     ``starts`` are the ascending value indices where blocks begin (the
     first is 0); block i equals ``varint_encode`` of its slice."""
     vals = np.ascontiguousarray(vals, dtype=np.uint64)
     if vals.size == 0:
-        return []
+        return pa.array([], pa.binary())
     out, first_byte = _varint_bytes(vals)
-    cuts = np.append(first_byte[starts], out.size).tolist()
-    buf = out.tobytes()
-    return [buf[a:b] for a, b in zip(cuts[:-1], cuts[1:])]
+    return binary_array(out, np.append(first_byte[starts], out.size))
 
 
 def segment_deltas(vals: np.ndarray, starts: np.ndarray) -> np.ndarray:

@@ -23,7 +23,7 @@ Scale design (10^12 turns, 1000 executors):
   persist (pins partition contents so both passes see identical data),
   count rows per partition (tiny driver-side collect: one row per
   partition), then assign ``offset[pid] + local_pos`` in a single
-  mapInPandas. No single-partition global sort anywhere.
+  mapInArrow. No single-partition global sort anywhere.
 - **Skew without salting**: blocks are packed from postings
   range-partitioned by the COMPOSITE key (term, doc_ord). A stopword
   whose posting list spans 10^11 docs is automatically spread across
@@ -48,7 +48,7 @@ from __future__ import annotations
 import operator as _op
 from collections import OrderedDict
 from collections.abc import Callable, Collection, Iterable, Iterator, Sequence
-from functools import reduce
+from functools import partial, reduce
 from typing import Any
 
 import numpy as np
@@ -57,9 +57,12 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from antidb_spark.functions.bm25 import contribution
 from antidb_spark.functions.packing import (
+    binary_array,
+    binary_data,
     segment_deltas,
     varint_decode,
     varint_encode_blocks,
@@ -108,19 +111,19 @@ def assign_doc_ords(
         + [T.StructField("doc_ord", T.LongType(), False)]
     )
 
-    def number(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def number(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pos = None
         for batch in batches:
-            if len(batch) == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue  # never init pos from an empty batch (no _pid)
             if pos is None:
-                pos = offsets[int(batch["_pid"].iloc[0])]
-            batch = batch.drop(columns=["_pid"])
-            batch["doc_ord"] = np.arange(pos, pos + len(batch), dtype=np.int64)
-            pos += len(batch)
-            yield batch
+                pos = offsets[batch.column("_pid")[0].as_py()]
+            yield batch.drop_columns(["_pid"]).append_column(
+                "doc_ord", pa.array(np.arange(pos, pos + n, dtype=np.int64)))
+            pos += n
 
-    out = sorted_df.mapInPandas(number, schema=out_schema)
+    out = sorted_df.mapInArrow(number, schema=out_schema)
     # caller unpersists after materializing `out` (kept pinned until then
     # so pass 2 sees the exact partition contents pass 1 counted)
     out._ord_source = sorted_df  # type: ignore[attr-defined]
@@ -155,40 +158,43 @@ _POSTINGS_OUT = T.StructType(
 
 
 def _pack_sorted(
-    batches: Iterator[pd.DataFrame],
+    batches: Iterator[pa.RecordBatch],
     run_base: int,
     cols: list[str],
     cut: Callable[[dict, bool], tuple[int, dict]],
-    out_cols: list[str],
-) -> Iterator[pd.DataFrame]:
+    schema: T.StructType,
+) -> Iterator[pa.RecordBatch]:
     """Drive a block packer over one sorted partition, a batch at a time.
 
     ``cut(frame, flush)`` packs a leading run of rows of the column dict
     ``frame`` into blocks, returning (rows consumed, {column: per-block
     values}). A term's run may span Arrow batches, so the uncut rows are
     carried into the next batch until the partition ends (``flush``).
-    block_id = run_base | pid << 32 | seq keeps ids unique without
-    coordination (run_base = compaction run number << 48, so appended
-    runs never collide with committed blocks)."""
+    Blocks go out as Arrow batches of ``schema``, which casts n_docs to
+    int32. block_id = run_base | pid << 32 | seq keeps ids unique
+    without coordination (run_base = compaction run number << 48, so
+    appended runs never collide with committed blocks)."""
+    out_schema = to_arrow_schema(schema)
     pending: dict | None = None
     seq = pid = 0
 
-    def emit(frame: dict, flush: bool) -> tuple[int, pd.DataFrame | None]:
+    def emit(frame: dict, flush: bool) -> tuple[int, pa.RecordBatch | None]:
         nonlocal seq
         n_cut, out = cut(frame, flush)
         n = len(out["term"])
         out["block_id"] = run_base | (pid << 32) | np.arange(
             seq, seq + n, dtype=np.int64)
         seq += n
-        return n_cut, pd.DataFrame(out)[out_cols] if n else None
+        return n_cut, pa.RecordBatch.from_pydict(out, out_schema) if n else None
 
     for batch in batches:
-        if len(batch) == 0:
+        if batch.num_rows == 0:
             continue
-        frame = {c: batch[c].to_numpy(object if c == "term" else np.int64)
+        frame = {c: np.asarray(batch.column(c),
+                               None if c == "term" else np.int64)
                  for c in cols}
         if pending is None:
-            pid = int(batch["_pid"].iloc[0])
+            pid = batch.column("_pid")[0].as_py()
         else:
             frame = {c: np.concatenate([pending[c], frame[c]]) for c in cols}
         n_cut, out = emit(frame, flush=False)
@@ -236,14 +242,42 @@ def _cut_blocks(frame: dict, flush: bool) -> tuple[int, dict]:
 
 
 def _pack_partition(
-    batches: Iterator[pd.DataFrame], run_base: int = 0
-) -> Iterator[pd.DataFrame]:
-    """Pack one sorted (term, doc_ord) partition into blocks: one
-    vectorized encoding pass per Arrow batch (``_cut_blocks``), with the
-    carry-the-tail protocol and block_id layout of ``_pack_sorted``."""
+    batches: Iterator[pa.RecordBatch], run_base: int = 0
+) -> Iterator[pa.RecordBatch]:
+    """Pack one sorted (term, doc_ord, tf, dl) partition, Arrow batches
+    in, ``_BLOCKS_OUT`` batches out: one vectorized encoding pass per
+    batch (``_cut_blocks``), with the carry-the-tail protocol and
+    block_id layout of ``_pack_sorted``."""
     yield from _pack_sorted(
         batches, run_base, ["term", "doc_ord", "tf", "dl"], _cut_blocks,
-        [f.name for f in _BLOCKS_OUT.fields])
+        _BLOCKS_OUT)
+
+
+def _packed(rel, sort_cols: list[str], kernel, run_base: int,
+            schema: T.StructType, n_part: int):
+    """The one pack pipeline of every blocks / pos_blocks writer: run
+    the block-packing ``kernel`` over ``rel`` sorted by ``sort_cols``
+    (term, doc_ord first), each partition tagged with its ``_pid``.
+    A Spark relation is range-partitioned on (term, doc_ord) into
+    ``n_part`` partitions and packed with ``mapInArrow``; a pyarrow
+    delta is packed on the driver as ONE partition (pid 0), batch by
+    batch, into a pyarrow table of ``schema``."""
+    # block_id layout: run_base(16 bits, <<48) | pid(16, <<32) | seq(32).
+    # An unchecked >= 2^16-partition pack would overlap the next run's
+    # id space, so ids would stop being unique.
+    assert n_part < (1 << 16), "block_id layout assumes < 2^16 pack partitions"
+    kernel = partial(kernel, run_base=run_base)
+    if isinstance(rel, pa.Table):
+        rel = rel.sort_by([(c, "ascending") for c in sort_cols])
+        rel = rel.append_column("_pid", pa.array(np.zeros(rel.num_rows, np.int32)))
+        return pa.Table.from_batches(
+            list(kernel(iter(rel.to_batches()))), to_arrow_schema(schema))
+    return (
+        rel.repartitionByRange(n_part, "term", "doc_ord")
+        .sortWithinPartitions(*sort_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .mapInArrow(kernel, schema=schema)
+    )
 
 
 #: the packed streams of a ``blocks`` row, in ``_decode_streams`` order
@@ -273,28 +307,15 @@ def _decode_streams(counts: np.ndarray, docs, tfs, third) -> tuple:
     return ords, varint_decode(tfs), varint_decode(third)
 
 
-def _decode_batch(batch: pd.DataFrame, cols: Sequence[str] = _PACKED) -> tuple:
-    """(counts, *``_decode_streams``) of a pandas batch of blocks."""
-    counts = batch["n_docs"].to_numpy(dtype=np.int64)
+def _decode_table(tbl: pa.Table | pa.RecordBatch,
+                  cols: Sequence[str] = _PACKED) -> tuple:
+    """(counts, *``_decode_streams``) of the streams ``cols`` of a
+    non-empty Arrow table or batch of blocks — the one decode adapter
+    of the Spark kernels and the driver tiers: each stream is its
+    binary column's data buffer sliced by its offsets."""
+    counts = np.asarray(tbl.column("n_docs")).astype(np.int64)
     return counts, *_decode_streams(
-        counts, *(b"".join(batch[c]) for c in cols))
-
-
-def _decode_table(tbl: pa.Table) -> tuple:
-    """(counts, *``_decode_streams``) of a non-empty Arrow table of
-    blocks: each stream is its binary column's data buffer sliced by
-    the column's offsets, no Python ``bytes`` per block."""
-
-    def data(col: str) -> np.ndarray:
-        arr = tbl.column(col).combine_chunks()
-        _, offsets, buf = arr.buffers()
-        width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        lo, hi = np.frombuffer(offsets, width)[[arr.offset,
-                                                arr.offset + len(arr)]]
-        return np.frombuffer(buf, np.uint8)[lo:hi]
-
-    counts = tbl.column("n_docs").to_numpy().astype(np.int64)
-    return counts, *_decode_streams(counts, *map(data, _PACKED))
+        counts, *(binary_data(tbl.column(c)) for c in cols))
 
 
 def _alive_bits(bits: np.ndarray, ords: np.ndarray) -> np.ndarray:
@@ -412,20 +433,21 @@ def pinned_scores(
     )
 
 
-def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _decode_blocks(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
     """blocks → (term, doc_ord, tf, dl) posting rows, vectorized."""
     for batch in batches:
-        if len(batch) == 0:
+        if batch.num_rows == 0:
             continue
-        counts, ords, tfs, dls = _decode_batch(batch)
-        yield pd.DataFrame(
-            {
-                "term": np.repeat(batch["term"].to_numpy(), counts),
-                "doc_ord": ords,
-                "tf": tfs.astype(np.int64),
-                "dl": dls.astype(np.int64),
-            }
-        )
+        counts, ords, tfs, dls = _decode_table(batch)
+        yield pa.RecordBatch.from_pydict({
+            "term": batch.column("term").take(
+                np.repeat(np.arange(counts.size), counts)),
+            "doc_ord": ords,
+            "tf": tfs.astype(np.int64),
+            "dl": dls.astype(np.int64),
+        })
 
 
 class _SnapshotLRU:
@@ -623,20 +645,8 @@ class IndexBuilder:
                 enriched = postings.join(docmap, self.id_cols).select(
                     "term", "doc_ord", "tf", "dl"
                 )
-                # block_id layout: run_base(16 bits, <<48) | pid(16, <<32)
-                # | seq(32). Enforce the pid width HERE, where the layout
-                # is established — an unchecked >=2^16-partition build
-                # would overlap appended-run id space, so ids would stop
-                # being unique; the invariant belongs at the source.
-                assert n_part < (1 << 16), (
-                    "block_id layout assumes < 2^16 pack partitions"
-                )
-                packed = (
-                    enriched.repartitionByRange(n_part, "term", "doc_ord")
-                    .sortWithinPartitions("term", "doc_ord")
-                    .withColumn("_pid", F.spark_partition_id())
-                    .mapInPandas(_pack_partition, schema=_BLOCKS_OUT)
-                )
+                packed = _packed(enriched, ["term", "doc_ord"],
+                                 _pack_partition, 0, _BLOCKS_OUT, n_part)
                 man = self.catalog.write(
                     packed, "blocks", stats_cols=["term"],
                     props={"n_runs": 1},
@@ -667,9 +677,8 @@ class IndexBuilder:
     # -- query ------------------------------------------------------------
 
     def _decoded_postings(self, blocks: DataFrame) -> DataFrame:
-        return blocks.select(
-            "term", "n_docs", "docs_packed", "tfs_packed", "dls_packed"
-        ).mapInPandas(_decode_blocks, schema=_POSTINGS_OUT)
+        return blocks.select("term", "n_docs", *_PACKED).mapInArrow(
+            _decode_blocks, schema=_POSTINGS_OUT)
 
     def _term_postings(self, terms: Sequence[str]) -> DataFrame:
         """Decoded (term, doc_ord, tf, dl) postings of ``terms``, from
@@ -1023,8 +1032,8 @@ class IndexBuilder:
         position rows — the same class as the base rebuild, with no
         re-tokenize."""
         from antidb_spark.operators.phrase import (
-            _decode_pos_blocks,
             _pack_pos_partition,
+            _pos_postings,
             _POS_BLOCKS_OUT,
         )
 
@@ -1045,13 +1054,7 @@ class IndexBuilder:
                 .select(F.col("doc_ord").alias("_old"), *self.id_cols)
                 .localCheckpoint()
             )
-        pos_src = (
-            self.catalog.read("pos_blocks").mapInPandas(
-                _decode_pos_blocks,
-                schema="term string, doc_ord long, pos long",
-            )
-            if keep_pos else None
-        )
+        pos_src = _pos_postings(self) if keep_pos else None
         meta_src = self.catalog.read("docmeta") if keep_meta else None
 
         # stage 0 is written while its sources (blocks, docmap,
@@ -1079,12 +1082,9 @@ class IndexBuilder:
                     .join(ord_map, "_old")
                     .select("term", F.col("_new").alias("doc_ord"), "pos")
                 )
-                packed = (
-                    new_pos.repartitionByRange(n_part, "term", "doc_ord")
-                    .sortWithinPartitions("term", "doc_ord", "pos")
-                    .withColumn("_pid", F.spark_partition_id())
-                    .mapInPandas(_pack_pos_partition, schema=_POS_BLOCKS_OUT)
-                )
+                packed = _packed(new_pos, ["term", "doc_ord", "pos"],
+                                 _pack_pos_partition, 0, _POS_BLOCKS_OUT,
+                                 n_part)
                 pman = self.catalog.replace(
                     packed, "pos_blocks", stats_cols=["term"],
                     row_group_bytes=LEAF_ROW_GROUP_BYTES,
@@ -1235,18 +1235,19 @@ class IndexBuilder:
             ]
         )
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             ords_l: list[np.ndarray] = []
             tids_l: list[np.ndarray] = []
             con_l: list[np.ndarray] = []
             src = -1
             for batch in batches:
-                if len(batch) == 0:
+                if batch.num_rows == 0:
                     continue
-                src = int(batch["_pid"].iloc[0])
-                counts, ords, tfs, dls = _decode_batch(batch)
+                src = batch.column("_pid")[0].as_py()
+                counts, ords, tfs, dls = _decode_table(batch)
                 uniq, inv = np.unique(
-                    batch["term"].to_numpy(), return_inverse=True
+                    batch.column("term").to_numpy(zero_copy_only=False),
+                    return_inverse=True,
                 )
                 idf_u = np.array([idf[t] for t in uniq], dtype=np.float64)
                 tid_u = np.array([term_ids[t] for t in uniq], dtype=np.int32)
@@ -1271,27 +1272,18 @@ class IndexBuilder:
                 ords[order], tids[order], cons[order], bucket[order]
             )
             ub, starts = np.unique(bucket, return_index=True)
-            ends = np.append(starts[1:], bucket.size)
-            yield pd.DataFrame(
-                {
-                    "bucket": ub.astype(np.int32),
-                    "src": np.full(ub.size, src, dtype=np.int32),
-                    "ords": [
-                        ords[s:e].tobytes() for s, e in zip(starts, ends)
-                    ],
-                    "tids": [
-                        tids[s:e].tobytes() for s, e in zip(starts, ends)
-                    ],
-                    "contribs": [
-                        cons[s:e].tobytes() for s, e in zip(starts, ends)
-                    ],
-                }
-            )
+            cuts = np.append(starts, bucket.size)
+            # one blob per bucket: a slice of each array's raw bytes
+            yield pa.RecordBatch.from_pydict({
+                "bucket": ub.astype(np.int32),
+                "src": np.full(ub.size, src, dtype=np.int32),
+                **{c: binary_array(a, cuts * a.itemsize) for c, a in (
+                    ("ords", ords), ("tids", tids), ("contribs", cons))},
+            })
 
         return blocks.select(
-            "term", "n_docs", "docs_packed", "tfs_packed", "dls_packed",
-            F.spark_partition_id().alias("_pid"),
-        ).mapInPandas(gen, schema=out_schema)
+            "term", "n_docs", *_PACKED, F.spark_partition_id().alias("_pid"),
+        ).mapInArrow(gen, schema=out_schema)
 
     def query_batch(self, queries: Sequence[str], k: int = 10) -> DataFrame:
         """Batch top-k BM25 over the physical index.
@@ -1403,30 +1395,23 @@ class IndexBuilder:
             for q in plan["qmap"][t]:
                 per_q_tids[int(q)].append(t_i)
 
-        def reduce_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def reduce_topk(
+            batches: Iterator[pa.RecordBatch],
+        ) -> Iterator[pa.RecordBatch]:
             # bucket partitioning co-locates ALL of a doc's term
             # contributions, so per-(query, doc) sums are complete here
             # and the partition-local top-k is exact for its docs. Blob
-            # rows are concatenated sorted by source map partition, so
-            # float summation order is deterministic regardless of
-            # shuffle arrival order.
-            rows: list[tuple] = []
-            for b in batches:
-                rows.extend(
-                    zip(b["src"], b["ords"], b["tids"], b["contribs"])
-                )
-            if not rows:
+            # rows are concatenated stably sorted by source map
+            # partition, so float summation order is deterministic
+            # regardless of shuffle arrival order.
+            got = [b for b in batches if b.num_rows]
+            if not got:
                 return
-            rows.sort(key=lambda r: r[0])
-            doc_post = np.concatenate(
-                [np.frombuffer(r[1], dtype=np.int64) for r in rows]
-            )
-            tid = np.concatenate(
-                [np.frombuffer(r[2], dtype=np.int32) for r in rows]
-            )
-            contrib_post = np.concatenate(
-                [np.frombuffer(r[3], dtype=np.float64) for r in rows]
-            )
+            blobs = pa.Table.from_batches(got).sort_by("src")
+            doc_post, tid, contrib_post = (
+                binary_data(blobs.column(c)).view(t) for c, t in (
+                    ("ords", np.int64), ("tids", np.int32),
+                    ("contribs", np.float64)))
             # slots: the partition's docs in doc_ord order
             u, doc_inv_post = np.unique(doc_post, return_inverse=True)
             dead = (
@@ -1447,23 +1432,19 @@ class IndexBuilder:
                 int(t): (doc_seg[s:e], con_seg[s:e])
                 for t, s, e in zip(ut, tstarts, tends)
             }
-            frames = []
+            out: dict[str, list[np.ndarray]] = {
+                "query_id": [], "doc_ord": [], "score": []}
             for q, tids in enumerate(per_q_tids):
                 parts = [seg[t] for t in tids if t in seg]
                 if not parts:
                     continue
                 sel, score = _topk_slots(parts, u.size, k, dead)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(sel.size, q, dtype=np.int32),
-                            "doc_ord": u[sel],
-                            "score": score,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+                out["query_id"].append(np.full(sel.size, q, dtype=np.int32))
+                out["doc_ord"].append(u[sel])
+                out["score"].append(score)
+            if out["score"]:
+                yield pa.RecordBatch.from_pydict(
+                    {c: np.concatenate(v) for c, v in out.items()})
 
         # index-scan geometry (step 3 above) for this action only:
         # every other scan in the session (128 MB-row-group tables)
@@ -1471,7 +1452,7 @@ class IndexBuilder:
         with index_scan_conf(self.spark):
             cand = (
                 bucketed.repartition(n_part, "bucket")
-                .mapInPandas(reduce_topk, schema=topk_schema)
+                .mapInArrow(reduce_topk, schema=topk_schema)
                 .toArrow()
             )
         qid, ords, scores = (

@@ -12,7 +12,7 @@ block's FIRST ordinal absolute and every later doc a gap
 (``functions/packing.pack_postings``), so a uniform ordinal shift
 rewrites only the head varint of each block — a few bytes per ~128-doc
 block; gaps, tf/dl payloads and position payloads are untouched.
-The remap runs as one ``mapInPandas`` pass over the source blocks scan:
+The remap runs as one ``mapInArrow`` pass over the source blocks scan:
 one head rewrite per block and no re-encode, where the build's
 ``_pack_partition`` encodes every posting, one whole Arrow batch at a
 time.
@@ -41,10 +41,11 @@ Contract (mirrors the streaming append path in
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -64,29 +65,43 @@ def _shift_head(buf: bytes, offset: int) -> bytes:
 
 
 def _remap_partition(
-    batches: Iterator[pd.DataFrame], offset: int, run_base: int
-) -> Iterator[pd.DataFrame]:
-    """Shift one partition of source blocks: docs_packed head varint,
-    min/max ordinal metadata, and a fresh collision-free block_id
-    (``run_base | pid << 32 | seq`` — the build's layout)."""
+    batches: Iterator[pa.RecordBatch], offset: int, run_base: int
+) -> Iterator[pa.RecordBatch]:
+    """Shift one partition of source blocks, Arrow batches in and out:
+    docs_packed head varint, min/max ordinal metadata, and a fresh
+    collision-free block_id (``run_base | pid << 32 | seq`` — the
+    build's layout)."""
     seq = 0
     pid = None
     for batch in batches:
-        if len(batch) == 0:
+        n = batch.num_rows
+        if n == 0:
             continue
         if pid is None:
-            pid = int(batch["_pid"].iloc[0])
-        batch = batch.drop(columns=["_pid"])
-        batch["docs_packed"] = batch["docs_packed"].map(
-            lambda b: _shift_head(b, offset)
+            pid = batch.column("_pid")[0].as_py()
+        cols = {c: batch.column(c) for c in batch.schema.names if c != "_pid"}
+        cols["docs_packed"] = pa.array(
+            [_shift_head(b, offset) for b in cols["docs_packed"].to_pylist()],
+            pa.binary())
+        for c in ("min_ord", "max_ord"):
+            cols[c] = np.asarray(cols[c]) + offset
+        cols["block_id"] = run_base | (pid << 32) | np.arange(
+            seq, seq + n, dtype=np.int64)
+        seq += n
+        yield pa.RecordBatch.from_pydict(cols)
+
+
+def _remapped(src, table: str, offset: int, run_base: int):
+    """``src``'s committed block ``table`` through ``_remap_partition``,
+    one scan partition per pid."""
+    return (
+        src.catalog.read(table)
+        .withColumn("_pid", F.spark_partition_id())
+        .mapInArrow(
+            partial(_remap_partition, offset=offset, run_base=run_base),
+            schema=src.catalog.spark_schema(table),
         )
-        batch["min_ord"] = batch["min_ord"] + offset
-        batch["max_ord"] = batch["max_ord"] + offset
-        batch["block_id"] = run_base | (pid << 32) | np.arange(
-            seq, seq + len(batch), dtype=np.int64
-        )
-        seq += len(batch)
-        yield batch
+    )
 
 
 def merge_index(
@@ -96,7 +111,9 @@ def merge_index(
     n_partitions: int | None = None,
 ) -> dict[str, Any]:
     """Fold ``src``'s committed index into ``dst``'s (both
-    ``IndexBuilder``s over committed roots). Returns a summary dict."""
+    ``IndexBuilder``s over committed roots). Returns a summary dict.
+    ``n_partitions`` is unused: the remap keeps the source scan's
+    partitions."""
     if tuple(dst.id_cols) != tuple(src.id_cols):
         raise ValueError(
             f"id_cols differ: {dst.id_cols} vs {src.id_cols}"
@@ -105,8 +122,6 @@ def merge_index(
         if not b.ckpt.is_done("blocks"):
             raise ValueError(f"{side} index has no committed blocks")
     id_cols = list(dst.id_cols)
-    n_part = n_partitions or spark.sparkContext.defaultParallelism
-    assert n_part < (1 << 16), "run_base layout assumes < 2^16 partitions"
 
     dst_docmap = dst.catalog.read("docmap")
     src_docmap = src.catalog.read("docmap")
@@ -163,17 +178,8 @@ def merge_index(
     dst.catalog.replace(stats, "stats")
 
     # blocks: head-varint remap, fresh run_base, appended files only
-    from functools import partial
-
     n_runs = int(dst.catalog.manifest("blocks")["props"].get("n_runs", 1))
-    remapped = (
-        src.catalog.read("blocks")
-        .withColumn("_pid", F.spark_partition_id())
-        .mapInPandas(
-            partial(_remap_partition, offset=offset, run_base=n_runs << 48),
-            schema=src.catalog.spark_schema("blocks"),
-        )
-    )
+    remapped = _remapped(src, "blocks", offset, n_runs << 48)
     dst.catalog.write(
         remapped, "blocks", stats_cols=["term"], mode="append",
         props={"n_runs": n_runs + 1},
@@ -187,15 +193,8 @@ def merge_index(
             pn_runs = int(
                 dst.catalog.manifest("pos_blocks")["props"].get("n_runs", 1)
             )
-            pos_remapped = (
-                src.catalog.read("pos_blocks")
-                .withColumn("_pid", F.spark_partition_id())
-                .mapInPandas(
-                    partial(_remap_partition, offset=offset,
-                            run_base=pn_runs << 48),
-                    schema=src.catalog.spark_schema("pos_blocks"),
-                )
-            )
+            pos_remapped = _remapped(src, "pos_blocks", offset,
+                                     pn_runs << 48)
             dst.catalog.write(
                 pos_remapped, "pos_blocks", stats_cols=["term"],
                 mode="append", props={"n_runs": pn_runs + 1},

@@ -48,13 +48,14 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from antidb_spark.functions.analyze import py_tokens, tokens
 from antidb_spark.operators.build import (
-    _alive_bits, _decode_batch, _pack_sorted, _run_firsts,
+    _alive_bits, _decode_table, _pack_sorted, _packed, _run_firsts,
 )
 from antidb_spark.functions.packing import (
     segment_deltas,
@@ -191,30 +192,32 @@ def _cut_pos_blocks(frame: dict, flush: bool) -> tuple[int, dict]:
 
 
 def _pack_pos_partition(
-    batches: Iterator[pd.DataFrame], run_base: int = 0
-) -> Iterator[pd.DataFrame]:
+    batches: Iterator[pa.RecordBatch], run_base: int = 0
+) -> Iterator[pa.RecordBatch]:
     """Pack one sorted (term, doc_ord, pos) partition of ROW-LEVEL
-    positional postings into blocks: one vectorized encoding pass per
-    Arrow batch (``_cut_pos_blocks``), with the carry-the-tail protocol
-    and block_id layout of ``build._pack_partition``. Consuming raw
+    positional postings, Arrow batches in, ``_POS_BLOCKS_OUT`` batches
+    out: one vectorized encoding pass per batch (``_cut_pos_blocks``),
+    with the carry-the-tail protocol and block_id layout of
+    ``build._pack_partition``. Consuming raw
     position rows — not per-doc arrays — lets the build plan skip the
     collect_list aggregation shuffle entirely: explode → docmap join →
     ONE range shuffle → pack. Positions are per-doc delta+varint (first
     position absolute, then gaps), concatenated across the block."""
     yield from _pack_sorted(
         batches, run_base, ["term", "doc_ord", "pos"], _cut_pos_blocks,
-        [f.name for f in _POS_BLOCKS_OUT.fields])
+        _POS_BLOCKS_OUT)
 
 
-#: the packed streams of a ``pos_blocks`` row, in ``_decode_batch`` order
+#: the packed streams of a ``pos_blocks`` row, in ``_decode_table`` order
 _POS_PACKED = ("docs_packed", "tfs_packed", "pos_packed")
 
 
 def _decode_pos_batch(
-    batch: pd.DataFrame,
+    batch: pa.Table | pa.RecordBatch,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Whole-batch vectorized decode →
-    (uniq_terms, tid_per_pos, ord_per_pos, pos).
+    """Whole-batch vectorized decode of a non-empty Arrow table or
+    batch of positional blocks → (uniq_terms, tid_per_pos, ord_per_pos,
+    pos).
 
     Doc ordinals and tfs come from build's block decoder; positions
     add one more nesting level — segments are per DOC (lengths = the
@@ -222,28 +225,30 @@ def _decode_pos_batch(
     Terms come back as BLOCK-level unique strings + per-position int
     ids: expanding object strings per position (and comparing them)
     would be a hidden Python loop over 10^5-10^6 elements."""
-    counts, ords, tfs, pdeltas = _decode_batch(batch, _POS_PACKED)
+    counts, ords, tfs, pdeltas = _decode_table(batch, _POS_PACKED)
     tfs, pdeltas = tfs.astype(np.int64), pdeltas.astype(np.int64)
     pstarts = np.cumsum(tfs) - tfs
     pcs = np.cumsum(pdeltas)
     pos = pcs - np.repeat(pcs[pstarts] - pdeltas[pstarts], tfs)
     uniq_terms, inv_block = np.unique(
-        batch["term"].to_numpy(), return_inverse=True
+        batch.column("term").to_numpy(zero_copy_only=False),
+        return_inverse=True,
     )
     tid_per_pos = np.repeat(np.repeat(inv_block, counts), tfs)
     return uniq_terms, tid_per_pos, np.repeat(ords, tfs), pos
 
 
 def _decode_pos_blocks(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """pos_blocks → (term, doc_ord, pos) position rows, vectorized."""
     for batch in batches:
-        if len(batch) == 0:
+        if batch.num_rows == 0:
             continue
         uniq_terms, tids, ords, pos = _decode_pos_batch(batch)
-        yield pd.DataFrame(
-            {"term": uniq_terms[tids], "doc_ord": ords, "pos": pos}
-        )
+        yield pa.RecordBatch.from_pydict({
+            "term": pa.array(uniq_terms, pa.string()).take(tids),
+            "doc_ord": ords, "pos": pos})
 
 
 def build_positional_index(
@@ -265,11 +270,7 @@ def build_positional_index(
         raise ValueError("build the base index (docmap) before positions")
     if builder.ckpt.is_done("pos_blocks"):
         return builder.catalog.manifest("pos_blocks")
-    spark = builder.spark
-    n_part = n_partitions or spark.sparkContext.defaultParallelism
-    assert n_part < (1 << 16), (
-        "block_id layout assumes < 2^16 pack partitions"
-    )
+    n_part = n_partitions or builder.spark.sparkContext.defaultParallelism
     with builder.timer.phase("pos_blocks"):
         # row-level plan: docmap join at TURN granularity → posexplode →
         # ONE range shuffle → pack. The join runs before the explode so
@@ -289,12 +290,8 @@ def build_positional_index(
             )
             .select("term", "doc_ord", "pos")
         )
-        packed = (
-            enriched.repartitionByRange(n_part, "term", "doc_ord")
-            .sortWithinPartitions("term", "doc_ord", "pos")
-            .withColumn("_pid", F.spark_partition_id())
-            .mapInPandas(_pack_pos_partition, schema=_POS_BLOCKS_OUT)
-        )
+        packed = _packed(enriched, ["term", "doc_ord", "pos"],
+                         _pack_pos_partition, 0, _POS_BLOCKS_OUT, n_part)
         man = builder.catalog.write(
             packed, "pos_blocks", stats_cols=["term"],
             row_group_bytes=LEAF_ROW_GROUP_BYTES,
@@ -317,16 +314,18 @@ def _empty_phrase_result(builder) -> DataFrame:
     return builder.spark.createDataFrame([], schema)
 
 
-def _pos_postings(builder, terms: Sequence[str]) -> DataFrame:
+def _pos_postings(builder, terms: Sequence[str] | None = None) -> DataFrame:
     """Decoded (term, doc_ord, pos) rows of ``terms``, from their
-    manifest-pruned ``pos_blocks`` (tombstoned docs included)."""
-    terms = list(terms)
-    return (
-        builder.catalog.read_pruned("pos_blocks", "term", terms)
-        .filter(F.col("term").isin(terms))
-        .select("term", "n_docs", *_POS_PACKED)
-        .mapInPandas(_decode_pos_blocks, schema=_DECODED_POS)
-    )
+    manifest-pruned ``pos_blocks`` — of every term when ``terms`` is
+    None (tombstoned docs included)."""
+    if terms is None:
+        blocks = builder.catalog.read("pos_blocks")
+    else:
+        terms = list(terms)
+        blocks = builder.catalog.read_pruned(
+            "pos_blocks", "term", terms).filter(F.col("term").isin(terms))
+    return blocks.select("term", "n_docs", *_POS_PACKED).mapInArrow(
+        _decode_pos_blocks, schema=_DECODED_POS)
 
 
 def _id_rows(builder, per_doc: DataFrame, rank: Column) -> DataFrame:
@@ -666,8 +665,8 @@ def _warm_positions(builder, terms: Sequence[str]):
     tbl = builder.catalog.read_pruned_arrow(
         "pos_blocks", "term", list(terms),
         columns=["term", "n_docs", *_POS_PACKED],
-    ).to_pandas()
-    return _decode_pos_batch(tbl) if len(tbl) else None
+    )
+    return _decode_pos_batch(tbl) if tbl.num_rows else None
 
 
 def _alive_rows(builder, ords: np.ndarray, **cols: np.ndarray):

@@ -27,10 +27,7 @@ rebuild reads alive postings from there (``IndexBuilder._alive_postings``).
 
 from __future__ import annotations
 
-from functools import partial
-
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -51,28 +48,6 @@ def _with_ords(rel, new_docmap, id_cols: list[str], cols: list[str]):
             join_type="inner",
         ).select(cols)
     return rel.join(new_docmap, id_cols).select(*cols)
-
-
-def _packed(rel, sort_cols: list[str], kernel, run_base: int, schema,
-            n_part: int):
-    """Run a block-packing kernel over ``rel`` sorted by ``sort_cols``
-    (term, doc_ord first): range-partitioned in Spark, or as ONE
-    partition on the driver for a pyarrow delta."""
-    kernel = partial(kernel, run_base=run_base)
-    if isinstance(rel, pa.Table):
-        frame = rel.sort_by([(c, "ascending") for c in sort_cols]).to_pandas()
-        frame["_pid"] = 0
-        out = list(kernel(iter([frame])))
-        return pa.Table.from_pandas(
-            pd.concat(out) if out else pd.DataFrame(columns=schema.names),
-            schema=to_arrow_schema(schema), preserve_index=False,
-        )
-    return (
-        rel.repartitionByRange(n_part, "term", "doc_ord")
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .mapInPandas(kernel, schema=schema)
-    )
 
 
 def append_run(
@@ -109,6 +84,7 @@ def append_run(
     from antidb_spark.operators.build import (
         _BLOCKS_OUT,
         _pack_partition,
+        _packed,
         assign_doc_ords,
     )
 
@@ -202,7 +178,6 @@ def append_run(
 
     # blocks: pack ONLY the delta postings; append with a fresh run_base
     n_runs = int(b.catalog.manifest("blocks")["props"].get("n_runs", 1))
-    assert n_part < (1 << 16), "run_base layout assumes < 2^16 partitions"
     enriched = _with_ords(delta_post, new_docmap, id_cols,
                           ["term", "doc_ord", "tf", "dl"])
     packed = _packed(enriched, ["term", "doc_ord"], _pack_partition,

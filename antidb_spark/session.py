@@ -25,7 +25,7 @@ from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES
 #   one straggler file into ~dozens of balanced decode tasks.
 # - Small run files pack by bytes. Every ``upsert_docs`` appends about
 #   ``defaultParallelism`` small blocks files, and each decode task is a
-#   Python (``mapInPandas``) task that pays ≈ 110-150 ms before the
+#   Python (``mapInArrow``) task that pays ≈ 110-150 ms before the
 #   kernel's first line runs (PythonRunner's INFO log: ``Times: ...
 #   init = 145-169`` on Spark 4.1, reused worker, 50 input rows). That
 #   floor, not the file open, is the real per-task cost, so the open

@@ -6,7 +6,7 @@ from __future__ import annotations
 from itertools import groupby
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -78,7 +78,9 @@ def test_varint_encode_blocks_matches_per_block_encode(vals, cuts):
     starts = np.unique([0, *(c for c in cuts if c < len(vals))])
     ends = [*starts[1:], len(vals)]
     want = [varint_encode(arr[a:b]) for a, b in zip(starts, ends)]
-    assert varint_encode_blocks(arr, starts) == (want if vals else [])
+    got = varint_encode_blocks(arr, starts)
+    assert got.type == pa.binary()
+    assert got.to_pylist() == (want if vals else [])
 
 
 # --- block packers vs a per-block reference ------------------------------
@@ -121,15 +123,17 @@ def _ref_pos_blocks(rows, run_base: int) -> list[tuple]:
 
 
 def _run_kernel(kernel, rows, cols, cuts, run_base) -> list[tuple]:
-    """Feed ``rows`` to ``kernel`` as Arrow-style batches split at
+    """Feed ``rows`` to ``kernel`` as Arrow record batches split at
     ``cuts`` (repeated cuts make empty batches)."""
-    frame = pd.DataFrame(rows, columns=cols).assign(_pid=PID)
+    whole = pa.RecordBatch.from_pydict({
+        **{c: [r[i] for r in rows] for i, c in enumerate(cols)},
+        "_pid": pa.array([PID] * len(rows), pa.int32()),
+    })
     bounds = [0, *sorted(cuts), len(rows)]
-    batches = [frame.iloc[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+    batches = [whole.slice(a, b - a) for a, b in zip(bounds[:-1], bounds[1:])]
     out = list(kernel(iter(batches), run_base=run_base))
-    got = pd.concat(out).itertuples(index=False) if out else []
-    return [tuple(list(v) if isinstance(v, np.ndarray) else v for v in r)
-            for r in got]
+    assert all(b.schema.field("n_docs").type == pa.int32() for b in out)
+    return [tuple(r.values()) for b in out for r in b.to_pylist()]
 
 
 @st.composite

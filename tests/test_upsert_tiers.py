@@ -21,13 +21,22 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from antidb_spark.functions.analyze import tokens
-from antidb_spark.operators.build import IndexBuilder, _decode_batch
+from antidb_spark.operators.build import (
+    _BLOCKS_OUT,
+    IndexBuilder,
+    _decode_table,
+    _pack_partition,
+    _packed,
+)
 from antidb_spark.operators.phrase import (
+    _POS_BLOCKS_OUT,
+    _pack_pos_partition,
     _decode_pos_batch,
     build_positional_index,
     phrase_query,
@@ -94,15 +103,15 @@ def _rows(b, table, cols=None):
 
 
 def _blocks(b):
-    batch = b.catalog.read_arrow("blocks").to_pandas()
-    counts, ords, tfs, dls = _decode_batch(batch)
-    terms = np.repeat(batch["term"].to_numpy(), counts)
+    tbl = b.catalog.read_arrow("blocks")
+    counts, ords, tfs, dls = _decode_table(tbl)
+    terms = np.repeat(tbl.column("term").to_numpy(), counts)
     return sorted(zip(terms, ords.tolist(), tfs.tolist(), dls.tolist()))
 
 
 def _pos_blocks(b):
     uniq, tids, ords, pos = _decode_pos_batch(
-        b.catalog.read_arrow("pos_blocks").to_pandas())
+        b.catalog.read_arrow("pos_blocks"))
     return sorted(zip(uniq[tids], ords.tolist(), pos.tolist()))
 
 
@@ -126,6 +135,34 @@ def test_tiers_commit_equal_tables(copies):
     assert drv._corpus_stats() == spk._corpus_stats()
     assert _blocks(drv) == _blocks(spk)
     assert _pos_blocks(drv) == _pos_blocks(spk)
+
+
+def test_packed_is_byte_identical_on_both_tiers(spark):
+    """One delta packed by ``_packed`` as a pyarrow table (the driver
+    tier) and as a one-partition Spark relation (the Spark tier) yields
+    the same ``blocks`` and ``pos_blocks`` rows, byte for byte."""
+    rng = np.random.default_rng(3)
+    lens = [3, 130, 300]  # one partial block, a full one + 2, several
+    terms = np.repeat(["a", "b", "the"], lens)
+    ords = np.concatenate(
+        [np.sort(rng.choice(2**34, n, replace=False)) for n in lens])
+    post = pa.table({"term": terms, "doc_ord": ords,
+                     "tf": rng.integers(1, 5, ords.size),
+                     "dl": rng.integers(5, 60, ords.size)})
+    pos = pa.table({"term": np.repeat(terms, 2),
+                    "doc_ord": np.repeat(ords, 2),
+                    "pos": pa.array(np.tile([3, 70], ords.size), pa.int32())})
+    for rel, sort_cols, kernel, schema in (
+        (post, ["term", "doc_ord"], _pack_partition, _BLOCKS_OUT),
+        (pos, ["term", "doc_ord", "pos"], _pack_pos_partition,
+         _POS_BLOCKS_OUT),
+    ):
+        rel = rel.take(rng.permutation(rel.num_rows))  # _packed sorts
+        args = (sort_cols, kernel, 5 << 48, schema, 1)
+        local = _packed(rel, *args)
+        dist = _packed(spark.createDataFrame(rel), *args).toArrow()
+        assert local.num_rows == 6
+        assert local.to_pylist() == dist.to_pylist()
 
 
 def test_tables_read_back_through_spark_and_arrow(copies):

@@ -19,11 +19,8 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from antidb_spark.operators.build import (
-    IndexBuilder,
-    _decode_batch,
-    _decode_table,
-)
+from antidb_spark.functions.packing import unpack_postings, varint_decode
+from antidb_spark.operators.build import IndexBuilder, _decode_table
 from antidb_spark.operators.phrase import (
     build_positional_index,
     phrase_warm,
@@ -105,15 +102,23 @@ def test_unknown_ordinal_raises(idx):
             b._ids_of(np.array(bad))
 
 
-def test_arrow_decode_equals_pandas_decode(idx):
-    """The warm tier's Arrow adapter decodes what the Spark kernels'
-    pandas adapter does, over a multi-file read and an offset slice."""
+def test_decode_table_equals_per_block_reference(idx):
+    """The one decode adapter of the Spark kernels and the driver tiers
+    decodes each block as ``unpack_postings`` does, over a RecordBatch,
+    a multi-chunk (multi-file) Table and an offset slice."""
     tbl = idx.catalog.read_arrow("blocks")
     assert tbl.column("docs_packed").num_chunks > 1
-    for part in (tbl, tbl.combine_chunks().slice(1, tbl.num_rows - 2)):
-        for got, want in zip(_decode_table(part),
-                             _decode_batch(part.to_pandas())):
-            np.testing.assert_array_equal(got, want)
+    whole = tbl.combine_chunks().to_batches()[0]
+    for part in (whole, tbl, whole.slice(1, tbl.num_rows - 2)):
+        rows = part.to_pylist()
+        ref = [unpack_postings(r["docs_packed"], r["tfs_packed"])
+               + (varint_decode(r["dls_packed"]),) for r in rows]
+        want = [np.array([r["n_docs"] for r in rows]),
+                *(np.concatenate(c) for c in zip(*ref))]
+        got = _decode_table(part)
+        assert len(got) == len(want) == 4
+        for g, w in zip(got, want):
+            np.testing.assert_array_equal(g, w)
 
 
 def test_warm_answers_equal_docmap_join(spark, idx, monkeypatch):
