@@ -2348,15 +2348,29 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 43
-    entries outside the last two windows (ann_cosine_topk …
-    spell_suggest), then the previous order unchanged: snippet_hits …
-    frame_sample (12) and media_features … clone_candidates (50). The
-    window now ends after phrase_prefix; the next rotation should move
-    cluster_mix … clone_candidates (12 entries, outside this window
-    and the last) to the front."""
+    round, least-recently-driver-attested first. Current order: the 12
+    entries outside the last two windows (cluster_mix …
+    clone_candidates), then the previous order unchanged: ann_cosine_topk
+    … phrase_prefix (50, the last window, upsert_eq and upsert_topk
+    among them) and fingerprints … temperature_mix (43). The window now
+    ends after hybrid_topk; the next rotation should move fingerprints
+    … temperature_mix (43 entries, outside this window and the last) to
+    the front."""
     return {
         # --- outside the last two driver windows
+        "cluster_mix": _q_cluster_mix,
+        "dup_groups": _q_dup_groups,
+        "curated": _q_curated,
+        "pq_topk": _q_pq_topk,
+        "pq_refined": _q_pq_refined,
+        "ivfpq_topk": _q_ivfpq_topk,
+        "time_travel": _q_time_travel,
+        "minhash_dups": _q_minhash_dups,
+        "simhash_dups": _q_simhash_dups,
+        "lang_id": _q_lang_id,
+        "quality": _q_quality,
+        "clone_candidates": _q_clone_candidates,
+        # --- in the last driver window
         "ann_cosine_topk": _q_ann_cosine_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
@@ -2395,12 +2409,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hit_count": _q_hit_count,
         "grouped_topk": _q_grouped_topk,
         "hybrid_topk": _q_hybrid_topk,
+        # ---- driver window (50) ends here ----
         "sessionize": _q_sessionize,
         "tumbling_counts": _q_tumbling_counts,
         "merged_topk": _q_merged_topk,
         "federated_topk": _q_federated_topk,
         "spell_suggest": _q_spell_suggest,
-        # --- in the last driver window
         "snippet_hits": _q_snippet_hits,
         "lookup_dump": _q_lookup_dump,
         "fallback_join": _q_fallback_join,
@@ -2408,13 +2422,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "phrase_search": _q_phrase_search,
         "phrase_adhoc": _q_phrase_adhoc,
         "phrase_prefix": _q_phrase_prefix,
-        # ---- driver window (50) ends here ----
+        # --- in the window before the last
         "fingerprints": _q_fingerprints,
         "exact_dup_groups": _q_exact_dup_groups,
         "ngram_jaccard": _q_ngram_jaccard,
         "packed_examples": _q_packed_examples,
         "frame_sample": _q_frame_sample,
-        # --- in the last two driver windows
         "media_features": _q_media_features,
         "media_decode": _q_media_decode,
         "media_meta": _q_media_meta,
@@ -2453,19 +2466,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rescored_topk": _q_rescored_topk,
         "kmeans_clusters": _q_kmeans,
         "temperature_mix": _q_temperature_mix,
-        # --- in the window before the last
-        "cluster_mix": _q_cluster_mix,
-        "dup_groups": _q_dup_groups,
-        "curated": _q_curated,
-        "pq_topk": _q_pq_topk,
-        "pq_refined": _q_pq_refined,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "time_travel": _q_time_travel,
-        "minhash_dups": _q_minhash_dups,
-        "simhash_dups": _q_simhash_dups,
-        "lang_id": _q_lang_id,
-        "quality": _q_quality,
-        "clone_candidates": _q_clone_candidates,
     }
 
 

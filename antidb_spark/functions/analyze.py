@@ -9,8 +9,14 @@ definition:
                            no Python in the hot path),
 - ``sql_tokens(expr)``   — the equivalent DuckDB/ANSI SQL fragment for
                            oracle queries,
-- ``py_tokens(s)``       — plain-Python version for the pandas oracle
-                           scorer.
+- ``py_tokens(s)``       — plain-Python version: query strings, the
+                           pandas oracle scorer, and the texts of
+                           driver-tier upserts (``operators/upsert``).
+
+The driver-tier upsert commits ``py_tokens`` output into the same index
+the JVM ``tokens`` builds, so the two must agree on every text, not only
+on ASCII: ``tests/test_analyze.py`` checks every code point but the
+surrogates, which is what permits that use.
 
 Tokenization: lowercase, split on runs of non-[a-z0-9], drop empties.
 The reference analog is the tokenize-to-set extraction in its inverted
@@ -26,7 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
-_PY_SPLIT = re.compile(TOKEN_SPLIT_RE)
+_PY_TOKEN = re.compile("[a-z0-9]+")  # the runs TOKEN_SPLIT_RE splits out
 
 
 def tokens(col: Column | str) -> Column:
@@ -50,4 +56,4 @@ def sql_tokens(expr: str) -> str:
 
 
 def py_tokens(s: str) -> list[str]:
-    return [t for t in _PY_SPLIT.split(s.lower()) if t]
+    return _PY_TOKEN.findall(s.lower())

@@ -980,12 +980,16 @@ class IndexBuilder:
         vals = sorted({r[0] for r in rows})
         dm = self.catalog.read_pruned_arrow(
             "docmap", c0, values=vals, columns=["doc_ord", *self.id_cols]
-        ).to_pandas()
-        want = pd.DataFrame(rows, columns=self.id_cols).astype(
-            dm.dtypes[self.id_cols].to_dict()
         )
+        if not dm.num_rows:
+            return np.empty(0, np.int64)
+        want = pa.table({  # join keys must share the docmap's types
+            c: pa.array(v).cast(dm.schema.field(c).type)
+            for c, v in zip(self.id_cols, zip(*rows))
+        })
         ords = np.unique(
-            dm.merge(want, on=self.id_cols)["doc_ord"].to_numpy(np.int64)
+            dm.join(want, self.id_cols, join_type="inner")["doc_ord"]
+            .to_numpy()
         )
         st = self._tomb_state()
         return ords if st is None else ords[_alive_bits(st[0], ords)]

@@ -13,11 +13,13 @@ visibility contract `delete_docs` documents).
 
 Two tiers, chosen by input size against the cap bounded deletes
 already use (``IndexBuilder.DELETE_PRUNE_MAX_IDS``). A batch within it
-is read to the driver (ids, JVM tokens, metadata; no Spark job for a
-driver-resident input, else ONE bounded action) and every table delta
-is numbered, packed and committed from there with pyarrow and the same
-kernels — an upsert's cost is otherwise per-job constants, dozens of
-jobs for a few dozen documents. Bigger batches run the distributed plan.
+is read to the driver as raw rows (no Spark job for a driver-resident
+input, else ONE bounded action), tokenized there by ``py_tokens`` (the
+analyzer's Python view, equal to the JVM one on every code point), and
+every table delta is numbered, packed and committed from there with
+pyarrow and the same kernels — an upsert's cost is otherwise per-job
+constants, dozens of jobs for a few dozen documents. Bigger batches run
+the distributed plan, which tokenizes in the JVM as the build does.
 
 Data-model note: the packed ``blocks`` (ordinal-keyed) + ``docmap`` minus
 ``tombstones`` are the only committed postings, so an upsert appends one
@@ -32,9 +34,9 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_type
 
-from antidb_spark.functions.analyze import tokens
+from antidb_spark.functions.analyze import py_tokens, tokens
 from antidb_spark.operators.stats import build_postings
 from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES
 
@@ -269,31 +271,45 @@ def _meta_cols(b, docs: DataFrame) -> list[str] | None:
     return list(want) if want and set(want) <= set(docs.columns) else None
 
 
-def _read_delta(docs, id_cols, text_col, meta_cols, n) -> pa.Table:
-    """At most ``n`` rows of (*id_cols, ``_tokens``, *meta_cols). A
-    pandas-born input is a local relation that absorbs the projection
-    and limit: ``collect()`` runs no job. Others cost one ``toArrow`` job
-    (a limited ``collect`` runs one per scale-up step). Tokens cross
-    space-joined (each matches ``[a-z0-9]+``), timestamps as epoch
-    micros (``collect`` makes naive local-zone datetimes)."""
+def _read_delta(docs, id_cols, text_col, meta_cols, cap) -> pa.Table | None:
+    """(*id_cols, ``_tokens``, *meta_cols) of ``docs``, or None when it
+    holds more than ``cap`` rows. One bounded read of the raw rows: a
+    pandas-born input is a local relation whose ``collect()`` runs no
+    job; others cost one ``toArrow`` job (a limited ``collect`` runs one
+    per scale-up step). The only JVM projection prunes a scan's columns
+    and ships timestamps as epoch micros (``collect`` makes naive
+    local-zone datetimes). Texts are tokenized here by ``py_tokens``,
+    which equals the JVM ``tokens()`` on every code point, and only
+    once the batch is known to fit, so the Spark tier never tokenizes
+    on the driver. A null text stays null."""
+    want = [*id_cols, text_col, *meta_cols]
     ts = [c for c in meta_cols if dict(docs.dtypes)[c] == "timestamp"]
-    q = docs.select(
-        *id_cols, F.array_join(tokens(text_col), " ").alias("_tokens"),
-        *[F.unix_micros(c).alias(c) if c in ts else c for c in meta_cols],
-    ).limit(n)
-    if docs.isLocal():
-        batch = pa.Table.from_struct_array(pa.array(
-            q.collect(), pa.struct(to_arrow_schema(q.schema))))
+    local = docs.isLocal()
+    if ts or not local:  # a scan reads only the columns it needs
+        docs = docs.select(
+            *[F.unix_micros(c).alias(c) if c in ts else c for c in want])
+    q = docs.limit(cap + 1)
+    if local:
+        rows = q.collect()
+        at = {f.name: (i, f.dataType) for i, f in enumerate(docs.schema)}
+        cols = {
+            c: pa.array([r[at[c][0]] for r in rows], to_arrow_type(at[c][1]))
+            for c in want if c != text_col
+        }
+        texts = [r[at[text_col][0]] for r in rows]
     else:
         batch = q.toArrow()
-    joined = batch["_tokens"]
-    split = pc.split_pattern(joined, " ")
-    decoded = {  # "" is a doc without tokens; a null text stays null
-        "_tokens": pc.if_else(pc.equal(joined, ""),
-                              pa.scalar([], split.type), split),
-        **{c: batch[c].cast(pa.timestamp("us", tz="UTC")) for c in ts},
-    }
-    return pa.table({c: decoded.get(c, batch[c]) for c in batch.column_names})
+        cols = {c: batch[c] for c in want if c != text_col}
+        texts = batch[text_col].to_pylist()
+    if len(texts) > cap:
+        return None
+    toks = [None if t is None else py_tokens(t) for t in texts]
+    return pa.table({
+        **{c: cols[c] for c in id_cols},
+        "_tokens": pa.array(toks, pa.list_(pa.string())),
+        **{c: cols[c].cast(pa.timestamp("us", tz="UTC")) if c in ts
+           else cols[c] for c in meta_cols},
+    })
 
 
 def _check_unique(n_in: int, n_ids: int) -> None:
@@ -323,24 +339,25 @@ def upsert_docs(builder, docs: DataFrame,
 
     A batch of at most ``DELETE_PRUNE_MAX_IDS`` rows takes the driver
     tier (``tier: "driver"`` in the result): one bounded read (no job
-    for a driver-resident input, else one action) brings ids, tokens
-    (the JVM analyzer queries use) and metadata to the driver, and every
-    table delta commits from there as one file per table
-    (``n_partitions`` is ignored). The bound counts rows, not bytes: the
-    driver holds up to that many tokenized documents, a few times over
-    while it packs them. Bigger batches take the Spark tier, after the
-    bounded read (cap + 1 tokenized rows) has found them too big.
+    for a driver-resident input, else one action) brings ids, texts and
+    metadata to the driver, ``py_tokens`` tokenizes the texts there
+    (the same tokens the JVM analyzer gives), and every table delta
+    commits from there as one file per table (``n_partitions`` is
+    ignored). The bound counts rows, not bytes: the driver holds up to
+    that many documents, a few times over while it packs them. Bigger
+    batches take the Spark tier, after the bounded read (cap + 1 raw
+    rows, never tokenized) has found them too big.
     """
     b = builder
     if not b.ckpt.is_done("blocks"):
         raise ValueError("upsert requires a committed index (build first)")
     cap = b.DELETE_PRUNE_MAX_IDS
     meta_cols = _meta_cols(b, docs)
-    batch = _read_delta(docs, b.id_cols, b.text_col, meta_cols or [], cap + 1)
-    if batch.num_rows <= cap:
-        out = _upsert_local(b, batch, meta_cols)
-    else:
+    batch = _read_delta(docs, b.id_cols, b.text_col, meta_cols or [], cap)
+    if batch is None:
         out = _upsert_spark(b, docs, meta_cols, n_partitions)
+    else:
+        out = _upsert_local(b, batch, meta_cols)
     return {"mode": "upsert", **out}
 
 

@@ -51,6 +51,19 @@ from pyspark.sql.types import StructType
 LEAF_ROW_GROUP_BYTES = 512 * 1024
 
 
+def _history_row(man: dict) -> dict:
+    """The snapshot-log row of the manifest ``man``."""
+    return {
+        "snapshot_id": man["snapshot_id"],
+        "parent_id": man.get("parent_id"),
+        "op": man.get("op", "write"),
+        "committed_at": man["committed_at"],
+        "data_dir": man.get("data_dir", "data"),
+        "n_files": len(man["files"]),
+        "rows": sum(e.get("rows") or 0 for e in man["files"]),
+    }
+
+
 class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -81,7 +94,7 @@ class Catalog:
         return os.path.join(self.table_dir(name), "_snapshots")
 
     def _history_path(self, name: str) -> str:
-        return os.path.join(self.table_dir(name), "_history.json")
+        return os.path.join(self.table_dir(name), "_history.jsonl")
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self._manifest_path(name))
@@ -171,25 +184,17 @@ class Catalog:
         files (harmless — no manifest references them).
 
         Generation GC is DEFERRED to :meth:`expire_snapshots` (the
-        Iceberg contract): every generation referenced by a retained
-        snapshot json stays on disk, so any snapshot a caller pinned
-        before this replace remains readable/restorable until the caller
-        explicitly expires history. The only dirs reclaimed here are
-        generations NO snapshot references — i.e. leftovers of a replace
-        that crashed between its data write and its commit."""
+        Iceberg contract): every older generation stays on disk, so any
+        snapshot a caller pinned before this replace remains
+        readable/restorable until the caller explicitly expires history.
+        Expiry also reclaims leftovers of a replace that crashed between
+        its data write and its commit; a replace itself reads no
+        snapshot, so its cost does not grow with the table's history."""
         gen = f"data-{uuid.uuid4().hex[:8]}"
         ddir = os.path.join(self.table_dir(name), gen)
         self._write_files(df, name, ddir, "overwrite", row_group_bytes)
-        man = self.commit(name, stats_cols=stats_cols, props=props,
-                          data_dir=gen, op="replace")
-        referenced = self._snapshot_data_dirs(name)
-        referenced.add(gen)
-        for d in os.listdir(self.table_dir(name)):
-            if d not in referenced and (d == "data"
-                                        or d.startswith("data-")):
-                shutil.rmtree(os.path.join(self.table_dir(name), d),
-                              ignore_errors=True)
-        return man
+        return self.commit(name, stats_cols=stats_cols, props=props,
+                           data_dir=gen, op="replace")
 
     def _write_files(
         self,
@@ -231,34 +236,6 @@ class Catalog:
             use_deprecated_int96_timestamps=True,
         )
 
-    def _snapshot_data_dirs(self, name: str) -> set[str]:
-        """Generation directories referenced by any retained snapshot
-        json (head included). Unreadable snapshot files count as
-        referencing-everything-unknown is impossible to express, so their
-        dir is conservatively protected by keeping ALL dirs when a read
-        fails."""
-        dirs: set[str] = set()
-        try:
-            dirs.add(self.manifest(name).get("data_dir", "data"))
-        except FileNotFoundError:
-            pass
-        sdir = self._snapshots_dir(name)
-        if os.path.isdir(sdir):
-            for fn in os.listdir(sdir):
-                if not fn.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(sdir, fn)) as f:
-                        dirs.add(json.load(f).get("data_dir", "data"))
-                except (OSError, ValueError):
-                    # cannot tell which generation this snapshot needs:
-                    # protect everything rather than risk deleting it
-                    dirs.update(
-                        d for d in os.listdir(self.table_dir(name))
-                        if d == "data" or d.startswith("data-")
-                    )
-        return dirs
-
     def _walk_parquet(self, ddir: str) -> list[str]:
         paths = []
         for dirpath, _dirs, fnames in os.walk(ddir):
@@ -284,7 +261,7 @@ class Catalog:
         O(delta) commit passes ``carry_files`` (prior entries kept
         verbatim) + ``harvest_paths`` (only the new files get footer
         reads). Every commit also records itself in the snapshot log
-        (``_snapshots/<id>.json`` + ``_history.json``) with a
+        (``_snapshots/<id>.json`` + one ``_history.jsonl`` row) with a
         ``parent_id`` link, enabling :meth:`read_at` time travel and
         :meth:`restore`."""
         ddir = os.path.join(self.table_dir(name), data_dir)
@@ -351,10 +328,12 @@ class Catalog:
 
     def _publish(self, name: str, manifest: dict) -> dict:
         """Land the snapshot copy, swap the head manifest (THE commit
-        point, one atomic rename), then append the history row. A crash
-        before the swap leaves an orphan snapshot json (harmless); a
-        crash after it leaves the head valid with its history row
-        missing — :meth:`history` synthesizes the head row in that case."""
+        point, one atomic rename), then append the history row — one
+        line, so a commit costs the same however long the history is. A
+        crash before the swap leaves an orphan snapshot json (harmless);
+        a crash after it leaves the head valid with its history row
+        missing or torn — :meth:`history` skips a torn row and
+        synthesizes the head row in that case."""
         sid = manifest["snapshot_id"]
         sdir = self._snapshots_dir(name)
         os.makedirs(sdir, exist_ok=True)
@@ -367,47 +346,34 @@ class Catalog:
         with open(tmp, "w") as f:
             f.write(body)
         os.replace(tmp, self._manifest_path(name))  # atomic commit
-        hist = self._read_history(name)
-        hist.append({
-            "snapshot_id": sid,
-            "parent_id": manifest.get("parent_id"),
-            "op": manifest.get("op", "write"),
-            "committed_at": manifest["committed_at"],
-            "data_dir": manifest.get("data_dir", "data"),
-            "n_files": len(manifest["files"]),
-            "rows": sum(e.get("rows") or 0 for e in manifest["files"]),
-        })
-        htmp = self._history_path(name) + ".tmp"
-        with open(htmp, "w") as f:
-            json.dump(hist, f, indent=1, default=str)
-        os.replace(htmp, self._history_path(name))
+        # the leading newline ends a row torn by a crash mid-append
+        with open(self._history_path(name), "a") as f:
+            f.write("\n" + json.dumps(_history_row(manifest), default=str))
         return manifest
 
     def _read_history(self, name: str) -> list[dict]:
+        rows = []
         try:
             with open(self._history_path(name)) as f:
-                return json.load(f)
+                for line in f:
+                    try:
+                        rows.append(json.loads(line))
+                    except ValueError:  # the blank first line, a torn row
+                        pass
         except FileNotFoundError:
-            return []
+            pass
+        return rows
 
     def history(self, name: str) -> list[dict]:
         """Snapshot log, oldest → newest (Iceberg ``table.history()``
         analog). Tolerates a crash between head swap and history append
-        by synthesizing the head's row; pre-snapshot-log tables (older
-        manifests with no ``_history.json``) report just the head."""
+        by synthesizing the head's row; tables with no
+        ``_history.jsonl`` report just the head."""
         hist = self._read_history(name)
         if self.exists(name):
             head = self.manifest(name)
             if not any(h["snapshot_id"] == head["snapshot_id"] for h in hist):
-                hist.append({
-                    "snapshot_id": head["snapshot_id"],
-                    "parent_id": head.get("parent_id"),
-                    "op": head.get("op", "write"),
-                    "committed_at": head["committed_at"],
-                    "data_dir": head.get("data_dir", "data"),
-                    "n_files": len(head["files"]),
-                    "rows": sum(e.get("rows") or 0 for e in head["files"]),
-                })
+                hist.append(_history_row(head))
         return hist
 
     # -- read --------------------------------------------------------------
@@ -556,7 +522,8 @@ class Catalog:
         hist = self.history(name)
         keep_ids = {h["snapshot_id"] for h in hist[-max(keep_last, 1):]}
         keep_ids.add(head["snapshot_id"])
-        referenced: set[str] = set()
+        referenced = {e["path"] for e in head["files"]}
+        live_dirs = {head.get("data_dir", "data")}
         sdir = self._snapshots_dir(name)
         expired = 0
         if os.path.isdir(sdir):
@@ -567,9 +534,9 @@ class Catalog:
                 if sid in keep_ids:
                     try:
                         with open(os.path.join(sdir, fn)) as f:
-                            referenced.update(
-                                e["path"] for e in json.load(f)["files"]
-                            )
+                            snap = json.load(f)
+                        referenced.update(e["path"] for e in snap["files"])
+                        live_dirs.add(snap.get("data_dir", "data"))
                     except (OSError, KeyError, ValueError) as exc:
                         # a RETAINED snapshot whose manifest can't be read
                         # has an unknown file set — sweeping anyway could
@@ -586,7 +553,6 @@ class Catalog:
                 else:
                     os.unlink(os.path.join(sdir, fn))
                     expired += 1
-        referenced.update(e["path"] for e in head["files"])
         tdir = self.table_dir(name)
         removed = 0
         for p in self._walk_parquet(tdir):
@@ -598,15 +564,15 @@ class Catalog:
                     pass
         # generation dirs no retained snapshot references any more: this
         # is the reclaim point for generations abandoned by replace()
-        # (which defers GC here so pinned snapshots stay readable)
-        live_dirs = self._snapshot_data_dirs(name)
+        # (which defers GC here so pinned snapshots stay readable) and
+        # for those of a replace that crashed before its commit
         for d in os.listdir(tdir):
             if d not in live_dirs and (d == "data" or d.startswith("data-")):
                 shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-        hist = [h for h in hist if h["snapshot_id"] in keep_ids]
         htmp = self._history_path(name) + ".tmp"
         with open(htmp, "w") as f:
-            json.dump(hist, f, indent=1, default=str)
+            f.writelines("\n" + json.dumps(h, default=str)
+                         for h in hist if h["snapshot_id"] in keep_ids)
         os.replace(htmp, self._history_path(name))
         return {"expired_snapshots": expired, "removed_files": removed,
                 "retained_snapshots": len(keep_ids)}

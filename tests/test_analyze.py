@@ -52,3 +52,20 @@ def test_distinct_tokens_keeps_first_occurrence_order(spark):
     df = spark.createDataFrame([("b a b c a",)], "text string")
     [row] = df.select(distinct_tokens("text").alias("t")).collect()
     assert row["t"] == ["b", "a", "c"]
+
+
+def test_py_tokens_equals_jvm_tokens_on_every_code_point(spark):
+    """``py_tokens`` tokenizes driver-tier upserts, so it must equal the
+    JVM ``tokens()`` on any text: every code point but the surrogates,
+    in chunks of 1,000 joined by ``x`` (so a code point that lowercases
+    into [a-z0-9] joins its neighbours' token)."""
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    chunks = ["x".join(map(chr, cps[i:i + 1000]))
+              for i in range(0, len(cps), 1000)]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(chunks)],
+                               "i int, text string")
+    got = {r["i"]: r["toks"] for r in
+           df.select("i", tokens("text").alias("toks")).collect()}
+    assert len(chunks) == 1113
+    bad = [i for i, s in enumerate(chunks) if got[i] != py_tokens(s)]
+    assert not bad, [chunks[i][:40] for i in bad[:3]]

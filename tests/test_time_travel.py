@@ -226,3 +226,60 @@ def test_builder_pin_rollback_across_upsert(spark, tmp_path):
     # tombstones born after the pin were dropped outright
     assert not b.catalog.exists("tombstones")
     corpus.unpersist()
+
+
+def test_commit_cost_does_not_grow_with_history(cat, monkeypatch):
+    """A commit appends one snapshot-log row and reads no snapshot: after
+    200 commits, a replace and an append open the same files as they did
+    after 1 — no ``_snapshots/*.json``, the log only to append to it —
+    and the log still lists every commit until expiry trims it."""
+    import pyarrow as pa
+
+    from antidb_spark.sources import catalog as catalog_mod
+
+    opened = []
+
+    def spy(path, *a, **k):
+        opened.append((str(path), a[0] if a else k.get("mode", "r")))
+        return open(path, *a, **k)
+
+    def replace_and_append():
+        monkeypatch.setattr(catalog_mod, "open", spy, raising=False)
+        opened.clear()
+        cat.replace(pa.table({"k": [1, 2]}), "t", stats_cols=["k"])
+        cat.write(pa.table({"k": [3]}), "t", mode="append")
+        monkeypatch.delattr(catalog_mod, "open")
+        return list(opened)
+
+    cat.write(pa.table({"k": [0]}), "t", stats_cols=["k"])
+    early = replace_and_append()
+    for i in range(197):
+        cat.replace(pa.table({"k": [i]}), "t", stats_cols=["k"])
+    late = replace_and_append()  # the 201st and 202nd commits
+    assert len(late) == len(early)
+    assert not [p for p, _ in late
+                if os.path.basename(os.path.dirname(p)) == "_snapshots"
+                and p.endswith(".json")]
+    assert [m for p, m in late if p.endswith("_history.jsonl")] == ["a"] * 2
+    hist = cat.history("t")
+    assert len({h["snapshot_id"] for h in hist}) == len(hist) == 202
+    assert [h["op"] for h in hist[-2:]] == ["replace", "append"]
+    assert hist[-1]["parent_id"] == hist[-2]["snapshot_id"]
+    cat.expire_snapshots("t", keep_last=1)
+    assert [h["snapshot_id"] for h in cat.history("t")] == [
+        hist[-1]["snapshot_id"]]
+    gens = [d for d in os.listdir(cat.table_dir("t"))
+            if d == "data" or d.startswith("data-")]
+    assert len(gens) == 1
+    assert sorted(cat.read_arrow("t")["k"].to_pylist()) == [1, 2, 3]
+
+
+def test_history_skips_a_torn_row(spark, cat):
+    """A crash mid-append can leave a partial last row in the log: the
+    next commit's row still reads back, and the torn one is skipped."""
+    m1 = cat.write(_t(spark, 0, 3), "t")
+    with open(os.path.join(cat.table_dir("t"), "_history.jsonl"), "a") as f:
+        f.write('\n{"snapshot_id": "torn')
+    m2 = cat.write(_t(spark, 3, 5), "t", mode="append")
+    assert [h["snapshot_id"] for h in cat.history("t")] == [
+        m1["snapshot_id"], m2["snapshot_id"]]

@@ -309,20 +309,18 @@ def test_driver_tier_timestamps_in_a_non_utc_zone(spark, tmp_path):
             == sorted(pd.to_datetime(pdf["ts"])))
 
 
-_TEXT = st.one_of(
-    st.none(), st.text(max_size=40),
-    st.sampled_from(["", " ", "?!", "--", "İstanbul ǅemal ß ﬁx K",
-                     "ÀÉÎ õü Σίσυφος", "a\u00a0b\tc\nd", "x\x00y"]),
-)
+_SAMPLES = ["", " ", "?!", "--", "İstanbul ǅemal ß ﬁx K",
+            "ÀÉÎ õü Σίσυφος", "a\u00a0b\tc\nd", "x\x00y"]
+_TEXT = st.one_of(st.none(), st.text(max_size=40), st.sampled_from(_SAMPLES))
 
 
 @settings(max_examples=30, deadline=None)
 @given(texts=st.lists(_TEXT, min_size=1, max_size=6))
 def test_bounded_read_tokens_match_to_arrow(spark, texts):
-    """The driver tier's bounded read (space-joined token strings, split
-    in pyarrow; jobless for a local input, ``toArrow`` otherwise) brings
-    exactly the token lists a ``toArrow`` of ``tokens`` brings: empty
-    and punctuation-only docs give [], a null text stays null."""
+    """The driver tier's bounded read (raw texts tokenized by
+    ``py_tokens``; jobless for a local input, ``toArrow`` otherwise)
+    brings exactly the token lists a ``toArrow`` of ``tokens`` brings:
+    empty and punctuation-only docs give [], a null text stays null."""
     docs = spark.createDataFrame(
         pd.DataFrame({"conv_id": [f"c{i}" for i in range(len(texts))],
                       "turn_idx": range(len(texts)), "text": texts}),
@@ -334,6 +332,32 @@ def test_bounded_read_tokens_match_to_arrow(spark, texts):
         assert got.column_names == want.column_names
         assert (sorted(got.to_pylist(), key=lambda r: r["turn_idx"])
                 == want.to_pylist())
+
+
+def test_tiers_agree_on_non_ascii_text(spark, tmp_path, monkeypatch):
+    """The driver tier tokenizes with ``py_tokens``, the Spark tier with
+    the JVM ``tokens()``: an upsert of the sample texts (non-ASCII
+    letters, NBSP, NUL, empty, null) commits the same docmap, terms and
+    blocks rows on both tiers."""
+    corpus = synth_transcripts(spark, n_convs=2, seed=17)
+    root = str(tmp_path / "driver")
+    IndexBuilder(spark, root).build(corpus, n_partitions=1)
+    shutil.copytree(root, str(tmp_path / "spark"))
+    drv, spk = (IndexBuilder(spark, str(tmp_path / n))
+                for n in ("driver", "spark"))
+    monkeypatch.setattr(spk, "DELETE_PRUNE_MAX_IDS", 0)
+    texts = [*_SAMPLES, None]
+    docs = spark.createDataFrame(
+        pd.DataFrame({"conv_id": "conv_zz_u", "turn_idx": range(len(texts)),
+                      "text": texts}),
+        schema="conv_id string, turn_idx int, text string")
+    outs = [b.upsert_docs(docs) for b in (drv, spk)]
+    assert [o["tier"] for o in outs] == ["driver", "spark"]
+    for table in ("docmap", "terms"):
+        assert _rows(drv, table) == _rows(spk, table), table
+    assert _blocks(drv) == _blocks(spk)
+    new = {t for t, *_ in _rows(drv, "terms")} - set(_V)
+    assert {"stanbul", "k", "x", "y"} <= new
 
 
 def test_query_after_upsert_infers_no_schema(spark, tmp_path, pin_batch_tier):
