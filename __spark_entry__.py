@@ -2348,81 +2348,17 @@ LEFT JOIN (SELECT DISTINCT term FROM tok) t ON t.term = v.term
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ATTESTATION ROTATION NOTE: the driver records correctness rows
     for only the FIRST 50 dict entries, so entry order rotates each
-    round, least-recently-driver-attested first. Current order: the 12
-    entries outside the last two windows (cluster_mix …
-    clone_candidates), then the previous order unchanged: ann_cosine_topk
-    … phrase_prefix (50, the last window, upsert_eq and upsert_topk
-    among them) and fingerprints … temperature_mix (43). The window now
-    ends after hybrid_topk; the next rotation should move fingerprints
-    … temperature_mix (43 entries, outside this window and the last) to
-    the front."""
+    round, least-recently-driver-attested first. Current order: the 43
+    entries outside the last two windows (fingerprints …
+    temperature_mix), then upsert_eq, upsert_topk, merged_topk,
+    deleted_topk, phrase_search, snippet_hits and federated_topk, so the
+    window attests upsert, purge, merge and the positional build. The
+    rest keep their previous order: cluster_mix … hybrid_topk (the last
+    window) and sessionize … phrase_prefix (the window before). The
+    next rotation should move cluster_mix … hybrid_topk (the entries of
+    the last window not in this one) to the front."""
     return {
         # --- outside the last two driver windows
-        "cluster_mix": _q_cluster_mix,
-        "dup_groups": _q_dup_groups,
-        "curated": _q_curated,
-        "pq_topk": _q_pq_topk,
-        "pq_refined": _q_pq_refined,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "time_travel": _q_time_travel,
-        "minhash_dups": _q_minhash_dups,
-        "simhash_dups": _q_simhash_dups,
-        "lang_id": _q_lang_id,
-        "quality": _q_quality,
-        "clone_candidates": _q_clone_candidates,
-        # --- in the last driver window
-        "ann_cosine_topk": _q_ann_cosine_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "fuzzy_topk": _q_fuzzy_topk,
-        "upsert_eq": _q_upsert_eq,
-        "upsert_topk": _q_upsert_topk,
-        "keyed_eq_persisted": _q_keyed_eq_persisted,
-        "keyed_rng_persisted": _q_keyed_rng_persisted,
-        "eq_lookup": _q_eq_lookup,
-        "rng_lookup": _q_rng_lookup,
-        "term_counts": _q_term_counts,
-        "postings_tf": _q_postings,
-        "term_df": _q_term_df,
-        "doc_lengths": _q_doc_lengths,
-        "corpus_stats": _q_corpus_stats,
-        "topk_bm25": _q_topk_bm25,
-        "indexed_topk": _q_indexed_topk,
-        "filtered_topk": _q_filtered_topk,
-        "conjunctive_topk": _q_conjunctive_topk,
-        "not_topk": _q_not_topk,
-        "bool_topk": _q_bool_topk,
-        "bool_msm": _q_bool_msm,
-        "synonym_topk": _q_synonym_topk,
-        "bm25f_topk": _q_bm25f_topk,
-        "deleted_topk": _q_deleted_topk,
-        "prefix_topk": _q_prefix_topk,
-        "wildcard_topk": _q_wildcard_topk,
-        "near_search": _q_near_search,
-        "slop_phrase": _q_slop_phrase,
-        "facet_counts": _q_facet_counts,
-        "paged_topk": _q_paged_topk,
-        "more_like_this": _q_more_like_this,
-        "regex_topk": _q_regex_topk,
-        "boosted_topk": _q_boosted_topk,
-        "decay_topk": _q_decay_topk,
-        "hit_count": _q_hit_count,
-        "grouped_topk": _q_grouped_topk,
-        "hybrid_topk": _q_hybrid_topk,
-        # ---- driver window (50) ends here ----
-        "sessionize": _q_sessionize,
-        "tumbling_counts": _q_tumbling_counts,
-        "merged_topk": _q_merged_topk,
-        "federated_topk": _q_federated_topk,
-        "spell_suggest": _q_spell_suggest,
-        "snippet_hits": _q_snippet_hits,
-        "lookup_dump": _q_lookup_dump,
-        "fallback_join": _q_fallback_join,
-        "interval_days": _q_interval_days,
-        "phrase_search": _q_phrase_search,
-        "phrase_adhoc": _q_phrase_adhoc,
-        "phrase_prefix": _q_phrase_prefix,
-        # --- in the window before the last
         "fingerprints": _q_fingerprints,
         "exact_dup_groups": _q_exact_dup_groups,
         "ngram_jaccard": _q_ngram_jaccard,
@@ -2466,6 +2402,72 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rescored_topk": _q_rescored_topk,
         "kmeans_clusters": _q_kmeans,
         "temperature_mix": _q_temperature_mix,
+        # --- upsert, purge, merge and the positional build
+        "upsert_eq": _q_upsert_eq,
+        "upsert_topk": _q_upsert_topk,
+        "merged_topk": _q_merged_topk,
+        "deleted_topk": _q_deleted_topk,
+        "phrase_search": _q_phrase_search,
+        "snippet_hits": _q_snippet_hits,
+        "federated_topk": _q_federated_topk,
+        # ---- driver window (50) ends here ----
+        # --- in the last driver window
+        "cluster_mix": _q_cluster_mix,
+        "dup_groups": _q_dup_groups,
+        "curated": _q_curated,
+        "pq_topk": _q_pq_topk,
+        "pq_refined": _q_pq_refined,
+        "ivfpq_topk": _q_ivfpq_topk,
+        "time_travel": _q_time_travel,
+        "minhash_dups": _q_minhash_dups,
+        "simhash_dups": _q_simhash_dups,
+        "lang_id": _q_lang_id,
+        "quality": _q_quality,
+        "clone_candidates": _q_clone_candidates,
+        "ann_cosine_topk": _q_ann_cosine_topk,
+        "ann_lsh_topk": _q_ann_lsh_topk,
+        "ann_ivf_topk": _q_ann_ivf_topk,
+        "fuzzy_topk": _q_fuzzy_topk,
+        "keyed_eq_persisted": _q_keyed_eq_persisted,
+        "keyed_rng_persisted": _q_keyed_rng_persisted,
+        "eq_lookup": _q_eq_lookup,
+        "rng_lookup": _q_rng_lookup,
+        "term_counts": _q_term_counts,
+        "postings_tf": _q_postings,
+        "term_df": _q_term_df,
+        "doc_lengths": _q_doc_lengths,
+        "corpus_stats": _q_corpus_stats,
+        "topk_bm25": _q_topk_bm25,
+        "indexed_topk": _q_indexed_topk,
+        "filtered_topk": _q_filtered_topk,
+        "conjunctive_topk": _q_conjunctive_topk,
+        "not_topk": _q_not_topk,
+        "bool_topk": _q_bool_topk,
+        "bool_msm": _q_bool_msm,
+        "synonym_topk": _q_synonym_topk,
+        "bm25f_topk": _q_bm25f_topk,
+        "prefix_topk": _q_prefix_topk,
+        "wildcard_topk": _q_wildcard_topk,
+        "near_search": _q_near_search,
+        "slop_phrase": _q_slop_phrase,
+        "facet_counts": _q_facet_counts,
+        "paged_topk": _q_paged_topk,
+        "more_like_this": _q_more_like_this,
+        "regex_topk": _q_regex_topk,
+        "boosted_topk": _q_boosted_topk,
+        "decay_topk": _q_decay_topk,
+        "hit_count": _q_hit_count,
+        "grouped_topk": _q_grouped_topk,
+        "hybrid_topk": _q_hybrid_topk,
+        # --- in the window before the last
+        "sessionize": _q_sessionize,
+        "tumbling_counts": _q_tumbling_counts,
+        "spell_suggest": _q_spell_suggest,
+        "lookup_dump": _q_lookup_dump,
+        "fallback_join": _q_fallback_join,
+        "interval_days": _q_interval_days,
+        "phrase_adhoc": _q_phrase_adhoc,
+        "phrase_prefix": _q_phrase_prefix,
     }
 
 

@@ -32,10 +32,11 @@ Scale design (10^12 turns, 1000 executors):
   per-term shuffle ever concentrates a hot term on one task. (SURVEY
   §4.3 proposed salting; ranging on the composite key subsumes it.)
 - **Resumable**: each stage commits its table via the catalog's
-  manifest-last protocol and records a checkpoint marker + lineage row;
-  a restarted build skips committed stages (idx.py:85-92 analog, at
-  stage granularity with per-partition durability inside each stage from
-  Spark task retry + atomic snapshot commit).
+  manifest-last protocol, and that committed manifest is the only
+  record that the stage is done; a restarted build skips committed
+  stages (idx.py:85-92 analog, at stage granularity with per-partition
+  durability inside each stage from Spark task retry + atomic snapshot
+  commit).
 - **Query-time file skipping**: file-level min/max skipping on ``term``
   replaces the reference's B+tree descent (prs.py:57-77); every block
   of the surviving files' query terms is then decoded and scored
@@ -46,8 +47,11 @@ Scale design (10^12 turns, 1000 executors):
 from __future__ import annotations
 
 import operator as _op
+import os
+import time
 from collections import OrderedDict
 from collections.abc import Callable, Collection, Iterable, Iterator, Sequence
+from contextlib import contextmanager
 from functools import partial, reduce
 from typing import Any
 
@@ -71,7 +75,6 @@ from antidb_spark.operators.stats import build_postings
 from antidb_spark.schema import DOC_ID_COLS
 from antidb_spark.session import index_scan_conf
 from antidb_spark.sources.catalog import LEAF_ROW_GROUP_BYTES, Catalog
-from antidb_spark.sources.checkpoint import BuildCheckpoint, PhaseTimer
 
 BLOCK_SIZE = 128
 
@@ -497,6 +500,23 @@ class _SnapshotLRU:
         return {t: self._items[t] for t in terms}
 
 
+class PhaseTimer:
+    """count_exec_time analog (idx.py:29-37): wall-clock per build phase."""
+
+    def __init__(self):
+        self.phases: list[dict] = []
+
+    @contextmanager
+    def phase(self, name: str):
+        t0, ok = time.time(), False
+        try:
+            yield
+            ok = True
+        finally:
+            self.phases.append(
+                {"phase": name, "seconds": time.time() - t0, "ok": ok})
+
+
 class IndexBuilder:
     """Build and query the physical inverted index (Idx/Prs analog)."""
 
@@ -512,7 +532,6 @@ class IndexBuilder:
         self.id_cols = list(id_cols)
         self.text_col = text_col
         self.catalog = Catalog(spark, root)
-        self.ckpt = BuildCheckpoint(root)
         self.timer = PhaseTimer()
         # Driver caches. Every entry is keyed by the snapshot id of the
         # table(s) it was read from and reloads once that id moves, so a
@@ -554,68 +573,73 @@ class IndexBuilder:
         The table is build scratch: once ``blocks`` commits it is
         dropped, and ``blocks`` + ``docmap`` (minus ``tombstones``) are
         the only committed postings (see :meth:`_alive_postings`).
-        ``corpus=None`` is allowed when stage 0 is already committed
-        mid-build (a resume, or a rebuild / the streaming compactor
+
+        The catalog is the only record of progress. Stage 0 runs when
+        neither ``postings`` nor ``blocks`` is committed. Every later
+        stage table records the ``postings`` snapshot it was derived
+        from (``props["src_snapshot"]``): while ``postings`` is
+        committed, a stage is done only if its table records that
+        snapshot; once ``postings`` is dropped, a committed table is
+        done. ``corpus=None`` is allowed when stage 0 is already
+        committed (a resume, or a rebuild / the streaming compactor
         handing in pre-built postings).
         """
         n_part = n_partitions or self.spark.sparkContext.defaultParallelism
+        cat = self.catalog
 
-        if not self.ckpt.is_done("postings"):
+        if not (cat.exists("postings") or cat.exists("blocks")):
             if corpus is None:
                 raise ValueError(
                     "corpus is required unless the postings stage is committed"
                 )
-            # a from-scratch build renumbers every ordinal: tombstones
-            # from a previous generation would delete arbitrary docs
-            self.catalog.drop("tombstones")
             with self.timer.phase("postings"):
                 postings = build_postings(
                     corpus, id_cols=self.id_cols, text_col=self.text_col
                 )
-                man = self.catalog.write(postings, "postings")
-            self.ckpt.mark_done(
-                "postings", rows=sum(e["rows"] for e in man["files"]),
-                snapshot=man["snapshot_id"],
-                seconds=self.timer.phases[-1]["seconds"],
+                cat.write(postings, "postings")
+        src = (cat.manifest("postings")["snapshot_id"]
+               if cat.exists("postings") else None)
+        props = {"src_snapshot": src}
+
+        def done(table: str) -> bool:
+            return cat.exists(table) and (
+                src is None
+                or cat.manifest(table)["props"].get("src_snapshot") == src
             )
 
-        if not (self.ckpt.is_done("docmap") and self.ckpt.is_done("stats")):
+        if not (done("docmap") and done("stats")):
             # one phase writes both: stats is a single-row agg over the
             # docmap relation — folding it here avoids a separate stage
             # and a full docmap table re-read (one saved pass at scale)
             with self.timer.phase("docmap"):
-                postings = self.catalog.read("postings")
+                # renumbering every ordinal: tombstones from a previous
+                # generation would delete arbitrary docs
+                cat.drop("tombstones")
+                postings = cat.read("postings")
                 dl = postings.groupBy(*self.id_cols).agg(F.sum("tf").alias("dl"))
                 docmap = assign_doc_ords(dl, self.id_cols, n_part)
-                man = self.catalog.write(
+                cat.write(
                     docmap, "docmap",
-                    stats_cols=["doc_ord", self.id_cols[0]],
+                    stats_cols=["doc_ord", self.id_cols[0]], props=props,
                     row_group_bytes=LEAF_ROW_GROUP_BYTES,
                 )
                 # sum_dl rides along so appends can update stats
                 # ARITHMETICALLY (O(delta), no docmap re-scan): dl are
                 # ints, so the double sum is exact below 2^53 and
                 # avgdl = sum_dl/n_docs is bit-identical to F.avg
-                stats = self.catalog.read("docmap").agg(
+                stats = cat.read("docmap").agg(
                     F.count(F.lit(1)).alias("n_docs"),
                     F.avg("dl").alias("avgdl"),
                     F.sum("dl").alias("sum_dl"),
                 )
-                man_s = self.catalog.write(stats, "stats")
-                src = getattr(docmap, "_ord_source", None)
-                if src is not None:
-                    src.unpersist()
-            self.ckpt.mark_done(
-                "docmap", rows=sum(e["rows"] for e in man["files"]),
-                snapshot=man["snapshot_id"],
-                seconds=self.timer.phases[-1]["seconds"],
-            )
-            self.ckpt.mark_done("stats", snapshot=man_s["snapshot_id"],
-                                seconds=0.0)
+                cat.write(stats, "stats", props=props)
+                ord_src = getattr(docmap, "_ord_source", None)
+                if ord_src is not None:
+                    ord_src.unpersist()
 
-        if not self.ckpt.is_done("terms"):
+        if not done("terms"):
             with self.timer.phase("terms"):
-                postings = self.catalog.read("postings")
+                postings = cat.read("postings")
                 # range-sorted dictionary: hash-partitioned groupBy
                 # output would leave every file spanning ~the whole term
                 # range, defeating the manifest/row-group prune that
@@ -627,17 +651,15 @@ class IndexBuilder:
                     .repartitionByRange(F.col("term"))
                     .sortWithinPartitions("term")
                 )
-                man = self.catalog.write(
-                    dfs, "terms", stats_cols=["term"],
+                cat.write(
+                    dfs, "terms", stats_cols=["term"], props=props,
                     row_group_bytes=LEAF_ROW_GROUP_BYTES,
                 )
-            self.ckpt.mark_done("terms", snapshot=man["snapshot_id"],
-                                seconds=self.timer.phases[-1]["seconds"])
 
-        if not self.ckpt.is_done("blocks"):
+        if not done("blocks"):
             with self.timer.phase("blocks"):
-                postings = self.catalog.read("postings")
-                docmap = self.catalog.read("docmap")
+                postings = cat.read("postings")
+                docmap = cat.read("docmap")
                 # blocks carry raw (doc, tf, dl) postings, not scores,
                 # so packing needs NO df/stats join — BM25 is computed
                 # at query time from current stats, which keeps
@@ -647,32 +669,20 @@ class IndexBuilder:
                 )
                 packed = _packed(enriched, ["term", "doc_ord"],
                                  _pack_partition, 0, _BLOCKS_OUT, n_part)
-                man = self.catalog.write(
+                cat.write(
                     packed, "blocks", stats_cols=["term"],
-                    props={"n_runs": 1},
+                    props={"n_runs": 1, **props},
                     row_group_bytes=LEAF_ROW_GROUP_BYTES,
                 )
-            self.ckpt.mark_done(
-                "blocks", rows=sum(e["rows"] for e in man["files"]),
-                snapshot=man["snapshot_id"],
-                seconds=self.timer.phases[-1]["seconds"],
-            )
-        self.catalog.drop("postings")
-
-        metrics = {
-            "phases": self.timer.phases,
-            "lineage": self.ckpt.lineage_rows(),
-        }
-        return metrics
-
-    def _mark_stage0(self, man: dict) -> None:
-        """Mark the committed ``postings`` snapshot ``man`` (pre-built
-        (term, *id_cols, tf) rows) as stage 0, so the next :meth:`build`
-        derives the rest from it."""
-        self.ckpt.mark_done(
-            "postings", rows=sum(e["rows"] for e in man["files"]),
-            snapshot=man["snapshot_id"], seconds=0.0,
-        )
+        # lineage: the head snapshot-log row of each stage table,
+        # stage 0's taken before that scratch table drops
+        lineage = [
+            {"unit": t, **cat.history(t)[-1]}
+            for t in ("postings", "docmap", "stats", "terms", "blocks")
+            if cat.exists(t)
+        ]
+        cat.drop("postings")
+        return {"phases": self.timer.phases, "lineage": lineage}
 
     # -- query ------------------------------------------------------------
 
@@ -809,14 +819,20 @@ class IndexBuilder:
         first tombstones table); the next query of any builder on this
         root serves the restored state. Non-destructive at the catalog
         level — the abandoned snapshots stay readable until
-        ``expire_snapshots``."""
-        for t, sid in pins.items():
-            if self.catalog.manifest(t)["snapshot_id"] != sid:
-                self.catalog.restore(t, sid)
+        ``expire_snapshots``. Every pinned snapshot is checked to be
+        restorable before any head moves: when one is not (its table was
+        dropped since the pin, or expiry deleted its files), the
+        catalog's error is raised and every head is left unchanged."""
+        cat = self.catalog
+        todo = {t: sid for t, sid in pins.items()
+                if not (cat.exists(t) and cat.manifest(t)["snapshot_id"] == sid)}
+        for t, sid in todo.items():
+            cat._retained(t, sid)
+        for t, sid in todo.items():
+            cat.restore(t, sid)
         for t in self.INDEX_TABLES:
-            if t not in pins and self.catalog.exists(t):
-                self.catalog.drop(t)
-                self.ckpt.unmark(t)
+            if t not in pins and cat.exists(t):
+                cat.drop(t)
 
     def _corpus_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl) from the committed stats table — driver-side
@@ -1034,7 +1050,12 @@ class IndexBuilder:
         rows vanish at the inner join — they can never remap onto the
         id's new ordinal. Cost: O(layer) decode + two shuffles of the
         position rows — the same class as the base rebuild, with no
-        re-tokenize."""
+        re-tokenize.
+
+        A crash after the stage-0 write is finished by ``build(None)``
+        (the catalog alone records what is built); the side layers
+        then stay unbuilt until ``build_positional_index`` /
+        ``build_doc_meta`` re-runs."""
         from antidb_spark.operators.phrase import (
             _pack_pos_partition,
             _pos_postings,
@@ -1042,8 +1063,8 @@ class IndexBuilder:
         )
 
         n_part = n_partitions or self.spark.sparkContext.defaultParallelism
-        keep_pos = self.ckpt.is_done("pos_blocks")
-        keep_meta = self.ckpt.is_done("docmeta")
+        keep_pos = self.catalog.exists("pos_blocks")
+        keep_meta = self.catalog.exists("docmeta")
         meta_cols = (
             self.catalog.manifest("docmeta").get("props", {}).get("meta_cols")
             if keep_meta else None
@@ -1060,16 +1081,23 @@ class IndexBuilder:
             )
         pos_src = _pos_postings(self) if keep_pos else None
         meta_src = self.catalog.read("docmeta") if keep_meta else None
+        # the layers are keyed by the ordinals about to renumber: take
+        # their heads down until the remap's replace publishes them
+        # again. Their files stay — the sources above are planned over
+        # explicit file lists — so a crash from here on leaves the
+        # layers unbuilt, never keyed by the wrong ordinals.
+        for tbl in ("pos_blocks", "docmeta"):
+            if self.catalog.exists(tbl):
+                os.remove(self.catalog._manifest_path(tbl))
 
         # stage 0 is written while its sources (blocks, docmap,
         # tombstones) are still committed: the table pins the alive
-        # postings, with no in-memory copy
-        man = self.catalog.write(self._alive_postings(), "postings")
+        # postings, with no in-memory copy; a crash after this write
+        # resumes with build(None)
+        self.catalog.write(self._alive_postings(), "postings")
         for tbl in ("docmap", "stats", "terms", "terms_rev", "terms_del",
                     "blocks", "tombstones", "termvecs"):
             self.catalog.drop(tbl)
-        self.ckpt.reset()
-        self._mark_stage0(man)
         self.build(corpus=None, n_partitions=n_part)
 
         out: dict = {}
@@ -1089,14 +1117,9 @@ class IndexBuilder:
                 packed = _packed(new_pos, ["term", "doc_ord", "pos"],
                                  _pack_pos_partition, 0, _POS_BLOCKS_OUT,
                                  n_part)
-                pman = self.catalog.replace(
+                self.catalog.replace(
                     packed, "pos_blocks", stats_cols=["term"],
                     row_group_bytes=LEAF_ROW_GROUP_BYTES,
-                )
-                self.ckpt.mark_done(
-                    "pos_blocks",
-                    rows=sum(e["rows"] for e in pman["files"]),
-                    snapshot=pman["snapshot_id"], seconds=0.0,
                 )
                 out["pos_layer"] = "remapped"
             if keep_meta and meta_cols:
@@ -1107,15 +1130,10 @@ class IndexBuilder:
                     .repartitionByRange(n_part, "doc_ord")
                     .sortWithinPartitions("doc_ord")
                 )
-                mman = self.catalog.replace(
+                self.catalog.replace(
                     new_meta, "docmeta", stats_cols=["doc_ord"],
                     props={"meta_cols": list(meta_cols)},
                     row_group_bytes=LEAF_ROW_GROUP_BYTES,
-                )
-                self.ckpt.mark_done(
-                    "docmeta",
-                    rows=sum(e["rows"] for e in mman["files"]),
-                    snapshot=mman["snapshot_id"], seconds=0.0,
                 )
                 out["meta_layer"] = "remapped"
             old_map.unpersist()
@@ -2224,15 +2242,12 @@ class IndexBuilder:
             .repartitionByRange(F.col("delkey"), F.col("term"))
             .sortWithinPartitions("delkey", "term")
         )
-        man = self.catalog.replace(
+        return self.catalog.replace(
             rows, "terms_del", stats_cols=["delkey"],
             row_group_bytes=LEAF_ROW_GROUP_BYTES,
             props={"src_snapshot": src,
                    "max_edits": self.SYMSPELL_MAX_EDITS},
         )
-        self.ckpt.mark_done("terms_del", snapshot=man["snapshot_id"],
-                            seconds=0.0)
-        return man
 
     def _ensure_terms_del(self) -> None:
         """Build/refresh ``terms_del`` when missing or stale vs the
@@ -2484,14 +2499,11 @@ class IndexBuilder:
             .repartitionByRange(F.col("rterm"))
             .sortWithinPartitions("rterm")
         )
-        man = self.catalog.replace(
+        return self.catalog.replace(
             rev, "terms_rev", stats_cols=["rterm"],
             row_group_bytes=LEAF_ROW_GROUP_BYTES,
             props={"src_snapshot": src},
         )
-        self.ckpt.mark_done("terms_rev", snapshot=man["snapshot_id"],
-                            seconds=0.0)
-        return man
 
     def build_term_vectors(self) -> dict:
         """Commit ``termvecs`` — the DOC-keyed (doc_ord, term, tf)
@@ -2518,14 +2530,11 @@ class IndexBuilder:
             .repartitionByRange(F.col("doc_ord"))
             .sortWithinPartitions("doc_ord", "term")
         )
-        man = self.catalog.replace(
+        return self.catalog.replace(
             tv, "termvecs", stats_cols=["doc_ord"],
             row_group_bytes=LEAF_ROW_GROUP_BYTES,
             props={"src_snapshot": src},
         )
-        self.ckpt.mark_done("termvecs", snapshot=man["snapshot_id"],
-                            seconds=0.0)
-        return man
 
     def _ensure_termvecs(self) -> None:
         """Build/refresh ``termvecs`` when missing or stale vs the
@@ -2785,9 +2794,9 @@ class IndexBuilder:
         evaluation on a narrow doc_ord-sorted table at query time — the
         filter never touches the corpus or the postings. Resumable like
         every build stage; returns the manifest."""
-        if not self.ckpt.is_done("docmap"):
+        if not self.catalog.exists("docmap"):
             raise ValueError("build the base index (docmap) before docmeta")
-        if self.ckpt.is_done("docmeta"):
+        if self.catalog.exists("docmeta"):
             return self.catalog.manifest("docmeta")
         n_part = self.spark.sparkContext.defaultParallelism
         with self.timer.phase("docmeta"):
@@ -2800,22 +2809,16 @@ class IndexBuilder:
                 .repartitionByRange(n_part, "doc_ord")
                 .sortWithinPartitions("doc_ord")
             )
-            man = self.catalog.write(
+            return self.catalog.write(
                 out, "docmeta", stats_cols=["doc_ord"],
                 props={"meta_cols": list(meta_cols)},
                 row_group_bytes=LEAF_ROW_GROUP_BYTES,
             )
-        self.ckpt.mark_done(
-            "docmeta", rows=sum(e["rows"] for e in man["files"]),
-            snapshot=man["snapshot_id"],
-            seconds=self.timer.phases[-1]["seconds"],
-        )
-        return man
 
     def _docmeta(self, *cols: str) -> DataFrame:
         """The committed ``docmeta`` relation, which must exist and
         carry every column of ``cols`` (``ValueError`` otherwise)."""
-        if not self.ckpt.is_done("docmeta"):
+        if not self.catalog.exists("docmeta"):
             raise ValueError(
                 "docmeta not built (build_doc_meta(corpus, meta_cols))"
             )

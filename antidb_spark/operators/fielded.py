@@ -12,7 +12,7 @@ cannot mint itself an inflated per-field idf.
 
 Architecture: one committed sub-index PER FIELD (`IndexBuilder` in a
 subdirectory — the multi-index-coexistence shape, reference
-idx.py:56-61), each fully reusing the existing build/checkpoint/prune
+idx.py:56-61), each fully reusing the existing build/resume/prune
 machinery. Sub-indexes do NOT share ordinal space (a doc with an empty
 field is absent from that field's docmap), so cross-field blending
 joins on the user id columns — the only new moving part. A tiny
@@ -22,7 +22,7 @@ field list; per-field avgdl lives in each sub-index's own stats table.
 
 Scale notes (100 TB lens):
 - build = F independent single-field builds — same shuffle profile as
-  the main path, each resumable from its own checkpoints.
+  the main path, each resumable from its own catalog.
 - query touches only the query terms' manifest-pruned blocks per
   field; the per-field docmap join (ordinal → ids) shuffles candidate
   rows (≈ the query terms' postings), never the corpus, and the

@@ -119,7 +119,7 @@ def merge_index(
             f"id_cols differ: {dst.id_cols} vs {src.id_cols}"
         )
     for side, b in (("dst", dst), ("src", src)):
-        if not b.ckpt.is_done("blocks"):
+        if not b.catalog.exists("blocks"):
             raise ValueError(f"{side} index has no committed blocks")
     id_cols = list(dst.id_cols)
 
@@ -188,8 +188,8 @@ def merge_index(
 
     # positional layer: merge when both sides have it, else invalidate
     pos_mode = "absent"
-    if dst.ckpt.is_done("pos_blocks"):
-        if src.ckpt.is_done("pos_blocks"):
+    if dst.catalog.exists("pos_blocks"):
+        if src.catalog.exists("pos_blocks"):
             pn_runs = int(
                 dst.catalog.manifest("pos_blocks")["props"].get("n_runs", 1)
             )
@@ -203,14 +203,13 @@ def merge_index(
             pos_mode = "merged"
         else:
             dst.catalog.drop("pos_blocks")
-            dst.ckpt.unmark("pos_blocks")
             pos_mode = "invalidated"
 
     # docmeta: merge only on identical meta_cols, else invalidate
     meta_mode = "absent"
-    if dst.ckpt.is_done("docmeta"):
+    if dst.catalog.exists("docmeta"):
         same_meta = (
-            src.ckpt.is_done("docmeta")
+            src.catalog.exists("docmeta")
             and src.catalog.manifest("docmeta")["props"].get("meta_cols")
             == dst.catalog.manifest("docmeta")["props"].get("meta_cols")
         )
@@ -225,7 +224,6 @@ def merge_index(
             meta_mode = "merged"
         else:
             dst.catalog.drop("docmeta")
-            dst.ckpt.unmark("docmeta")
             meta_mode = "invalidated"
 
     # tombstones: dst's stay valid (its ordinals never move); src's

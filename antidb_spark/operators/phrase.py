@@ -266,9 +266,9 @@ def build_positional_index(
     this rebuild — when a consumed batch predates positional capture or
     a delta mutates an existing doc (full-rebuild fallback).
     """
-    if not builder.ckpt.is_done("docmap"):
+    if not builder.catalog.exists("docmap"):
         raise ValueError("build the base index (docmap) before positions")
-    if builder.ckpt.is_done("pos_blocks"):
+    if builder.catalog.exists("pos_blocks"):
         return builder.catalog.manifest("pos_blocks")
     n_part = n_partitions or builder.spark.sparkContext.defaultParallelism
     with builder.timer.phase("pos_blocks"):
@@ -292,17 +292,16 @@ def build_positional_index(
         )
         packed = _packed(enriched, ["term", "doc_ord", "pos"],
                          _pack_pos_partition, 0, _POS_BLOCKS_OUT, n_part)
-        man = builder.catalog.write(
+        return builder.catalog.write(
             packed, "pos_blocks", stats_cols=["term"],
             row_group_bytes=LEAF_ROW_GROUP_BYTES,
         )
-    builder.ckpt.mark_done(
-        "pos_blocks",
-        rows=sum(e["rows"] for e in man["files"]),
-        snapshot=man["snapshot_id"],
-        seconds=builder.timer.phases[-1]["seconds"],
-    )
-    return man
+
+
+def _require_pos(builder) -> None:
+    """Raise unless ``builder``'s positional layer is committed."""
+    if not builder.catalog.exists("pos_blocks"):
+        raise ValueError("positional index not built (build_positional_index)")
 
 
 def _empty_phrase_result(builder) -> DataFrame:
@@ -357,8 +356,7 @@ def phrase_query(builder, phrase: str) -> DataFrame:
     docmap resolve. Skew-free: the shuffle key (doc, anchor) is as
     fine-grained as the data itself."""
     terms = py_tokens(phrase)
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     if not terms:
         return _empty_phrase_result(builder)
     slot_rows = [(i, t) for i, t in enumerate(terms)]
@@ -410,8 +408,7 @@ def phrase_prefix_query(
     at most once, so no dedup pass is added. The pos_blocks scan
     prunes to head terms + expansions."""
     terms = py_tokens(phrase)
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     if not terms:
         return _empty_phrase_result(builder)
     head, pref = terms[:-1], terms[-1]
@@ -449,8 +446,7 @@ def near_query(
     ta, tb = toks_a[0], toks_b[0]
     if ta == tb:
         raise ValueError("near_query terms must differ")
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     decoded = _pos_postings(builder, [ta, tb])
     pa_ = decoded.filter(F.col("term") == ta).select(
         "doc_ord", F.col("pos").alias("pa")
@@ -486,8 +482,7 @@ def near_warm(
     ta, tb = toks_a[0], toks_b[0]
     if ta == tb:
         raise ValueError("near_warm terms must differ")
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     cols = [*builder.id_cols, "min_dist", "n_pairs"]
     if not _fits_warm(builder, [ta, tb]):
         out = near_query(builder, ta, tb, window).toPandas()
@@ -555,8 +550,7 @@ def term_positions(builder, query: str, k: int = 10) -> DataFrame:
     shuffle, so the agg moves O(k · positions-per-doc) rows no matter
     the corpus size."""
     terms = sorted(set(py_tokens(query)))
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     dm = builder.catalog.read("docmap")
     if not terms:
         schema = ", ".join(
@@ -598,8 +592,7 @@ def term_positions_warm(builder, query: str, k: int = 10) -> pd.DataFrame:
     under the same block budgets."""
     terms = sorted(set(py_tokens(query)))
     cols = [*builder.id_cols, "term", "first_pos", "n_hits"]
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     if not terms:
         return pd.DataFrame(columns=cols)
     r = (
@@ -693,8 +686,7 @@ def phrase_warm(builder, phrase: str) -> pd.DataFrame:
     ``PHRASE_WARM_MAX_BLOCKS``, estimated from the terms table's df)
     transparently fall back to the distributed path."""
     terms = py_tokens(phrase)
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     if not terms:
         return pd.DataFrame(columns=[*builder.id_cols, "phrase_freq"])
     return _warm_slots(
@@ -714,8 +706,7 @@ def phrase_prefix_warm(
     duplicate-free. Value-identical to the distributed path (pinned
     by tests), with the same stopword-load fallback."""
     terms = py_tokens(phrase)
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     if not terms:
         return pd.DataFrame(columns=[*builder.id_cols, "phrase_freq"])
     head, pref = terms[:-1], terms[-1]
@@ -801,8 +792,7 @@ def phrase_slop_query(builder, phrase: str, slop: int) -> DataFrame:
     terms = py_tokens(phrase)
     if len(terms) < 2:
         raise ValueError("phrase_slop_query needs at least two terms")
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     decoded = _pos_postings(builder, sorted(set(terms)))
     chain = decoded.filter(F.col("term") == terms[0]).select(
         "doc_ord", F.col("pos").alias("p1"), F.col("pos").alias("cur")
@@ -841,8 +831,7 @@ def phrase_slop_warm(builder, phrase: str, slop: int) -> pd.DataFrame:
     terms = py_tokens(phrase)
     if len(terms) < 2:
         raise ValueError("phrase_slop_warm needs at least two terms")
-    if not builder.ckpt.is_done("pos_blocks"):
-        raise ValueError("positional index not built (build_positional_index)")
+    _require_pos(builder)
     cols = [*builder.id_cols, "n_matches", "min_disp"]
     uniq = sorted(set(terms))
     if not _fits_warm(builder, uniq):

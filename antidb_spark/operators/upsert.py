@@ -59,7 +59,6 @@ def append_run(
     pos_delta: DataFrame | pa.Table | None = None,
     meta_delta: DataFrame | pa.Table | None = None,
     n_partitions: int | None = None,
-    ckpt_extra: dict | None = None,
 ) -> dict:
     """Append one run of NEW documents to a committed index, O(delta).
 
@@ -71,7 +70,9 @@ def append_run(
     and maintains the side layers: ``pos_delta`` (term, *id_cols, pos)
     appends a pos_blocks run, ``meta_delta`` (*id_cols, *meta_cols)
     appends docmeta rows — passing None for a COMMITTED layer drops it
-    (better absent than silently missing the appended docs).
+    (better absent than silently missing the appended docs). A layer is
+    built iff its table is committed, so a dropped one reads as unbuilt
+    at once, a crash mid-append included.
 
     Deltas are Spark DataFrames (streaming compaction, big upserts) or
     driver-resident ``pyarrow.Table``s (the driver tier of
@@ -193,10 +194,9 @@ def append_run(
     # positional layer: append a run when position rows for the delta
     # are available; drop otherwise (phrase queries raise until rebuild)
     pos_mode = None
-    if b.ckpt.is_done("pos_blocks"):
+    if b.catalog.exists("pos_blocks"):
         if pos_delta is None:
             b.catalog.drop("pos_blocks")
-            b.ckpt.unmark("pos_blocks")
             pos_mode = "invalidated"
         else:
             from antidb_spark.operators.phrase import (
@@ -225,7 +225,7 @@ def append_run(
     # ordinals) when available; otherwise drop — filtered search must
     # never silently serve a result set that excludes appended docs
     meta_mode = None
-    if b.ckpt.is_done("docmeta"):
+    if b.catalog.exists("docmeta"):
         want_cols = (
             b.catalog.manifest("docmeta").get("props", {}).get("meta_cols")
         )
@@ -236,7 +236,6 @@ def append_run(
                 meta_delta.column_names if local else meta_delta.columns)
         ):
             b.catalog.drop("docmeta")
-            b.ckpt.unmark("docmeta")
             meta_mode = "invalidated"
         else:
             new_meta = _with_ords(meta_delta, new_docmap, id_cols,
@@ -251,11 +250,6 @@ def append_run(
 
     if src is not None:
         src.unpersist()
-    b.ckpt.mark_done(
-        f"compaction_run_{n_runs}",
-        snapshot=man["snapshot_id"],
-        **(ckpt_extra or {}),
-    )
     return {
         "run": n_runs, "pos_mode": pos_mode, "meta_mode": meta_mode,
         "snapshot": man["snapshot_id"],
@@ -265,7 +259,7 @@ def append_run(
 def _meta_cols(b, docs: DataFrame) -> list[str] | None:
     """The committed docmeta columns when ``docs`` carries them all
     (the docmeta delta can be maintained), else None."""
-    if not b.ckpt.is_done("docmeta"):
+    if not b.catalog.exists("docmeta"):
         return None
     want = b.catalog.manifest("docmeta").get("props", {}).get("meta_cols")
     return list(want) if want and set(want) <= set(docs.columns) else None
@@ -349,7 +343,7 @@ def upsert_docs(builder, docs: DataFrame,
     rows, never tokenized) has found them too big.
     """
     b = builder
-    if not b.ckpt.is_done("blocks"):
+    if not b.catalog.exists("blocks"):
         raise ValueError("upsert requires a committed index (build first)")
     cap = b.DELETE_PRUNE_MAX_IDS
     meta_cols = _meta_cols(b, docs)
@@ -392,7 +386,7 @@ def _upsert_local(b, batch: pa.Table, meta_cols: list[str] | None) -> dict:
                                           for c in id_cols))))
 
     pos_delta = None
-    if b.ckpt.is_done("pos_blocks"):
+    if b.catalog.exists("pos_blocks"):
         occ_ids = ids.take(row)
         pos_delta = pa.table({
             "term": occ["term"],
@@ -402,7 +396,6 @@ def _upsert_local(b, batch: pa.Table, meta_cols: list[str] | None) -> dict:
     meta_delta = batch.select([*id_cols, *meta_cols]) if meta_cols else None
     out = append_run(
         b, delta_post, pos_delta=pos_delta, meta_delta=meta_delta,
-        ckpt_extra={"upsert": True},
     )
     return {"tier": "driver", "n_replaced": n_replaced, **out}
 
@@ -437,7 +430,7 @@ def _upsert_spark(b, docs: DataFrame, meta_cols: list[str] | None,
     n_replaced = b._tombstone(b._alive_ords_df(docs.select(*b.id_cols)))
 
     pos_delta = None
-    if b.ckpt.is_done("pos_blocks"):
+    if b.catalog.exists("pos_blocks"):
         pos_delta = docs.select(
             *b.id_cols, F.posexplode(tokens(b.text_col)).alias("pos", "term")
         ).select("term", *b.id_cols, "pos")
@@ -446,6 +439,5 @@ def _upsert_spark(b, docs: DataFrame, meta_cols: list[str] | None,
     out = append_run(
         b, delta_post, pos_delta=pos_delta, meta_delta=meta_delta,
         n_partitions=n_partitions,
-        ckpt_extra={"upsert": True},
     )
     return {"tier": "spark", "n_replaced": n_replaced, **out}

@@ -299,8 +299,8 @@ def compact(
     b = IndexBuilder(spark, index_root, id_cols=sink.id_cols)
     # hand the builder pre-tokenized postings: write stage 0 directly,
     # then let the normal resumable pipeline derive the rest
-    if not b.ckpt.is_done("postings"):
-        b._mark_stage0(b.catalog.write(postings, "postings"))
+    if not (b.catalog.exists("postings") or b.catalog.exists("blocks")):
+        b.catalog.write(postings, "postings")
     b.build(corpus=None)
     return b
 
@@ -330,6 +330,9 @@ def compact_incremental(
     - ``"rebuild"`` (default): FULL rebuild, ADDITIVE tf semantics —
       the delta's rows merge into the doc's committed content (a doc's
       turns may arrive as fragments across batches). O(total index).
+      The positional and docmeta layers drop before its stage-0
+      ``postings`` write; a crash after that write is finished by
+      ``IndexBuilder.build(None)``.
     - ``"upsert"``: REPLACE semantics, O(delta) — each delivered doc's
       content is taken whole from its LAST delivering micro-batch
       (last-writer-wins within the window), prior generations are
@@ -361,7 +364,7 @@ def compact_incremental(
         F.sum("tf").alias("tf")
     )
 
-    if not b.ckpt.is_done("blocks"):
+    if not b.catalog.exists("blocks"):
         # no committed index yet → this IS the initial batch build
         compact(spark, sink, b.root)
         sink.mark_compacted(todo)
@@ -393,14 +396,14 @@ def compact_incremental(
                 delta_ids.join(docmap, sink.id_cols, "left_semi")
             )
         pos_delta = None
-        if b.ckpt.is_done("pos_blocks"):
+        if b.catalog.exists("pos_blocks"):
             tp = sink.pos_deltas(spark, todo, tag_batch=True)
             if tp is not None:
                 pos_delta = tp.join(last, key).select(
                     "term", *sink.id_cols, "pos"
                 )
         meta_delta = None
-        if b.ckpt.is_done("docmeta"):
+        if b.catalog.exists("docmeta"):
             tm = sink.meta_deltas(spark, todo, tag_batch=True)
             if tm is not None:
                 meta_delta = (
@@ -410,7 +413,6 @@ def compact_incremental(
         out = append_run(
             b, delta_post, pos_delta=pos_delta, meta_delta=meta_delta,
             n_partitions=n_part,
-            ckpt_extra={"batches": sorted(todo), "upsert": True},
         )
         sink.mark_compacted(todo)
         return {
@@ -430,29 +432,33 @@ def compact_incremental(
             .groupBy("term", *sink.id_cols)
             .agg(F.sum("tf").alias("tf"))
         )
-        man = b.catalog.write(merged, "postings")
-        # docmeta drops too: a full rebuild renumbers doc ordinals, and
-        # metadata for pre-existing docs is not in the sink — filtered
-        # queries raise until build_doc_meta re-runs over the corpus
-        for tbl in ("docmap", "stats", "terms", "blocks", "pos_blocks",
-                    "docmeta", "tombstones"):
+        # the side layers drop FIRST: the rebuild renumbers doc
+        # ordinals and reads neither, and docmeta for pre-existing docs
+        # is not in the sink — phrase / filtered queries raise until
+        # build_positional_index / build_doc_meta re-run over the
+        # corpus. A crash after the postings write resumes with
+        # build(None).
+        for tbl in ("pos_blocks", "docmeta"):
             b.catalog.drop(tbl)
-        b.ckpt.reset()
-        b._mark_stage0(man)
+        b.catalog.write(merged, "postings")
+        for tbl in ("docmap", "stats", "terms", "blocks", "tombstones"):
+            b.catalog.drop(tbl)
         b.build(corpus=None, n_partitions=n_part)
         sink.mark_compacted(todo)
         return {"mode": "full", "reason": f"{n_updates} existing docs updated"}
 
     # ---- append path: every delta doc is new -----------------------------
     pos_delta = (
-        sink.pos_deltas(spark, todo) if b.ckpt.is_done("pos_blocks") else None
+        sink.pos_deltas(spark, todo) if b.catalog.exists("pos_blocks")
+        else None
     )
     meta_delta = (
-        sink.meta_deltas(spark, todo) if b.ckpt.is_done("docmeta") else None
+        sink.meta_deltas(spark, todo) if b.catalog.exists("docmeta")
+        else None
     )
     out = append_run(
         b, delta_post, pos_delta=pos_delta, meta_delta=meta_delta,
-        n_partitions=n_part, ckpt_extra={"batches": sorted(todo)},
+        n_partitions=n_part,
     )
     sink.mark_compacted(todo)
     return {

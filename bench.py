@@ -30,7 +30,7 @@ times (default 3) INTERLEAVED — every phase runs once per repeat, so a
 noisy host window taxes all phases alike instead of whichever phase it
 landed on — and the reported number is the per-phase MEDIAN, with the
 relative spread ((max-min)/median) emitted beside it. Build phases get a
-fresh work root each repeat (no checkpoint reuse across repeats).
+fresh work root each repeat (no resumed stages across repeats).
 
 Scaling evidence (local[8] vs local[32]) is produced separately by
 ``scripts/scaling_bench.py`` → ``BENCH/BASELINE.md``.
@@ -248,7 +248,7 @@ def run_suite(spark, docs, transcripts, n_turns):
             F.col("conv_id") < "conv_00000063"
         ).withColumn("text", F.concat(F.lit("upserted "), F.col("text")))
         extras["n_upsert_docs"] = delta.count()  # outside the timer
-        if not builder.ckpt.is_done("pos_blocks"):
+        if not builder.catalog.exists("pos_blocks"):
             # keep the measured work constant regardless of which other
             # phases ran: upsert maintains the positional layer too
             from antidb_spark.operators.phrase import build_positional_index

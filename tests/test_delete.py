@@ -14,6 +14,7 @@ rebuilds physically remove the docs and restore exact statistics.
 from __future__ import annotations
 
 import os
+import shutil
 from urllib.parse import urlparse
 
 import pytest
@@ -516,3 +517,91 @@ def test_grouped_over_docmeta_column(spark, tmp_path):
     with _pt.raises(ValueError, match="docmeta"):
         b.query_grouped("the", ["nope"], k=5)
     t.unpersist()
+
+
+# -- interrupted purges: the catalog is the only record of progress -------
+
+_KILL_QUERIES = [QUERY, "the will", _V[1000]]
+
+
+@pytest.fixture(scope="module")
+def purge_pair(spark, tmp_path_factory):
+    """A small index with docmeta, positions and 3 deleted docs
+    (``root``), and a copy of it purged without interruption (``ref``).
+    Every killed purge below runs on its own copy of ``root``."""
+    corpus = synth_transcripts(spark, n_convs=12, seed=17).cache()
+    corpus.count()
+    base = tmp_path_factory.mktemp("killed")
+    root = str(base / "idx")
+    b = IndexBuilder(spark, root)
+    b.build(corpus, n_partitions=2)
+    b.build_doc_meta(corpus, ["role"])
+    build_positional_index(b, corpus, n_partitions=2)
+    doomed = b.query_pinned(QUERY, k=3).toPandas()
+    assert b.delete_docs(
+        [(r.conv_id, int(r.turn_idx)) for r in doomed.itertuples()]) == 3
+    shutil.copytree(root, str(base / "ref"))
+    ref = IndexBuilder(spark, str(base / "ref"))
+    ref.purge_deleted(n_partitions=2)
+    yield root, ref, corpus
+    corpus.unpersist()
+
+
+def _killed_copy(spark, root, tmp_path, monkeypatch, method, table):
+    """A builder over a copy of ``root`` whose catalog raises as
+    ``method`` is called on ``table`` — a process killed at that call."""
+    b = IndexBuilder(spark, shutil.copytree(root, str(tmp_path / "copy")))
+    real = getattr(b.catalog, method)
+
+    def kill(*args, **kwargs):
+        if table in [a for a in args if isinstance(a, str)]:
+            raise RuntimeError(f"killed at {method}({table!r})")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(b.catalog, method, kill)
+    return b
+
+
+def _answers(b) -> list:
+    return [b.query_batch(_KILL_QUERIES, k=10).toPandas().values.tolist()] + [
+        b.query_pinned(q, k=10).toPandas().values.tolist()
+        for q in _KILL_QUERIES
+    ]
+
+
+@pytest.mark.parametrize("table", ["tombstones", "terms"])
+def test_killed_purge_resumes_from_the_catalog(spark, purge_pair, tmp_path,
+                                               monkeypatch, table):
+    """A purge killed at a drop, after its stage-0 ``postings`` write and
+    after some derived tables are gone, is finished by ``build(None)``:
+    the resumed index answers as an uninterrupted purge does."""
+    root, ref, _ = purge_pair
+    b = _killed_copy(spark, root, tmp_path, monkeypatch, "drop", table)
+    with pytest.raises(RuntimeError, match="killed"):
+        b.purge_deleted(n_partitions=2)
+    resumed = IndexBuilder(spark, b.root)
+    resumed.build(None)
+    assert not resumed.catalog.exists("postings")
+    assert not resumed.catalog.exists("tombstones")
+    assert _answers(resumed) == _answers(ref)
+
+
+def test_optimize_killed_at_the_pos_remap_leaves_layers_unbuilt(
+        spark, purge_pair, tmp_path, monkeypatch):
+    """A kill once the base rebuild committed leaves the ordinal-keyed
+    side layers unbuilt — never served under the renumbered ordinals —
+    until they are rebuilt."""
+    root, ref, corpus = purge_pair
+    b = _killed_copy(spark, root, tmp_path, monkeypatch, "replace",
+                     "pos_blocks")
+    with pytest.raises(RuntimeError, match="killed"):
+        b.optimize(n_partitions=2)
+    assert _answers(b) == _answers(ref)
+    with pytest.raises(ValueError, match="positional index not built"):
+        phrase_query(b, "the a")
+    with pytest.raises(ValueError, match="docmeta not built"):
+        b.query_filtered(QUERY, "role = 'user'", k=10)
+    build_positional_index(b, corpus, n_partitions=2)
+    want = phrase_query(ref, "the a").toPandas().values.tolist()
+    assert want
+    assert phrase_query(b, "the a").toPandas().values.tolist() == want

@@ -154,7 +154,7 @@ def test_rebuild_preserves_layers_by_remap(spark, tmp_path):
     assert m["mode"] == "optimized"
     assert m["pos_layer"] == "remapped"
     assert m["meta_layer"] == "remapped"
-    assert b.ckpt.is_done("pos_blocks") and b.ckpt.is_done("docmeta")
+    assert b.catalog.exists("pos_blocks") and b.catalog.exists("docmeta")
 
     # reference: fresh build + fresh layers over the logical corpus
     logical = corpus.filter(

@@ -243,7 +243,7 @@ def test_positional_appends_only(spark, corpus, tmp_path):
     after = _file_hashes(os.path.join(b.root, "pos_blocks"))
     assert {p: h for p, h in before.items() if p in after} == before
     assert len(after) > len(before)  # new pos_block files appended
-    assert b.ckpt.is_done("pos_blocks")  # layer never invalidated
+    assert b.catalog.exists("pos_blocks")  # layer never invalidated
 
     # phrase parity on phrases hitting base-only, tail-only, and both
     for phrase in ["the data", "of the", "kemuba0", "no such phrase zz"]:
@@ -279,7 +279,7 @@ def test_positional_append_without_pos_deltas_invalidates(
     shutil.rmtree(os.path.join(sink.pos_dir, "batch_id=0"))
     m = compact_incremental(spark, sink, b, n_partitions=4)
     assert m["mode"] == "append" and m["pos_mode"] == "invalidated"
-    assert not b.ckpt.is_done("pos_blocks")
+    assert not b.catalog.exists("pos_blocks")
 
 
 def test_docmeta_appends_with_meta_deltas(spark, corpus, tmp_path):
@@ -302,7 +302,7 @@ def test_docmeta_appends_with_meta_deltas(spark, corpus, tmp_path):
     sink(tail, batch_id=0)
     m = compact_incremental(spark, sink, b, n_partitions=4)
     assert m["mode"] == "append" and m["meta_mode"] == "append"
-    assert b.ckpt.is_done("docmeta")
+    assert b.catalog.exists("docmeta")
     # docmeta covers every doc in the appended docmap (no silent holes)
     assert b.catalog.read("docmeta").count() == \
         b.catalog.read("docmap").count()
@@ -351,7 +351,7 @@ def test_docmeta_props_survive_consecutive_appends(spark, corpus, tmp_path):
     sink(tail, batch_id=1)
     m2 = compact_incremental(spark, sink, b, n_partitions=4)
     assert m2["meta_mode"] == "append"  # the regression made this drop
-    assert b.ckpt.is_done("docmeta")
+    assert b.catalog.exists("docmeta")
     assert b.catalog.read("docmeta").count() == \
         b.catalog.read("docmap").count()
 
@@ -376,7 +376,7 @@ def test_docmeta_append_without_meta_deltas_invalidates(
     sink(tail, batch_id=0)
     m = compact_incremental(spark, sink, b, n_partitions=4)
     assert m["mode"] == "append" and m["meta_mode"] == "invalidated"
-    assert not b.ckpt.is_done("docmeta")
+    assert not b.catalog.exists("docmeta")
     with pytest.raises(ValueError, match="docmeta"):
         b.query_filtered("the", "role = 'user'")
 
@@ -399,7 +399,7 @@ def test_docmeta_dropped_on_full_rebuild(spark, corpus, tmp_path):
     sink(upd, batch_id=0)
     m = compact_incremental(spark, sink, b, n_partitions=4)
     assert m["mode"] == "full"
-    assert not b.ckpt.is_done("docmeta")
+    assert not b.catalog.exists("docmeta")
     assert not b.catalog.exists("docmeta")
     with pytest.raises(ValueError, match="docmeta"):
         b.query_filtered("the", "role = 'user'")

@@ -228,6 +228,30 @@ def test_builder_pin_rollback_across_upsert(spark, tmp_path):
     corpus.unpersist()
 
 
+def test_rollback_checks_every_pin_before_moving_a_head(spark, tmp_path):
+    """A pin that can no longer be restored — here docmeta, dropped by
+    an upsert whose rows lack its column — fails the whole rollback
+    before any head moves, instead of half-way after the base tables
+    were already restored."""
+    corpus = synth_transcripts(spark, n_convs=6, seed=9)
+    b = IndexBuilder(spark, str(tmp_path / "idx"))
+    b.build(corpus, n_partitions=2)
+    b.build_doc_meta(corpus, ["role"])
+    pins = b.pin()
+    assert "docmeta" in pins
+    top = corpus.select("conv_id", "turn_idx").orderBy(
+        "conv_id", "turn_idx").first()
+    b.upsert_docs(spark.createDataFrame(pd.DataFrame([{
+        "conv_id": top["conv_id"], "turn_idx": int(top["turn_idx"]),
+        "text": "replaced without its role",
+    }])))
+    assert not b.catalog.exists("docmeta")
+    heads = b.pin()
+    with pytest.raises(UnknownSnapshotError):
+        b.rollback(pins)
+    assert b.pin() == heads
+
+
 def test_commit_cost_does_not_grow_with_history(cat, monkeypatch):
     """A commit appends one snapshot-log row and reads no snapshot: after
     200 commits, a replace and an append open the same files as they did

